@@ -23,6 +23,7 @@ Scale design:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
 
@@ -96,9 +97,10 @@ def sq_dist(a: Column, b: Column) -> Column:
 def dot_expr(a: Column, b: Column) -> Column:
     """JVM expression form of the quantized dot (interpreted HOF fold).
 
-    Keep for tiny literal arrays embedded in a larger codegen pipeline
-    where an Arrow round-trip costs more than the fold; every hot path
-    should use :func:`dot`."""
+    Keep for tiny literal arrays embedded in a larger codegen pipeline,
+    and for plans too small to pay for Python workers (the streaming
+    LSH sink's driver-decided triggers), where an Arrow round-trip
+    costs more than the fold; every hot path should use :func:`dot`."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0).cast("bigint"),
@@ -676,6 +678,40 @@ def lsh_band_buckets(
     return buckets(c)
 
 
+def lsh_band_bucket_matrix(
+    M: np.ndarray,
+    dims: int,
+    bands: int = LSH_BANDS,
+    planes_per_band: int = LSH_BAND_PLANES,
+) -> np.ndarray:
+    """The numpy kernel behind :func:`lsh_band_bucket_ids`: an
+    ``(n, bands)`` int64 matrix of per-band bucket ids for an
+    ``(n, dims)`` int64 matrix — ONE (n × dims)·(dims × bands·r) matmul,
+    band ``t``'s sign bits parsed MSB-first. Driver-side callers (the
+    streaming LSH sink's small-batch path) and the Spark UDF share it,
+    so the bucket math has a single implementation."""
+    r = int(planes_per_band)
+    if bands < 1 or r < 1:
+        raise ValueError(
+            f"bands and planes_per_band must be >= 1, got ({bands}, {r})"
+        )
+    if r > 62:
+        raise ValueError(f"planes_per_band must fit an int64 bucket, got {r}")
+    W, pw = _band_planes(int(dims), int(bands), r)
+    bits = (M @ W.T >= 0).astype(np.int64).reshape(-1, bands, r)
+    return bits @ pw
+
+
+@functools.lru_cache(maxsize=16)
+def _band_planes(dims: int, bands: int, r: int) -> tuple[np.ndarray, ...]:
+    W = np.array(
+        hyperplane_weights(dims, bands * r), dtype=np.int64
+    )  # (bands·r, d)
+    pw = (1 << np.arange(r - 1, -1, -1)).astype(np.int64)  # MSB-first
+    W.flags.writeable = pw.flags.writeable = False  # shared by the cache
+    return W, pw
+
+
 def lsh_band_bucket_ids(
     vec_col: str | Column,
     dims: int,
@@ -693,26 +729,18 @@ def lsh_band_bucket_ids(
     cost ``planes_per_band`` chars + string overhead, and the bucket
     prefix used for directory/group pruning becomes one shift
     (``bucket >> (r - prefix_bits)``) instead of substring+conv."""
-    r = int(planes_per_band)
-    if bands < 1 or r < 1:
-        raise ValueError(
-            f"bands and planes_per_band must be >= 1, got ({bands}, {r})"
-        )
-    if r > 62:
-        raise ValueError(f"planes_per_band must fit an int64 bucket, got {r}")
-    W = np.array(
-        hyperplane_weights(dims, bands * r), dtype=np.int64
-    )  # (bands·r, d)
-    pw = (1 << np.arange(r - 1, -1, -1)).astype(np.int64)  # MSB-first
+    # validate at definition time, not in the first task
+    lsh_band_bucket_matrix(
+        np.zeros((0, dims), np.int64), dims, bands, planes_per_band
+    )
 
     @pandas_udf(ArrayType(LongType()))
     def bucket_ids(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype=object)
-        proj = _mat(v) @ W.T  # (n, bands·r)
-        bits = (proj >= 0).astype(np.int64).reshape(-1, bands, r)
-        ids = bits @ pw  # (n, bands)
-        return pd.Series(list(ids))
+        return pd.Series(
+            list(lsh_band_bucket_matrix(_mat(v), dims, bands, planes_per_band))
+        )
 
     c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     return bucket_ids(c)
@@ -728,24 +756,30 @@ def lsh_band_bucket_ids(
 _PACK_DTYPES = {2: "<i2", 4: "<i4", 8: "<i8"}
 
 
+def check_pack_width(M: np.ndarray, width: int) -> None:
+    """Raise (loud, not lossy) if any component of the int64 matrix
+    ``M`` overflows a signed ``width``-byte pack."""
+    lim = (1 << (8 * int(width) - 1)) - 1
+    if len(M) and int(np.abs(M).max()) > lim:
+        raise ValueError(
+            f"vector component exceeds pack width {width} "
+            f"(|x| > {lim}); write the store with a wider vbytes"
+        )
+
+
 def pack_vec(col: str | Column, width: int = 2) -> Column:
     """Quantized int64 vector → packed little-endian binary of the
     given element ``width`` (bytes). Raises in the task (loud, not
     lossy) if any component overflows the width — callers choose a
     wider pack instead of silently corrupting dots."""
     dt = _PACK_DTYPES[int(width)]
-    lim = (1 << (8 * int(width) - 1)) - 1
 
     @pandas_udf("binary")
     def pk(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype=object)
         M = _mat(v)
-        if len(M) and int(np.abs(M).max()) > lim:
-            raise ValueError(
-                f"vector component exceeds pack width {width} "
-                f"(|x| > {lim}); write the store with a wider vbytes"
-            )
+        check_pack_width(M, width)
         P = M.astype(dt)
         return pd.Series([row.tobytes() for row in P])
 
@@ -1094,8 +1128,16 @@ def train_pq_codebook(
     for _ in range(iters):
         # fail fast on ragged books (ADVICE r13): the codes schema and
         # the bincount minlength below assume every subspace has keff
-        # codes — a ragged list would silently mis-size the partials
-        assert all(len(b) == keff for b in books), "ragged PQ codebook"
+        # codes of dsub components — a ragged list would silently
+        # mis-size the partials (a raise, not an assert: asserts vanish
+        # under python -O)
+        if any(
+            len(b) != keff or any(len(c) != dsub for c in b) for b in books
+        ):
+            raise ValueError(
+                "ragged PQ codebook: the lowest-id vectors must all have "
+                f"{dims} components"
+            )
         B = [np.array(b, dtype=np.int64) for b in books]
 
         def _stats(it):

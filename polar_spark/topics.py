@@ -626,9 +626,18 @@ class TopicCatalog:
     def read_stream(self, name: str) -> DataFrame:
         """Structured-Streaming scan of a topic (file source tails new
         segment files, the analog of the reference's segment reader loop
-        internal/data/segment_reader.go:106-195)."""
+        internal/data/segment_reader.go:106-195).
+
+        The declared schema lists ``partition`` LAST: each micro-batch
+        reads its files as data columns followed by the directory
+        column, and the stream maps those onto the declared schema by
+        position. With ``partition`` in its TOPIC_SCHEMA slot, a topic
+        with no file yet when the stream is defined (no ``partition=``
+        directory to infer from) shifted every column after ``topic``."""
+        data = [f for f in TOPIC_SCHEMA.fields if f.name != "partition"]
+        part = [f for f in TOPIC_SCHEMA.fields if f.name == "partition"]
         return (
-            self.spark.readStream.schema(TOPIC_SCHEMA)
+            self.spark.readStream.schema(T.StructType(data + part))
             .parquet(self.data_dir(name))
             .select([f.name for f in TOPIC_SCHEMA.fields])
         )

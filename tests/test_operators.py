@@ -991,6 +991,21 @@ def test_ann_train_memo_repeat_invocation_identical(spark, sf_dir):
         assert first == second and len(first) > 0, name
 
 
+def test_train_pq_codebook_rejects_ragged_vectors(spark):
+    """A ragged training corpus (a low-id vector shorter than the
+    first) fails with a ValueError naming the cause — a raise, not an
+    assert, so it also holds under ``python -O``."""
+    import pytest
+
+    from polar_spark.functions.similarity import train_pq_codebook
+
+    rows = [(i, [i + 1] * 64) for i in range(20)]
+    rows[1] = (1, [2] * 60)
+    qv = spark.createDataFrame(rows, "vec_id long, v array<bigint>")
+    with pytest.raises(ValueError, match="ragged PQ codebook"):
+        train_pq_codebook(qv, "v", "vec_id", iters=1)
+
+
 def test_pq_encode_deterministic_and_bounded(spark, sf_dir):
     from polar_spark.functions.similarity import (
         PQ_KSUB,

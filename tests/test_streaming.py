@@ -693,15 +693,28 @@ def test_streaming_semdedup_matches_greedy_reference(spark, sf_dir, tmp_path):
     qv.unpersist()
 
 
+# DRIVER_BATCH_BYTES settings that force each side of the LSH sink's
+# size selection: every plan-size estimate (Long.MaxValue for a frame
+# without statistics) is at most 2⁶⁴ and none is at most -1
+_LSH_PLANS = {"driver": 1 << 64, "bulk": -1}
+
+
+def _pin_lsh_plan(monkeypatch, plan: str) -> None:
+    import polar_spark.streaming.dedup as D
+
+    monkeypatch.setattr(D, "DRIVER_BATCH_BYTES", _LSH_PLANS[plan])
+
+
 def test_streaming_semdedup_lsh_matches_banded_greedy_reference(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     """Embeddings streamed in two micro-batches through
     StreamingSemDedupLSH must reproduce the banded greedy-prefix law
     exactly (python reference: greedy in id order, restricted to pairs
     sharing at least one band bucket, same integer threshold test), a
     same-epoch replay must not change the store, and the store must
-    hold exactly the kept corpus."""
+    hold exactly the kept corpus — on both sides of the sink's
+    driver/bulk size selection."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -712,25 +725,10 @@ def test_streaming_semdedup_lsh_matches_banded_greedy_reference(
     e = load_table(spark, sf_dir, "embeddings")
     qv = e.select("vec_id", quantize("embedding").alias("v")).persist()
     TAU, BANDS, R = 1600, 16, 4  # the τ=0.4 gate operating point
-
-    sd = StreamingSemDedupLSH(
-        spark, str(tmp_path / "idx"), str(tmp_path / "drops"),
-        dims=64, bands=BANDS, planes_per_band=R, tau_sq_pct=TAU,
-    )
     src = str(tmp_path / "src")
     mid = qv.agg(F.max("vec_id")).first()[0] // 2
     qv.filter(F.col("vec_id") <= mid).coalesce(1).write.mode("append").parquet(src)
     qv.filter(F.col("vec_id") > mid).coalesce(1).write.mode("append").parquet(src)
-    stream = (
-        spark.readStream.schema("vec_id long, v array<bigint>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = sd.start(stream)
-    assert q.awaitTermination(300)
-
-    got_drops = sorted(r["vec_id"] for r in sd.dropped().collect())
-    got_kept = sorted(r["vec_id"] for r in sd.kept().collect())
 
     # python reference: same md5 hyperplane family, same band split,
     # same exact integer threshold — greedy over id order with the
@@ -759,36 +757,55 @@ def test_streaming_semdedup_lsh_matches_banded_greedy_reference(
         else:
             kept_ref.append((bks, v, n2))
     ref_kept = sorted(set(r["vec_id"] for r in rows) - set(ref_drops))
+    assert ref_drops
 
-    assert got_drops == sorted(ref_drops) and len(got_drops) > 0
-    assert got_kept == ref_kept
+    for plan in _LSH_PLANS:
+        _pin_lsh_plan(monkeypatch, plan)
+        sd = StreamingSemDedupLSH(
+            spark, str(tmp_path / f"{plan}_idx"),
+            str(tmp_path / f"{plan}_drops"),
+            dims=64, bands=BANDS, planes_per_band=R, tau_sq_pct=TAU,
+        )
+        stream = (
+            spark.readStream.schema("vec_id long, v array<bigint>")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        q = sd.start(stream)
+        assert q.awaitTermination(300)
 
-    # replay idempotency
-    n_store = sd.kept().count()
-    cp = str(tmp_path / "idx" / "_checkpoint")
-    assert sd.apply_batch(qv.filter(F.col("vec_id") > mid), 1, cp) is False
-    assert sd.kept().count() == n_store
+        got_drops = sorted(r["vec_id"] for r in sd.dropped().collect())
+        got_kept = sorted(r["vec_id"] for r in sd.kept().collect())
+        assert got_drops == sorted(ref_drops), plan
+        assert got_kept == ref_kept, plan
 
-    # compact folds the per-epoch files; kept/dropped are unchanged and
-    # a post-compact epoch still dedups against the folded store
-    sd.compact()
-    assert sorted(r["vec_id"] for r in sd.kept().collect()) == got_kept
-    k0 = got_kept[0]
-    probe = qv.filter(F.col("vec_id") == k0).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "v"
-    )
-    assert sd.apply_batch(probe, 2, cp) is True
-    assert (k0 + 1_000_000) in {
-        r["vec_id"] for r in sd.dropped().collect()
-    }, "an exact copy of a kept vector must drop against the compacted store"
+        # replay idempotency
+        n_store = sd.kept().count()
+        cp = str(tmp_path / f"{plan}_idx" / "_checkpoint")
+        assert sd.apply_batch(qv.filter(F.col("vec_id") > mid), 1, cp) is False
+        assert sd.kept().count() == n_store
+
+        # compact folds the per-epoch files; kept/dropped are unchanged
+        # and a post-compact epoch still dedups against the folded store
+        sd.compact()
+        assert sorted(r["vec_id"] for r in sd.kept().collect()) == got_kept
+        k0 = got_kept[0]
+        probe = qv.filter(F.col("vec_id") == k0).select(
+            (F.col("vec_id") + 1_000_000).alias("vec_id"), "v"
+        )
+        assert sd.apply_batch(probe, 2, cp) is True
+        assert (k0 + 1_000_000) in {
+            r["vec_id"] for r in sd.dropped().collect()
+        }, "an exact copy of a kept vector must drop against the compacted store"
     qv.unpersist()
 
 
-def test_streaming_semdedup_lsh_greedy_chain_law(spark, tmp_path):
+def test_streaming_semdedup_lsh_greedy_chain_law(spark, tmp_path, monkeypatch):
     """The greedy-prefix chain case: a~b and b~c over τ but a~c under τ
     ⇒ only b drops (a pair-based rule would also drop c); and a later
     epoch's copy of a KEPT vector drops against the store while a copy
-    similar only to the DROPPED one still drops via its kept partner."""
+    similar only to the DROPPED one still drops via its kept partner.
+    Both sides of the driver/bulk size selection."""
     import math
 
     from polar_spark.streaming.dedup import StreamingSemDedupLSH
@@ -799,23 +816,25 @@ def test_streaming_semdedup_lsh_greedy_chain_law(spark, tmp_path):
         return [int(math.floor(x * 10000)) for x in v]
 
     rows1 = [(0, vec(0.0)), (1, vec(15.0)), (2, vec(30.0))]
-    sd = StreamingSemDedupLSH(
-        spark, str(tmp_path / "idx"), str(tmp_path / "drops"),
-        dims=64, bands=16, planes_per_band=4, tau_sq_pct=9025,
-    )
-    cp = str(tmp_path / "cp")
-    b1 = spark.createDataFrame(rows1, "vec_id long, v array<bigint>")
-    assert sd.apply_batch(b1, 0, cp) is True
-    assert sorted(r["vec_id"] for r in sd.dropped().collect()) == [1]
-    assert sorted(r["vec_id"] for r in sd.kept().collect()) == [0, 2]
+    for plan in _LSH_PLANS:
+        _pin_lsh_plan(monkeypatch, plan)
+        sd = StreamingSemDedupLSH(
+            spark, str(tmp_path / f"{plan}_idx"), str(tmp_path / f"{plan}_drops"),
+            dims=64, bands=16, planes_per_band=4, tau_sq_pct=9025,
+        )
+        cp = str(tmp_path / f"{plan}_cp")
+        b1 = spark.createDataFrame(rows1, "vec_id long, v array<bigint>")
+        assert sd.apply_batch(b1, 0, cp) is True
+        assert sorted(r["vec_id"] for r in sd.dropped().collect()) == [1]
+        assert sorted(r["vec_id"] for r in sd.kept().collect()) == [0, 2]
 
-    # epoch 2: id 10 ≈ kept 2 → drops; id 11 ≈ dropped 1, but 1's kept
-    # partner 0 is within τ of it too (15°) → drops via the store
-    rows2 = [(10, vec(30.5)), (11, vec(14.5))]
-    b2 = spark.createDataFrame(rows2, "vec_id long, v array<bigint>")
-    assert sd.apply_batch(b2, 1, cp) is True
-    assert sorted(r["vec_id"] for r in sd.dropped().collect()) == [1, 10, 11]
-    assert sorted(r["vec_id"] for r in sd.kept().collect()) == [0, 2]
+        # epoch 2: id 10 ≈ kept 2 → drops; id 11 ≈ dropped 1, but 1's
+        # kept partner 0 is within τ of it too (15°) → drops via the store
+        rows2 = [(10, vec(30.5)), (11, vec(14.5))]
+        b2 = spark.createDataFrame(rows2, "vec_id long, v array<bigint>")
+        assert sd.apply_batch(b2, 1, cp) is True
+        assert sorted(r["vec_id"] for r in sd.dropped().collect()) == [1, 10, 11]
+        assert sorted(r["vec_id"] for r in sd.kept().collect()) == [0, 2]
 
 
 def test_streaming_semdedup_lsh_soak_compact_bounds_store(
@@ -1517,13 +1536,16 @@ def test_streaming_zordered_layout_equals_batch(spark, sf_dir, tmp_path):
     assert got == want and len(z_box_buckets(*box)) > 0
 
 
-def test_streaming_semdedup_lsh_dup_storm_bounded_greedy(spark, tmp_path):
+def test_streaming_semdedup_lsh_dup_storm_bounded_greedy(
+    spark, tmp_path, monkeypatch
+):
     """Adversarial dup storm: EVERY row of the micro-batch is one
     near-dup cluster, so the verified-pair list is quadratic in the
     batch. With greedy_pair_cap forced far below the pair count the
-    sink must (a) never materialize more than ~cap pairs driver-side
-    (the chunked path) and (b) produce drops identical to the unbounded
-    greedy — all ids but the cluster minimum."""
+    bulk plan must (a) never materialize more than ~cap pairs
+    driver-side (the chunked path) and (b) produce drops identical to
+    the unbounded greedy — all ids but the cluster minimum; the driver
+    plan (kept bucket-mate tables, no pair list) must agree."""
     from polar_spark.streaming.dedup import StreamingSemDedupLSH
 
     n = 120  # 7140 mutual pairs
@@ -1533,7 +1555,8 @@ def test_streaming_semdedup_lsh_dup_storm_bounded_greedy(spark, tmp_path):
     ]
     batch = spark.createDataFrame(rows, "vec_id long, v array<bigint>")
 
-    def run(prefix: str, cap: int) -> list[int]:
+    def run(prefix: str, cap: int, plan: str = "bulk") -> list[int]:
+        _pin_lsh_plan(monkeypatch, plan)
         sd = StreamingSemDedupLSH(
             spark, str(tmp_path / f"{prefix}_idx"),
             str(tmp_path / f"{prefix}_drops"),
@@ -1545,10 +1568,13 @@ def test_streaming_semdedup_lsh_dup_storm_bounded_greedy(spark, tmp_path):
 
     bounded = run("capped", cap=500)  # ~15 id-ordered ranges
     unbounded = run("uncapped", cap=2_000_000)
-    assert bounded == unbounded == list(range(1, n))
+    driver = run("driver", cap=500, plan="driver")
+    assert bounded == unbounded == driver == list(range(1, n))
 
 
-def test_streaming_semdedup_lsh_chain_law_survives_cap(spark, tmp_path):
+def test_streaming_semdedup_lsh_chain_law_survives_cap(
+    spark, tmp_path, monkeypatch
+):
     """The chunked greedy must preserve CHAIN semantics across range
     boundaries: a~b and b~c over τ, a~c under τ ⇒ only b drops. With
     cap=1 the (b,c) pair lands in a later range where b is already
@@ -1564,6 +1590,7 @@ def test_streaming_semdedup_lsh_chain_law_survives_cap(spark, tmp_path):
         return [int(math.floor(x * 10000)) for x in v]
 
     rows = [(0, vec(0.0)), (1, vec(15.0)), (2, vec(30.0))]
+    _pin_lsh_plan(monkeypatch, "bulk")  # the pair cap is a bulk-plan bound
     sd = StreamingSemDedupLSH(
         spark, str(tmp_path / "chain_idx"), str(tmp_path / "chain_drops"),
         dims=64, bands=16, planes_per_band=4, tau_sq_pct=9025,
@@ -1958,3 +1985,209 @@ def test_semdedup_sink_auto_crossover(spark, tmp_path):
         expected_store_n=40_000,
     )
     assert isinstance(nc, StreamingSemDedupLSH)
+
+
+def _twin_rows(lo: int, hi: int) -> list[tuple[int, list[int]]]:
+    """Rows ``lo..hi-1`` of a fixed corpus in which every fifth vector
+    is a near copy (±20 per component) of an earlier one — the twin of
+    id ``k`` is ``k // 2``, so twins land in the same or an earlier
+    epoch."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    V = rng.integers(-3000, 3000, size=(hi, 64))
+    for k in range(3, hi, 5):
+        V[k] = V[k // 2] + rng.integers(-20, 20, size=64)
+    return [(i, V[i].tolist()) for i in range(lo, hi)]
+
+
+def _lsh_store_state(spark, sd) -> tuple:
+    """(kept ids, dropped ids, band rows) of an LSH sink's store."""
+    bands = spark.read.parquet(sd.bands_path).select(
+        "band", "bpre", "bucket", "vec_id"
+    )
+    return (
+        sorted(r["vec_id"] for r in sd.kept().collect()),
+        sorted(r["vec_id"] for r in sd.dropped().collect()),
+        sorted(tuple(r) for r in bands.collect()),
+    )
+
+
+def _lsh_epochs(spark, sd, plans, sink_id: str, monkeypatch) -> None:
+    """Epoch 0 = ids 0-59 (the pre-seed), epochs 1.. = 20 ids each."""
+    spans = [(0, 60)] + [(60 + 20 * i, 80 + 20 * i) for i in range(len(plans) - 1)]
+    for ep, (plan, (lo, hi)) in enumerate(zip(plans, spans)):
+        _pin_lsh_plan(monkeypatch, plan)
+        b = spark.createDataFrame(_twin_rows(lo, hi), "vec_id long, v array<bigint>")
+        assert sd.apply_batch(b, ep, sink_id) is True
+
+
+def test_streaming_semdedup_lsh_mixed_plan_store_reads_back_and_compacts(
+    spark, tmp_path, monkeypatch
+):
+    """A store pre-seeded by the bulk plan and then grown by driver-plan
+    epochs (pyarrow-written partitions) reads back exactly what an
+    all-bulk run writes — kept, dropped and band rows, with the same
+    column types and a _SUCCESS per epoch partition — and survives
+    compact(): the fold keeps every row, and a later driver epoch still
+    drops an exact copy of a kept vector against the folded store."""
+    import os
+
+    mixed = _mk_lsh_sink(spark, tmp_path, "mixplan")
+    ref = _mk_lsh_sink(spark, tmp_path, "allbulk")
+    _lsh_epochs(spark, mixed, ["bulk", "driver", "driver"], "mixplan", monkeypatch)
+    _lsh_epochs(spark, ref, ["bulk", "bulk", "bulk"], "allbulk", monkeypatch)
+
+    state = _lsh_store_state(spark, mixed)
+    assert state == _lsh_store_state(spark, ref)
+    assert state[1], "the planted twins must drop"
+    for path in (mixed.vectors_path, mixed.bands_path, mixed.drops_path):
+        other = path.replace("mixplan", "allbulk")
+        assert spark.read.parquet(path).dtypes == spark.read.parquet(other).dtypes
+        names = sorted(os.listdir(path))
+        assert len(names) == 3 and all(n.startswith("ep=") for n in names), names
+        for n in names:
+            assert os.path.exists(os.path.join(path, n, "_SUCCESS"))
+
+    mixed.compact()
+    assert _lsh_store_state(spark, mixed) == state
+    _pin_lsh_plan(monkeypatch, "driver")
+    kept_one = mixed.kept().orderBy("vec_id").first()
+    b = spark.createDataFrame(
+        [(10_000, list(kept_one["v"]))], "vec_id long, v array<bigint>"
+    )
+    assert mixed.apply_batch(b, 3, "mixplan") is True
+    assert 10_000 in {r["vec_id"] for r in mixed.dropped().collect()}
+
+
+def test_streaming_semdedup_lsh_driver_plan_replay_after_publish(
+    spark, tmp_path, monkeypatch
+):
+    """A failure after a driver-plan epoch publishes its partitions but
+    before EpochLedger.record leaves the epoch unrecorded; replaying it
+    overwrites exactly its own partitions, so the stores equal a clean
+    run's and no hidden staging directory is left behind."""
+    import os
+
+    import polar_spark.streaming.dedup as D
+
+    clean = _mk_lsh_sink(spark, tmp_path, "clean")
+    _lsh_epochs(spark, clean, ["driver", "driver"], "clean", monkeypatch)
+
+    sd = _mk_lsh_sink(spark, tmp_path, "torn")
+    _lsh_epochs(spark, sd, ["driver"], "torn", monkeypatch)
+    record = D.EpochLedger.record
+
+    def failing_record(self, key, epoch, force=False):
+        raise RuntimeError("crash before the epoch is recorded")
+
+    monkeypatch.setattr(D.EpochLedger, "record", failing_record)
+    b1 = spark.createDataFrame(_twin_rows(60, 80), "vec_id long, v array<bigint>")
+    with pytest.raises(RuntimeError, match="before the epoch is recorded"):
+        sd.apply_batch(b1, 1, "torn")
+    tag = D.epoch_tag(D._sink_instance_key("torn"), 1)
+    for path in (sd.drops_path, sd.vectors_path, sd.bands_path):
+        assert os.path.exists(os.path.join(path, f"ep={tag}", "_SUCCESS"))
+    monkeypatch.setattr(D.EpochLedger, "record", record)
+    assert sd._epochs.last(D._sink_instance_key("torn")) == 0
+
+    assert sd.apply_batch(b1, 1, "torn") is True  # the replay
+    assert sd.apply_batch(b1, 1, "torn") is False
+    assert _lsh_store_state(spark, sd) == _lsh_store_state(spark, clean)
+    for path in (sd.drops_path, sd.vectors_path, sd.bands_path):
+        assert all(n.startswith("ep=") for n in os.listdir(path))
+
+
+def test_streaming_semdedup_lsh_driver_plan_job_budget(
+    spark, tmp_path, monkeypatch
+):
+    """A small trigger decided on the driver runs at most 10 Spark jobs
+    (the bulk plan ran ~29) and no pandas UDF: no SQL execution of the
+    trigger's job group has a Python UDF node in its plan."""
+    import re
+
+    sd = _mk_lsh_sink(spark, tmp_path, "budget")
+    _lsh_epochs(spark, sd, ["bulk"], "budget", monkeypatch)
+    _pin_lsh_plan(monkeypatch, "driver")
+    b = spark.createDataFrame(_twin_rows(60, 80), "vec_id long, v array<bigint>")
+    sc = spark.sparkContext
+    sc.setJobGroup("lsh_driver_budget", "driver-plan trigger")
+    try:
+        assert sd.apply_batch(b, 1, "budget") is True
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = set(sc.statusTracker().getJobIdsForGroup("lsh_driver_budget"))
+    assert 0 < len(jobs) <= 10, sorted(jobs)
+    assert len(_lsh_store_state(spark, sd)[1]) > 0
+
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+        if any(execs.apply(i).jobs().contains(j) for j in jobs)
+    ]
+    assert plans
+    for plan in plans:
+        assert not re.search(r"EvalPython|InPandas|InArrow|PythonUDF", plan), plan
+
+
+def test_streaming_semdedup_lsh_pack_width_error_on_both_plans(
+    spark, tmp_path, monkeypatch
+):
+    """A component past the vbytes pack width fails the micro-batch
+    loudly on both sides of the size selection, before any write."""
+    import os
+
+    rows = [(0, [40_000] + [0] * 63)]  # |x| > 32767 = the 2-byte limit
+    for plan in _LSH_PLANS:
+        _pin_lsh_plan(monkeypatch, plan)
+        sd = _mk_lsh_sink(spark, tmp_path, f"pack_{plan}")
+        b = spark.createDataFrame(rows, "vec_id long, v array<bigint>")
+        with pytest.raises(Exception, match="exceeds pack width 2"):
+            sd.apply_batch(b, 0, f"pack_{plan}")
+        assert not os.path.exists(sd.vectors_path)
+
+
+def test_stream_topic_defined_before_first_file(spark, catalog, tmp_path):
+    """A topic stream defined while the topic holds no data file (no
+    partition= directory to infer the partition column from) must read
+    every column in place once records arrive."""
+    from polar_spark.streaming.ingest import stream_topic
+
+    catalog.ensure_topic("t", 1)
+    stream = stream_topic(spark, catalog, "t")
+    Producer(catalog).produce_rows("t", ['{"a": 1}', '{"a": 2}'])
+    got = []
+    q = (
+        stream.writeStream.foreachBatch(lambda df, _ep: got.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert [(r["topic"], r["partition"], r["offset"], r["value"]) for r in got] == [
+        ("t", 0, 0, '{"a": 1}'),
+        ("t", 0, 1, '{"a": 2}'),
+    ]
+    assert all(r["timestamp"] is not None and r["key"] is None for r in got)
+
+
+def test_streaming_semdedup_exact_tau_boundary(spark, tmp_path):
+    """StreamingSemDedup decides τ with exact integers: an exact copy
+    at τ = 1 (tau_sq_pct 10000) sits ON the threshold, where the float64
+    form d·d·10⁴ ≥ τ·|u|²·|v|² rounds the two sides apart and keeps it.
+    The copy must drop in-batch and against the stored corpus."""
+    from polar_spark.streaming.dedup import StreamingSemDedup
+
+    v = [(j * 7919) % 20001 - 10000 for j in range(64)]
+    n = float(sum(x * x for x in v))
+    assert not (n * n * 10000 >= 10000 * n * n)  # float64 decides wrongly
+    sd = StreamingSemDedup(
+        spark, str(tmp_path / "idx"), str(tmp_path / "drops"), [(0, v)],
+        tau_sq_pct=10000,
+    )
+    schema = "vec_id long, v array<bigint>"
+    assert sd.apply_batch(spark.createDataFrame([(0, v), (1, v)], schema), 0, "b")
+    assert sd.apply_batch(spark.createDataFrame([(2, v)], schema), 1, "b")
+    assert sorted(r["vec_id"] for r in sd.dropped().collect()) == [1, 2]
+    assert [r["vec_id"] for r in sd.kept().collect()] == [0]
