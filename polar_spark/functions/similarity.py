@@ -1082,6 +1082,9 @@ def bucketed_cosine_pairs(
 
 PQ_NSUB = 8
 PQ_KSUB = 16
+# Faiss's max_points_per_centroid bound: PQ training reads at most 256
+# points per code, so the sample the driver collects is bounded
+PQ_MAX_TRAIN = 256 * PQ_KSUB
 
 
 def train_pq_codebook(
@@ -1101,97 +1104,58 @@ def train_pq_codebook(
     compression), so a 100 TB embedding corpus's search structure fits
     in ~3 TB and scans stay memory-bandwidth-bound.
 
-    Scale shape mirrors :func:`train_ivf_codebook`: every iteration is
-    ONE narrow Arrow pass that assigns codes (via the same
-    :func:`_pq_codes_matrix` kernel the encoder uses) and accumulates
-    exact per-(subspace, code) integer sums/counts per partition — only
-    O(parts·nsub·ksub) partial rows reach the driver, never O(corpus).
-    (The former shape posexploded the corpus into corpus×dims (dim, x)
-    rows per iteration — guide §2.3/§4.2, r13 optimization round; the
-    partials merge by exact integer addition, so books are
-    bit-identical.) Deterministic: init = subvectors of the ``ksub``
-    lowest-id vectors, exact integer sums, floor means — the update is
-    ``floor(double(sum)/double(count))``, the same IEEE op sequence the
-    old Spark aggregate evaluated — empty codes keep their previous
-    centroid."""
-    base = candidates.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    init = base.orderBy("_id").limit(ksub).collect()
-    dims = len(init[0]["_v"])
+    Training reads a BOUNDED sample, as Faiss does (at most
+    ``max_points_per_centroid`` × ksub points): one Arrow collect of the
+    first :data:`PQ_MAX_TRAIN` rows in ``(xxhash64(id), id)`` order, then
+    every Lloyd round runs in numpy on the driver — one Spark job, no
+    Python worker, whatever the corpus size. The hash order draws the
+    sample from the whole id range, not from its low end. A corpus of
+    at most PQ_MAX_TRAIN vectors is its own sample, so its books are
+    those of full-corpus training.
+
+    Deterministic: init = subvectors of the sample's ``ksub`` lowest-id
+    vectors; codes come from :func:`_pq_codes_matrix` (the kernel the
+    encoder uses); exact int64 sums; the update is
+    ``floor(double(sum)/double(count))``; empty codes keep their
+    previous centroid."""
+    t = (
+        candidates.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        .orderBy(F.xxhash64("_id"), "_id")
+        .limit(PQ_MAX_TRAIN)
+        .toArrow()
+    )
+    n = t.num_rows
+    if n == 0:
+        raise ValueError("train_pq_codebook: empty training corpus")
+    ids = t.column("_id").to_numpy()
+    vcol = t.column("_v").combine_chunks()
+    lens = vcol.value_lengths().to_numpy(zero_copy_only=False)
+    dims = int(lens[np.argmin(ids)])
+    # fail fast on ragged vectors: a raise, not an assert (asserts
+    # vanish under python -O)
+    if (lens != dims).any():
+        raise ValueError(
+            f"ragged PQ codebook: the training vectors must all have {dims} "
+            "components"
+        )
     if dims % nsub:
         raise ValueError(f"dims {dims} not divisible by nsub {nsub}")
     dsub = dims // nsub
-    books = [
-        [[int(x) for x in r["_v"][s * dsub : (s + 1) * dsub]] for r in init]
-        for s in range(nsub)
-    ]
-    keff = len(books[0])  # < ksub when the corpus has fewer vectors
+    V = vcol.flatten().to_numpy().astype(np.int64).reshape(n, dims)
+    init = V[np.argsort(ids, kind="stable")[:ksub]]
+    B = [init[:, s * dsub : (s + 1) * dsub].copy() for s in range(nsub)]
+    keff = len(init)  # < ksub when the corpus has fewer vectors
     for _ in range(iters):
-        # fail fast on ragged books (ADVICE r13): the codes schema and
-        # the bincount minlength below assume every subspace has keff
-        # codes of dsub components — a ragged list would silently
-        # mis-size the partials (a raise, not an assert: asserts vanish
-        # under python -O)
-        if any(
-            len(b) != keff or any(len(c) != dsub for c in b) for b in books
-        ):
-            raise ValueError(
-                "ragged PQ codebook: the lowest-id vectors must all have "
-                f"{dims} components"
-            )
-        B = [np.array(b, dtype=np.int64) for b in books]
-
-        def _stats(it):
-            S = np.zeros((nsub, keff, dsub), dtype=np.int64)
-            N = np.zeros((nsub, keff), dtype=np.int64)
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                V = _mat(pdf["_v"])
-                codes = _pq_codes_matrix(V, B)
-                for s in range(nsub):
-                    np.add.at(S[s], codes[:, s], V[:, s * dsub : (s + 1) * dsub])
-                    N[s] += np.bincount(codes[:, s], minlength=keff)
-            ss, cc = np.nonzero(N)
-            if ss.size:
-                yield pd.DataFrame(
-                    {
-                        "s": ss.astype("int64"),
-                        "c": cc.astype("int64"),
-                        "n": N[ss, cc],
-                        "sums": [S[s, c].tolist() for s, c in zip(ss, cc)],
-                    }
-                )
-
-        parts = base.select("_v").mapInPandas(
-            _stats, "s long, c long, n long, sums array<long>"
-        ).collect()
-        totS: dict[tuple[int, int], list[int]] = {}
-        totN: dict[tuple[int, int], int] = {}
-        for r in parts:
-            key = (int(r["s"]), int(r["c"]))
-            if key in totS:
-                acc = totS[key]
-                for d, x in enumerate(r["sums"]):
-                    acc[d] += int(x)
-                totN[key] += int(r["n"])
-            else:
-                totS[key] = [int(x) for x in r["sums"]]
-                totN[key] = int(r["n"])
-        books = [
-            [
-                [
-                    # floor of IEEE double division — bit-identical to the
-                    # former F.floor(F.sum/F.count) Spark aggregate
-                    int(math.floor(float(totS[(s, c)][d]) / float(totN[(s, c)])))
-                    if (s, c) in totN
-                    else books[s][c][d]
-                    for d in range(dsub)
-                ]
-                for c in range(keff)
-            ]
-            for s in range(nsub)
-        ]
-    return books
+        codes = _pq_codes_matrix(V, B)
+        for s in range(nsub):
+            S = np.zeros((keff, dsub), dtype=np.int64)
+            np.add.at(S, codes[:, s], V[:, s * dsub : (s + 1) * dsub])
+            N = np.bincount(codes[:, s], minlength=keff)
+            hit = N > 0
+            B[s][hit] = np.floor(
+                S[hit].astype(np.float64) / N[hit, None].astype(np.float64)
+            ).astype(np.int64)
+    return [b.tolist() for b in B]
 
 
 def _pq_codes_matrix(V: np.ndarray, B: list[np.ndarray]) -> np.ndarray:
@@ -1294,43 +1258,45 @@ def exact_rerank_topk(
 
 def pq_topk_adc(
     queries: DataFrame,
-    encoded: DataFrame,
+    candidates: DataFrame,
     books: list[list[list[int]]],
     k: int = 5,
     shortlist: int = 50,
-    rerank: DataFrame | None = None,
     query_id: str = "qid",
     cand_id: str = "vec_id",
     query_vec: str = "qv",
-    codes_col: str = "codes",
     cand_vec: str = "cv",
 ) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes, with optional exact
-    re-rank (the IVFADC+R pattern).
+    """Asymmetric-distance top-k over PQ codes with exact re-rank (the
+    IVFADC+R pattern), in one fused scan of ``(cand_id, cand_vec)``.
 
     ADC: each query precomputes an (nsub × ksub) dot-product lookup
     table against the codebook; a candidate's approximate dot is the sum
-    of nsub table lookups — no decode, no per-candidate matmul. The
-    corpus side scans codes (bytes, not vectors): per-partition running
-    top-``shortlist`` exactly like :func:`brute_force_topk`, so the
-    shuffle is O(partitions·shortlist·|Q|), independent of n.
-
-    ``rerank`` (id → raw vector) joins ONLY the global shortlist
-    (O(shortlist·|Q|) rows) back to exact vectors and re-scores — the
-    standard recall fix for quantization error, paying exact dots for
-    shortlist·|Q| candidates instead of n·|Q|."""
+    of nsub table lookups — no decode, no per-candidate matmul. One
+    ``mapInPandas`` pass encodes each Arrow batch
+    (:func:`_pq_codes_matrix`), ADC-scores it, keeps a per-partition
+    running top-``shortlist`` per query (self excluded, ties → lowest
+    id) and takes the exact int64 dot of each survivor while its raw
+    vector is still in hand. Two windows finish: the global shortlist by
+    ``(adc_dot desc, id)``, then the top-``k`` of it by ``(dot desc,
+    id)``. The shuffle is O(partitions·shortlist·|Q|), independent of n,
+    and the re-rank needs no second scan, join or broadcast — the
+    standard recall fix for quantization error, paying exact dots only
+    for shortlist survivors instead of n·|Q|."""
     from pyspark.sql import types as T
 
     qids_py, Q = collect_query_vectors(queries, query_id, query_vec, "pq_topk_adc")
     m = len(qids_py)
     LUT = pq_lut(books, Q)  # (m, nsub, ksub)
     nsub = LUT.shape[1]
+    B = [np.array(b, dtype=np.int64) for b in books]
 
     out_schema = T.StructType(
         [
             T.StructField(query_id, queries.schema[query_id].dataType),
-            T.StructField(cand_id, encoded.schema[cand_id].dataType),
+            T.StructField(cand_id, candidates.schema[cand_id].dataType),
             T.StructField("adc_dot", T.LongType()),
+            T.StructField("dot", T.LongType()),
         ]
     )
 
@@ -1338,23 +1304,28 @@ def pq_topk_adc(
         qids = np.array(qids_py)
         best_v = [np.empty(0, np.int64) for _ in range(m)]
         best_i = [np.empty(0, dtype=object) for _ in range(m)]
+        best_d = [np.empty(0, np.int64) for _ in range(m)]
         seen = False
         for pdf in batches:
             if not len(pdf):
                 continue
             seen = True
-            C = np.stack(pdf[codes_col].to_numpy()).astype(np.int64)  # (n, nsub)
+            V = _mat(pdf[cand_vec])
+            C = _pq_codes_matrix(V, B)
             ids = pdf[cand_id].to_numpy()
-            n = len(ids)
-            D = np.zeros((n, m), dtype=np.int64)
+            D = np.zeros((len(ids), m), dtype=np.int64)
             for s in range(nsub):
                 D += LUT[:, s, C[:, s]].T  # (n, m)
             for q in range(m):
-                mask = ids != qids[q]
-                v = np.concatenate([best_v[q], D[mask, q]])
-                i = np.concatenate([best_i[q], ids[mask]])
+                rows = np.flatnonzero(ids != qids[q])
+                v = np.concatenate([best_v[q], D[rows, q]])
+                i = np.concatenate([best_i[q], ids[rows]])
                 order = np.lexsort((i, -v))[:shortlist]
-                best_v[q], best_i[q] = v[order], i[order]
+                old = order < len(best_d[q])
+                d = np.empty(len(order), dtype=np.int64)
+                d[old] = best_d[q][order[old]]
+                d[~old] = V[rows[order[~old] - len(best_d[q])]] @ Q[q]
+                best_v[q], best_i[q], best_d[q] = v[order], i[order], d
         if not seen:
             return
         counts = [len(best_v[q]) for q in range(m)]
@@ -1363,21 +1334,23 @@ def pq_topk_adc(
                 query_id: [qids_py[q] for q in range(m) for _ in range(counts[q])],
                 cand_id: np.concatenate(best_i) if sum(counts) else [],
                 "adc_dot": np.concatenate(best_v) if sum(counts) else [],
+                "dot": np.concatenate(best_d) if sum(counts) else [],
             },
-            columns=[query_id, cand_id, "adc_dot"],
+            columns=[query_id, cand_id, "adc_dot", "dot"],
         )
 
-    partial = encoded.select(cand_id, codes_col).mapInPandas(
+    partial = candidates.select(cand_id, cand_vec).mapInPandas(
         part_topk, schema=out_schema
     )
-    w = Window.partitionBy(query_id).orderBy(F.col("adc_dot").desc(), F.col(cand_id))
-    short = partial.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= shortlist
+    by_adc = Window.partitionBy(query_id).orderBy(
+        F.col("adc_dot").desc(), F.col(cand_id)
     )
-    if rerank is None:
-        return short.filter(F.col("rn") <= k)
-    return exact_rerank_topk(
-        short, rerank, queries, k, query_id, cand_id, query_vec, cand_vec
+    by_dot = Window.partitionBy(query_id).orderBy(F.col("dot").desc(), F.col(cand_id))
+    return (
+        partial.withColumn("rn", F.row_number().over(by_adc))
+        .filter(F.col("rn") <= shortlist)
+        .withColumn("rn", F.row_number().over(by_dot))
+        .filter(F.col("rn") <= k)
     )
 
 

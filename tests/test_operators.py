@@ -938,7 +938,6 @@ def test_pq_adc_recall_and_rerank_exactness(spark, sf_dir):
     vectors are PQ's hardest case — no cluster structure to exploit)."""
     from polar_spark.functions.similarity import (
         brute_force_topk,
-        pq_encode,
         pq_topk_adc,
         quantize,
         train_pq_codebook,
@@ -947,17 +946,15 @@ def test_pq_adc_recall_and_rerank_exactness(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     qv = e.select("vec_id", quantize("embedding").alias("v")).persist()
     books = train_pq_codebook(qv, "v", "vec_id", iters=2)
-    enc = qv.select("vec_id", pq_encode("v", books).alias("codes"))
     queries = qv.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
     got = pq_topk_adc(
         queries,
-        enc,
+        qv.select("vec_id", F.col("v").alias("cv")),
         books,
         k=5,
         shortlist=100,
-        rerank=qv.select("vec_id", F.col("v").alias("cv")),
     ).collect()
     exact = brute_force_topk(
         queries, qv.select("vec_id", F.col("v").alias("cv")), k=5
@@ -975,11 +972,10 @@ def test_pq_adc_recall_and_rerank_exactness(spark, sf_dir):
 
 
 def test_ann_train_memo_repeat_invocation_identical(spark, sf_dir):
-    """Focused pin for the r14 session-scoped trainer memos
-    (queries/similarity._PQ_TRAIN_MEMO / _IVF_TRAIN_MEMO /
-    _IVFPQ_MEMO): a repeat invocation of the memoized queries — the
-    path that now REUSES the trained codebook/index instead of
-    retraining — must return the exact same row multiset as the first
+    """A repeat invocation of the ANN queries returns the exact same
+    row multiset as the first: ``knn_pq_adc`` retrains on every call,
+    and the session-scoped memos (queries/similarity._IVF_TRAIN_MEMO /
+    _IVFPQ_MEMO) reuse the trained codebook/index on the second call
     (training is deterministic, so memo-hit and memo-miss paths are
     interchangeable by construction; this pins it)."""
     from polar_spark.queries import QUERIES
@@ -989,6 +985,117 @@ def test_ann_train_memo_repeat_invocation_identical(spark, sf_dir):
         first = sorted(map(tuple, fn(spark, sf_dir).collect()))
         second = sorted(map(tuple, fn(spark, sf_dir).collect()))
         assert first == second and len(first) > 0, name
+
+
+def test_ivfpq_memo_rebuilds_vanished_index(spark, sf_dir):
+    """An ``_IVFPQ_MEMO`` hit whose index directory was deleted (a /tmp
+    sweep) rebuilds the index instead of reading a missing path, and the
+    rows are unchanged."""
+    import shutil
+
+    from polar_spark.queries import QUERIES
+    from polar_spark.queries import similarity as qsim
+
+    fn = QUERIES["knn_ivfpq_stored"].fn
+    first = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    key = f"{sf_dir}:{spark.sparkContext.applicationId}"
+    shutil.rmtree(qsim._IVFPQ_MEMO[key][0])
+    second = sorted(map(tuple, fn(spark, sf_dir).collect()))
+    assert first == second and len(first) > 0
+
+
+def _lloyd_pq_reference(rows, nsub=8, ksub=16, iters=2):
+    """Plain numpy/Python Lloyd's PQ over ``rows`` = [(id, vector)]:
+    init from the ksub lowest ids, nearest code by explicit squared
+    distance (ties → lowest code), floor of the double-precision mean,
+    an empty code keeps its centroid."""
+    import math
+
+    import numpy as np
+
+    rows = sorted(rows)
+    V = np.array([list(v) for _, v in rows], dtype=np.int64)
+    dsub = V.shape[1] // nsub
+    books = [
+        [[int(x) for x in V[c, s * dsub : (s + 1) * dsub]] for c in range(ksub)]
+        for s in range(nsub)
+    ]
+    for _ in range(iters):
+        for s in range(nsub):
+            X = V[:, s * dsub : (s + 1) * dsub]
+            Bs = np.array(books[s], dtype=np.int64)
+            codes = ((X[:, None, :] - Bs[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+            for c in range(len(Bs)):
+                members = X[codes == c]
+                if len(members):
+                    books[s][c] = [
+                        math.floor(float(int(t)) / float(len(members)))
+                        for t in members.sum(axis=0)
+                    ]
+    return books
+
+
+def test_train_pq_codebook_matches_numpy_lloyd_reference(spark, sf_dir):
+    """On a corpus under PQ_MAX_TRAIN the bounded sample is the whole
+    corpus, so the driver-side trainer equals full-corpus Lloyd's."""
+    from polar_spark.functions.similarity import (
+        PQ_MAX_TRAIN,
+        quantize,
+        train_pq_codebook,
+    )
+
+    e = load_table(spark, sf_dir, "embeddings")
+    qv = e.select("vec_id", quantize("embedding").alias("v")).repartition(3)
+    rows = [(r["vec_id"], r["v"]) for r in qv.collect()]
+    assert 16 < len(rows) <= PQ_MAX_TRAIN
+    assert train_pq_codebook(qv, "v", "vec_id", iters=2) == _lloyd_pq_reference(rows)
+
+
+def test_train_pq_codebook_trains_on_hash_ordered_sample(spark):
+    """Above PQ_MAX_TRAIN vectors the trainer reads exactly the first
+    PQ_MAX_TRAIN rows in (xxhash64(id), id) order — not the lowest ids,
+    and not the whole corpus."""
+    import numpy as np
+
+    from polar_spark.functions.similarity import PQ_MAX_TRAIN, train_pq_codebook
+
+    rng = np.random.default_rng(7)
+    V = rng.integers(-50, 51, size=(5000, 16))
+    df = spark.createDataFrame(
+        [(i, [int(x) for x in V[i]]) for i in range(5000)],
+        "vec_id long, v array<bigint>",
+    ).repartition(4)
+    first = df.orderBy(F.xxhash64("vec_id"), "vec_id").limit(PQ_MAX_TRAIN).collect()
+    sample = [(r["vec_id"], r["v"]) for r in first]
+    assert len(sample) == PQ_MAX_TRAIN
+    assert {i for i, _ in sample} != set(range(PQ_MAX_TRAIN))
+    want = _lloyd_pq_reference(sample)
+    assert want != _lloyd_pq_reference([(i, V[i]) for i in range(5000)])
+    assert train_pq_codebook(df, "v", "vec_id", iters=2) == want
+
+
+def test_knn_pq_adc_job_budget_and_single_python_stage(spark, sf_dir):
+    """One ``knn_pq_adc`` call (training included) runs at most 7 Spark
+    jobs, and its plan has exactly one MapInPandas (the fused encode +
+    ADC + exact-dot scan) and no Python UDF evaluation node."""
+    import re
+
+    from polar_spark.plans.explain import explain_str
+    from polar_spark.queries import QUERIES
+
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    sc.setJobGroup("pq_adc_budget", "knn_pq_adc")
+    try:
+        df = QUERIES["knn_pq_adc"].fn(spark, sf_dir)
+        plan = explain_str(df)  # before the run: AQE adds a final plan
+        assert df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("pq_adc_budget")
+    assert 0 < len(jobs) <= 7, sorted(jobs)
+    assert len(re.findall(r"\(\d+\) MapInPandas\b", plan)) == 1, plan
+    assert not re.search(r"ArrowEvalPython|BatchEvalPython", plan), plan
 
 
 def test_train_pq_codebook_rejects_ragged_vectors(spark):
@@ -1858,12 +1965,12 @@ def test_write_ivf_index_two_level_same_layout(spark, sf_dir, tmp_path):
 
 
 def test_lloyd_trainers_match_posexplode_reference(spark, sf_dir):
-    """r13 optimization round: the Lloyd statistics kernel (one
-    mapInPandas pass of per-partition integer partials) must produce
-    BIT-IDENTICAL codebooks to the former corpus×dims posexplode →
-    groupBy → floor(sum/count) aggregation it replaced — across a forced
-    multi-partition input so the cross-partition partial merge is
-    exercised."""
+    """The Lloyd trainers (IVF: one mapInPandas pass of per-partition
+    integer partials; PQ: numpy rounds over a driver-side sample that
+    is the whole corpus here) must produce BIT-IDENTICAL codebooks to
+    the former corpus×dims posexplode → groupBy → floor(sum/count)
+    aggregation — across a forced multi-partition input so the
+    cross-partition partial merge is exercised."""
     from pyspark.sql import functions as F
 
     from polar_spark.functions.similarity import (

@@ -32,6 +32,7 @@ AUDIT_SUBSET = [
     "dedup_simhash",
     "knn_bruteforce_dot",
     "knn_ivf_probe",
+    "knn_pq_adc",
     "gopher_quality_filter",
     "quality_linear_classifier",
     "dedup_strip_dup_chunks",

@@ -22,6 +22,8 @@ import os
 import sys
 from decimal import Decimal
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Default sf0.01 mirrors the driver's gate; override with
 # POLAR_ORACLE_SF_DIR=/root/testdata/sf0.1 for the at-scale sweep
 # (broadcast thresholds, AQE coalescing and multi-row-group scans all
@@ -63,7 +65,7 @@ def _normalize(rows, cols):
 def main(names: list[str]) -> int:
     import duckdb
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entry_mod
     from polar_spark.session import get_spark
 

@@ -12,7 +12,8 @@ perturbed embeddings), then runs the driver-identical DuckDB compare
 
 Usage: python tools/check_oracle_scale.py [name ...]
   (default: the decade-swept families — minhash dedup, simhash,
-   stored-cell ANN, KMV pair, HLL, LM scoring)
+   stored-cell ANN, KMV pair, HLL, LM scoring — and the PQ/IVFADC
+   recall laws)
 
 Env: SPARK_GRAFT_SF_DIR   base corpus (default /root/testdata/sf0.1)
      POLAR_SCALE_FACTOR   replication factor (default 10)
@@ -49,6 +50,8 @@ DEFAULT_QUERIES = [
     "sketch_kmv_merged_months",
     "sketch_hll_distinct_users",
     "lm_bigram_nll_score",
+    "knn_pq_recall_law",
+    "knn_ivfpq_recall_law",
 ]
 
 
