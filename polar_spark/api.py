@@ -144,8 +144,8 @@ class PolarEngine:
         """Request-shaped produce (the REST facade's data path): message
         bodies + one optional partition key, acked after a driver-side
         staged write publishes — no Spark job (Producer.produce_rows)."""
-        self.catalog.ensure_topic(topic, self.num_partitions)
-        return self.producer.produce_rows(topic, values, key=key)
+        meta = self.catalog.ensure_topic(topic, self.num_partitions)
+        return self.producer.produce_rows(topic, values, key=key, meta=meta)
 
     # -- consumer lifecycle ------------------------------------------------
     def register(self, consumer_id: str, group: str, topics: list[str],

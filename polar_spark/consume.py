@@ -25,6 +25,7 @@ arrival order within a partition.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import threading
@@ -57,8 +58,21 @@ SMALL_POLL_MAX_FILES = 512
 # exactly the footer-parse storm of windows spanning many small unkeyed
 # files; with the cache + next-window prefetch a steady poll loop pays
 # the open cost off the latency path.
+#
+# The cache is also WRITE-THROUGH: a driver-side produce puts each table
+# it wrote under the file's final data path just before its publish
+# makes the file visible (Producer._stage_publish_arrow; an aborted
+# batch's entries are dropped), so a tail-following consumer in the
+# same process is served from memory — the reference serves such a
+# reader from its coalescer and segment-writer buffers (SURVEY §3.1-3.2)
+# — instead of re-reading a file this process wrote milliseconds ago.
+# The per-file size rule and the single byte cap apply to both sources;
+# the per-poll directory listing stays the source of truth, so a cached
+# path that compaction or vacuum removed is never served.
 SEG_CACHE_MAX_BYTES = 256 * 1024 * 1024
 SEG_CACHE_FILE_MAX_BYTES = 32 * 1024 * 1024  # bigger files: row-group path
+# the columns a cached segment table holds, in this order
+SEG_COLUMNS = ["topic", "offset", "timestamp", "key", "value"]
 
 
 class _SegmentCache:
@@ -106,6 +120,19 @@ class _SegmentCache:
             while self._bytes > self._cap and self._d:
                 _, old = self._d.popitem(last=False)
                 self._bytes -= old.nbytes
+
+    def write_through(self, path: str, tbl, file_bytes: int) -> None:
+        """Cache ``tbl`` (``SEG_COLUMNS``, as a cold read of ``path``
+        returns them), which this process is publishing at ``path``,
+        under the same per-file size rule a read obeys."""
+        if file_bytes <= SEG_CACHE_FILE_MAX_BYTES:
+            self.put(path, tbl)
+
+    def discard(self, path: str) -> None:
+        with self._lock:
+            t = self._d.pop(path, None)
+            if t is not None:
+                self._bytes -= t.nbytes
 
     def load(self, path: str, cols: list[str]):
         """Cached whole-file read; returns the table or None when the
@@ -405,10 +432,13 @@ def _nullable_topic_schema():
     )
 
 
+@functools.cache
 def _empty_arrow_batch():
     """Zero-row pyarrow Table in the exact arrow shape the driver-side
     poll path produces — lets an empty poll answer without touching
-    Spark (the idle-poll-loop case a real consumer hits most often)."""
+    Spark (the idle-poll-loop case a real consumer hits most often).
+    Built once: Arrow tables are immutable, so every empty poll shares
+    it."""
     import pyarrow as pa
 
     return pa.table({
@@ -493,7 +523,7 @@ class ConsumerGroup:
             from polar_spark.topics import filename_offset_range
 
             ddir = self.catalog.data_dir(topic)
-            cols = ["topic", "offset", "timestamp", "key", "value"]
+            cols = SEG_COLUMNS
             paths: list[str] = []
             for q, lo in committed.items():
                 pdir = os.path.join(ddir, f"partition={q}")
@@ -842,7 +872,7 @@ class ConsumerGroup:
             if len(tasks) > SMALL_POLL_MAX_FILES:
                 return None
 
-            cols = ["topic", "offset", "timestamp", "key", "value"]
+            cols = SEG_COLUMNS
 
             def _one(args: tuple[int, str]):
                 q, path = args

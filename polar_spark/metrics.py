@@ -17,6 +17,15 @@ from __future__ import annotations
 import threading
 
 
+def value_bytes(values) -> int:
+    """UTF-8 byte total of an Arrow string column (nulls count 0) — the
+    unit of the producer and consumer byte counters and of the poll
+    byte budget."""
+    import pyarrow.compute as pc
+
+    return pc.sum(pc.binary_length(values)).as_py() or 0
+
+
 class Metrics:
     """Thread-safe counter/gauge/summary registry.
 

@@ -35,7 +35,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from polar_spark.hashing import partition_col
-from polar_spark.topics import TopicCatalog, normalize_events
+from polar_spark.metrics import value_bytes
+from polar_spark.topics import TopicCatalog, TopicMeta, normalize_events
 
 MAX_MESSAGE_BYTES = 1024 * 1024  # reference MaxMessageSize 1 MiB
 # (internal/conf/config.go:252-254; internal/producing/server.go:146-152)
@@ -256,7 +257,7 @@ class Producer:
                     q: [(n, bases[q] + 1, bases[q] + n)] for q, n in counts.items()
                 }
                 self._validate_staging(topic, staging, expect)
-                self.catalog.publish(topic, seq, staging=staging)
+                tails = self.catalog.publish(topic, seq, staging=staging)
             except BaseException:
                 # non-blocking abort: the failure path must never wait on
                 # other producers; the reservation becomes an offset gap
@@ -268,7 +269,7 @@ class Producer:
                     sum(counts.values()),
                     sum(b for _c, b in stats.values()),
                 )
-            return self.catalog.tails(topic)
+            return tails
         finally:
             if pin:
                 keyed.unpersist()
@@ -347,17 +348,27 @@ class Producer:
         reserve offsets (keyless rows round-robin from the RESERVED
         tails inside the lock, mirroring keyless_offset_plan — ADVICE
         r6), write one zstd parquet file per touched partition
-        (thread-pooled; pyarrow releases the GIL), validate footer
-        stats against the reservation, publish in order. ``tbl`` holds
+        (thread-pooled; pyarrow releases the GIL), validate, publish in
+        order, and return the tails the publish wrote. ``tbl`` holds
         columns topic/timestamp/key/value in arrival order; ``parts``
-        the per-row partition (None/-1 = keyless)."""
+        the per-row partition (None/-1 = keyless).
+
+        Validation compares the writer's own footer — the
+        ``FileMetaData`` that ``pq.write_table`` hands back through
+        ``metadata_collector`` — against the reservation, with the same
+        comparator and error as the Spark paths' on-disk footer pass,
+        so a staged file is never re-opened. Each validated table goes
+        into the segment cache under its final data path before the
+        publish makes it visible (write-through; see consume.py), so a
+        tail-following poll in this process reads it from memory."""
         import os
         import uuid
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from polar_spark.topics import io_pool
+        from polar_spark.consume import _SEG_CACHE, SEG_COLUMNS
+        from polar_spark.topics import footer_offset_range, io_pool
 
         def plan(reserved: dict[int, int]):
             rot = sum(t + 1 for t in reserved.values()) % p
@@ -375,11 +386,13 @@ class Producer:
 
         seq, _ends, (by_part, counts, bases) = self.catalog.reserve(topic, plan)
         staging = self.catalog.staging_dir(topic, seq)
+        cached: list[str] = []
         try:
-            def _write_one(item: tuple[int, list[int]]) -> None:
+            def _write_one(item: tuple[int, list[int]]):
                 q, ix = item
                 sl = tbl.take(pa.array(ix, type=pa.int64()))
                 base = bases[q]
+                # SEG_COLUMNS order: the table is cached as written
                 out = pa.table(
                     {
                         "topic": sl.column("topic"),
@@ -394,16 +407,22 @@ class Producer:
                 d = os.path.join(staging, f"partition={q}")
                 os.makedirs(d, exist_ok=True)
                 # name carries the offset range up front (off-<min>-
-                # <max>-…): validation's footer pass then verifies
-                # without renaming, and readers prune by listing alone
+                # <max>-…): nothing is renamed at validation, and
+                # readers prune by listing alone
+                path = os.path.join(
+                    d,
+                    f"off-{base + 1}-{base + len(ix)}-"
+                    f"part-{uuid.uuid4().hex}.parquet",
+                )
+                footer: list = []
                 pq.write_table(
+                    out, path, compression="zstd", metadata_collector=footer
+                )
+                return (
+                    q,
+                    (footer_offset_range(footer[0]), path),
                     out,
-                    os.path.join(
-                        d,
-                        f"off-{base + 1}-{base + len(ix)}-"
-                        f"part-{uuid.uuid4().hex}.parquet",
-                    ),
-                    compression="zstd",
+                    os.path.getsize(path),
                 )
 
             items = list(by_part.items())
@@ -422,10 +441,9 @@ class Producer:
                 # `raise f.exception()` would lose it); every future has
                 # completed, so each failure surfaces rather than only
                 # the first-submitted one
-                for f in futs:
-                    f.result()
-            elif items:
-                _write_one(items[0])
+                files = [f.result() for f in futs]
+            else:
+                files = [_write_one(it) for it in items]
             # committer-contract parity: the Spark writer drops _SUCCESS
             # when the staging write is complete; observers (tests, ops
             # tooling) key off it to distinguish write-complete-but-
@@ -435,19 +453,30 @@ class Producer:
             expect = {
                 q: [(c, bases[q] + 1, bases[q] + c)] for q, c in counts.items()
             }
-            self._validate_staging(topic, staging, expect)
-            self.catalog.publish(topic, seq, staging=staging)
+            written = {q: [ent] for q, ent, _out, _nb in files}
+            self._validate_staging(topic, staging, expect, written)
+            # cached BEFORE publish renames the files in: a poll that
+            # sees the advanced tails finds every new file cached. The
+            # names carry a fresh uuid, so an entry can never describe
+            # other content; an aborted batch's entries are dropped
+            ddir = self.catalog.data_dir(topic)
+            for q, (_rng, path), out, nbytes in files:
+                final = os.path.join(
+                    ddir, f"partition={q}", os.path.basename(path)
+                )
+                _SEG_CACHE.write_through(final, out.select(SEG_COLUMNS), nbytes)
+                cached.append(final)
+            tails = self.catalog.publish(topic, seq, staging=staging)
         except BaseException:
+            for final in cached:
+                _SEG_CACHE.discard(final)
             self.catalog.abort(topic, seq)
             raise
         if self.metrics is not None:
-            vals = tbl.column("value").to_pylist()
             self.metrics.on_produce(
-                topic,
-                tbl.num_rows,
-                sum(len(v.encode()) for v in vals if v is not None),
+                topic, tbl.num_rows, value_bytes(tbl.column("value"))
             )
-        return self.catalog.tails(topic)
+        return tails
 
     def produce_rows(
         self,
@@ -455,6 +484,7 @@ class Producer:
         values: list[str | None],
         key: str | None = None,
         ts=None,
+        meta: TopicMeta | None = None,
     ) -> dict[int, int]:
         """Request-shaped produce: a list of message bodies, one optional
         partition key for the whole batch — the exact shape of the
@@ -469,6 +499,10 @@ class Producer:
         machinery as every other produce. Files on disk are
         indistinguishable from the distributed writer's.
 
+        ``meta``: the topic's :class:`TopicMeta` when the caller already
+        holds it (the engine facade's ``ensure_topic``), so a request
+        reads the topic metadata once.
+
         Durability: the ack (return) happens after the staged batch is
         published — same contract as the DataFrame paths. Returns the
         new per-partition tails."""
@@ -478,7 +512,8 @@ class Producer:
 
         from polar_spark.hashing import partition_for_key_spark
 
-        meta = self.catalog.ensure_topic(topic)
+        if meta is None:
+            meta = self.catalog.ensure_topic(topic)
         p = meta.num_partitions
         n = len(values)
         if n == 0:
@@ -511,6 +546,7 @@ class Producer:
         topic: str,
         staging: str,
         expect: dict[int, list[tuple[int, int, int]]],
+        written: dict | None = None,
     ) -> None:
         """Compare the staged files' footer stats against the planned
         per-task offset ranges. Per-FILE ranges (not per-partition
@@ -519,8 +555,10 @@ class Producer:
         the same partition while preserving (count, max): every file must
         cover exactly one planned contiguous range. The same footer pass
         stamps each staged file's offset range into its NAME
-        (off-<min>-<max>-…), so readers prune by listing alone."""
-        got = self.catalog.stamp_staged_offsets(staging)
+        (off-<min>-<max>-…), so readers prune by listing alone.
+        ``written``: the writer's own footers, in place of reading them
+        back from disk (see :meth:`TopicCatalog.stamp_staged_offsets`)."""
+        got = self.catalog.stamp_staged_offsets(staging, written)
         norm_got = {q: sorted(v) for q, v in got.items()}
         norm_exp = {q: sorted(v) for q, v in expect.items()}
         if norm_got != norm_exp:
@@ -635,7 +673,7 @@ class Producer:
                         (n, bases[t] + 1, bases[t] + n)
                     )
                 self._validate_staging(topic, staging, expect)
-                self.catalog.publish(topic, seq, staging=staging)
+                tails = self.catalog.publish(topic, seq, staging=staging)
             except BaseException:
                 # non-blocking abort (see keyed path)
                 self.catalog.abort(topic, seq)
@@ -644,7 +682,7 @@ class Producer:
                 self.metrics.on_produce(
                     topic, sum(counts.values()), sum(b for _c, b in agg.values())
                 )
-            return self.catalog.tails(topic)
+            return tails
         finally:
             if pin:
                 tagged.unpersist()

@@ -39,11 +39,13 @@ from __future__ import annotations
 import json
 import contextlib
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from polar_spark.api import PolarEngine
 from polar_spark.consume import LATEST
+from polar_spark.metrics import value_bytes
 from polar_spark.produce import MAX_MESSAGE_BYTES
 
 
@@ -197,6 +199,7 @@ class PolarRestServer:
                 self._send(404)
 
             def _produce(self, path: str, q: dict):
+                t0 = time.monotonic()
                 topic = path[len("/v1/topic/") : -len("/messages")]
                 body = self._body()
                 key = q.get("partitionKey", [None])[0]
@@ -224,13 +227,16 @@ class PolarRestServer:
                 # job — the request body never needs to enter the JVM
                 with facade._key_lock("topic", topic):
                     facade.engine.produce_rows(topic, lines, key=key)
+                facade.engine.metrics.observe(
+                    "polar_producer_produce_seconds",
+                    time.monotonic() - t0,
+                    {"topic": topic},
+                )
                 self._send(200, "OK")
 
             def _poll(self, cid: str | None):
-                import time as _time
-
                 binary = "octet-stream" in (self.headers.get("Accept") or "")
-                t0 = _time.monotonic()
+                t0 = time.monotonic()
                 served_counts: dict[str, tuple[int, int]] = {}
                 with facade._key_lock("consumer", cid):
                     # reference flow: requesting new data commits the
@@ -257,13 +263,14 @@ class PolarRestServer:
                         # Spark jobs) when the small-poll path served the
                         # batch; identical shape from the distributed path
                         for topic, res in results.items():
-                            for it in res.items():
+                            its = res.items()
+                            n, b = served_counts.get(topic, (0, 0))
+                            served_counts[topic] = (
+                                n + sum(len(it["records"]) for it in its),
+                                b + _served_bytes(res, its),
+                            )
+                            for it in its:
                                 recs = it["records"]
-                                n, b = served_counts.get(topic, (0, 0))
-                                served_counts[topic] = (
-                                    n + len(recs),
-                                    b + sum(len(v or "") for _t, _k, v in recs),
-                                )
                                 if binary:
                                     bin_items.append(
                                         {
@@ -301,7 +308,7 @@ class PolarRestServer:
                 m = facade.engine.metrics
                 for t_name, (n, b) in served_counts.items():
                     m.on_poll(group, t_name, n, b)
-                m.observe("polar_consumer_poll_seconds", _time.monotonic() - t0)
+                m.observe("polar_consumer_poll_seconds", time.monotonic() - t0)
                 if binary:
                     if not bin_items:
                         return self._send(204)
@@ -364,6 +371,18 @@ class PolarRestServer:
         self._server.server_close()
         if self._thread:
             self._thread.join(timeout=5)
+
+
+def _served_bytes(res, items: list[dict]) -> int:
+    """UTF-8 bytes of a poll's served values — the unit of the producer
+    byte counter and the poll byte budget. Read from the served Arrow
+    batch when the driver-side path answered; otherwise encoded from
+    the marshalled records."""
+    if res._arrow is not None:
+        return value_bytes(res._arrow.column("value"))
+    return sum(
+        len(v.encode()) for it in items for _t, _k, v in it["records"] if v
+    )
 
 
 def _maybe_json(value: str):

@@ -230,8 +230,13 @@ class RetentionScheduler:
         # cleans it up — without this pass a year of racing ephemeral
         # groups re-grows groups/ with 0-byte locks. Only locks whose
         # .json sibling is ABSENT and whose own mtime is past the cutoff
-        # are touched (a held flock rewrites pid:ts into the file, so an
-        # in-flight creation's lock is always fresh).
+        # are touched. Acquiring a flock never writes the file, so the
+        # mtime is its CREATION time and an aged lock can still be held:
+        # a register() creating its ledger under an old orphan's lock.
+        # The guard is the sweep's own flock — a held lock makes it time
+        # out and skip — plus the sibling re-check under that flock; a
+        # waiter on an unlinked lock re-opens the path (_file_lock's
+        # inode revalidation).
         try:
             locks = [fn for fn in os.listdir(gdir) if fn.endswith(".json.lock")]
         except FileNotFoundError:

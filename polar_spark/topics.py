@@ -89,6 +89,33 @@ def filename_offset_range(fn: str) -> tuple[int, int] | None:
         return None
 
 
+def footer_minmax(md, column: str):
+    """(min, max) of ``column`` across the row-group statistics of a
+    parquet ``FileMetaData``, or None when the column is absent or ANY
+    group lacks usable stats (a partial answer would silently
+    mis-age/mis-anchor the file)."""
+    idx = md.schema.to_arrow_schema().get_field_index(column)
+    if idx < 0:
+        return None
+    mn = mx = None
+    for rg in range(md.num_row_groups):
+        stats = md.row_group(rg).column(idx).statistics
+        if stats is None or not stats.has_min_max:
+            return None
+        mn = stats.min if mn is None or stats.min < mn else mn
+        mx = stats.max if mx is None or stats.max > mx else mx
+    return None if mn is None else (mn, mx)
+
+
+def footer_offset_range(md) -> tuple[int, int | None, int | None]:
+    """``(rows, min offset, max offset)`` of one parquet file from its
+    ``FileMetaData`` — read from disk, or handed back by the writer
+    (``pq.write_table(..., metadata_collector=...)``). The bounds are
+    None when the offset stats are unusable."""
+    mm = footer_minmax(md, "offset")
+    return (md.num_rows, *(mm if mm is not None else (None, None)))
+
+
 def _pid_alive(pid: int) -> bool:
     try:
         os.kill(pid, 0)
@@ -230,11 +257,14 @@ class TopicCatalog:
                 json.dump({str(k): v for k, v in cur.items()}, f)
             os.replace(tmp, hp)
 
-    def advance_tails(self, name: str, new_tails: dict[int, int]) -> None:
+    def advance_tails(self, name: str, new_tails: dict[int, int]) -> dict[int, int]:
+        """Max-merge ``new_tails`` into the tails ledger; returns the
+        tails as written."""
         cur = self.tails(name)
         for p, off in new_tails.items():
             cur[p] = max(cur.get(p, -1), off)
         self._write_tails(name, cur)
+        return cur
 
     @contextlib.contextmanager
     def _file_lock(self, path: str, what: str, timeout: float):
@@ -248,10 +278,12 @@ class TopicCatalog:
         with its process (no staleness heuristic at all), and two
         acquisitions — across processes OR across threads, each with its
         own open file description — genuinely exclude each other. The
-        file persists between uses; its content is a debugging aid
-        (last holder's pid), not protocol state. There is no staleness
-        parameter — crash release is automatic, and a live-but-slow
-        holder simply makes waiters time out instead of being broken."""
+        file persists between uses and carries no payload: acquiring
+        never writes it, so its mtime is its creation time. To find a
+        holder, read ``/proc/locks`` (or ``lslocks``), which lists the
+        pid of every flock by inode. There is no staleness parameter —
+        crash release is automatic, and a live-but-slow holder simply
+        makes waiters time out instead of being broken."""
         import fcntl
 
         deadline = time.time() + timeout
@@ -290,9 +322,6 @@ class TopicCatalog:
                     raise TimeoutError(
                         f"{what} lock {path!r} kept vanishing"
                     ) from None
-            with contextlib.suppress(OSError):
-                os.ftruncate(fd, 0)
-                os.write(fd, f"{os.getpid()}:{time.time_ns()}".encode())
             yield
         finally:
             if acquired:
@@ -378,7 +407,7 @@ class TopicCatalog:
             return seq, ends, payload
 
     def publish(self, name: str, seq: int, staging: str | None,
-                timeout: float = 300.0) -> None:
+                timeout: float = 300.0) -> dict[int, int]:
         """Publish reservation ``seq``: move its staged files into the
         data dir and advance the public tails — strictly in reservation
         order, so a reader never observes tail T with an earlier batch's
@@ -388,7 +417,8 @@ class TopicCatalog:
         :meth:`abort`-marked by a failed producer — is skipped by
         whoever waits behind it, with its staged files cleaned up; on
         our own timeout we abort-mark OUR reservation so the queue never
-        wedges on an abandoned entry."""
+        wedges on an abandoned entry. Returns the public tails as of
+        this publish (the ledger :meth:`advance_tails` just wrote)."""
         deadline = time.time() + timeout
         while True:
             with self.produce_lock(name):
@@ -396,10 +426,11 @@ class TopicCatalog:
                 turn = st["published_seq"] + 1
                 if turn == seq:
                     ent = st["pending"].pop(str(seq), None)
+                    tails = None
                     if staging is not None and not (ent or {}).get("aborted"):
                         self._ingest_staged(name, staging)
                         if ent:
-                            self.advance_tails(
+                            tails = self.advance_tails(
                                 name, {int(k): v for k, v in ent["ends"].items()}
                             )
                     st["published_seq"] = seq
@@ -408,7 +439,7 @@ class TopicCatalog:
                         os.unlink(self._abort_sentinel(name, seq))
                     except FileNotFoundError:
                         pass
-                    return
+                    return tails if tails is not None else self.tails(name)
                 blocker = st["pending"].get(str(turn))
                 if blocker is not None and (
                     blocker.get("aborted")
@@ -496,35 +527,36 @@ class TopicCatalog:
                     )
         shutil.rmtree(staging, ignore_errors=True)
 
-    @staticmethod
-    def staged_file_ranges(staging: str) -> dict[int, list[tuple[int, int, int]]]:
-        """Per-partition multiset of (rows, min_offset, max_offset) for
-        every staged parquet file, from footer metadata only (no data
-        pages). Used to validate a staged write against its reservation
-        before publishing — each write task's file must cover exactly its
-        planned contiguous range (per-file, not per-partition, so a
-        recomputed nondeterministic input that redistributes rows across
-        tasks while preserving partition totals is still caught)."""
-        return {
-            part: [rng for rng, _path in entries]
-            for part, entries in
-            TopicCatalog._staged_file_ranges_with_paths(staging).items()
-        }
-
     def stamp_staged_offsets(
-        self, staging: str
+        self, staging: str, written: dict | None = None
     ) -> dict[int, list[tuple[int, int, int]]]:
-        """:meth:`staged_file_ranges`, plus: rename each staged file to
+        """Per-partition multiset of (rows, min_offset, max_offset) for
+        every staged parquet file, used to validate a staged write
+        against its reservation before publishing — each write task's
+        file must cover exactly its planned contiguous range (per-file,
+        not per-partition, so a recomputed nondeterministic input that
+        redistributes rows across tasks while preserving partition
+        totals is still caught).
+
+        The same pass renames each staged file to
         ``off-<min>-<max>-<orig>.parquet`` so its offset range is
         readable from the LISTING alone — the analog of the reference
         naming segments by base offset (internal/data/segment file
         naming). A bounded poll then prunes fully-consumed files without
         opening a single footer, which is what keeps poll latency flat
         as a topic's file count grows. Files whose stats are missing
-        keep their name (a reader must open them). Returns the ranges
-        keyed per partition, exactly as staged_file_ranges does."""
+        keep their name (a reader must open them).
+
+        ``written`` (``{partition: [((rows, lo, hi), path), ...]}``)
+        supplies the ranges from the writer's own footers — the
+        driver-side produce path, whose files already carry their range
+        in the name. Without it the ranges come from the footers on disk
+        (one footer read per staged file, no data pages)."""
         out: dict[int, list[tuple[int, int, int]]] = {}
-        per_file = self._staged_file_ranges_with_paths(staging)
+        per_file = (
+            written if written is not None
+            else self._staged_file_ranges_with_paths(staging)
+        )
         for part, entries in per_file.items():
             for (rows, lo, hi), path in entries:
                 out.setdefault(part, []).append((rows, lo, hi))
@@ -543,7 +575,8 @@ class TopicCatalog:
     def _staged_file_ranges_with_paths(
         staging: str,
     ) -> dict[int, list[tuple[tuple[int, int, int], str]]]:
-        """staged_file_ranges, keeping each range's file path."""
+        """Per-partition ``((rows, lo, hi), path)`` of every staged
+        parquet file, read from its footer on disk."""
         import pyarrow.parquet as pq
 
         files: list[tuple[int, str]] = []
@@ -560,17 +593,7 @@ class TopicCatalog:
 
         def _one(item):
             part, path = item
-            md = pq.ParquetFile(path).metadata
-            idx = md.schema.to_arrow_schema().get_field_index("offset")
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                stats = md.row_group(rg).column(idx).statistics
-                if stats is None or not stats.has_min_max:
-                    lo = hi = None
-                    break
-                lo = stats.min if lo is None else min(lo, stats.min)
-                hi = stats.max if hi is None else max(hi, stats.max)
-            return part, ((md.num_rows, lo, hi), path)
+            return part, (footer_offset_range(pq.ParquetFile(path).metadata), path)
 
         out: dict[int, list] = {}
         if files:
@@ -653,18 +676,7 @@ class TopicCatalog:
         try:
             import pyarrow.parquet as pq
 
-            md = pq.ParquetFile(path).metadata
-            idx = md.schema.to_arrow_schema().get_field_index(column)
-            if idx < 0:
-                return None
-            mn = mx = None
-            for rg in range(md.num_row_groups):
-                stats = md.row_group(rg).column(idx).statistics
-                if stats is None or not stats.has_min_max:
-                    return None
-                mn = stats.min if mn is None or stats.min < mn else mn
-                mx = stats.max if mx is None or stats.max > mx else mx
-            return None if mn is None else (mn, mx)
+            return footer_minmax(pq.ParquetFile(path).metadata, column)
         except Exception:  # noqa: BLE001 — stats are an optimization, not truth
             return None
 

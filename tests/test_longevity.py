@@ -485,3 +485,43 @@ def test_offsets_gc_reaps_orphan_lock_files(spark, tmp_path):
     res = g.poll("t", max_records=10)
     assert sum(len(it["records"]) for it in res.items()) == 5
     res.release()
+
+
+def test_offsets_gc_keeps_aged_orphan_lock_while_held(spark, tmp_path):
+    """An aged ``.json.lock`` with no ``.json`` sibling that a live
+    holder has flocked — a register() creating its ledger under an old
+    orphan's lock — survives the sweep. Acquiring a flock never rewrites
+    the file, so its mtime stays old: the sweep's own flock is the
+    guard. Once released, the next sweep reaps it."""
+    import threading
+    import time
+
+    cat = TopicCatalog(spark, str(tmp_path))
+    cat.ensure_topic("t", num_partitions=1)
+    gdir = os.path.join(str(tmp_path), "groups")
+    held = os.path.join(gdir, "joining__t.json.lock")
+    open(held, "w").close()
+    acquired, release = threading.Event(), threading.Event()
+
+    def holder():
+        with cat._file_lock(held, "test-holder", timeout=5.0):
+            acquired.set()
+            release.wait(timeout=30.0)
+
+    th = threading.Thread(target=holder)
+    th.start()
+    try:
+        assert acquired.wait(timeout=5.0)
+        old = time.time() - 8 * 24 * 3600
+        os.utime(held, (old, old))
+        sched = RetentionScheduler(
+            cat, period_seconds=3600.0, offsets_retention_hours=7 * 24.0
+        )
+        sched.sweep_once()
+        assert os.path.exists(held)
+    finally:
+        release.set()
+        th.join(timeout=10.0)
+    assert os.path.getmtime(held) < time.time() - 7 * 24 * 3600  # no payload
+    sched.sweep_once()
+    assert not os.path.exists(held)

@@ -209,6 +209,37 @@ def test_metrics_counters_advance(server):
     assert after['polar_producer_requests_body_bytes_total{topic="mt"}'] > 0
     assert after["polar_consumer_poll_seconds_count"] >= 1.0
     assert after["polar_consumer_active"] >= 1.0
+    # produce latency summary, one observation per acked request
+    pc_key = 'polar_producer_produce_seconds_count{topic="mt"}'
+    assert after[pc_key] - before.get(pc_key, 0.0) == 5.0
+    assert after['polar_producer_produce_seconds_sum{topic="mt"}'] > 0
+
+
+def test_bytes_served_count_utf8_bytes(server):
+    """Consumer bytes served count UTF-8 bytes, like the producer byte
+    counter and the poll byte budget: a non-ASCII round trip serves
+    exactly the bytes it produced."""
+    u = server.url
+    msg = "é" * 100  # 100 characters, 200 UTF-8 bytes
+    for _ in range(3):
+        assert _req(
+            "POST", f"{u}/v1/topic/utf/messages?partitionKey=k",
+            msg.encode(), ctype="text/plain",
+        )[0] == 200
+    _req("PUT", f"{u}/v1/consumer/register?consumerId=b1&group=gb&topic=utf"
+                "&onNewGroup=startFromEarliest")
+    code, body = _req("POST", f"{u}/v1/consumer/poll?consumerId=b1")
+    assert code == 200
+    assert [v for it in json.loads(body) for v in it["values"]] == [msg] * 3
+    m = server.engine.metrics
+    produced = m.get(
+        "polar_producer_requests_body_bytes_total", {"topic": "utf"}
+    )
+    served = m.get(
+        "polar_consumer_bytes_served_total", {"group": "gb", "topic": "utf"}
+    )
+    assert produced == 600.0
+    assert served == produced
 
 
 def test_parallel_produce_and_poll_distinct_keys(server):

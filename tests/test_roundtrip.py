@@ -4,6 +4,7 @@ round-trip, per-key ordering, NDJSON, reset policies, at-least-once)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from polar_spark.consume import EARLIEST, LATEST, ConsumerGroup
@@ -934,6 +935,47 @@ def test_poll_offset_window_advances_past_gap(spark, sf_dir, tmp_path):
             break
         seen.extend(offs)
     assert sorted(seen) == list(range(0, 200)) + list(range(300, 500))
+
+
+def test_driver_produce_plan_check_rejects_short_file(spark, tmp_path, monkeypatch):
+    """The driver-side produce checks the writer's own footer against
+    the reservation: a write that loses a row raises the offset-plan
+    error, the reservation becomes an offset gap, nothing of the batch
+    becomes visible, and the next produce still publishes."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    cat, prod = _engine(spark, tmp_path)
+    cat.ensure_topic("pc", num_partitions=1)
+    prod.produce_rows("pc", ["a", "b", "c"])  # offsets 0..2
+    before = sorted(os.listdir(os.path.join(cat.data_dir("pc"), "partition=0")))
+    real = pq.write_table
+
+    def lossy(table, where, **kw):
+        return real(table.slice(0, table.num_rows - 1), where, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "write_table", lossy)
+        with pytest.raises(RuntimeError, match="reserved offset plan"):
+            prod.produce_rows("pc", ["d", "e", "f"])  # reserved 3..5
+    after = sorted(os.listdir(os.path.join(cat.data_dir("pc"), "partition=0")))
+    assert after == before
+    assert not [
+        d for d in os.listdir(cat.topic_dir("pc")) if d.startswith(".staging-")
+    ]
+
+    assert prod.produce_rows("pc", ["g", "h"]) == {0: 7}  # 6..7 past the gap
+    g = ConsumerGroup(cat, "g")
+    g.register("pc", EARLIEST)
+    res = g.poll("pc", max_records=100)
+    assert [
+        (it["startOffset"], [v for _t, _k, v in it["records"]])
+        for it in res.items()
+    ] == [(0, ["a", "b", "c", "g", "h"])]
+    assert res.df.select("offset").orderBy("offset").collect() == [
+        (o,) for o in (0, 1, 2, 6, 7)
+    ]
 
 
 def test_poll_byte_budget_window_drains_exactly_once(spark, sf_dir, tmp_path):

@@ -96,3 +96,105 @@ def test_steal_event_set_even_when_read_fails(seg_file, tmp_path):
         c.load(seg_file, ["a"])
     assert ev.is_set()
     assert seg_file not in c._inflight
+
+
+def _published(cat, topic):
+    import os
+
+    ddir = cat.data_dir(topic)
+    return sorted(
+        os.path.join(dp, fn)
+        for dp, _dn, fns in os.walk(ddir)
+        for fn in fns
+        if fn.endswith(".parquet")
+    )
+
+
+def test_write_through_equals_cold_read_and_serves_tail_poll(
+    spark, tmp_path, monkeypatch
+):
+    """A driver-side produce caches each published table under its data
+    path, equal to a cold read of the file; the tail-following poll
+    that follows makes no file read and serves what a cold poll
+    serves."""
+    from polar_spark.consume import (
+        _SEG_CACHE, LATEST, SEG_COLUMNS, ConsumerGroup,
+    )
+    from polar_spark.produce import Producer
+    from polar_spark.topics import TopicCatalog
+
+    _SEG_CACHE.clear()
+    cat = TopicCatalog(spark, str(tmp_path))
+    cat.ensure_topic("wt", num_partitions=3)
+    g = ConsumerGroup(cat, "tail")
+    g.register("wt", LATEST)  # tail-follower: registered before data
+    prod = Producer(cat)
+    prod.produce_rows("wt", [f"k{i}" for i in range(7)], key="a")
+    prod.produce_rows("wt", ["x", None, "é" * 3, "y"])  # keyless: 3 files
+
+    paths = _published(cat, "wt")
+    assert len(paths) == 4
+    for path in paths:
+        cached = _SEG_CACHE.get(path)
+        assert cached is not None, path
+        cold = pq.ParquetFile(path).read(columns=SEG_COLUMNS)
+        assert cached.schema == cold.schema
+        assert cached.equals(cold)
+
+    reads = []
+    real = _SEG_CACHE._read_direct
+
+    def counting(path, cols):
+        reads.append(path)
+        return real(path, cols)
+
+    monkeypatch.setattr(_SEG_CACHE, "_read_direct", counting)
+    warm = g.poll("wt", max_records=100)
+    assert warm._arrow is not None and warm._arrow.num_rows == 11
+    assert reads == []
+    _SEG_CACHE.clear()
+    cold = g.poll("wt", max_records=100)  # nothing committed: same window
+    assert sorted(reads) == paths
+    assert warm.items() == cold.items()
+    assert warm.positions == cold.positions
+
+
+def test_write_through_skips_files_over_the_per_file_cap(
+    spark, tmp_path, monkeypatch
+):
+    """The per-file size rule of a cold read applies to write-through."""
+    import polar_spark.consume as C
+    from polar_spark.produce import Producer
+    from polar_spark.topics import TopicCatalog
+
+    C._SEG_CACHE.clear()
+    monkeypatch.setattr(C, "SEG_CACHE_FILE_MAX_BYTES", 64)
+    cat = TopicCatalog(spark, str(tmp_path))
+    cat.ensure_topic("cap", num_partitions=1)
+    Producer(cat).produce_rows("cap", ["v"] * 5, key="k")
+    (path,) = _published(cat, "cap")
+    assert C._SEG_CACHE.get(path) is None
+
+
+def test_write_through_dropped_when_publish_fails(spark, tmp_path, monkeypatch):
+    """Tables are cached before the publish makes their files visible;
+    a batch whose publish fails leaves no cache entry behind."""
+    import polar_spark.consume as C
+    from polar_spark.produce import Producer
+    from polar_spark.topics import TopicCatalog
+
+    C._SEG_CACHE.clear()
+    cat = TopicCatalog(spark, str(tmp_path))
+    cat.ensure_topic("pf", num_partitions=2)
+    seen = []
+
+    def failing_publish(name, seq, staging, timeout=300.0):
+        seen.extend(p for p in C._SEG_CACHE._d if p.startswith(cat.data_dir(name)))
+        raise OSError("publish failed")
+
+    monkeypatch.setattr(cat, "publish", failing_publish)
+    with pytest.raises(OSError):
+        Producer(cat).produce_rows("pf", ["a", "b", "c"])
+    assert len(seen) == 2  # keyless: one cached table per partition file
+    assert not [p for p in C._SEG_CACHE._d if p.startswith(cat.data_dir("pf"))]
+    assert C._SEG_CACHE._bytes == 0
