@@ -19,8 +19,7 @@ import threading
 
 def value_bytes(values) -> int:
     """UTF-8 byte total of an Arrow string column (nulls count 0) — the
-    unit of the producer and consumer byte counters and of the poll
-    byte budget."""
+    producer byte counter's unit, shared with the poll byte budget."""
     import pyarrow.compute as pc
 
     return pc.sum(pc.binary_length(values)).as_py() or 0

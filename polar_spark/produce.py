@@ -367,7 +367,7 @@ class Producer:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from polar_spark.consume import _SEG_CACHE, SEG_COLUMNS
+        from polar_spark.consume import _SEG_CACHE
         from polar_spark.topics import footer_offset_range, io_pool
 
         def plan(reserved: dict[int, int]):
@@ -464,7 +464,7 @@ class Producer:
                 final = os.path.join(
                     ddir, f"partition={q}", os.path.basename(path)
                 )
-                _SEG_CACHE.write_through(final, out.select(SEG_COLUMNS), nbytes)
+                _SEG_CACHE.write_through(final, out, nbytes)
                 cached.append(final)
             tails = self.catalog.publish(topic, seq, staging=staging)
         except BaseException:

@@ -45,7 +45,6 @@ from urllib.parse import parse_qs, urlparse
 
 from polar_spark.api import PolarEngine
 from polar_spark.consume import LATEST
-from polar_spark.metrics import value_bytes
 from polar_spark.produce import MAX_MESSAGE_BYTES
 
 
@@ -263,14 +262,20 @@ class PolarRestServer:
                         # Spark jobs) when the small-poll path served the
                         # batch; identical shape from the distributed path
                         for topic, res in results.items():
-                            its = res.items()
-                            n, b = served_counts.get(topic, (0, 0))
-                            served_counts[topic] = (
-                                n + sum(len(it["records"]) for it in its),
-                                b + _served_bytes(res, its),
-                            )
-                            for it in its:
+                            for it in res.items():
                                 recs = it["records"]
+                                # UTF-8 bytes: the unit of the producer
+                                # counter and the poll byte budget
+                                n, b = served_counts.get(topic, (0, 0))
+                                served_counts[topic] = (
+                                    n + len(recs),
+                                    b
+                                    + sum(
+                                        len(v.encode())
+                                        for _t, _k, v in recs
+                                        if v
+                                    ),
+                                )
                                 if binary:
                                     bin_items.append(
                                         {
@@ -371,18 +376,6 @@ class PolarRestServer:
         self._server.server_close()
         if self._thread:
             self._thread.join(timeout=5)
-
-
-def _served_bytes(res, items: list[dict]) -> int:
-    """UTF-8 bytes of a poll's served values — the unit of the producer
-    byte counter and the poll byte budget. Read from the served Arrow
-    batch when the driver-side path answered; otherwise encoded from
-    the marshalled records."""
-    if res._arrow is not None:
-        return value_bytes(res._arrow.column("value"))
-    return sum(
-        len(v.encode()) for it in items for _t, _k, v in it["records"] if v
-    )
 
 
 def _maybe_json(value: str):

@@ -501,6 +501,10 @@ def test_offsets_gc_keeps_aged_orphan_lock_while_held(spark, tmp_path):
     gdir = os.path.join(str(tmp_path), "groups")
     held = os.path.join(gdir, "joining__t.json.lock")
     open(held, "w").close()
+    # aged BEFORE the holder acquires: a flock that wrote into the file
+    # would refresh its mtime and fail the no-payload check below
+    old = time.time() - 8 * 24 * 3600
+    os.utime(held, (old, old))
     acquired, release = threading.Event(), threading.Event()
 
     def holder():
@@ -512,8 +516,6 @@ def test_offsets_gc_keeps_aged_orphan_lock_while_held(spark, tmp_path):
     th.start()
     try:
         assert acquired.wait(timeout=5.0)
-        old = time.time() - 8 * 24 * 3600
-        os.utime(held, (old, old))
         sched = RetentionScheduler(
             cat, period_seconds=3600.0, offsets_retention_hours=7 * 24.0
         )
