@@ -32,6 +32,7 @@ import threading
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from polar_spark.store import file_lock, write_json
 from polar_spark.topics import TopicCatalog
 
 EARLIEST = "startFromEarliest"
@@ -491,7 +492,7 @@ class ConsumerGroup:
         # liveness utime happens where the GC's second mtime check can
         # see it, and a ledger the GC unlinked while we waited simply
         # falls through to fresh creation under the reset policy.
-        with self.catalog._file_lock(path + ".lock", f"group({self.group})", 30.0):
+        with file_lock(path + ".lock", f"group({self.group})"):
             if os.path.exists(path):
                 committed = self.committed(topic)
                 # registration is a liveness signal: the offsets GC
@@ -565,10 +566,9 @@ class ConsumerGroup:
             return {int(k): v for k, v in json.load(f).items()}
 
     def _write(self, topic: str, committed: dict[int, int]) -> None:
-        tmp = self._ledger_path(topic) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({str(k): v for k, v in committed.items()}, f)
-        os.replace(tmp, self._ledger_path(topic))
+        write_json(
+            self._ledger_path(topic), {str(k): v for k, v in committed.items()}
+        )
 
     # -- poll / commit -----------------------------------------------------
     def poll(
@@ -982,7 +982,7 @@ class ConsumerGroup:
         update — the reference serializes this in its offset state,
         internal/consuming/offset_state.go:456-490)."""
         path = self._ledger_path(topic)
-        with self.catalog._file_lock(path + ".lock", f"group({self.group})", 30.0):
+        with file_lock(path + ".lock", f"group({self.group})"):
             committed = self.committed(topic)
             for p, off in positions.items():
                 committed[p] = max(committed.get(p, -1), off)
@@ -1026,7 +1026,7 @@ class ConsumerGroup:
             for p, tail in tails.items()
         }
         path = self._ledger_path(topic)
-        with self.catalog._file_lock(path + ".lock", f"group({self.group})", 30.0):
+        with file_lock(path + ".lock", f"group({self.group})"):
             self._write(topic, target)
         return target
 

@@ -39,6 +39,7 @@ MINHASH_PRIME = 2147483647  # 2³¹−1; Kirsch-Mitzenmacher modulus
 # its historical local name; same no-op-at-scale contract
 from polar_spark.plans.audit_trace import note_materialization  # noqa: E402
 from polar_spark.sources.tables import parallelize_small_scan as _spread  # noqa: E402
+from polar_spark.store import STORE_LEDGER, EpochLedger, read_live  # noqa: E402
 
 
 def shingles_expr(text_col: str, strict: bool = False) -> F.Column:
@@ -808,26 +809,17 @@ class NearDupIndex:
     # would double-append the batch's shingles and every later Jaccard
     # against those ids would sum doubled counts (judge review r4).
 
-    def _store_df(self, p: str, exclude_tag: str | None) -> DataFrame | None:
+    def _store_df(self, p: str, exclude_tag: str) -> DataFrame | None:
         """One store side, minus ``exclude_tag``'s partition; None when
-        the side is effectively empty. Missing/partial sides are EXPECTED
-        after a crash (e.g. the bands write landed but the shingles write
-        did not on a cold store) — the retry must read what exists and
-        rewrite its own partition, never crash-loop on PATH_NOT_FOUND
-        (judge review r4 second pass)."""
-        import os as _os
-
-        if not _os.path.isdir(p) or not any(
-            e.name.startswith("ep=") for e in _os.scandir(p)
-        ):
-            return None
-        try:
-            df = self.spark.read.parquet(p)
-        except Exception:  # noqa: BLE001 — only partial dirs w/o footers
-            return None
-        if exclude_tag is not None:
-            df = df.filter(F.col("ep") != exclude_tag)
-        return df.drop("ep")
+        the side is cold. Missing/partial sides are EXPECTED after a
+        crash (e.g. the bands write landed but the shingles write did
+        not on a cold store) — the retry must read what exists and
+        rewrite its own partition, never crash-loop on PATH_NOT_FOUND.
+        A side with a committed partition that fails to read raises
+        (store.read_live): reading it as cold would silently miss every
+        cross-batch near-dup."""
+        df = read_live(self.spark, p, exclude_tag)
+        return None if df is None else df.drop("ep")
 
     _RESERVED_TAGS = ("base", "compacted")
 
@@ -878,10 +870,15 @@ class NearDupIndex:
         rolling). Bands cluster by band (the join key side benefits from
         locality); shingles by id. Caller must serialize against
         query_and_update (single-writer contract, see class docstring).
-        MUST also not run while a failed micro-batch awaits retry:
-        compaction folds every ``ep=`` partition into one, so the
-        retry's self-exclusion tag would no longer match its orphaned
-        first attempt. Returns {store: (files_before, files_after)}."""
+        Raises while a failed streaming micro-batch awaits replay (an
+        epoch partition above the store ledger's high-water mark, see
+        store.EpochLedger.check_settled). Returns {store: (files_before,
+        files_after)}."""
+        import os as _os
+
+        EpochLedger(_os.path.join(self.path, STORE_LEDGER)).check_settled(
+            self.bands_path, self.shingles_path
+        )
         return {
             "bands": _compact_parquet_dir(
                 self.spark, self.bands_path, "band", "band_key",

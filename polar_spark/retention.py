@@ -21,6 +21,7 @@ from __future__ import annotations
 import os
 import threading
 
+from polar_spark.store import file_lock
 from polar_spark.topics import TopicCatalog
 
 
@@ -186,10 +187,10 @@ class RetentionScheduler:
         happens under the SAME flock commit() takes, with the mtime
         re-checked inside, so a just-now commit is never lost: either it
         lands first (mtime fresh → skipped) or it waits on the flock,
-        revalidates the lock inode (_file_lock), and then fails with
+        revalidates the lock inode (store.file_lock), and then fails with
         "not registered" — the group re-registers and restarts from its
         reset policy, Kafka's post-expiry semantics. The lock file is
-        removed too — safe since _file_lock revalidates inodes — so the
+        removed too — safe since file_lock revalidates inodes — so the
         GC leaves NOTHING behind per expired group."""
         import contextlib
         import time as _time
@@ -206,9 +207,7 @@ class RetentionScheduler:
             try:
                 if os.path.getmtime(p) >= cutoff:
                     continue
-                with self.catalog._file_lock(
-                    p + ".lock", f"offsets-gc({fn})", timeout=5.0
-                ):
+                with file_lock(p + ".lock", f"offsets-gc({fn})", timeout=5.0):
                     if os.path.getmtime(p) < cutoff:
                         os.remove(p)
                         removed += 1
@@ -235,7 +234,7 @@ class RetentionScheduler:
         # a register() creating its ledger under an old orphan's lock.
         # The guard is the sweep's own flock — a held lock makes it time
         # out and skip — plus the sibling re-check under that flock; a
-        # waiter on an unlinked lock re-opens the path (_file_lock's
+        # waiter on an unlinked lock re-opens the path (file_lock's
         # inode revalidation).
         try:
             locks = [fn for fn in os.listdir(gdir) if fn.endswith(".json.lock")]
@@ -248,7 +247,7 @@ class RetentionScheduler:
                     continue
                 if os.path.getmtime(lp) >= cutoff:
                     continue
-                with self.catalog._file_lock(lp, f"lock-gc({fn})", timeout=5.0):
+                with file_lock(lp, f"lock-gc({fn})", timeout=5.0):
                     if not os.path.exists(lp[: -len(".lock")]):
                         os.remove(lp)
                         # orphan reaps are accounted: the sweep's return,

@@ -38,16 +38,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from polar_spark.functions.similarity import NPROBE, ivf_cell, ivf_topk
+from polar_spark.store import write_json
 
 CODEBOOK_FILE = "_codebook.json"
 
 
 def _save_codebook(path: str, centroids: list[tuple[int, list[int]]]) -> None:
     os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, CODEBOOK_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump([[int(cid), [int(x) for x in v]] for cid, v in centroids], f)
-    os.replace(tmp, os.path.join(path, CODEBOOK_FILE))
+    write_json(
+        os.path.join(path, CODEBOOK_FILE),
+        [[int(cid), [int(x) for x in v]] for cid, v in centroids],
+    )
 
 
 def load_codebook(path: str) -> list[tuple[int, list[int]]]:
@@ -196,10 +197,10 @@ PQ_BOOKS_FILE = "_pq_books.json"
 
 def _save_pq_books(path: str, books: list[list[list[int]]]) -> None:
     os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, PQ_BOOKS_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump([[[int(x) for x in c] for c in b] for b in books], f)
-    os.replace(tmp, os.path.join(path, PQ_BOOKS_FILE))
+    write_json(
+        os.path.join(path, PQ_BOOKS_FILE),
+        [[[int(x) for x in c] for c in b] for b in books],
+    )
 
 
 def load_pq_books(path: str) -> list[list[list[int]]]:

@@ -97,8 +97,6 @@ provenance only).
 
 from __future__ import annotations
 
-import contextlib
-import fcntl
 import os
 
 import numpy as np
@@ -113,6 +111,7 @@ from polar_spark.functions.similarity import (
     sq_norm,
     unpack_mat,
 )
+from polar_spark.store import file_lock
 
 # target element count of one pairwise dot-matrix chunk (int64 cells);
 # 4M cells = 32 MB — bounds verify memory even for a dup-storm bucket
@@ -186,8 +185,8 @@ def _lock_path(spark: SparkSession, table: str) -> str:
     """Stable per-table maintenance lock location: next to the Spark
     warehouse (the table's own location moves on every compact swap,
     so the lock cannot live inside it). Single-host scope — the same
-    contract as the streaming sink's flock ledger; a multi-node
-    deployment serializes maintenance through its catalog instead."""
+    contract as every store.file_lock; a multi-node deployment
+    serializes maintenance through its catalog instead."""
     wh = spark.conf.get(
         "spark.sql.warehouse.dir", "spark-warehouse"
     ).removeprefix("file:")
@@ -196,18 +195,11 @@ def _lock_path(spark: SparkSession, table: str) -> str:
     return os.path.join(wh, f"_semlsh_{safe}.lock")
 
 
-@contextlib.contextmanager
 def _store_lock(spark: SparkSession, table: str):
     """Exclusive flock serializing append/compact on one store — the
     "serialize against concurrent appends" contract enforced instead
     of documented (VERDICT r12 ask #2)."""
-    fd = os.open(_lock_path(spark, table), os.O_CREAT | os.O_RDWR)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        yield
-    finally:
-        fcntl.flock(fd, fcntl.LOCK_UN)
-        os.close(fd)
+    return file_lock(_lock_path(spark, table), f"semlsh({table})", timeout=None)
 
 
 def _tmp_name(table: str) -> str:

@@ -1,0 +1,338 @@
+"""The epoch-idempotent sink protocol, in one place.
+
+Exactly-once in this engine is the Structured Streaming contract: a
+replayable source plus a sink that is idempotent per epoch. Every sink
+(the topic producer, the dedup stores, the sketch partial stores) runs
+the same protocol, and this module is the only code that knows it:
+
+- :func:`file_lock` — the one exclusive lock (``flock`` on a persistent
+  file, inode-revalidated, optional timeout);
+- :func:`write_json` — the one atomic JSON write (tmp file per writer,
+  then ``os.replace``), and :func:`read_json`, its reader;
+- :class:`EpochLedger` — the applied-epoch ledger and the replay gate
+  (:meth:`EpochLedger.claim`);
+- :func:`epoch_tag` — the stable per-(sink, epoch) partition tag, and
+  the ``ep=<tag>`` layout: :func:`publish_epoch` writes a partition
+  aside and renames it in, :func:`read_live` reads the live partitions.
+"""
+
+from __future__ import annotations
+
+import contextlib
+import fcntl
+import hashlib
+import json
+import os
+import re
+import shutil
+import threading
+import time
+import uuid
+from typing import NamedTuple
+
+# the applied-epoch ledger of a sink store, beside its partitions
+STORE_LEDGER = "_epochs.json"
+
+
+# -- lock --------------------------------------------------------------------
+@contextlib.contextmanager
+def file_lock(path: str, what: str, timeout: float | None = 30.0):
+    """Exclusive advisory lock via ``flock`` on a persistent file.
+
+    The lock-FILE protocols tried first (O_EXCL create + mtime-based
+    stale break, then rename-tombstone breaking) all retain some
+    check-then-act window in which a live holder's lock can be broken.
+    ``flock`` removes the entire class: the kernel owns the lock state,
+    a crashed holder's lock vanishes with its process (no staleness
+    heuristic at all), and two acquisitions — across processes OR
+    across threads, each with its own open file description — genuinely
+    exclude each other. The file persists between uses and carries no
+    payload: acquiring never writes it, so its mtime is its creation
+    time. To find a holder, read ``/proc/locks`` (or ``lslocks``), which
+    lists the pid of every flock by inode. A live-but-slow holder makes
+    waiters raise ``TimeoutError`` after ``timeout`` seconds instead of
+    being broken; ``timeout=None`` waits as long as it takes."""
+    deadline = None if timeout is None else time.time() + timeout
+    mode = fcntl.LOCK_EX if timeout is None else fcntl.LOCK_EX | fcntl.LOCK_NB
+    fd = -1
+    acquired = False
+    try:
+        while True:
+            fd = os.open(path, os.O_CREAT | os.O_WRONLY)
+            try:
+                fcntl.flock(fd, mode)
+            except OSError:
+                os.close(fd)
+                fd = -1
+                if deadline is None:
+                    raise
+                if time.time() > deadline:
+                    raise TimeoutError(
+                        f"{what} lock {path!r} not released"
+                    ) from None
+                time.sleep(0.05)
+                continue
+            # revalidate: a GC (e.g. the offsets-retention sweep) may
+            # have unlinked the lock file while we waited on its old
+            # inode — holding a lock on an unlinked inode excludes
+            # nobody who opens the path fresh. Only an flock on the
+            # inode the PATH currently names counts; otherwise retry.
+            try:
+                if os.stat(path).st_ino == os.fstat(fd).st_ino:
+                    acquired = True
+                    break
+            except FileNotFoundError:
+                pass
+            with contextlib.suppress(OSError):
+                fcntl.flock(fd, fcntl.LOCK_UN)
+            os.close(fd)
+            fd = -1
+            if deadline is not None and time.time() > deadline:
+                raise TimeoutError(
+                    f"{what} lock {path!r} kept vanishing"
+                ) from None
+        yield
+    finally:
+        if acquired:
+            with contextlib.suppress(OSError):
+                fcntl.flock(fd, fcntl.LOCK_UN)
+        if fd >= 0:
+            os.close(fd)
+
+
+# -- atomic JSON -------------------------------------------------------------
+def write_json(path: str, obj) -> None:
+    """Replace ``path`` with ``obj`` as JSON, atomically: readers see
+    the old file or the new one, never a partial write. The tmp file is
+    named per writer (pid and thread), so two writers never share one,
+    and it keeps the target's name as a prefix (a ``_``-hidden file
+    stays hidden from Spark listings while it is written)."""
+    tmp = f"{path}.{os.getpid()}.{threading.get_ident()}.tmp"
+    data = json.dumps(obj)  # the C encoder; json.dump to a file is not
+    with open(tmp, "w") as f:
+        f.write(data)
+    os.replace(tmp, path)
+
+
+def read_json(path: str, missing=None):
+    """The JSON value at ``path``, or ``missing`` when there is no file."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return missing
+
+
+# -- epoch tags ----------------------------------------------------------------
+_EPOCH_DIR_RE = re.compile(r"^ep=t([0-9a-f]{10})x(\d+)$")
+
+
+def _key_hash(key: str) -> str:
+    return hashlib.sha1(key.encode()).hexdigest()[:10]
+
+
+def epoch_tag(key: str, epoch: int) -> str:
+    """Stable per-(sink, epoch) store-partition tag: a replay overwrites
+    exactly its own ``ep=<tag>`` partition."""
+    return f"t{_key_hash(key)}x{epoch}"
+
+
+def _parse_epoch_dir(name: str) -> tuple[str, int] | None:
+    """(sink-key hash, epoch) of an ``ep=<epoch_tag>`` directory name;
+    None for any other name (``ep=base``, ``ep=compacted``, ...)."""
+    m = _EPOCH_DIR_RE.match(name)
+    return (m.group(1), int(m.group(2))) if m else None
+
+
+def _sink_instance_key(sink_id: str) -> str:
+    """Namespace an epoch-ledger key with a per-checkpoint-instance token.
+
+    The ledger outlives the checkpoint: if a user deletes and recreates
+    the streaming checkpoint to reprocess, epochs restart at 0, and a
+    ledger keyed by path alone would silently skip every replayed batch
+    until the epoch passed the old high-water mark. A token stored
+    INSIDE the checkpoint dir dies with the checkpoint, so a recreated
+    checkpoint gets a fresh ledger namespace and replays apply."""
+    if not os.path.isdir(sink_id):
+        return sink_id
+    tok_path = os.path.join(sink_id, "polar_sink_token")
+    try:
+        with open(tok_path) as f:
+            tok = f.read().strip()
+    except FileNotFoundError:
+        tok = uuid.uuid4().hex
+        tmp = f"{tok_path}.{os.getpid()}.tmp"
+        with open(tmp, "w") as f:
+            f.write(tok)
+        try:
+            # O_EXCL-like: if a concurrent sink won, use its token
+            os.link(tmp, tok_path)
+        except FileExistsError:
+            with open(tok_path) as f:
+                tok = f.read().strip()
+        finally:
+            os.unlink(tmp)
+    return f"{sink_id}@{tok}"
+
+
+# -- epoch ledger --------------------------------------------------------------
+class Claim(NamedTuple):
+    """An epoch a sink is about to apply: ``key`` is the sink-instance
+    ledger key, ``last`` its recorded high-water mark before this
+    epoch, and ``reset`` marks a restarted stream (epoch 0 after later
+    epochs), whose record overwrites instead of taking the max."""
+
+    key: str
+    epoch: int
+    last: int
+    reset: bool
+
+    @property
+    def tag(self) -> str:
+        return epoch_tag(self.key, self.epoch)
+
+
+class EpochLedger:
+    """The applied-epoch ledger of one sink store or topic: a JSON map
+    of sink key → highest applied epoch, read-modify-written under its
+    own :func:`file_lock` so concurrent sinks never lose each other's
+    entries (a lost update would re-apply a retried micro-batch)."""
+
+    def __init__(self, ledger_file: str) -> None:
+        os.makedirs(os.path.dirname(ledger_file), exist_ok=True)
+        self.path = ledger_file
+
+    def all(self) -> dict[str, int]:
+        """Every (sink key → last applied epoch) pair."""
+        return {k: int(v) for k, v in read_json(self.path, {}).items()}
+
+    def last(self, key: str) -> int:
+        return self.all().get(key, -1)
+
+    def claim(self, sink_id: str, epoch: int) -> Claim | None:
+        """The replay gate: None when ``sink_id`` already applied
+        ``epoch`` (the foreachBatch retry path — leave the store
+        untouched), else the :class:`Claim` to apply it under and then
+        :meth:`commit`. ``sink_id`` naming a checkpoint directory is
+        namespaced with a token inside it; for plain-string ids an
+        epoch REGRESSION to 0 while the ledger is ahead means the
+        stream restarted from scratch — apply and overwrite rather than
+        silently skip."""
+        key = _sink_instance_key(sink_id)
+        last = self.last(key)
+        reset = epoch == 0 and last > 0
+        if last >= epoch and not reset:
+            return None
+        return Claim(key, epoch, last, reset)
+
+    def commit(self, claim: Claim) -> None:
+        self.record(claim.key, claim.epoch, force=claim.reset)
+
+    def record(self, key: str, epoch: int, force: bool = False) -> None:
+        """Record ``epoch`` as applied by ``key`` (max-merge; ``force``
+        overwrites)."""
+        with file_lock(self.path + ".lock", "epoch ledger", timeout=30.0):
+            d = read_json(self.path, {})
+            cur = int(d.get(key, -1))
+            d[key] = int(epoch) if force else max(cur, int(epoch))
+            write_json(self.path, d)
+
+    def recorded(self, names) -> dict[str, bool]:
+        """For each ``ep=<epoch_tag>`` name among ``names`` (others are
+        left out): True when its epoch is at or below its sink's
+        recorded high-water mark (committed state), False when above
+        it — written by an attempt whose epoch record never landed, so
+        its replay still owns the partition."""
+        high = {_key_hash(k): v for k, v in self.all().items()}
+        out = {}
+        for n in names:
+            p = _parse_epoch_dir(n)
+            if p is not None:
+                out[n] = p[1] <= high.get(p[0], -1)
+        return out
+
+    def check_settled(self, *roots: str) -> None:
+        """Raise when a store under ``roots`` holds a partition a replay
+        still owns. Compaction folds every ``ep=`` partition into one,
+        so after it the replay's self-exclusion tag would no longer
+        match its first attempt: the replay would read its own rows
+        back as stored and drop them."""
+        names = sorted({e.name for r in roots for e in epoch_dirs(r)})
+        pending = [n for n, ok in self.recorded(names).items() if not ok]
+        if pending:
+            raise RuntimeError(
+                f"store holds unrecorded epoch partitions {pending} (a "
+                "failed micro-batch awaits replay): replay it before "
+                "compacting"
+            )
+
+
+# -- ep=<tag> partitions -------------------------------------------------------
+def epoch_dirs(root: str) -> list[os.DirEntry]:
+    """The ``ep=`` partition directories under ``root``, by name."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(
+        (e for e in os.scandir(root) if e.is_dir() and e.name.startswith("ep=")),
+        key=lambda e: e.name,
+    )
+
+
+def publish_epoch(root: str, tag: str, write) -> None:
+    """Write one ``ep=<tag>`` partition aside and publish it by rename:
+    ``write(tmp)`` fills a hidden ``_tmp-<tag>`` directory (Spark's
+    listing skips a leading ``_`` when the name holds no ``=``), a
+    ``_SUCCESS`` marker closes it, then it is renamed over the epoch's
+    partition. A replay's earlier partition for the same tag is moved
+    aside first and removed after, so readers never see it half
+    deleted."""
+    tmp = os.path.join(root, f"_tmp-{tag}")
+    old = os.path.join(root, f"_old-{tag}")
+    dst = os.path.join(root, f"ep={tag}")
+    for d in (tmp, old):
+        shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(tmp)
+    write(tmp)
+    with open(os.path.join(tmp, "_SUCCESS"), "w"):
+        pass
+    if os.path.isdir(dst):
+        os.rename(dst, old)
+    os.rename(tmp, dst)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def read_live(spark, root: str, exclude_tag: str | None = None, live=None):
+    """The live partitions of a store as one DataFrame; None = cold.
+
+    By default every ``ep=`` directory under ``root`` is live and the
+    read goes through ``root``, so ``ep`` is a column and
+    ``exclude_tag``'s partition (a replay's own first attempt) is pruned
+    from it. ``live()``, when given, returns the partition paths to read
+    by explicit path instead (a manifest-filtered listing).
+
+    A cold or partial store — nothing listed, or a read failure while no
+    listed partition holds ``_SUCCESS`` — reads as None. A read failure
+    over a store with a COMPLETED partition re-raises: swallowing it
+    would silently drop every cross-batch match (dedup) or serve a wrong
+    estimate (sketches). A failure while the listing changed under the
+    read (a concurrent compaction swapped partitions) re-lists and
+    retries."""
+    listing = live or (lambda: [e.path for e in epoch_dirs(root)])
+    for _ in range(4):
+        paths = listing()
+        if not paths:
+            return None
+        try:
+            df = spark.read.parquet(*paths) if live else spark.read.parquet(root)
+        except Exception:
+            if listing() != paths:
+                continue  # retry over the post-swap listing
+            if any(os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths):
+                raise
+            return None
+        if exclude_tag is None:
+            return df
+        from pyspark.sql import functions as F
+
+        return df.filter(F.col("ep") != exclude_tag)
+    raise RuntimeError(f"store {root!r} kept changing under read")

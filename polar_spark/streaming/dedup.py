@@ -5,8 +5,8 @@ micro-batch is checked against the persistent MinHash-LSH store
 (functions/dedup.NearDupIndex: band-bucket join, O(batch·bands) shuffle,
 exact-Jaccard verify) and then appended to it, so the stream pays
 O(batch) per trigger and the store grows monotonically. This module
-wires that index into ``writeStream.foreachBatch`` with the same
-idempotent-epoch pattern as the topic producer (streaming/ingest.py):
+wires that index into ``writeStream.foreachBatch`` with the
+idempotent-epoch protocol every sink shares (polar_spark/store.py):
 a retried micro-batch (checkpoint-commit failure) is skipped by the
 epoch ledger, and — because a crash can land BETWEEN the store append
 and the epoch record — every store/pairs write is keyed by a stable
@@ -22,7 +22,6 @@ micro-batch replay, provided the replayed batch has the same content
 
 from __future__ import annotations
 
-import fcntl
 import json
 import os
 
@@ -30,7 +29,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from polar_spark.functions.dedup import NearDupIndex
-from polar_spark.streaming.ingest import _sink_instance_key
+from polar_spark.store import (
+    STORE_LEDGER,
+    EpochLedger,
+    epoch_dirs,
+    publish_epoch,
+    read_json,
+    read_live,
+    write_json,
+)
+from polar_spark.streaming.ingest import start_epoch_sink
 
 # Default cap on verified batch-internal pairs materialized driver-side
 # per micro-batch by the LSH sink's greedy. Normal dup density never
@@ -64,31 +72,6 @@ def _any_over_tau(d, nu, n2: int, tau: int) -> bool:
     dp = d[pos].astype(object)
     rhs = nu[pos].astype(object) * (int(tau) * int(n2))
     return bool(np.any(dp * dp * 10000 >= rhs))
-
-
-def _publish_epoch(root: str, tag: str, write) -> None:
-    """Write one ``ep=<tag>`` partition aside and publish it by rename:
-    ``write(tmp)`` fills a hidden ``_tmp-<tag>`` directory (Spark's
-    listing skips a leading ``_`` when the name holds no ``=``), a
-    ``_SUCCESS`` marker closes it, then it is renamed over the epoch's
-    partition. A replay's earlier partition for the same tag is moved
-    aside first and removed after, so readers never see it half
-    deleted."""
-    import shutil
-
-    tmp = os.path.join(root, f"_tmp-{tag}")
-    old = os.path.join(root, f"_old-{tag}")
-    dst = os.path.join(root, f"ep={tag}")
-    for d in (tmp, old):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(tmp)
-    write(tmp)
-    with open(os.path.join(tmp, "_SUCCESS"), "w"):
-        pass
-    if os.path.isdir(dst):
-        os.rename(dst, old)
-    os.rename(tmp, dst)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def _range_greedy(iterator):
@@ -242,61 +225,6 @@ def _greedy_drops(spark, pairs, pre_dropped, cap=GREEDY_PAIR_CAP):
     return dropped
 
 
-class EpochLedger:
-    """Flock-guarded applied-epoch ledger (same law as
-    topics.record_epoch) shared by every idempotent streaming sink in
-    this module."""
-
-    def __init__(self, dirpath: str) -> None:
-        os.makedirs(dirpath, exist_ok=True)
-        self._ledger = os.path.join(dirpath, "_epochs.json")
-
-    def last(self, key: str) -> int:
-        try:
-            with open(self._ledger) as f:
-                return int(json.load(f).get(key, -1))
-        except FileNotFoundError:
-            return -1
-
-    def all(self) -> dict[str, int]:
-        """Every (sink key → last applied epoch) pair. Compaction uses
-        this to tell COMMITTED epoch partitions (epoch ≤ the recorded
-        high-water mark) from in-flight ones a replay still owns."""
-        try:
-            with open(self._ledger) as f:
-                return {k: int(v) for k, v in json.load(f).items()}
-        except FileNotFoundError:
-            return {}
-
-    def record(self, key: str, epoch: int, force: bool = False) -> None:
-        lock = self._ledger + ".lock"
-        fd = os.open(lock, os.O_CREAT | os.O_RDWR)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            try:
-                with open(self._ledger) as f:
-                    d = json.load(f)
-            except FileNotFoundError:
-                d = {}
-            cur = int(d.get(key, -1))
-            d[key] = int(epoch) if force else max(cur, int(epoch))
-            tmp = self._ledger + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(d, f)
-            os.replace(tmp, self._ledger)
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
-
-
-def epoch_tag(key: str, epoch: int) -> str:
-    """Stable per-(sink, epoch) store-partition tag: a replay overwrites
-    exactly its own ``ep=<tag>`` partition."""
-    import hashlib
-
-    return f"t{hashlib.sha1(key.encode()).hexdigest()[:10]}x{epoch}"
-
-
 class StreamingNearDup:
     """Continuously index a document stream and emit verified near-dup
     pairs to a parquet sink."""
@@ -311,7 +239,7 @@ class StreamingNearDup:
         self.spark = spark
         self.index = NearDupIndex(spark, index_path, threshold=threshold)
         self.pairs_path = pairs_path
-        self._epochs = EpochLedger(index_path)
+        self._epochs = EpochLedger(os.path.join(index_path, STORE_LEDGER))
 
     def apply_batch(
         self,
@@ -323,22 +251,19 @@ class StreamingNearDup:
     ) -> bool:
         """Apply one micro-batch idempotently; False = already applied
         (the foreachBatch retry path — store untouched)."""
-        key = _sink_instance_key(sink_id)
-        last = self._epochs.last(key)
-        reset = epoch == 0 and last > 0
-        if last >= epoch and not reset:
+        c = self._epochs.claim(sink_id, epoch)
+        if c is None:
             return False
         if not batch_df.isEmpty():
             # stable per-(sink, epoch) tag: a replay of this epoch
             # overwrites its own ep= partition in the store AND in the
             # pairs sink — idempotent, never a double-append
-            tag = epoch_tag(key, epoch)
             pairs = self.index.query_and_update(
-                batch_df, id_col=id_col, text_col=text_col, tag=tag
+                batch_df, id_col=id_col, text_col=text_col, tag=c.tag
             )
             try:
                 pairs.write.mode("overwrite").parquet(
-                    os.path.join(self.pairs_path, f"ep={tag}")
+                    os.path.join(self.pairs_path, f"ep={c.tag}")
                 )
             finally:
                 # the batch checkpoint is fully consumed by this write;
@@ -347,7 +272,7 @@ class StreamingNearDup:
                 from polar_spark.functions.dedup import _free_local_checkpoint
 
                 _free_local_checkpoint(pairs)
-        self._epochs.record(key, epoch, force=reset)
+        self._epochs.commit(c)
         return True
 
     def start(
@@ -358,8 +283,6 @@ class StreamingNearDup:
         checkpoint_dir: str | None = None,
         trigger_seconds: float | None = None,
     ) -> StreamingQuery:
-        from polar_spark.streaming.ingest import start_epoch_sink
-
         def _apply(batch_df: DataFrame, epoch: int, cp: str) -> None:
             self.apply_batch(batch_df, epoch, cp, id_col=id_col, text_col=text_col)
 
@@ -412,35 +335,17 @@ class StreamingSemDedup:
         self.drops_path = drops_path
         self.centroids = centroids
         self.tau_sq_pct = tau_sq_pct
-        self._epochs = EpochLedger(index_path)
+        self._epochs = EpochLedger(os.path.join(index_path, STORE_LEDGER))
 
     def _stored(self, exclude_tag: str):
         from pyspark.sql import functions as F
 
-        if not os.path.isdir(self.vectors_path) or not any(
-            e.name.startswith("ep=") for e in os.scandir(self.vectors_path)
-        ):
-            return None
-        try:
-            df = self.spark.read.parquet(self.vectors_path)
-        except Exception:
-            # only a COLD/partial store (no completed write anywhere)
-            # may read as empty; swallowing a read failure over a store
-            # with committed epochs would silently disable cross-batch
-            # dedup and pollute the kept corpus (judge review r4)
-            complete = any(
-                os.path.exists(os.path.join(ep.path, "_SUCCESS"))
-                for ep in os.scandir(self.vectors_path)
-                if ep.is_dir() and ep.name.startswith("ep=")
-            )
-            if complete:
-                raise
-            return None
+        df = read_live(self.spark, self.vectors_path, exclude_tag)
         # partition discovery types cell as int32; the batch side's
         # ivf_cell is int64 — cogroup keys must match EXACTLY or every
         # stored group pairs with no batch group (all cross-batch dups
         # silently missed)
-        return df.filter(F.col("ep") != exclude_tag).withColumn(
+        return None if df is None else df.withColumn(
             "cell", F.col("cell").cast("long")
         )
 
@@ -459,15 +364,13 @@ class StreamingSemDedup:
 
         from polar_spark.functions.similarity import ivf_cell
 
-        key = _sink_instance_key(sink_id)
-        last = self._epochs.last(key)
-        reset = epoch == 0 and last > 0
-        if last >= epoch and not reset:
+        c = self._epochs.claim(sink_id, epoch)
+        if c is None:
             return False
         if batch_df.isEmpty():
-            self._epochs.record(key, epoch, force=reset)
+            self._epochs.commit(c)
             return True
-        tag = epoch_tag(key, epoch)
+        tag = c.tag
         tau = self.tau_sq_pct
 
         batch = batch_df.select(
@@ -557,7 +460,7 @@ class StreamingSemDedup:
                 from polar_spark.functions.dedup import _free_local_checkpoint
 
                 _free_local_checkpoint(verdict)
-        self._epochs.record(key, epoch, force=reset)
+        self._epochs.commit(c)
         return True
 
     def start(
@@ -568,8 +471,6 @@ class StreamingSemDedup:
         checkpoint_dir: str | None = None,
         trigger_seconds: float | None = None,
     ):
-        from polar_spark.streaming.ingest import start_epoch_sink
-
         def _apply(batch_df: DataFrame, epoch: int, cp: str) -> None:
             self.apply_batch(batch_df, epoch, cp, id_col=id_col, vec_col=vec_col)
 
@@ -762,7 +663,7 @@ class StreamingSemDedupLSH:
         # ids-only, kept vectors stay array<bigint> (dictionary-friendly
         # and the `kept()` API's contract).
         self.vbytes = int(vbytes)
-        self._epochs = EpochLedger(index_path)
+        self._epochs = EpochLedger(os.path.join(index_path, STORE_LEDGER))
         self._format_marker = os.path.join(index_path, "_store_format.json")
 
     # bands-store physical layout version. v3 (r13): (band, bpre)
@@ -787,10 +688,7 @@ class StreamingSemDedupLSH:
         directly (tools/measure_semlsh_trigger.py) so the first
         apply_batch doesn't re-derive what the seeder just wrote."""
         os.makedirs(self.index_path, exist_ok=True)
-        tmp = self._format_marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"bands_layout": self._FORMAT_VERSION}, f)
-        os.replace(tmp, self._format_marker)
+        write_json(self._format_marker, {"bands_layout": self._FORMAT_VERSION})
 
     def _ensure_format(self) -> None:
         """Pin or reconcile the bands-store layout version. Any pre-v3
@@ -803,8 +701,7 @@ class StreamingSemDedupLSH:
         unversioned so the reconcile path runs instead of crashing
         every subsequent apply_batch (ADVICE r12)."""
         try:
-            with open(self._format_marker) as f:
-                m = json.load(f)
+            m = read_json(self._format_marker, {})
             ver = int(m.get("bands_layout", 0))
             if ver > self._FORMAT_VERSION:
                 raise RuntimeError(
@@ -815,36 +712,29 @@ class StreamingSemDedupLSH:
                 )
             if ver == self._FORMAT_VERSION:
                 return
-        except FileNotFoundError:
-            pass
         except (json.JSONDecodeError, ValueError, KeyError, TypeError):
             pass  # corrupt marker → reconcile as unversioned (below)
         stale = False
-        if os.path.isdir(self.bands_path):
-            eps = [
-                e
-                for e in os.scandir(self.bands_path)
-                if e.is_dir() and e.name.startswith("ep=")
-            ]
-            flat = []
-            for ep in eps:
-                entries = list(os.scandir(ep.path))
-                if any(e.name.startswith("band=") for e in entries):
-                    continue  # partitioned; schema checked below
-                # "."/"_"-prefixed names are Hadoop metadata (_SUCCESS,
-                # ._SUCCESS.crc) — an all-dropped epoch writes only
-                # those; any real DATA outside band= dirs is v1-flat
-                if any(not e.name.startswith(("_", ".")) for e in entries):
-                    flat.append(ep.path)
-            if flat:
-                stale = True
-            elif eps:
-                try:
-                    cols = self.spark.read.parquet(self.bands_path).columns
-                    # v2 co-located vectors (or any interim packed form)
-                    stale = bool({"v", "vq"} & set(cols))
-                except Exception:
-                    stale = True  # unreadable/mixed → rebuild from truth
+        eps = epoch_dirs(self.bands_path)
+        flat = []
+        for ep in eps:
+            entries = list(os.scandir(ep.path))
+            if any(e.name.startswith("band=") for e in entries):
+                continue  # partitioned; schema checked below
+            # "."/"_"-prefixed names are Hadoop metadata (_SUCCESS,
+            # ._SUCCESS.crc) — an all-dropped epoch writes only
+            # those; any real DATA outside band= dirs is v1-flat
+            if any(not e.name.startswith(("_", ".")) for e in entries):
+                flat.append(ep.path)
+        if flat:
+            stale = True
+        elif eps:
+            try:
+                cols = self.spark.read.parquet(self.bands_path).columns
+                # v2 co-located vectors (or any interim packed form)
+                stale = bool({"v", "vq"} & set(cols))
+            except Exception:
+                stale = True  # unreadable/mixed → rebuild from truth
         if stale:
             self._rebuild_bands_store()
         self.pin_current_format()
@@ -886,9 +776,7 @@ class StreamingSemDedupLSH:
         between re-runs the (idempotent) rebuild on next start."""
         import shutil
 
-        if not os.path.isdir(self.vectors_path) or not any(
-            e.name.startswith("ep=") for e in os.scandir(self.vectors_path)
-        ):
+        if not epoch_dirs(self.vectors_path):
             raise RuntimeError(
                 f"bands store at {self.bands_path} uses a pre-v3 flat "
                 "layout and no kept-vectors table exists to rebuild from "
@@ -896,11 +784,8 @@ class StreamingSemDedupLSH:
                 "corpus into a fresh index_path"
             )
         old = [
-            ep.path
-            for ep in os.scandir(self.bands_path)
-            if ep.is_dir()
-            and ep.name.startswith("ep=")
-            and ep.name != "ep=migrated"
+            ep.path for ep in epoch_dirs(self.bands_path)
+            if ep.name != "ep=migrated"
         ]
         vecs = self.spark.read.parquet(self.vectors_path).select("vec_id", "v")
         (
@@ -912,28 +797,6 @@ class StreamingSemDedupLSH:
         )
         for d in old:
             shutil.rmtree(d, ignore_errors=True)
-
-    def _stored(self, path: str, exclude_tag: str) -> DataFrame | None:
-        from pyspark.sql import functions as F
-
-        if not os.path.isdir(path) or not any(
-            e.name.startswith("ep=") for e in os.scandir(path)
-        ):
-            return None
-        try:
-            df = self.spark.read.parquet(path)
-        except Exception:
-            # same contract as StreamingSemDedup._stored: only a
-            # cold/partial store may read as empty
-            complete = any(
-                os.path.exists(os.path.join(ep.path, "_SUCCESS"))
-                for ep in os.scandir(path)
-                if ep.is_dir() and ep.name.startswith("ep=")
-            )
-            if complete:
-                raise
-            return None
-        return df.filter(F.col("ep") != exclude_tag)
 
     def apply_batch(
         self,
@@ -953,20 +816,17 @@ class StreamingSemDedupLSH:
 
         from polar_spark.produce import _plan_size_bytes
 
-        key = _sink_instance_key(sink_id)
-        last = self._epochs.last(key)
-        reset = epoch == 0 and last > 0
-        if last >= epoch and not reset:
+        c = self._epochs.claim(sink_id, epoch)
+        if c is None:
             return False
-        tag = epoch_tag(key, epoch)
         batch = batch_df.select(
             F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
         )
         if _plan_size_bytes(batch) <= DRIVER_BATCH_BYTES:
-            self._apply_small(batch, tag)
+            self._apply_small(batch, c.tag)
         else:
-            self._apply_bulk(batch, tag)
-        self._epochs.record(key, epoch, force=reset)
+            self._apply_bulk(batch, c.tag)
+        self._epochs.commit(c)
         return True
 
     def _over_tau(self):
@@ -1016,7 +876,7 @@ class StreamingSemDedupLSH:
             .select("sid", "bid")
             .distinct()
         )
-        svec = self._stored(self.vectors_path, exclude_tag=tag).select(
+        svec = read_live(self.spark, self.vectors_path, tag).select(
             F.col("vec_id").alias("sid"),
             F.col("v").alias("sva"),
             F.col("n2").alias("na2"),
@@ -1059,7 +919,7 @@ class StreamingSemDedupLSH:
         try:
             # ---- external dups: batch vs the stored KEPT corpus
             ext_ids: set[int] = set()
-            sk = self._stored(self.bands_path, exclude_tag=tag)
+            sk = read_live(self.spark, self.bands_path, tag)
             if sk is not None:
                 hit = [
                     (r["band"], r["bpre"])
@@ -1205,7 +1065,7 @@ class StreamingSemDedupLSH:
         self._ensure_format()
 
         ext: set[int] = set()
-        sk = self._stored(self.bands_path, exclude_tag=tag)
+        sk = read_live(self.spark, self.bands_path, tag)
         if sk is not None:
             bk = self.spark.createDataFrame(
                 pa.table(keys).rename_columns(["band", "bpre", "bucket", "bid"])
@@ -1248,13 +1108,13 @@ class StreamingSemDedupLSH:
         })
         krow = np.repeat(keep, self.bands)
         band_rows = pa.table({c: a[krow] for c, a in keys.items()})
-        _publish_epoch(self.drops_path, tag, lambda d: pq.write_table(
+        publish_epoch(self.drops_path, tag, lambda d: pq.write_table(
             drops, os.path.join(d, part), **opts
         ))
-        _publish_epoch(self.vectors_path, tag, lambda d: pq.write_table(
+        publish_epoch(self.vectors_path, tag, lambda d: pq.write_table(
             kept, os.path.join(d, part), **opts
         ))
-        _publish_epoch(self.bands_path, tag, lambda d: pads.write_dataset(
+        publish_epoch(self.bands_path, tag, lambda d: pads.write_dataset(
             band_rows, d, format="parquet",
             partitioning=["band", "bpre"], partitioning_flavor="hive",
             file_options=pads.ParquetFileFormat().make_write_options(**opts),
@@ -1270,8 +1130,6 @@ class StreamingSemDedupLSH:
         checkpoint_dir: str | None = None,
         trigger_seconds: float | None = None,
     ):
-        from polar_spark.streaming.ingest import start_epoch_sink
-
         def _apply(batch_df: DataFrame, epoch: int, cp: str) -> None:
             self.apply_batch(batch_df, epoch, cp, id_col=id_col, vec_col=vec_col)
 
@@ -1287,10 +1145,11 @@ class StreamingSemDedupLSH:
         """Re-roll per-epoch small files (bands clustered by band, the
         candidate join's scan side; vectors by vec_id). Same caller
         contract as :meth:`NearDupIndex.compact`: serialize against
-        apply_batch and never run while a failed micro-batch awaits
-        retry."""
+        apply_batch. Raises while a failed micro-batch awaits replay
+        (an epoch partition above the ledger's high-water mark)."""
         from polar_spark.functions.dedup import _compact_parquet_dir
 
+        self._epochs.check_settled(self.bands_path, self.vectors_path)
         self._ensure_format()
         return {
             "bands": _compact_parquet_dir(

@@ -21,45 +21,11 @@ micro-batch is one "coalescer group" with contiguous offsets.
 
 from __future__ import annotations
 
-import os
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from polar_spark.produce import Producer
 from polar_spark.topics import TopicCatalog
-
-
-def _sink_instance_key(sink_id: str) -> str:
-    """Namespace an epoch-ledger key with a per-checkpoint-instance token.
-
-    The ledger outlives the checkpoint: if a user deletes and recreates
-    the streaming checkpoint to reprocess, epochs restart at 0, and a
-    ledger keyed by path alone would silently skip every replayed batch
-    until the epoch passed the old high-water mark. A token stored
-    INSIDE the checkpoint dir dies with the checkpoint, so a recreated
-    checkpoint gets a fresh ledger namespace and replays apply."""
-    if not os.path.isdir(sink_id):
-        return sink_id
-    tok_path = os.path.join(sink_id, "polar_sink_token")
-    try:
-        with open(tok_path) as f:
-            tok = f.read().strip()
-    except FileNotFoundError:
-        tok = uuid.uuid4().hex
-        tmp = f"{tok_path}.{os.getpid()}.tmp"
-        with open(tmp, "w") as f:
-            f.write(tok)
-        try:
-            # O_EXCL-like: if a concurrent sink won, use its token
-            os.link(tmp, tok_path)
-        except FileExistsError:
-            with open(tok_path) as f:
-                tok = f.read().strip()
-        finally:
-            os.unlink(tmp)
-    return f"{sink_id}@{tok}"
 
 
 class StreamingProducer:
@@ -92,23 +58,21 @@ class StreamingProducer:
         path makes the same trade, docs/benchmarks/README.md:11-12);
         the common retry path (foreachBatch re-run after a checkpoint
         commit failure) deduplicates exactly."""
-        cp = checkpoint_dir or f"{self.catalog.topic_dir(topic)}/_checkpoint_ingest"
 
-        def _sink(batch_df: DataFrame, epoch: int) -> None:
+        def _apply(batch_df: DataFrame, epoch: int, cp: str) -> None:
             self.apply_batch(
                 batch_df, epoch, topic, cp,
                 key_col=key_col, value_col=value_col, ts_col=ts_col,
                 arrival_cols=arrival_cols,
             )
 
-        writer = stream_df.writeStream.foreachBatch(_sink).option(
-            "checkpointLocation", cp
+        return start_epoch_sink(
+            stream_df,
+            _apply,
+            f"{self.catalog.topic_dir(topic)}/_checkpoint_ingest",
+            checkpoint_dir=checkpoint_dir,
+            trigger_seconds=trigger_seconds,
         )
-        if trigger_seconds is not None:
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        else:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     def apply_batch(
         self,
@@ -122,24 +86,18 @@ class StreamingProducer:
         arrival_cols: list[str] | None = None,
     ) -> bool:
         """Apply one micro-batch idempotently; returns False if ``epoch``
-        was already applied by ``sink_id`` (the foreachBatch retry path).
-
-        ``sink_id`` naming a checkpoint directory is namespaced with a
-        token inside that directory (see :func:`_sink_instance_key`);
-        for plain-string sink ids, an epoch REGRESSION to 0 while the
-        ledger is far ahead means the caller's stream restarted from
-        scratch — apply and overwrite rather than silently skip."""
-        key = _sink_instance_key(sink_id)
-        last = self.catalog.last_epoch(topic, key)
-        reset = epoch == 0 and last > 0  # recreated stream, no token file
-        if last >= epoch and not reset:
+        was already applied by ``sink_id`` (the foreachBatch retry path
+        — see :meth:`store.EpochLedger.claim`)."""
+        ledger = self.catalog.epoch_ledger(topic)
+        c = ledger.claim(sink_id, epoch)
+        if c is None:
             return False
         if not batch_df.isEmpty():
             self._producer.produce(
                 batch_df, topic, key_col=key_col, value_col=value_col,
                 ts_col=ts_col, arrival_cols=arrival_cols,
             )
-        self.catalog.record_epoch(topic, key, epoch, force=reset)
+        ledger.commit(c)
         return True
 
 
@@ -159,7 +117,7 @@ def start_epoch_sink(
     trigger_seconds: float | None = None,
 ):
     """Shared foreachBatch wiring for the epoch-idempotent sinks
-    (StreamingNearDup / StreamingSemDedup / streaming sketches): resolve
+    (StreamingProducer / the dedup sinks / streaming sketches): resolve
     the checkpoint (whose path doubles as the sink instance key), wire
     ``apply(batch_df, epoch, checkpoint)``, and trigger availableNow
     unless a processingTime cadence is given — held ONCE so trigger or

@@ -6,8 +6,8 @@ Both sketches are linear/mergeable (count-min: counter addition, Cormode
 so a stream can maintain them incrementally: each micro-batch computes
 its own O(sketch)-sized partial and writes it under a stable
 ``ep=<tag>`` partition of the store — a foreachBatch RETRY overwrites
-exactly its own partition (same exactly-once discipline as
-streaming/dedup.py), and the live sketch is just the merge of all
+exactly its own partition (the exactly-once protocol of
+polar_spark/store.py), and the live sketch is just the merge of all
 stored partials. Merging happens at READ time over O(epochs · sketch)
 rows — never the raw stream.
 
@@ -27,9 +27,6 @@ watermark coupling — reading the store IS the query).
 
 from __future__ import annotations
 
-import fcntl
-import hashlib
-import json
 import os
 import re
 import shutil
@@ -58,16 +55,22 @@ from polar_spark.functions.sketches import (
     qs_quantiles,
     qs_select,
 )
-from polar_spark.streaming.dedup import EpochLedger, epoch_tag
-from polar_spark.streaming.ingest import _sink_instance_key, start_epoch_sink
+from polar_spark.store import (
+    STORE_LEDGER,
+    EpochLedger,
+    epoch_dirs,
+    file_lock,
+    read_json,
+    read_live,
+    write_json,
+)
+from polar_spark.streaming.ingest import start_epoch_sink
 
 
 # base partitions are compaction output (`ep=base<gen>`); epoch
-# partitions carry the sink-key hash + epoch number baked into their tag
-# (streaming/dedup.epoch_tag) — compaction parses the tag to decide what
-# is safely foldable
+# partitions carry the sink-key hash + epoch number in their tag
+# (store.epoch_tag), which the ledger parses to tell what is foldable
 _BASE_DIR_RE = re.compile(r"^ep=base\d{8}$")
-_EPOCH_DIR_RE = re.compile(r"^ep=t([0-9a-f]{10})x(\d+)$")
 
 
 class _EpochPartialSink:
@@ -88,7 +91,7 @@ class _EpochPartialSink:
         self.spark = spark
         self.store_path = store_path
         os.makedirs(store_path, exist_ok=True)
-        self._epochs = EpochLedger(store_path)
+        self._epochs = EpochLedger(os.path.join(store_path, STORE_LEDGER))
 
     def _partial(self, batch_df: DataFrame) -> DataFrame:  # pragma: no cover
         raise NotImplementedError
@@ -101,28 +104,19 @@ class _EpochPartialSink:
 
     # -- store maintenance -------------------------------------------------
     def _partition_dirs(self) -> list[os.DirEntry]:
-        return [
-            e
-            for e in os.scandir(self.store_path)
-            if e.is_dir() and e.name.startswith("ep=")
-        ]
+        return epoch_dirs(self.store_path)
 
     # -- compaction manifest -------------------------------------------
     def _manifest_path(self) -> str:
         return os.path.join(self.store_path, "_compact.json")
 
     def _read_manifest(self) -> dict:
-        try:
-            with open(self._manifest_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return {"gen": 0, "base": None, "folded": []}
+        return read_json(
+            self._manifest_path(), {"gen": 0, "base": None, "folded": []}
+        )
 
     def _write_manifest(self, man: dict) -> None:
-        tmp = self._manifest_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(man, f)
-        os.replace(tmp, self._manifest_path())
+        write_json(self._manifest_path(), man)
 
     def _live_partition_dirs(self) -> list[os.DirEntry]:
         """Partitions a read may merge: excludes partials already folded
@@ -166,10 +160,9 @@ class _EpochPartialSink:
         """Pin the fold output to the lineage's recorded partial schema
         (merge aggregates widen types — e.g. SUM(int) → bigint — and a
         retyped base partition would break the multi-path read)."""
-        if not os.path.exists(self._schema_path()):
+        schema = self._saved_schema()
+        if schema is None:
             return df
-        with open(self._schema_path()) as f:
-            schema = T.StructType.fromJson(json.load(f))
         return df.select(
             *[F.col(fld.name).cast(fld.dataType) for fld in schema.fields]
         )
@@ -179,35 +172,30 @@ class _EpochPartialSink:
         ``ep=base<gen>`` partition. Returns (n_folded, n_live_after).
 
         Crash-safe at every step: the new base only becomes visible via
-        the manifest's atomic os.replace (before it, readers ignore the
-        unreferenced base dir; after it, they ignore the folded source
-        dirs until GC removes them), so a SIGKILL anywhere leaves reads
-        correct and the next compact/GC finishes the cleanup — the same
-        write-aside-then-swap discipline as topics.compact.
+        the manifest's atomic replace (store.write_json; before it,
+        readers ignore the unreferenced base dir; after it, they ignore
+        the folded source dirs until GC removes them), so a SIGKILL
+        anywhere leaves reads correct and the next compact/GC finishes
+        the cleanup — the same write-aside-then-swap discipline as
+        topics.compact.
 
         Only epochs at or below the ledger's recorded high-water mark
-        fold: a partition written by a crash BETWEEN the partial write
-        and the epoch record still belongs to its replay (which will
-        overwrite it); folding it would double-count the replay."""
-        lock = os.path.join(self.store_path, "_compact.lock")
-        fd = os.open(lock, os.O_CREAT | os.O_RDWR)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
+        fold (store.EpochLedger.recorded): a partition written by a
+        crash BETWEEN the partial write and the epoch record still
+        belongs to its replay (which will overwrite it); folding it
+        would double-count the replay."""
+        with self._compact_lock():
             self._gc_folded()
             man = self._read_manifest()
-            last_by_hash = {
-                hashlib.sha1(k.encode()).hexdigest()[:10]: v
-                for k, v in self._epochs.all().items()
-            }
+            parts = self._partition_dirs()
+            recorded = self._epochs.recorded(e.name for e in parts)
             srcs = []
-            for e in self._partition_dirs():
+            for e in parts:
                 if not os.path.exists(os.path.join(e.path, "_SUCCESS")):
                     continue  # incomplete write — not committed state
-                m = _EPOCH_DIR_RE.match(e.name)
-                if m:
-                    if last_by_hash.get(m.group(1), -1) < int(m.group(2)):
-                        continue  # written but unrecorded: replay owns it
-                    srcs.append(e)
+                if e.name in recorded:
+                    if recorded[e.name]:  # unrecorded: the replay owns it
+                        srcs.append(e)
                 elif _BASE_DIR_RE.match(e.name) and e.name == man.get("base"):
                     srcs.append(e)
             if len(srcs) <= 1:
@@ -219,13 +207,11 @@ class _EpochPartialSink:
             folded.coalesce(1).write.mode("overwrite").parquet(
                 os.path.join(self.store_path, base_name)
             )
-            self._write_manifest(
-                {
-                    "gen": gen,
-                    "base": base_name,
-                    "folded": sorted(e.name for e in srcs),
-                }
-            )
+            self._write_manifest({
+                "gen": gen,
+                "base": base_name,
+                "folded": sorted(e.name for e in srcs),
+            })
             # DEFERRED GC (review r10): the just-superseded sources stay
             # on disk until the NEXT compact's entry _gc_folded. Reads
             # exclude them via the manifest the moment it commits, and a
@@ -235,9 +221,12 @@ class _EpochPartialSink:
             # from under an in-flight scan. Disk cost: one superseded
             # generation, bounded by epochs-since-previous-compact.
             return (len(srcs), len(self._live_partition_dirs()))
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
+
+    def _compact_lock(self):
+        return file_lock(
+            os.path.join(self.store_path, "_compact.lock"),
+            f"compact({self.store_path})", timeout=None,
+        )
 
     def _purge(self) -> None:
         """Drop every stored partial. Sketch partials ADD when merged, so
@@ -259,10 +248,7 @@ class _EpochPartialSink:
         hash) — permanently losing its committed batch and resurrecting
         dead state. Under the lock, a purge runs entirely before or
         entirely after any compaction."""
-        lock = os.path.join(self.store_path, "_compact.lock")
-        fd = os.open(lock, os.O_CREAT | os.O_RDWR)
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
+        with self._compact_lock():
             for e in self._partition_dirs():
                 shutil.rmtree(e.path, ignore_errors=True)
             # the compaction manifest indexes the purged lineage's dirs —
@@ -273,31 +259,25 @@ class _EpochPartialSink:
             if os.path.exists(self._schema_path()):
                 with open(self._stale_marker_path(), "w"):
                     pass
-        finally:
-            fcntl.flock(fd, fcntl.LOCK_UN)
-            os.close(fd)
 
     def apply_batch(self, batch_df: DataFrame, epoch: int, sink_id: str) -> bool:
         """Apply one micro-batch idempotently; False = already applied
         (foreachBatch retry — store untouched)."""
-        key = _sink_instance_key(sink_id)
-        last = self._epochs.last(key)
-        reset = epoch == 0 and last > 0
+        c = self._epochs.claim(sink_id, epoch)
+        if c is None:
+            return False
         # a FRESH checkpoint (key never recorded) over a non-empty store
         # is also a new lineage: the old lineage's partials must go
-        new_lineage = epoch == 0 and last < 0 and bool(self._partition_dirs())
-        if last >= epoch and not reset:
-            return False
-        if reset or new_lineage:
+        new_lineage = epoch == 0 and c.last < 0 and bool(self._partition_dirs())
+        if c.reset or new_lineage:
             self._purge()
         if not batch_df.isEmpty():
-            tag = epoch_tag(key, epoch)
             partial = self._partial(batch_df)
             self._save_schema(partial)
             partial.write.mode("overwrite").parquet(
-                os.path.join(self.store_path, f"ep={tag}")
+                os.path.join(self.store_path, f"ep={c.tag}")
             )
-        self._epochs.record(key, epoch, force=reset)
+        self._epochs.commit(c)
         return True
 
     def start(
@@ -328,59 +308,30 @@ class _EpochPartialSink:
         inheriting the purged lineage's types."""
         stale = os.path.exists(self._stale_marker_path())
         if stale or not os.path.exists(self._schema_path()):
-            tmp = self._schema_path() + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(partial.schema.json())
-            os.replace(tmp, self._schema_path())
+            write_json(self._schema_path(), partial.schema.jsonValue())
             if stale:
                 os.remove(self._stale_marker_path())
 
+    def _saved_schema(self) -> T.StructType | None:
+        js = read_json(self._schema_path())
+        return None if js is None else T.StructType.fromJson(js)
+
     def _empty_partial(self) -> DataFrame | None:
-        if not os.path.exists(self._schema_path()):
-            return None
-        with open(self._schema_path()) as f:
-            schema = T.StructType.fromJson(json.load(f))
-        return self.spark.createDataFrame([], schema)
+        schema = self._saved_schema()
+        return None if schema is None else self.spark.createDataFrame([], schema)
 
     def _stored(self) -> DataFrame | None:
         """All LIVE stored partials; None = cold store. Reads the
         manifest-filtered partition list by explicit paths (never the
         store root): during a compaction swap the superseded source
         dirs coexist with the new base, and a root read would merge
-        both and double-count every additive estimate. Mirrors the
-        read-safety of streaming/dedup.py: a read failure over a store
-        with at least one COMPLETED epoch re-raises (swallowing it would
-        silently serve wrong estimates); only a cold/partial store with
-        no completed write anywhere reads as empty."""
-        for _ in range(4):
-            parts = self._live_partition_dirs()
-            if not parts:
-                return None
-            paths = [e.path for e in parts]
-            try:
-                return self.spark.read.parquet(*paths)
-            except Exception:
-                # a concurrent compact() may have GC'd our listed source
-                # dirs between the listing and the read — its manifest
-                # commit happened FIRST, so a fresh listing serves the
-                # new base. Judging completeness from the STALE paths
-                # here would misread a fully-compacted store as cold and
-                # silently serve an EMPTY estimate; only give up when
-                # re-listing shows nothing actually changed.
-                fresh = [e.path for e in self._live_partition_dirs()]
-                if fresh != paths:
-                    continue  # retry over the post-compaction listing
-                complete = any(
-                    os.path.exists(os.path.join(p, "_SUCCESS"))
-                    for p in paths
-                )
-                if complete:
-                    raise
-                return None
-        # still racing after retries: fail loud, never serve empty
-        raise RuntimeError(
-            f"store {self.store_path!r} kept changing under read "
-            "(compaction churn?)"
+        both and double-count every additive estimate. A concurrent
+        compact() commits its manifest BEFORE it GCs the listed source
+        dirs, so a read that lost that race re-lists and serves the
+        new base (store.read_live)."""
+        return read_live(
+            self.spark, self.store_path,
+            live=lambda: [e.path for e in self._live_partition_dirs()],
         )
 
 

@@ -255,8 +255,7 @@ def test_compact_skips_unrecorded_epoch(spark, sf_dir, tmp_path):
     """Law 6: a partition written by a crash BETWEEN the partial write
     and the epoch record is NOT folded — the replay still owns it and
     will overwrite it; folding it would double-count the replay."""
-    from polar_spark.streaming.dedup import epoch_tag
-    from polar_spark.streaming.ingest import _sink_instance_key
+    from polar_spark.store import _sink_instance_key, epoch_tag
 
     root = str(tmp_path / "unrecorded")
     sink, batches, read = _mk_lm(spark, sf_dir, root)

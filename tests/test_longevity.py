@@ -24,6 +24,7 @@ from datetime import datetime, timedelta, timezone
 
 from polar_spark.produce import Producer
 from polar_spark.retention import RetentionScheduler
+from polar_spark.store import file_lock
 from polar_spark.topics import TopicCatalog
 
 
@@ -508,7 +509,7 @@ def test_offsets_gc_keeps_aged_orphan_lock_while_held(spark, tmp_path):
     acquired, release = threading.Event(), threading.Event()
 
     def holder():
-        with cat._file_lock(held, "test-holder", timeout=5.0):
+        with file_lock(held, "test-holder", timeout=5.0):
             acquired.set()
             release.wait(timeout=30.0)
 

@@ -489,16 +489,25 @@ def test_concurrent_produce_offsets_unique_and_contiguous(spark, sf_dir, tmp_pat
     assert all(tails[p] == mx for p, (_mn, mx, _c) in per.items())
 
 
-def test_record_epoch_concurrent_sinks_no_lost_update(spark, tmp_path):
+@pytest.mark.parametrize("ledger", ["topic", "store"])
+def test_record_epoch_concurrent_sinks_no_lost_update(spark, tmp_path, ledger):
     """Two sinks recording epochs concurrently must both land in the
-    ledger (the unserialized read-modify-write lost one)."""
+    ledger (the unserialized read-modify-write lost one) — a topic's
+    ledger and a sink store's alike."""
     import threading
+
+    from polar_spark.store import STORE_LEDGER, EpochLedger
 
     cat, _ = _engine(spark, tmp_path)
     cat.ensure_topic("tec")
+    led = (
+        cat.epoch_ledger("tec") if ledger == "topic"
+        else EpochLedger(str(tmp_path / "store" / STORE_LEDGER))
+    )
+
     def rec(sink, n):
         for e in range(n):
-            cat.record_epoch("tec", sink, e)
+            led.record(sink, e)
 
     ts = [threading.Thread(target=rec, args=(f"s{i}", 20)) for i in range(4)]
     for t in ts:
@@ -506,7 +515,7 @@ def test_record_epoch_concurrent_sinks_no_lost_update(spark, tmp_path):
     for t in ts:
         t.join()
     for i in range(4):
-        assert cat.last_epoch("tec", f"s{i}") == 19
+        assert led.last(f"s{i}") == 19
 
 
 def test_epoch_ledger_survives_checkpoint_recreation(spark, sf_dir, tmp_path):

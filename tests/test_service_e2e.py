@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from polar_spark.consume import EARLIEST, ConsumerGroup
 from polar_spark.produce import Producer
 from polar_spark.sources.tables import load_table
+from polar_spark.store import file_lock
 
 
 def _req(method: str, url: str, body: bytes | None = None):
@@ -407,9 +408,7 @@ def test_compaction_mutex_serializes_concurrent_compacts(spark, sf_dir, tmp_path
     release = threading.Event()
 
     def holder():
-        with eng.catalog._file_lock(
-            d + ".compact.lock", "test-holder", timeout=5.0
-        ):
+        with file_lock(d + ".compact.lock", "test-holder", timeout=5.0):
             held.set()
             release.wait(20.0)
 

@@ -705,6 +705,35 @@ def _pin_lsh_plan(monkeypatch, plan: str) -> None:
     monkeypatch.setattr(D, "DRIVER_BATCH_BYTES", _LSH_PLANS[plan])
 
 
+def _banded_greedy_drops(rows, bands: int, r: int, tau: int) -> list[int]:
+    """Python reference of the LSH sink's law: greedy in id order, a
+    vector drops iff it verifies against an earlier KEPT vector that
+    shares one of its band buckets (same md5 hyperplanes, same exact
+    integer threshold test)."""
+    import numpy as np
+
+    from polar_spark.functions.similarity import hyperplane_weights
+
+    W = np.array(hyperplane_weights(64, bands * r), dtype=np.int64)
+    kept: list = []  # (band buckets, vector, n2)
+    drops = []
+    for vid, v in sorted(rows):
+        v = np.array(v, dtype=np.int64)
+        bits = tuple(bool(x >= 0) for x in W @ v)
+        bks = tuple(bits[t * r:(t + 1) * r] for t in range(bands))
+        n2 = int(v @ v)
+        if any(
+            any(a == b for a, b in zip(ubks, bks))
+            and int(u @ v) > 0
+            and 10000 * int(u @ v) ** 2 >= tau * nu * n2
+            for ubks, u, nu in kept
+        ):
+            drops.append(vid)
+        else:
+            kept.append((bks, v, n2))
+    return drops
+
+
 def test_streaming_semdedup_lsh_matches_banded_greedy_reference(
     spark, sf_dir, tmp_path, monkeypatch
 ):
@@ -715,10 +744,9 @@ def test_streaming_semdedup_lsh_matches_banded_greedy_reference(
     same-epoch replay must not change the store, and the store must
     hold exactly the kept corpus — on both sides of the sink's
     driver/bulk size selection."""
-    import numpy as np
     from pyspark.sql import functions as F
 
-    from polar_spark.functions.similarity import hyperplane_weights, quantize
+    from polar_spark.functions.similarity import quantize
     from polar_spark.sources.tables import load_table
     from polar_spark.streaming.dedup import StreamingSemDedupLSH
 
@@ -733,30 +761,9 @@ def test_streaming_semdedup_lsh_matches_banded_greedy_reference(
     # python reference: same md5 hyperplane family, same band split,
     # same exact integer threshold — greedy over id order with the
     # banded candidate restriction
-    W = np.array(hyperplane_weights(64, BANDS * R), dtype=np.int64)
-    rows = sorted(qv.collect(), key=lambda r: r["vec_id"])
-    kept_ref: list = []  # (buckets tuple, int vector, n2)
-    ref_drops = []
-    for r in rows:
-        v = np.array(r["v"], dtype=np.int64)
-        proj = W @ v
-        bits = ["1" if x >= 0 else "0" for x in proj]
-        bks = tuple(
-            "".join(bits[t * R : (t + 1) * R]) for t in range(BANDS)
-        )
-        n2 = int(v @ v)
-        dup = False
-        for ubks, u, nu in kept_ref:
-            if any(a == b for a, b in zip(ubks, bks)):
-                d = int(u @ v)
-                if d > 0 and 10000 * d * d >= TAU * nu * n2:
-                    dup = True
-                    break
-        if dup:
-            ref_drops.append(r["vec_id"])
-        else:
-            kept_ref.append((bks, v, n2))
-    ref_kept = sorted(set(r["vec_id"] for r in rows) - set(ref_drops))
+    rows = [(r["vec_id"], r["v"]) for r in qv.collect()]
+    ref_drops = _banded_greedy_drops(rows, BANDS, R, TAU)
+    ref_kept = sorted(set(i for i, _v in rows) - set(ref_drops))
     assert ref_drops
 
     for plan in _LSH_PLANS:
@@ -1645,6 +1652,7 @@ def test_streaming_semdedup_lsh_store_prunes_partitions(spark, tmp_path):
     whole store."""
     import re
 
+    from polar_spark.store import read_live
     from polar_spark.streaming.dedup import StreamingSemDedupLSH
 
     def vec(seed: int) -> list[int]:
@@ -1658,7 +1666,7 @@ def test_streaming_semdedup_lsh_store_prunes_partitions(spark, tmp_path):
         [(i, vec(i)) for i in range(40)], "vec_id long, v array<bigint>"
     )
     assert sd.apply_batch(b1, 0, "prune_law") is True
-    sk = sd._stored(sd.bands_path, exclude_tag="zzz")
+    sk = read_live(spark, sd.bands_path, "zzz")
     # r13 ids-only layout: int64 buckets, NO vector payload in any
     # band row (vectors live once in the kept-vectors table)
     assert {"band", "bpre", "bucket", "vec_id"} <= set(sk.columns)
@@ -2069,6 +2077,7 @@ def test_streaming_semdedup_lsh_driver_plan_replay_after_publish(
     run's and no hidden staging directory is left behind."""
     import os
 
+    import polar_spark.store as store
     import polar_spark.streaming.dedup as D
 
     clean = _mk_lsh_sink(spark, tmp_path, "clean")
@@ -2085,17 +2094,53 @@ def test_streaming_semdedup_lsh_driver_plan_replay_after_publish(
     b1 = spark.createDataFrame(_twin_rows(60, 80), "vec_id long, v array<bigint>")
     with pytest.raises(RuntimeError, match="before the epoch is recorded"):
         sd.apply_batch(b1, 1, "torn")
-    tag = D.epoch_tag(D._sink_instance_key("torn"), 1)
+    tag = store.epoch_tag(store._sink_instance_key("torn"), 1)
     for path in (sd.drops_path, sd.vectors_path, sd.bands_path):
         assert os.path.exists(os.path.join(path, f"ep={tag}", "_SUCCESS"))
     monkeypatch.setattr(D.EpochLedger, "record", record)
-    assert sd._epochs.last(D._sink_instance_key("torn")) == 0
+    assert sd._epochs.last(store._sink_instance_key("torn")) == 0
 
     assert sd.apply_batch(b1, 1, "torn") is True  # the replay
     assert sd.apply_batch(b1, 1, "torn") is False
     assert _lsh_store_state(spark, sd) == _lsh_store_state(spark, clean)
     for path in (sd.drops_path, sd.vectors_path, sd.bands_path):
         assert all(n.startswith("ep=") for n in os.listdir(path))
+
+
+def test_streaming_semdedup_lsh_compact_refuses_pending_replay(
+    spark, tmp_path, monkeypatch
+):
+    """While a failed micro-batch's partitions await replay, compact()
+    raises naming their tag: folding them would hide the replay's own
+    first attempt from its self-exclusion, and the replay would drop
+    its own vectors. After the replay it compacts, and the store holds
+    the banded-greedy law."""
+    import polar_spark.store as store
+    import polar_spark.streaming.dedup as D
+
+    sd = _mk_lsh_sink(spark, tmp_path, "pending")
+    _lsh_epochs(spark, sd, ["driver"], "pending", monkeypatch)
+    record = D.EpochLedger.record
+
+    def failing_record(self, key, epoch, force=False):
+        raise RuntimeError("crash before the epoch is recorded")
+
+    monkeypatch.setattr(D.EpochLedger, "record", failing_record)
+    b1 = spark.createDataFrame(_twin_rows(60, 80), "vec_id long, v array<bigint>")
+    with pytest.raises(RuntimeError, match="before the epoch is recorded"):
+        sd.apply_batch(b1, 1, "pending")
+    monkeypatch.setattr(D.EpochLedger, "record", record)
+    tag = store.epoch_tag("pending", 1)
+    with pytest.raises(RuntimeError, match=tag):
+        sd.compact()
+
+    assert sd.apply_batch(b1, 1, "pending") is True  # the replay
+    sd.compact()
+    kept = {r["vec_id"] for r in sd.kept().collect()}
+    dropped = sorted(r["vec_id"] for r in sd.dropped().collect())
+    assert not kept & set(dropped)
+    assert dropped == _banded_greedy_drops(_twin_rows(0, 80), 8, 8, 9025)
+    assert dropped and kept | set(dropped) == set(range(80))
 
 
 def test_streaming_semdedup_lsh_driver_plan_job_budget(
