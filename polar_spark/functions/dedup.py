@@ -71,19 +71,6 @@ def shingles_expr(text_col: str, strict: bool = False) -> F.Column:
     )
 
 
-def shingle_hash_pairs_expr(shingles_col: str = "shingles") -> F.Column:
-    """Per-shingle Kirsch-Mitzenmacher hash pair ``(a, b)``: ONE md5 per
-    shingle, split into two 60-bit halves reduced mod 2³¹−1. All 16
-    minhash permutations derive from this pair — 16× less hashing than
-    seeded-md5-per-permutation."""
-    m = MINHASH_PRIME
-    return F.expr(
-        f"transform(transform({shingles_col}, s -> md5(s)), h -> named_struct("
-        f" 'a', cast(conv(substring(h, 1, 15), 16, 10) as bigint) % {m},"
-        f" 'b', cast(conv(substring(h, 17, 15), 16, 10) as bigint) % {m}))"
-    )
-
-
 def minhash_sig_expr(pairs_col: str = "hp") -> F.Column:
     """MinHash signature from KM hash pairs, entirely JVM-side: seed i's
     permutation is ``(a + i·b) mod 2³¹−1`` (Kirsch-Mitzenmacher: two
@@ -155,16 +142,6 @@ def simhash64(texts: pd.Series) -> pd.Series:
     numpy-vectorized per document) — Python reference implementation of
     :func:`simhash_expr`, kept for cross-checking in tests."""
     return texts.map(_simhash_bits)
-
-
-def word_hash_pairs_expr(text_col: str) -> F.Column:
-    """Per-word (hi, lo) 32-bit halves of md5 — ONE md5 per word
-    occurrence (duplicates kept: they carry the frequency weight)."""
-    return F.expr(
-        f"transform(transform(split({text_col}, ' '), w -> md5(w)), h -> named_struct("
-        f" 'hi', cast(conv(substring(h, 1, 8), 16, 10) as bigint),"
-        f" 'lo', cast(conv(substring(h, 9, 8), 16, 10) as bigint)))"
-    )
 
 
 def simhash_expr(pairs_col: str = "wh") -> F.Column:

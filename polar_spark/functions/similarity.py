@@ -126,30 +126,6 @@ def cosine(a: Column, b: Column) -> Column:
     return cos(a, b)
 
 
-def cosine_exact(a: Column, b: Column) -> Column:
-    """Cosine from exact integer dot products: ``dot/(√(a·a)·√(b·b))``.
-
-    The three dots are exact int64 sums (< 2⁵³, so their double casts are
-    exact); sqrt/multiply/divide are correctly-rounded IEEE ops — the
-    result is bit-identical in any engine, hence oracle-comparable.
-
-    When one side's norm is reused across many pairs (bucketed near-dup
-    join), precompute ``sq_norm`` per vector before the join instead —
-    see queries/similarity.py dedup_embedding_cosine."""
-
-    @pandas_udf(DoubleType())
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        A, B = _mat(a), _mat(b)
-        d = (A * B).sum(axis=1).astype(np.float64)
-        na = np.sqrt((A * A).sum(axis=1).astype(np.float64))
-        nb = np.sqrt((B * B).sum(axis=1).astype(np.float64))
-        return pd.Series(d / (na * nb))
-
-    return cos(a, b)
-
-
 def sq_norm(a: Column) -> Column:
     """Exact int64 squared L2 norm of a quantized vector (one pass;
     precompute per vector before a pair join so norms are never
@@ -794,25 +770,6 @@ def unpack_mat(s: pd.Series, width: int = 2) -> np.ndarray:
     return np.stack(
         [np.frombuffer(b, dtype=dt) for b in s.to_numpy()]
     ).astype(np.int64, copy=False)
-
-
-def dot_packed(a: Column, b: Column, width: int = 2) -> Column:
-    """Exact integer dot of two :func:`pack_vec`-packed vectors — the
-    packed twin of :func:`dot` (same int64 arithmetic after unpack, so
-    results are bit-identical to the list form)."""
-    dt = _PACK_DTYPES[int(width)]
-
-    @pandas_udf(LongType())
-    def dp(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="int64")
-        A = np.stack([np.frombuffer(x, dtype=dt) for x in a.to_numpy()])
-        B = np.stack([np.frombuffer(x, dtype=dt) for x in b.to_numpy()])
-        return pd.Series(
-            (A.astype(np.int64) * B.astype(np.int64)).sum(axis=1)
-        )
-
-    return dp(a, b)
 
 
 def dot_packed_list(a: Column, b: Column, width: int = 2) -> Column:

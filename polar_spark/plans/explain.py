@@ -119,8 +119,3 @@ def shuffle_count(df: DataFrame) -> int:
     plan (formatted mode: one "(n) Exchange" detail header per node;
     ReusedExchange intentionally not counted — it pays no new shuffle)."""
     return shuffle_count_text(explain_str(df))
-
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    """How many WholeStageCodegen spans the plan has (wider = better)."""
-    return codegen_spans_text(explain_str(df))

@@ -19,10 +19,15 @@ exactly like the reference's cleaner runs on each broker.
 from __future__ import annotations
 
 import os
+import re
 import threading
+import time
 
 from polar_spark.store import file_lock
-from polar_spark.topics import TopicCatalog
+from polar_spark.topics import TopicCatalog, _pid_alive
+
+# store.write_json's per-writer tmp file: ``<file>.<pid>.<thread>.tmp``
+_WRITE_JSON_TMP = re.compile(r"\.(\d+)\.\d+\.tmp$")
 
 
 class RetentionScheduler:
@@ -158,10 +163,12 @@ class RetentionScheduler:
                 continue
         segment_files = removed
         if self.offsets_retention_hours is not None:
+            cutoff = time.time() - self.offsets_retention_hours * 3600.0
             try:
                 # increments its own two counters (expired ledgers /
-                # reaped orphan locks) so the series stay distinct
-                removed += self._sweep_group_offsets()
+                # reaped orphans) so the series stay distinct
+                removed += self._sweep_group_offsets(cutoff)
+                removed += self._reap_orphan_tmp(cutoff)
             except Exception:  # noqa: BLE001 — sweep_once never raises
                 pass
         self.removed_files += removed
@@ -178,7 +185,7 @@ class RetentionScheduler:
                 )
         return removed
 
-    def _sweep_group_offsets(self) -> int:
+    def _sweep_group_offsets(self, cutoff: float) -> int:
         """Delete group offset ledgers idle past offsets_retention_hours.
 
         A ledger's mtime is its last commit OR register (commit's atomic
@@ -193,10 +200,8 @@ class RetentionScheduler:
         removed too — safe since file_lock revalidates inodes — so the
         GC leaves NOTHING behind per expired group."""
         import contextlib
-        import time as _time
 
         gdir = os.path.join(self.catalog.root, "groups")
-        cutoff = _time.time() - self.offsets_retention_hours * 3600.0
         removed = 0
         try:
             entries = [fn for fn in os.listdir(gdir) if fn.endswith(".json")]
@@ -260,6 +265,41 @@ class RetentionScheduler:
                             )
             except OSError:
                 continue
+        return removed
+
+    def _reap_orphan_tmp(self, cutoff: float) -> int:
+        """Remove ``write_json`` tmp files (``<file>.<pid>.<thread>.tmp``)
+        that a killed writer left beside the offsets ledgers and the
+        topics' JSON state (tails, epochs, reservations, meta). A file is
+        reaped only when its writer's pid is not alive AND it is older
+        than ``cutoff``: a live writer renames its tmp over the target
+        within moments, and the age check spares a writer whose pid this
+        host cannot see (another machine on a shared root). Counted with
+        the orphan locks."""
+        dirs = [os.path.join(self.catalog.root, "groups")] + [
+            self.catalog.topic_dir(t) for t in self.catalog.list_topics()
+        ]
+        removed = 0
+        for d in dirs:
+            try:
+                entries = list(os.scandir(d))
+            except FileNotFoundError:
+                continue
+            for e in entries:
+                m = _WRITE_JSON_TMP.search(e.name)
+                try:
+                    if (
+                        m is None
+                        or e.stat().st_mtime >= cutoff
+                        or _pid_alive(int(m.group(1)))
+                    ):
+                        continue
+                    os.remove(e.path)
+                except OSError:
+                    continue
+                removed += 1
+                if self.metrics is not None:
+                    self.metrics.inc("polar_offsets_lock_orphans_reaped_total")
         return removed
 
     def _run(self) -> None:

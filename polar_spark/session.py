@@ -9,9 +9,19 @@ comparability), Arrow enabled for the Pandas-UDF slow path.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _remove_own_file(path: str, pid: int) -> None:
+    """At-exit removal of a file this process made; a forked child that
+    exits through ``atexit`` leaves its parent's file alone."""
+    if os.getpid() == pid:
+        with contextlib.suppress(OSError):
+            os.remove(path)
 
 
 def get_spark(
@@ -135,9 +145,11 @@ def ensure_driver_session(spark: SparkSession) -> SparkSession:
         # per-process zip name: a shared cached name goes stale the moment
         # the package gains a module (workers then ModuleNotFoundError on
         # perfectly valid code)
-        zpath = os.path.join(
-            tempfile.gettempdir(), f"polar_spark_pkg_{os.getpid()}.zip"
-        )
+        pid = os.getpid()
+        zpath = os.path.join(tempfile.gettempdir(), f"polar_spark_pkg_{pid}.zip")
+        # removed at interpreter exit, not after addPyFile: executors
+        # fetch the file from this path for the life of the context
+        atexit.register(_remove_own_file, zpath, pid)
         if not os.path.exists(zpath):
             with zipfile.ZipFile(zpath, "w") as z:
                 for dirpath, _dirs, files in os.walk(pkg_root):

@@ -49,12 +49,20 @@ GREEDY_PAIR_CAP = 2_000_000
 
 # Micro-batches whose optimizer-estimated size is at or under this are
 # decided on the driver by StreamingSemDedupLSH: one Arrow collect,
-# numpy buckets and greedy, and pyarrow epoch writes; only the lookup
-# against the stored corpus runs as a Spark job. The same selection
-# the producer makes (produce.SMALL_BATCH_BYTES): a micro-batch of a
-# few hundred rows otherwise pays the ~29-job distributed plan, whose
-# fixed per-trigger cost dwarfs its data.
+# numpy buckets and greedy, a lookup against the stored corpus held
+# resident on the driver, and pyarrow epoch writes — the batch's own
+# collect is the trigger's only Spark job. The same selection the
+# producer makes (produce.SMALL_BATCH_BYTES): a micro-batch of a few
+# hundred rows otherwise pays the ~29-job distributed plan, whose fixed
+# per-trigger cost dwarfs its data.
 DRIVER_BATCH_BYTES = 4 * 1024 * 1024
+
+# Cap on the stored corpus StreamingSemDedupLSH keeps resident on the
+# driver for its small-batch lookup (band keys at 16 B a row, kept
+# vectors at (dims + 2)·8 B). A live store past it is probed by the
+# Spark lookup the bulk plan uses, and nothing but per-partition row
+# counts stays resident.
+DRIVER_INDEX_BYTES = 256 * 1024 * 1024
 
 
 def _any_over_tau(d, nu, n2: int, tau: int) -> bool:
@@ -552,6 +560,185 @@ def semdedup_sink_auto(
     )
 
 
+class _Part:
+    """One live ``ep=`` partition of a resident store: its directory
+    identity, row count and, while loaded, its arrays."""
+
+    __slots__ = ("ident", "rows", "data")
+
+    def __init__(self, ident: tuple[int, int], rows: int, data=None):
+        self.ident, self.rows, self.data = ident, rows, data
+
+
+class _ResidentStore:
+    """The stored corpus of a :class:`StreamingSemDedupLSH`, resident on
+    the driver for its small-batch lookup: per live partition of the
+    bands store its ids-only band keys, sorted by ``band << planes |
+    bucket``; per live partition of the kept-vectors store its vectors
+    with their squared norms, sorted by id.
+
+    The store listing is the source of truth, as for the segment cache.
+    Each :meth:`refresh` lists both stores by ``epoch_dirs`` and keys a
+    partition by its name plus its directory identity (inode,
+    ``mtime_ns``): ``publish_epoch`` renames a fresh directory in and a
+    Spark overwrite makes a new one, so a same-named rewrite is never
+    taken for the old one. A partition that vanished (``compact()``, a
+    migration) or changed is dropped; one not seen yet is loaded with
+    pyarrow — Spark-written bulk partitions, ``ep=migrated`` and
+    ``ep=compacted`` included. The trigger's own tag is left out of the
+    listing, as ``read_live(…, exclude_tag)`` leaves it out, so a replay
+    never matches its own torn first attempt. The sink writes its own
+    partitions through (:meth:`insert`) once they are published."""
+
+    def __init__(self, bands_path: str, vectors_path: str, dims: int, planes: int):
+        self.bands_path, self.vectors_path = bands_path, vectors_path
+        self.dims, self.planes = dims, planes
+        self._parts: dict[tuple[str, str], _Part] = {}
+
+    def _row_bytes(self, root: str) -> int:
+        return 16 if root == self.bands_path else (self.dims + 2) * 8
+
+    def refresh(self, exclude_tag: str) -> bool:
+        """Bring the index in line with the listing. False when the live
+        store is past :data:`DRIVER_INDEX_BYTES`: its arrays are then
+        released and the caller takes the Spark lookup."""
+        import pyarrow.dataset as pads
+
+        live = {}
+        for root in (self.bands_path, self.vectors_path):
+            for e in epoch_dirs(root):
+                if e.name != f"ep={exclude_tag}":
+                    st = e.stat()
+                    live[(root, e.name)] = (e.path, (st.st_ino, st.st_mtime_ns))
+        self._parts = {
+            k: p for k, p in self._parts.items()
+            if k in live and p.ident == live[k][1]
+        }
+        for k, (path, ident) in live.items():
+            if k not in self._parts:
+                rows = pads.dataset(path, format="parquet").count_rows()
+                self._parts[k] = _Part(ident, rows)
+        size = sum(p.rows * self._row_bytes(k[0]) for k, p in self._parts.items())
+        if size > DRIVER_INDEX_BYTES:
+            for p in self._parts.values():
+                p.data = None
+            return False
+        for k, p in self._parts.items():
+            if p.data is None:
+                p.data = self._load(k[0], live[k][0], p.rows)
+        return True
+
+    def _load(self, root: str, path: str, rows: int):
+        import numpy as np
+        import pyarrow.compute as pc
+        import pyarrow.dataset as pads
+
+        if not rows:  # an all-dropped epoch holds no data file
+            e = np.empty(0, np.int64)
+            if root == self.bands_path:
+                return self._band_arrays(e, e, e)
+            return self._vector_arrays(e, e.reshape(0, self.dims))
+        if root == self.bands_path:
+            t = pads.dataset(path, format="parquet", partitioning="hive").to_table(
+                columns=["band", "bucket", "vec_id"]
+            )
+            return self._band_arrays(*(
+                t.column(c).to_numpy().astype(np.int64)
+                for c in ("band", "bucket", "vec_id")
+            ))
+        t = pads.dataset(path, format="parquet").to_table(columns=["vec_id", "v"])
+        v = t.column("v").combine_chunks()
+        if pc.any(pc.not_equal(pc.list_value_length(v), self.dims)).as_py():
+            raise ValueError(f"{path}: every vector must have {self.dims} components")
+        M = v.flatten().to_numpy().astype(np.int64).reshape(-1, self.dims)
+        return self._vector_arrays(t.column("vec_id").to_numpy().astype(np.int64), M)
+
+    def _band_arrays(self, band, bucket, vec_id):
+        import numpy as np
+
+        key = (band.astype(np.int64) << self.planes) | bucket
+        o = np.argsort(key, kind="stable")
+        return key[o], vec_id[o]
+
+    @staticmethod
+    def _vector_arrays(vec_id, M):
+        import numpy as np
+
+        o = np.argsort(vec_id, kind="stable")
+        M = M[o]
+        return vec_id[o], M, np.einsum("ij,ij->i", M, M)
+
+    def insert(self, tag: str, band_rows: dict, kept_ids, kept_M) -> None:
+        """Write through an epoch this process just published: its kept
+        band keys and vectors, from the arrays the trigger holds."""
+        for root, data in (
+            (self.bands_path, self._band_arrays(
+                band_rows["band"], band_rows["bucket"], band_rows["vec_id"]
+            )),
+            (self.vectors_path, self._vector_arrays(kept_ids, kept_M)),
+        ):
+            st = os.stat(os.path.join(root, f"ep={tag}"))
+            self._parts[(root, f"ep={tag}")] = _Part(
+                (st.st_ino, st.st_mtime_ns), len(data[0]), data
+            )
+
+    def external_dups(self, B, M, n2, ids, tau: int) -> set[int]:
+        """Batch ids with a verified partner in the resident KEPT corpus:
+        band-key matches (``B`` is the batch's ``(n, bands)`` bucket
+        matrix), deduped across bands, verified by :func:`_any_over_tau`
+        against the partner vectors — the Spark lookup's law."""
+        import numpy as np
+
+        n, bands = B.shape
+        q = ((np.arange(bands, dtype=np.int64) << self.planes)[None, :] | B).ravel()
+        qrow = np.repeat(np.arange(n), bands)
+        rows, sids = [], []
+        vparts = []
+        for (root, _name), p in self._parts.items():
+            if root != self.bands_path:
+                vparts.append(p.data)
+                continue
+            keys, vids = p.data
+            lo = np.searchsorted(keys, q, "left")
+            cnt = np.searchsorted(keys, q, "right") - lo
+            tot = int(cnt.sum())
+            if tot:
+                # expand each query's [lo, lo + cnt) range of matches
+                off = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+                rows.append(np.repeat(qrow, cnt))
+                sids.append(vids[np.arange(tot) + off])
+        if not rows:
+            return set()
+        pairs = np.unique(
+            np.stack([np.concatenate(rows), np.concatenate(sids)], axis=1), axis=0
+        )
+        usid, inv = np.unique(pairs[:, 1], return_inverse=True)
+        S = np.zeros((len(usid), self.dims), dtype=np.int64)
+        ns = np.zeros(len(usid), dtype=np.int64)
+        found = np.zeros(len(usid), dtype=bool)
+        for vids, Mp, n2p in vparts:
+            if not len(vids):
+                continue
+            pos = np.minimum(np.searchsorted(vids, usid), len(vids) - 1)
+            hit = vids[pos] == usid
+            S[hit], ns[hit] = Mp[pos[hit]], n2p[pos[hit]]
+            found |= hit
+        # a band key whose vector is not live joins nothing, as in Spark
+        keep = found[inv]
+        row, inv = pairs[keep, 0], inv[keep]
+        if not len(row):
+            return set()
+        d = np.einsum("ij,ij->i", S[inv], M[row])
+        out: set[int] = set()
+        edges = np.flatnonzero(np.diff(row)) + 1
+        for seg_d, seg_n, r in zip(
+            np.split(d, edges), np.split(ns[inv], edges), row[np.r_[0, edges]]
+        ):
+            if _any_over_tau(seg_d, seg_n, int(n2[r]), tau):
+                out.add(int(ids[r]))
+        return out
+
+
 class StreamingSemDedupLSH:
     """At-ingest semantic dedup over banded sign-LSH buckets — the
     corpus-proportional variant of :class:`StreamingSemDedup`.
@@ -601,11 +788,13 @@ class StreamingSemDedupLSH:
     over per-band tables of kept bucket-mates with exact Python-int
     compares, and pyarrow writes of the epoch's partitions, each
     published by renaming a hidden ``_tmp-<tag>`` directory over
-    ``ep=<tag>``. Only the stored-corpus lookup runs in Spark there:
-    the (band, bpre)-pruned key scan joined to broadcast batch keys
-    and vectors built from Arrow, verified with the JVM dot, so a
-    small trigger runs a handful of jobs and no Python worker. Any
-    larger (or unestimable) batch takes the BULK plan, where nothing
+    ``ep=<tag>``. The stored-corpus lookup runs there too, against the
+    store held resident on the driver (:class:`_ResidentStore`: loaded
+    once per partition with pyarrow, written through on publish,
+    reconciled with the store listing on every trigger), so a small
+    trigger runs one Spark job, its own collect. A store past
+    :data:`DRIVER_INDEX_BYTES` is looked up by the bulk plan's Spark
+    lookup instead, still with no Python worker. Any larger (or unestimable) batch takes the BULK plan, where nothing
     batch-sized reaches the driver: the in-batch pairs come from a
     bucket self-join verified on executors, and the greedy runs over
     that VERIFIED pair list (bounded by the batch's true near-dup
@@ -665,6 +854,15 @@ class StreamingSemDedupLSH:
         self.vbytes = int(vbytes)
         self._epochs = EpochLedger(os.path.join(index_path, STORE_LEDGER))
         self._format_marker = os.path.join(index_path, "_store_format.json")
+        # the small-batch plan's stored-corpus lookup; its int64 band
+        # keys (band << planes | bucket) must fit, else Spark looks up
+        self._resident = (
+            _ResidentStore(
+                self.bands_path, self.vectors_path, dims, planes_per_band
+            )
+            if (bands - 1).bit_length() + planes_per_band <= 62
+            else None
+        )
 
     # bands-store physical layout version. v3 (r13): (band, bpre)
     # directory partitions of IDS-ONLY rows (bucket:int64, vec_id) —
@@ -1018,23 +1216,23 @@ class StreamingSemDedupLSH:
 
     def _apply_small(self, batch: DataFrame, tag: str) -> None:
         """The driver-resident plan for a small micro-batch: ONE Arrow
-        collect; norms and band buckets in numpy through the kernel the
-        Spark path uses (``lsh_band_bucket_matrix``); the in-batch
-        greedy over per-band tables of KEPT bucket-mates; and pyarrow
-        writes of the three epoch partitions. Only the lookup against
-        the stored corpus runs in Spark — the same pruned plan as the
-        bulk path, its batch sides broadcast from Arrow and verified
-        with the JVM dot, so no pandas UDF runs."""
+        collect, the trigger's only Spark job; norms and band buckets in
+        numpy through the kernel the Spark path uses
+        (``lsh_band_bucket_matrix``); the lookup against the stored
+        corpus in the resident index (:class:`_ResidentStore`); the
+        in-batch greedy over per-band tables of KEPT bucket-mates; and
+        pyarrow writes of the three epoch partitions, written through to
+        the index once published. A store past
+        :data:`DRIVER_INDEX_BYTES` is looked up in Spark instead
+        (:meth:`_spark_external_dups`)."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
         import pyarrow.parquet as pq
-        from pyspark.sql import functions as F
 
         from polar_spark.functions.similarity import (
             check_pack_width,
-            dot_expr,
             lsh_band_bucket_matrix,
         )
 
@@ -1064,20 +1262,11 @@ class StreamingSemDedupLSH:
         }
         self._ensure_format()
 
-        ext: set[int] = set()
-        sk = read_live(self.spark, self.bands_path, tag)
-        if sk is not None:
-            bk = self.spark.createDataFrame(
-                pa.table(keys).rename_columns(["band", "bpre", "bucket", "bid"])
-            )
-            bv = self.spark.createDataFrame(
-                pa.table({"bid": ids, "bv": vcol, "nb2": n2})
-            )
-            ext = self._external_dups(
-                sk, tag, set(zip(keys["band"].tolist(), keys["bpre"].tolist())),
-                F.broadcast(bk), F.broadcast(bv),
-                dot_expr(F.col("sva"), F.col("bv")),
-            )
+        res = self._resident
+        if res is not None and res.refresh(tag):
+            ext = res.external_dups(B, M, n2, ids, self.tau_sq_pct)
+        else:
+            ext = self._spark_external_dups(tag, keys, ids, vcol, n2)
 
         # greedy in id order over per-band tables of KEPT bucket-mates:
         # a vector drops iff a kept mate verifies (an external dup
@@ -1107,7 +1296,8 @@ class StreamingSemDedupLSH:
             "vec_id": ids[keep], "v": vcol.filter(pa.array(keep)), "n2": n2[keep],
         })
         krow = np.repeat(keep, self.bands)
-        band_rows = pa.table({c: a[krow] for c, a in keys.items()})
+        kept_keys = {c: a[krow] for c, a in keys.items()}
+        band_rows = pa.table(kept_keys)
         publish_epoch(self.drops_path, tag, lambda d: pq.write_table(
             drops, os.path.join(d, part), **opts
         ))
@@ -1121,6 +1311,31 @@ class StreamingSemDedupLSH:
             existing_data_behavior="overwrite_or_ignore",
             max_partitions=max(1024, self.bands << self.prefix_bits),
         ))
+        if res is not None:
+            res.insert(tag, kept_keys, ids[keep], M[keep])
+
+    def _spark_external_dups(self, tag, keys, ids, vcol, n2) -> set[int]:
+        """The small plan's lookup for a store past
+        :data:`DRIVER_INDEX_BYTES`: the bulk plan's pruned Spark lookup,
+        its batch sides broadcast from Arrow and verified with the JVM
+        dot, so no pandas UDF runs."""
+        import pyarrow as pa
+        from pyspark.sql import functions as F
+
+        from polar_spark.functions.similarity import dot_expr
+
+        sk = read_live(self.spark, self.bands_path, tag)
+        if sk is None:
+            return set()
+        bk = self.spark.createDataFrame(
+            pa.table(keys).rename_columns(["band", "bpre", "bucket", "bid"])
+        )
+        bv = self.spark.createDataFrame(pa.table({"bid": ids, "bv": vcol, "nb2": n2}))
+        return self._external_dups(
+            sk, tag, set(zip(keys["band"].tolist(), keys["bpre"].tolist())),
+            F.broadcast(bk), F.broadcast(bv),
+            dot_expr(F.col("sva"), F.col("bv")),
+        )
 
     def start(
         self,

@@ -30,7 +30,9 @@ waits at <5% host CPU). They now run CONCURRENTLY on a session-scoped
 thread pool; each test function asserts on its own pipeline's captured
 results. The children, their phases, their kill points, and every
 assertion are UNCHANGED — this parallelizes wall-clock waiting, not the
-laws. ``POLAR_CHAOS_WORKERS`` overrides the pool size (default 8)."""
+laws. Only the pipelines the selected tests read run, so ``-k`` on one
+case boots only that case's children. ``POLAR_CHAOS_WORKERS`` overrides
+the pool size (default 8)."""
 
 from __future__ import annotations
 
@@ -216,12 +218,37 @@ for _when in ("before_drop", "after_drop"):
 _PIPELINES["semlsh_append"] = (_pipe_semlsh_append, ())
 _PIPELINES["produce"] = (_pipe_produce, ())
 
+# the _PIPELINES key each test reads, from its parameters
+_PIPELINE_OF = {
+    "test_sigkill_mid_epoch_restart_no_loss_no_double":
+        lambda p: f"sink:{p['sink']}:{p['when']}",
+    "test_sigkill_mid_compaction_recovers": lambda p: f"compact:{p['when']}",
+    "test_sigkill_consumer_between_serve_and_commit":
+        lambda p: f"consume:{p['when']}",
+    "test_sigkill_mid_semlsh_compact_swap_recovers":
+        lambda p: f"semlsh_swap:{p['when']}",
+    "test_sigkill_mid_semlsh_append_store_stays_consistent":
+        lambda p: "semlsh_append",
+    "test_sigkill_mid_produce_no_dup_no_wedge": lambda p: "produce",
+}
+
+
+def _selected_pipelines(items) -> list[str]:
+    """The pipelines the session's selected tests of this module read."""
+    keys = set()
+    for it in items:
+        key_of = _PIPELINE_OF.get(getattr(it, "originalname", None))
+        if key_of is not None and it.module.__name__ == __name__:
+            callspec = getattr(it, "callspec", None)
+            keys.add(key_of(callspec.params if callspec else {}))
+    return [k for k in _PIPELINES if k in keys]
+
 
 @pytest.fixture(scope="session")
-def chaos_results(tmp_path_factory):
-    """Run every chaos pipeline once, concurrently; tests assert on the
-    captured results. A pipeline that raises surfaces its exception in
-    exactly the tests that consume it."""
+def chaos_results(request, tmp_path_factory):
+    """Run the chaos pipelines the selected tests read, each once and
+    concurrently; tests assert on the captured results. A pipeline that
+    raises surfaces its exception in exactly the tests that consume it."""
     base = tmp_path_factory.mktemp("chaos")
     # default scales with the host: 8 pipelines in flight on a 32-core
     # box (measured sweet spot — 16 workers was no faster, the longest
@@ -232,7 +259,8 @@ def chaos_results(tmp_path_factory):
     futures = {}
     roots = {}
     with ThreadPoolExecutor(max_workers=workers) as ex:
-        for key, (fn, args) in _PIPELINES.items():
+        for key in _selected_pipelines(request.session.items):
+            fn, args = _PIPELINES[key]
             root = str(base / key.replace(":", "_"))
             os.makedirs(root, exist_ok=True)
             roots[key] = root

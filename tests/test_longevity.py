@@ -528,3 +528,81 @@ def test_offsets_gc_keeps_aged_orphan_lock_while_held(spark, tmp_path):
     assert os.path.getmtime(held) < time.time() - 7 * 24 * 3600  # no payload
     sched.sweep_once()
     assert not os.path.exists(held)
+
+
+def test_retention_reaps_orphaned_write_json_tmp_files(spark, tmp_path):
+    """A writer killed between ``write_json``'s tmp write and its rename
+    leaves ``<file>.<pid>.<thread>.tmp`` beside the JSON it was
+    replacing. The orphan sweep removes such a file once its pid is dead
+    and it is past the orphan age, and counts it; a live writer's tmp
+    and a fresh one stay, and the JSON they sit beside is untouched."""
+    import subprocess
+    import sys
+    import time
+
+    from polar_spark.metrics import Metrics
+
+    cat = TopicCatalog(spark, str(tmp_path))
+    cat.ensure_topic("t", num_partitions=1)
+    Producer(cat).produce_rows("t", ['"x"'] * 3, key="k")
+    dead = subprocess.Popen([sys.executable, "-c", "pass"])
+    dead.wait()
+    old = time.time() - 8 * 24 * 3600
+    tdir = cat.topic_dir("t")
+    gdir = os.path.join(str(tmp_path), "groups")
+
+    def plant(d: str, name: str, aged: bool = True) -> str:
+        p = os.path.join(d, name)
+        with open(p, "w") as f:
+            f.write('{"0": ')  # torn mid-write
+        if aged:
+            os.utime(p, (old, old))
+        return p
+
+    orphans = [
+        plant(tdir, f"tails.json.{dead.pid}.140.tmp"),
+        plant(tdir, f"epochs.json.{dead.pid}.141.tmp"),
+        plant(gdir, f"g__t.json.{dead.pid}.142.tmp"),
+    ]
+    live = plant(tdir, f"tails.json.{os.getpid()}.143.tmp")
+    fresh = plant(tdir, f"reservations.json.{dead.pid}.144.tmp", aged=False)
+    tails = cat.tails("t")
+
+    m = Metrics()
+    sched = RetentionScheduler(
+        cat, period_seconds=3600.0, offsets_retention_hours=7 * 24.0, metrics=m
+    )
+    assert sched.sweep_once() == len(orphans)
+    assert not any(os.path.exists(p) for p in orphans)
+    assert os.path.exists(live) and os.path.exists(fresh)
+    assert m.get("polar_offsets_lock_orphans_reaped_total") == len(orphans)
+    assert cat.tails("t") == tails and tails
+
+
+def test_session_package_zip_removed_at_exit(tmp_path):
+    """The package zip a process ships to its executors
+    (``polar_spark_pkg_<pid>.zip`` in the temp dir) exists while the
+    session runs and is gone once that process exits."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = (
+        "import os, tempfile\n"
+        "from polar_spark.session import ensure_driver_session, get_spark\n"
+        "spark = ensure_driver_session(get_spark(shuffle_partitions=1))\n"
+        "zpath = os.path.join(tempfile.gettempdir(),"
+        " f'polar_spark_pkg_{os.getpid()}.zip')\n"
+        "print(zpath, os.path.exists(zpath))\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), POLAR_SPARK_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", child], capture_output=True, text=True,
+        cwd=repo, env=env, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    zpath, existed = out.stdout.split()[-2:]
+    assert os.path.dirname(zpath) == str(tmp_path)
+    assert existed == "True"
+    assert not os.path.exists(zpath)
+    assert not [f for f in os.listdir(tmp_path) if f.startswith("polar_spark_pkg_")]

@@ -705,6 +705,22 @@ def _pin_lsh_plan(monkeypatch, plan: str) -> None:
     monkeypatch.setattr(D, "DRIVER_BATCH_BYTES", _LSH_PLANS[plan])
 
 
+# the driver plan's stored-corpus lookups: the resident index, or the
+# Spark lookup (any non-empty store is past a 0-byte index cap)
+_LSH_LOOKUPS = ["resident", "spark"]
+
+
+def _pin_lsh_lookup(monkeypatch, lookup: str) -> list[str]:
+    """Pin the driver plan's lookup; the plans whose result depends on
+    it (the bulk plan always looks up in Spark)."""
+    import polar_spark.streaming.dedup as D
+
+    if lookup == "spark":
+        monkeypatch.setattr(D, "DRIVER_INDEX_BYTES", 0)
+        return ["driver"]
+    return list(_LSH_PLANS)
+
+
 def _banded_greedy_drops(rows, bands: int, r: int, tau: int) -> list[int]:
     """Python reference of the LSH sink's law: greedy in id order, a
     vector drops iff it verifies against an earlier KEPT vector that
@@ -734,8 +750,9 @@ def _banded_greedy_drops(rows, bands: int, r: int, tau: int) -> list[int]:
     return drops
 
 
+@pytest.mark.parametrize("lookup", _LSH_LOOKUPS)
 def test_streaming_semdedup_lsh_matches_banded_greedy_reference(
-    spark, sf_dir, tmp_path, monkeypatch
+    spark, sf_dir, tmp_path, monkeypatch, lookup
 ):
     """Embeddings streamed in two micro-batches through
     StreamingSemDedupLSH must reproduce the banded greedy-prefix law
@@ -743,7 +760,8 @@ def test_streaming_semdedup_lsh_matches_banded_greedy_reference(
     sharing at least one band bucket, same integer threshold test), a
     same-epoch replay must not change the store, and the store must
     hold exactly the kept corpus — on both sides of the sink's
-    driver/bulk size selection."""
+    driver/bulk size selection, and with the driver plan's stored-corpus
+    lookup in the resident index or in Spark."""
     from pyspark.sql import functions as F
 
     from polar_spark.functions.similarity import quantize
@@ -766,7 +784,7 @@ def test_streaming_semdedup_lsh_matches_banded_greedy_reference(
     ref_kept = sorted(set(i for i, _v in rows) - set(ref_drops))
     assert ref_drops
 
-    for plan in _LSH_PLANS:
+    for plan in _pin_lsh_lookup(monkeypatch, lookup):
         _pin_lsh_plan(monkeypatch, plan)
         sd = StreamingSemDedupLSH(
             spark, str(tmp_path / f"{plan}_idx"),
@@ -807,12 +825,16 @@ def test_streaming_semdedup_lsh_matches_banded_greedy_reference(
     qv.unpersist()
 
 
-def test_streaming_semdedup_lsh_greedy_chain_law(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("lookup", _LSH_LOOKUPS)
+def test_streaming_semdedup_lsh_greedy_chain_law(
+    spark, tmp_path, monkeypatch, lookup
+):
     """The greedy-prefix chain case: a~b and b~c over τ but a~c under τ
     ⇒ only b drops (a pair-based rule would also drop c); and a later
     epoch's copy of a KEPT vector drops against the store while a copy
     similar only to the DROPPED one still drops via its kept partner.
-    Both sides of the driver/bulk size selection."""
+    Both sides of the driver/bulk size selection, and both lookups of
+    the driver plan."""
     import math
 
     from polar_spark.streaming.dedup import StreamingSemDedupLSH
@@ -823,7 +845,7 @@ def test_streaming_semdedup_lsh_greedy_chain_law(spark, tmp_path, monkeypatch):
         return [int(math.floor(x * 10000)) for x in v]
 
     rows1 = [(0, vec(0.0)), (1, vec(15.0)), (2, vec(30.0))]
-    for plan in _LSH_PLANS:
+    for plan in _pin_lsh_lookup(monkeypatch, lookup):
         _pin_lsh_plan(monkeypatch, plan)
         sd = StreamingSemDedupLSH(
             spark, str(tmp_path / f"{plan}_idx"), str(tmp_path / f"{plan}_drops"),
@@ -1543,8 +1565,9 @@ def test_streaming_zordered_layout_equals_batch(spark, sf_dir, tmp_path):
     assert got == want and len(z_box_buckets(*box)) > 0
 
 
+@pytest.mark.parametrize("lookup", _LSH_LOOKUPS)
 def test_streaming_semdedup_lsh_dup_storm_bounded_greedy(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, lookup
 ):
     """Adversarial dup storm: EVERY row of the micro-batch is one
     near-dup cluster, so the verified-pair list is quadratic in the
@@ -1552,7 +1575,9 @@ def test_streaming_semdedup_lsh_dup_storm_bounded_greedy(
     bulk plan must (a) never materialize more than ~cap pairs
     driver-side (the chunked path) and (b) produce drops identical to
     the unbounded greedy — all ids but the cluster minimum; the driver
-    plan (kept bucket-mate tables, no pair list) must agree."""
+    plan (kept bucket-mate tables, no pair list) must agree, and a
+    second storm against the stored cluster must drop whole through
+    either of its lookups."""
     from polar_spark.streaming.dedup import StreamingSemDedupLSH
 
     n = 120  # 7140 mutual pairs
@@ -1561,6 +1586,7 @@ def test_streaming_semdedup_lsh_dup_storm_bounded_greedy(
         (i, [x + (1 if i % 2 else 0) for x in base]) for i in range(n)
     ]
     batch = spark.createDataFrame(rows, "vec_id long, v array<bigint>")
+    plans = _pin_lsh_lookup(monkeypatch, lookup)
 
     def run(prefix: str, cap: int, plan: str = "bulk") -> list[int]:
         _pin_lsh_plan(monkeypatch, plan)
@@ -1571,12 +1597,19 @@ def test_streaming_semdedup_lsh_dup_storm_bounded_greedy(
             greedy_pair_cap=cap,
         )
         assert sd.apply_batch(batch, 0, f"storm_{prefix}") is True
+        if plan == "driver":
+            again = spark.createDataFrame(
+                [(i + n, v) for i, v in rows], "vec_id long, v array<bigint>"
+            )
+            assert sd.apply_batch(again, 1, f"storm_{prefix}") is True
         return sorted(r["vec_id"] for r in sd.dropped().collect())
 
-    bounded = run("capped", cap=500)  # ~15 id-ordered ranges
-    unbounded = run("uncapped", cap=2_000_000)
+    if "bulk" in plans:
+        bounded = run("capped", cap=500)  # ~15 id-ordered ranges
+        unbounded = run("uncapped", cap=2_000_000)
+        assert bounded == unbounded == list(range(1, n))
     driver = run("driver", cap=500, plan="driver")
-    assert bounded == unbounded == driver == list(range(1, n))
+    assert driver == list(range(1, 2 * n))
 
 
 def test_streaming_semdedup_lsh_chain_law_survives_cap(
@@ -2143,11 +2176,111 @@ def test_streaming_semdedup_lsh_compact_refuses_pending_replay(
     assert dropped and kept | set(dropped) == set(range(80))
 
 
+def _count_index_loads(monkeypatch) -> list[str]:
+    """Record every partition the resident index loads from disk."""
+    import polar_spark.streaming.dedup as D
+
+    loads: list[str] = []
+    load = D._ResidentStore._load
+
+    def counting(self, root, path, rows):
+        loads.append(path)
+        return load(self, root, path, rows)
+
+    monkeypatch.setattr(D._ResidentStore, "_load", counting)
+    return loads
+
+
+def test_streaming_semdedup_lsh_resident_index_warm_equals_cold(
+    spark, tmp_path, monkeypatch
+):
+    """After several driver-plan triggers the sink's index is warm: its
+    own partitions were written through, so the next trigger loads
+    nothing from disk. A fresh sink over a copy of the same store
+    (a cold index, every partition loaded with pyarrow) decides that
+    trigger identically, and both equal the banded-greedy law."""
+    import shutil
+
+    warm = _mk_lsh_sink(spark, tmp_path, "warm")
+    applied = _twin_rows(0, 60) + [
+        r for i in range(3) for r in _twin_rows(60 + 20 * i, 80 + 20 * i)
+    ] + _twin_rows(120, 160)
+    _lsh_epochs(spark, warm, ["driver"] * 4, "wc", monkeypatch)
+    for d in ("idx", "drops"):
+        shutil.copytree(str(tmp_path / f"warm_{d}"), str(tmp_path / f"cold_{d}"))
+    cold = _mk_lsh_sink(spark, tmp_path, "cold")
+    loads = _count_index_loads(monkeypatch)
+    b = spark.createDataFrame(_twin_rows(120, 160), "vec_id long, v array<bigint>")
+    assert warm.apply_batch(b, 4, "wc") is True
+    assert loads == []
+    assert cold.apply_batch(b, 4, "wc") is True
+    assert len(loads) == 8  # 4 epochs × (bands, vectors)
+
+    ref = _banded_greedy_drops(applied, 8, 8, 9025)
+    assert [i for i in ref if i >= 120], "the next batch must drop something"
+    assert _lsh_store_state(spark, warm) == _lsh_store_state(spark, cold)
+    assert _lsh_store_state(spark, warm)[1] == ref
+
+
+def test_streaming_semdedup_lsh_resident_index_reloads_after_compact(
+    spark, tmp_path, monkeypatch
+):
+    """compact() between two driver-plan triggers replaces every
+    partition with ``ep=compacted``: the next trigger drops the vanished
+    partitions from the index, loads the compacted ones, and still
+    drops the cross-epoch twins by the banded-greedy law."""
+    import os
+
+    from polar_spark.store import epoch_tag
+
+    sd = _mk_lsh_sink(spark, tmp_path, "cmp")
+    _lsh_epochs(spark, sd, ["driver", "driver"], "cmp", monkeypatch)
+    sd.compact()
+    loads = _count_index_loads(monkeypatch)
+    b = spark.createDataFrame(_twin_rows(80, 100), "vec_id long, v array<bigint>")
+    assert sd.apply_batch(b, 2, "cmp") is True
+
+    assert sorted(os.path.basename(p) for p in loads) == ["ep=compacted"] * 2
+    names = {name for _root, name in sd._resident._parts}
+    assert names == {"ep=compacted", f"ep={epoch_tag('cmp', 2)}"}
+    applied = _twin_rows(0, 60) + _twin_rows(60, 80) + _twin_rows(80, 100)
+    dropped = _lsh_store_state(spark, sd)[1]
+    assert dropped == _banded_greedy_drops(applied, 8, 8, 9025)
+    assert [i for i in dropped if i >= 80 and i // 2 < 80]
+
+
+def test_streaming_semdedup_lsh_resident_index_loads_bulk_partition(
+    spark, tmp_path, monkeypatch
+):
+    """A partition the bulk plan wrote through Spark (hive band=/bpre=
+    directories, Spark file names) is loaded into the index with
+    pyarrow, and a driver-plan trigger drops an exact copy of one of
+    its kept vectors as an external dup against it."""
+    import os
+
+    from polar_spark.store import epoch_tag
+
+    sd = _mk_lsh_sink(spark, tmp_path, "blk")
+    _lsh_epochs(spark, sd, ["bulk"], "blk", monkeypatch)
+    kept = sd.kept().orderBy("vec_id").collect()
+    _pin_lsh_plan(monkeypatch, "driver")
+    loads = _count_index_loads(monkeypatch)
+    rows = [(10_000 + r["vec_id"], list(r["v"])) for r in kept[:5]]
+    b = spark.createDataFrame(rows, "vec_id long, v array<bigint>")
+    assert sd.apply_batch(b, 1, "blk") is True
+
+    bulk = f"ep={epoch_tag('blk', 0)}"
+    assert sorted(os.path.basename(p) for p in loads) == [bulk, bulk]
+    dropped = set(_lsh_store_state(spark, sd)[1])
+    assert {i for i, _v in rows} <= dropped
+
+
 def test_streaming_semdedup_lsh_driver_plan_job_budget(
     spark, tmp_path, monkeypatch
 ):
-    """A small trigger decided on the driver runs at most 10 Spark jobs
-    (the bulk plan ran ~29) and no pandas UDF: no SQL execution of the
+    """A small trigger decided on the driver runs one Spark job, the
+    batch's own collect (the bulk plan ran ~29; the Spark lookup of
+    the stored corpus, ~8), and no pandas UDF: no SQL execution of the
     trigger's job group has a Python UDF node in its plan."""
     import re
 
@@ -2162,7 +2295,7 @@ def test_streaming_semdedup_lsh_driver_plan_job_budget(
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = set(sc.statusTracker().getJobIdsForGroup("lsh_driver_budget"))
-    assert 0 < len(jobs) <= 10, sorted(jobs)
+    assert 0 < len(jobs) <= 1, sorted(jobs)
     assert len(_lsh_store_state(spark, sd)[1]) > 0
 
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
