@@ -39,7 +39,15 @@ MINHASH_PRIME = 2147483647  # 2³¹−1; Kirsch-Mitzenmacher modulus
 # its historical local name; same no-op-at-scale contract
 from polar_spark.plans.audit_trace import note_materialization  # noqa: E402
 from polar_spark.sources.tables import parallelize_small_scan as _spread  # noqa: E402
-from polar_spark.store import STORE_LEDGER, EpochLedger, read_live  # noqa: E402
+from polar_spark.store import (  # noqa: E402
+    STORE_LEDGER,
+    EpochLedger,
+    compact_epochs,
+    gc_folded,
+    is_base_dir,
+    live_dirs,
+    read_live,
+)
 
 
 def shingles_expr(text_col: str, strict: bool = False) -> F.Column:
@@ -785,18 +793,10 @@ class NearDupIndex:
     # the caller's epoch record is IDEMPOTENT — without this, a retry
     # would double-append the batch's shingles and every later Jaccard
     # against those ids would sum doubled counts (judge review r4).
-
-    def _store_df(self, p: str, exclude_tag: str) -> DataFrame | None:
-        """One store side, minus ``exclude_tag``'s partition; None when
-        the side is cold. Missing/partial sides are EXPECTED after a
-        crash (e.g. the bands write landed but the shingles write did
-        not on a cold store) — the retry must read what exists and
-        rewrite its own partition, never crash-loop on PATH_NOT_FOUND.
-        A side with a committed partition that fails to read raises
-        (store.read_live): reading it as cold would silently miss every
-        cross-batch near-dup."""
-        df = read_live(self.spark, p, exclude_tag)
-        return None if df is None else df.drop("ep")
+    # A side missing after a crash reads as cold (store.read_live: the
+    # retry rewrites its own partition instead of crash-looping); a side
+    # with a committed partition that fails to read raises, since a cold
+    # read would silently miss every cross-batch near-dup.
 
     _RESERVED_TAGS = ("base", "compacted")
 
@@ -807,13 +807,14 @@ class NearDupIndex:
                 f"invalid batch tag {tag!r}: must be non-empty, start with a "
                 "letter, and contain no '/' or '='"
             )
-        if tag in NearDupIndex._RESERVED_TAGS:
+        if tag in NearDupIndex._RESERVED_TAGS or is_base_dir(f"ep={tag}"):
             # tag='base' would EXCLUDE the whole built corpus from the
-            # read and then overwrite it; 'compacted' likewise after a
-            # compact() — both silently destroy the index
+            # read and then overwrite it, 'compacted' a store compacted
+            # before the manifest swap; a base name would read as an
+            # orphan compaction base, hidden and then deleted by GC
             raise ValueError(
                 f"batch tag {tag!r} is reserved for internal store "
-                f"partitions {NearDupIndex._RESERVED_TAGS}"
+                f"partitions {NearDupIndex._RESERVED_TAGS} and compaction bases"
             )
         return tag
 
@@ -840,30 +841,27 @@ class NearDupIndex:
             shw.unpersist()
 
     def compact(self) -> dict[str, tuple[int, int]]:
-        """Re-roll the band/shingle stores' per-batch small files —
-        streaming ingest appends one file set per micro-batch, and the
-        candidate join's scan efficiency needs them consolidated (the
-        same operational law as topics.compact / the reference's segment
-        rolling). Bands cluster by band (the join key side benefits from
+        """Fold the band/shingle stores' per-batch partitions into one
+        base each — streaming ingest appends one file set per
+        micro-batch, and the candidate join's scan efficiency needs
+        them consolidated (the reference rolls its segments the same
+        way). Bands cluster by band (the join key side benefits from
         locality); shingles by id. Caller must serialize against
         query_and_update (single-writer contract, see class docstring).
         Raises while a failed streaming micro-batch awaits replay (an
         epoch partition above the store ledger's high-water mark, see
         store.EpochLedger.check_settled). Returns {store: (files_before,
-        files_after)}."""
+        live_files_after)}."""
         import os as _os
 
-        EpochLedger(_os.path.join(self.path, STORE_LEDGER)).check_settled(
-            self.bands_path, self.shingles_path
-        )
+        ledger = EpochLedger(_os.path.join(self.path, STORE_LEDGER))
+        ledger.check_settled(self.bands_path, self.shingles_path)
         return {
-            "bands": _compact_parquet_dir(
-                self.spark, self.bands_path, "band", "band_key",
-                out_subdir="ep=compacted",
+            "bands": compact_store(
+                self.spark, self.bands_path, ledger, "band", "band_key"
             ),
-            "shingles": _compact_parquet_dir(
-                self.spark, self.shingles_path, "id", "shingle",
-                out_subdir="ep=compacted",
+            "shingles": compact_store(
+                self.spark, self.shingles_path, ledger, "id", "shingle"
             ),
         }
 
@@ -891,8 +889,8 @@ class NearDupIndex:
         )
         new_keys = lsh_band_keys(new_sigs, "id").persist()
         try:
-            stored_keys = self._store_df(self.bands_path, exclude_tag=tag)
-            stored_sh = self._store_df(self.shingles_path, exclude_tag=tag)
+            stored_keys = read_live(self.spark, self.bands_path, tag)
+            stored_sh = read_live(self.spark, self.shingles_path, tag)
             all_keys = (
                 stored_keys.unionByName(new_keys)
                 if stored_keys is not None
@@ -1077,49 +1075,38 @@ def _free_local_checkpoint(df: DataFrame) -> None:
 _FREE_CKPT_WARNED = False
 
 
-def _compact_parquet_dir(
-    spark: SparkSession, d: str, partition_col: str, sort_col: str,
-    out_subdir: str | None = None, partition_by: list[str] | None = None,
+def compact_store(
+    spark: SparkSession, root: str, ledger: EpochLedger, partition_col: str,
+    sort_col: str, partition_by: tuple[str, ...] = (),
 ) -> tuple[int, int]:
-    """Rewrite a parquet dir's accumulated small files into few
-    partition-bucketed, sorted ones (same swap discipline as
-    topics.compact: write aside, two renames, drop old).
-
-    ``partition_by`` preserves a directory-partitioned layout through
-    the fold (the LSH sink's bands store prunes on band/bpre dirs — a
-    flat rewrite would both lose the pruning and leave the store with
-    two incompatible directory schemas)."""
+    """Compact a dedup store (store.compact_epochs) into few
+    ``partition_col``-bucketed files sorted by ``sort_col``; returns its
+    live parquet files (before, after). ``partition_by`` keeps a
+    directory-partitioned layout (the LSH bands store prunes on
+    band/bpre dirs). The store's one writer is serialized against the
+    compaction, so no reader holds a listing from before the commit:
+    the folded partitions are deleted at once."""
     import os as _os
-    import shutil as _shutil
 
-    def _count(p: str) -> int:
-        return sum(
-            1
-            for dp, _dn, fns in _os.walk(p)
-            for fn in fns
-            if fn.endswith(".parquet")
+    def rewrite(df: DataFrame, out: str) -> None:
+        (
+            df.repartition(F.col(partition_col))
+            .sortWithinPartitions(sort_col)
+            .write.mode("overwrite")
+            .partitionBy(*partition_by)
+            .parquet(out)
         )
 
-    if not _os.path.isdir(d):
-        return (0, 0)
-    before = _count(d)
-    tmp, old = d + ".compact_tmp", d + ".compact_old"
-    df = spark.read.parquet(d)
-    if out_subdir is not None and "ep" in df.columns:
-        df = df.drop("ep")
-    out_path = tmp if out_subdir is None else f"{tmp}/{out_subdir}"
-    w = (
-        df.repartition(F.col(partition_col))
-        .sortWithinPartitions(sort_col)
-        .write.mode("overwrite")
-    )
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    (
-        w
-        .parquet(out_path)
-    )
-    _os.rename(d, old)
-    _os.rename(tmp, d)
-    _shutil.rmtree(old, ignore_errors=True)
-    return before, _count(d)
+    def files(paths) -> int:
+        return sum(
+            fn.endswith(".parquet")
+            for p in paths
+            for _dp, _dn, fns in _os.walk(p)
+            for fn in fns
+        )
+
+    before = files(e.path for e in live_dirs(root))
+    folded, after = compact_epochs(spark, root, ledger, rewrite)
+    if folded:
+        gc_folded(root)
+    return before, files(after)

@@ -13,7 +13,11 @@ the same protocol, and this module is the only code that knows it:
   (:meth:`EpochLedger.claim`);
 - :func:`epoch_tag` — the stable per-(sink, epoch) partition tag, and
   the ``ep=<tag>`` layout: :func:`publish_epoch` writes a partition
-  aside and renames it in, :func:`read_live` reads the live partitions.
+  aside and renames it in, :func:`read_live` reads the live partitions;
+- :func:`compact_epochs` — the one compaction of an ``ep=`` store: fold
+  the committed partitions into ``ep=base<gen>`` and commit it by a
+  manifest swap; :func:`live_dirs` is the listing every read goes
+  through, :func:`gc_folded` deletes what a commit superseded.
 """
 
 from __future__ import annotations
@@ -139,7 +143,8 @@ def epoch_tag(key: str, epoch: int) -> str:
 
 def _parse_epoch_dir(name: str) -> tuple[str, int] | None:
     """(sink-key hash, epoch) of an ``ep=<epoch_tag>`` directory name;
-    None for any other name (``ep=base``, ``ep=compacted``, ...)."""
+    None for any other name (a compaction base, a bulk-built partition,
+    a user's batch tag)."""
     m = _EPOCH_DIR_RE.match(name)
     return (m.group(1), int(m.group(2))) if m else None
 
@@ -301,14 +306,21 @@ def publish_epoch(root: str, tag: str, write) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
-def read_live(spark, root: str, exclude_tag: str | None = None, live=None):
+def _read_paths(spark, root: str, paths: list[str]):
+    """Partitions of ``root`` as one DataFrame. Partition discovery runs
+    from ``root``: Spark refuses ``band=``/``bpre=`` directories under
+    more than one base path. No reader keys on the ``ep`` column."""
+    return spark.read.option("basePath", root).parquet(*paths).drop("ep")
+
+
+def read_live(spark, root: str, exclude_tag: str | None = None):
     """The live partitions of a store as one DataFrame; None = cold.
 
-    By default every ``ep=`` directory under ``root`` is live and the
-    read goes through ``root``, so ``ep`` is a column and
-    ``exclude_tag``'s partition (a replay's own first attempt) is pruned
-    from it. ``live()``, when given, returns the partition paths to read
-    by explicit path instead (a manifest-filtered listing).
+    Reads the :func:`live_dirs` listing by explicit paths, never the
+    root: between a compaction's manifest commit and its GC the folded
+    partitions coexist with the new base, and a root read would read
+    their rows twice. ``exclude_tag``'s partition (a replay's own first
+    attempt) is left out of the listing.
 
     A cold or partial store — nothing listed, or a read failure while no
     listed partition holds ``_SUCCESS`` — reads as None. A read failure
@@ -317,22 +329,131 @@ def read_live(spark, root: str, exclude_tag: str | None = None, live=None):
     estimate (sketches). A failure while the listing changed under the
     read (a concurrent compaction swapped partitions) re-lists and
     retries."""
-    listing = live or (lambda: [e.path for e in epoch_dirs(root)])
+    skip = None if exclude_tag is None else f"ep={exclude_tag}"
+
+    def listing() -> list[str]:
+        return [e.path for e in live_dirs(root) if e.name != skip]
+
     for _ in range(4):
         paths = listing()
         if not paths:
             return None
         try:
-            df = spark.read.parquet(*paths) if live else spark.read.parquet(root)
+            return _read_paths(spark, root, paths)
         except Exception:
             if listing() != paths:
                 continue  # retry over the post-swap listing
             if any(os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths):
                 raise
             return None
-        if exclude_tag is None:
-            return df
-        from pyspark.sql import functions as F
-
-        return df.filter(F.col("ep") != exclude_tag)
     raise RuntimeError(f"store {root!r} kept changing under read")
+
+
+# -- compaction ----------------------------------------------------------------
+# the manifest of a store's compactions, beside its partitions
+COMPACT_MANIFEST = "_compact.json"
+# a compaction's output partition, ``ep=base<gen>``
+_BASE_DIR_RE = re.compile(r"^ep=base\d{8}$")
+
+
+def is_base_dir(name: str) -> bool:
+    return _BASE_DIR_RE.match(name) is not None
+
+
+def _read_manifest(root: str) -> dict:
+    return read_json(
+        os.path.join(root, COMPACT_MANIFEST), {"gen": 0, "base": None, "folded": []}
+    )
+
+
+def _write_manifest(root: str, man: dict) -> None:
+    write_json(os.path.join(root, COMPACT_MANIFEST), man)
+
+
+def _compact_lock(root: str):
+    return file_lock(
+        os.path.join(root, "_compact.lock"), f"compact({root})", timeout=None
+    )
+
+
+def _superseded(man: dict, name: str) -> bool:
+    """A partition the manifest lists as folded into the current base
+    (awaiting GC after the commit), or a base it does not name (written
+    by a compaction that died before its commit): reading either would
+    read the folded rows twice."""
+    return name in man["folded"] or (is_base_dir(name) and name != man["base"])
+
+
+def live_dirs(root: str) -> list[os.DirEntry]:
+    """The partitions a read may see: :func:`epoch_dirs` minus the
+    superseded ones."""
+    man = _read_manifest(root)
+    return [e for e in epoch_dirs(root) if not _superseded(man, e.name)]
+
+
+def _gc(root: str) -> None:
+    man = _read_manifest(root)
+    for e in epoch_dirs(root):
+        if _superseded(man, e.name):
+            shutil.rmtree(e.path, ignore_errors=True)
+    # names stay in the manifest until their directory is verifiably
+    # gone: clearing first and failing the rmtree would bring them back
+    # into reads
+    remaining = [n for n in man["folded"] if os.path.isdir(os.path.join(root, n))]
+    if remaining != man["folded"]:
+        _write_manifest(root, {**man, "folded": remaining})
+
+
+def gc_folded(root: str) -> None:
+    """Delete the superseded partitions of a store."""
+    with _compact_lock(root):
+        _gc(root)
+
+
+def purge_epochs(root: str) -> None:
+    """Delete every partition of a store and its manifest, serialized
+    against compaction: a purge landing mid-fold would let the fold
+    commit a base holding the purged state."""
+    with _compact_lock(root):
+        for e in epoch_dirs(root):
+            shutil.rmtree(e.path, ignore_errors=True)
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(root, COMPACT_MANIFEST))
+
+
+def compact_epochs(
+    spark, root: str, ledger: EpochLedger, rewrite
+) -> tuple[list[str], list[str]]:
+    """Fold a store's committed partitions into one ``ep=base<gen>``;
+    returns (the names folded, the live partition paths after).
+
+    Under the store's compaction lock: GC what the previous generation
+    superseded, read every live partition that holds ``_SUCCESS`` and
+    that ``ledger`` does not mark pending (its epoch record never
+    landed, so its replay still owns it), the current base included,
+    and let ``rewrite(df, out)`` write their rows to the next base. The
+    base goes live with the one atomic write of the manifest that names
+    it and its folded sources, so a crash at any step leaves reads
+    correct and the next compaction GCs what it left. The folded
+    sources stay on disk until the next GC, so a reader holding a
+    listing from before the commit keeps resolving its paths."""
+    if not os.path.isdir(root):
+        return [], []
+    with _compact_lock(root):
+        _gc(root)
+        man = _read_manifest(root)
+        live = live_dirs(root)
+        committed = ledger.recorded(e.name for e in live)
+        srcs = [
+            e.path for e in live
+            if committed.get(e.name, True)
+            and os.path.exists(os.path.join(e.path, "_SUCCESS"))
+        ]
+        if len(srcs) <= 1:
+            return [], [e.path for e in live]
+        gen = int(man["gen"]) + 1
+        base = f"ep=base{gen:08d}"
+        rewrite(_read_paths(spark, root, srcs), os.path.join(root, base))
+        folded = sorted(os.path.basename(p) for p in srcs)
+        _write_manifest(root, {"gen": gen, "base": base, "folded": folded})
+        return folded, [e.path for e in live_dirs(root)]

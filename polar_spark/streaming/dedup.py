@@ -28,11 +28,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from polar_spark.functions.dedup import NearDupIndex
+from polar_spark.functions.dedup import NearDupIndex, compact_store
 from polar_spark.store import (
     STORE_LEDGER,
     EpochLedger,
     epoch_dirs,
+    live_dirs,
     publish_epoch,
     read_json,
     read_live,
@@ -63,6 +64,14 @@ DRIVER_BATCH_BYTES = 4 * 1024 * 1024
 # Spark lookup the bulk plan uses, and nothing but per-partition row
 # counts stays resident.
 DRIVER_INDEX_BYTES = 256 * 1024 * 1024
+
+
+def _read_store(spark: SparkSession, root: str) -> DataFrame:
+    """Every live row of a store; raises while it has none."""
+    df = read_live(spark, root)
+    if df is None:
+        raise FileNotFoundError(f"store {root!r} holds no partition")
+    return df
 
 
 def _any_over_tau(d, nu, n2: int, tau: int) -> bool:
@@ -305,7 +314,7 @@ class StreamingNearDup:
     def pairs(self) -> DataFrame:
         """All pairs emitted so far (exactly-once under replay: each
         epoch owns one ep= partition)."""
-        return self.spark.read.parquet(self.pairs_path).drop("ep")
+        return _read_store(self.spark, self.pairs_path)
 
 
 class StreamingSemDedup:
@@ -386,9 +395,7 @@ class StreamingSemDedup:
         ).withColumn("cell", ivf_cell("v", self.centroids)).persist()
         stored = self._stored(exclude_tag=tag)
         if stored is None:
-            stored = batch.limit(0).withColumn("ep", F.lit("none")).select(
-                "vec_id", "v", "ep", "cell"
-            )
+            stored = batch.limit(0).select("vec_id", "v", "cell")
         else:
             # prune the stored side to the batch's own cells BEFORE the
             # cogroup: O(nlist) driver rows, and the inverted-list scan
@@ -492,10 +499,10 @@ class StreamingSemDedup:
 
     def kept(self) -> DataFrame:
         """The deduplicated corpus (all kept vectors)."""
-        return self.spark.read.parquet(self.vectors_path).drop("ep")
+        return _read_store(self.spark, self.vectors_path)
 
     def dropped(self) -> DataFrame:
-        return self.spark.read.parquet(self.drops_path).drop("ep")
+        return _read_store(self.spark, self.drops_path)
 
 
 # Measured cell-vs-LSH per-trigger crossover, re-derived on the r13
@@ -578,16 +585,17 @@ class _ResidentStore:
     with their squared norms, sorted by id.
 
     The store listing is the source of truth, as for the segment cache.
-    Each :meth:`refresh` lists both stores by ``epoch_dirs`` and keys a
-    partition by its name plus its directory identity (inode,
-    ``mtime_ns``): ``publish_epoch`` renames a fresh directory in and a
-    Spark overwrite makes a new one, so a same-named rewrite is never
-    taken for the old one. A partition that vanished (``compact()``, a
-    migration) or changed is dropped; one not seen yet is loaded with
-    pyarrow — Spark-written bulk partitions, ``ep=migrated`` and
-    ``ep=compacted`` included. The trigger's own tag is left out of the
-    listing, as ``read_live(…, exclude_tag)`` leaves it out, so a replay
-    never matches its own torn first attempt. The sink writes its own
+    Each :meth:`refresh` lists both stores by ``live_dirs`` (one manifest
+    read per store) and keys a partition by its name plus its directory
+    identity (inode, ``mtime_ns``): ``publish_epoch`` renames a fresh
+    directory in and a Spark overwrite makes a new one, so a same-named
+    rewrite is never taken for the old one. A partition that left the
+    listing (folded by ``compact()``, replaced by a migration) or
+    changed is dropped; one not seen yet is loaded with pyarrow —
+    Spark-written bulk partitions, ``ep=migrated`` and compaction bases
+    included. The trigger's own tag is left out of the listing, as
+    ``read_live(…, exclude_tag)`` leaves it out, so a replay never
+    matches its own torn first attempt. The sink writes its own
     partitions through (:meth:`insert`) once they are published."""
 
     def __init__(self, bands_path: str, vectors_path: str, dims: int, planes: int):
@@ -606,7 +614,7 @@ class _ResidentStore:
 
         live = {}
         for root in (self.bands_path, self.vectors_path):
-            for e in epoch_dirs(root):
+            for e in live_dirs(root):
                 if e.name != f"ep={exclude_tag}":
                     st = e.stat()
                     live[(root, e.name)] = (e.path, (st.st_ino, st.st_mtime_ns))
@@ -913,7 +921,7 @@ class StreamingSemDedupLSH:
         except (json.JSONDecodeError, ValueError, KeyError, TypeError):
             pass  # corrupt marker → reconcile as unversioned (below)
         stale = False
-        eps = epoch_dirs(self.bands_path)
+        eps = live_dirs(self.bands_path)
         flat = []
         for ep in eps:
             entries = list(os.scandir(ep.path))
@@ -928,7 +936,7 @@ class StreamingSemDedupLSH:
             stale = True
         elif eps:
             try:
-                cols = self.spark.read.parquet(self.bands_path).columns
+                cols = _read_store(self.spark, self.bands_path).columns
                 # v2 co-located vectors (or any interim packed form)
                 stale = bool({"v", "vq"} & set(cols))
             except Exception:
@@ -974,7 +982,7 @@ class StreamingSemDedupLSH:
         between re-runs the (idempotent) rebuild on next start."""
         import shutil
 
-        if not epoch_dirs(self.vectors_path):
+        if not live_dirs(self.vectors_path):
             raise RuntimeError(
                 f"bands store at {self.bands_path} uses a pre-v3 flat "
                 "layout and no kept-vectors table exists to rebuild from "
@@ -985,7 +993,7 @@ class StreamingSemDedupLSH:
             ep.path for ep in epoch_dirs(self.bands_path)
             if ep.name != "ep=migrated"
         ]
-        vecs = self.spark.read.parquet(self.vectors_path).select("vec_id", "v")
+        vecs = _read_store(self.spark, self.vectors_path).select("vec_id", "v")
         (
             self._band_key_rows(vecs)
             .write.mode("overwrite")
@@ -1357,30 +1365,33 @@ class StreamingSemDedupLSH:
         )
 
     def compact(self) -> dict[str, tuple[int, int]]:
-        """Re-roll per-epoch small files (bands clustered by band, the
-        candidate join's scan side; vectors by vec_id). Same caller
-        contract as :meth:`NearDupIndex.compact`: serialize against
-        apply_batch. Raises while a failed micro-batch awaits replay
-        (an epoch partition above the ledger's high-water mark)."""
-        from polar_spark.functions.dedup import _compact_parquet_dir
-
-        self._epochs.check_settled(self.bands_path, self.vectors_path)
+        """Fold each store's per-epoch partitions into one base
+        (functions.dedup.compact_store): bands clustered by band, the
+        candidate join's scan side, in their (band, bpre) directories;
+        vectors and drops by vec_id. Same caller contract as
+        :meth:`NearDupIndex.compact`: serialize against apply_batch.
+        Raises while a failed micro-batch awaits replay (an epoch
+        partition above the ledger's high-water mark)."""
+        self._epochs.check_settled(
+            self.bands_path, self.vectors_path, self.drops_path
+        )
         self._ensure_format()
         return {
-            "bands": _compact_parquet_dir(
-                self.spark, self.bands_path, "band", "bucket",
-                out_subdir="ep=compacted",
-                partition_by=["band", "bpre"],  # keep the prunable dirs
+            "bands": compact_store(
+                self.spark, self.bands_path, self._epochs, "band", "bucket",
+                partition_by=("band", "bpre"),  # keep the prunable dirs
             ),
-            "vectors": _compact_parquet_dir(
-                self.spark, self.vectors_path, "vec_id", "vec_id",
-                out_subdir="ep=compacted",
+            "vectors": compact_store(
+                self.spark, self.vectors_path, self._epochs, "vec_id", "vec_id"
+            ),
+            "drops": compact_store(
+                self.spark, self.drops_path, self._epochs, "vec_id", "vec_id"
             ),
         }
 
     def kept(self) -> DataFrame:
         """The deduplicated corpus (all kept vectors)."""
-        return self.spark.read.parquet(self.vectors_path).drop("ep")
+        return _read_store(self.spark, self.vectors_path)
 
     def dropped(self) -> DataFrame:
-        return self.spark.read.parquet(self.drops_path).drop("ep")
+        return _read_store(self.spark, self.drops_path)

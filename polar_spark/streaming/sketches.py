@@ -28,8 +28,6 @@ watermark coupling — reading the store IS the query).
 from __future__ import annotations
 
 import os
-import re
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,19 +56,14 @@ from polar_spark.functions.sketches import (
 from polar_spark.store import (
     STORE_LEDGER,
     EpochLedger,
+    compact_epochs,
     epoch_dirs,
-    file_lock,
+    purge_epochs,
     read_json,
     read_live,
     write_json,
 )
 from polar_spark.streaming.ingest import start_epoch_sink
-
-
-# base partitions are compaction output (`ep=base<gen>`); epoch
-# partitions carry the sink-key hash + epoch number in their tag
-# (store.epoch_tag), which the ledger parses to tell what is foldable
-_BASE_DIR_RE = re.compile(r"^ep=base\d{8}$")
 
 
 class _EpochPartialSink:
@@ -106,56 +99,6 @@ class _EpochPartialSink:
     def _partition_dirs(self) -> list[os.DirEntry]:
         return epoch_dirs(self.store_path)
 
-    # -- compaction manifest -------------------------------------------
-    def _manifest_path(self) -> str:
-        return os.path.join(self.store_path, "_compact.json")
-
-    def _read_manifest(self) -> dict:
-        return read_json(
-            self._manifest_path(), {"gen": 0, "base": None, "folded": []}
-        )
-
-    def _write_manifest(self, man: dict) -> None:
-        write_json(self._manifest_path(), man)
-
-    def _live_partition_dirs(self) -> list[os.DirEntry]:
-        """Partitions a read may merge: excludes partials already folded
-        into the current base (pending deletion after a compaction
-        commit) and base dirs from a compaction that died before its
-        manifest commit — both would double-count additive state."""
-        man = self._read_manifest()
-        folded = set(man.get("folded", []))
-        base = man.get("base")
-        out = []
-        for e in self._partition_dirs():
-            if e.name in folded:
-                continue
-            if _BASE_DIR_RE.match(e.name) and e.name != base:
-                continue
-            out.append(e)
-        return out
-
-    def _gc_folded(self) -> None:
-        """Delete partitions superseded by the committed base: the
-        manifest's folded list plus any orphaned base dir from a
-        crashed compaction. Names stay in the manifest until their dir
-        is verifiably gone — clearing first and failing the rmtree
-        would resurrect them into reads."""
-        man = self._read_manifest()
-        folded = set(man.get("folded", []))
-        for e in self._partition_dirs():
-            if e.name in folded or (
-                _BASE_DIR_RE.match(e.name) and e.name != man.get("base")
-            ):
-                shutil.rmtree(e.path, ignore_errors=True)
-        remaining = [
-            n
-            for n in man.get("folded", [])
-            if os.path.isdir(os.path.join(self.store_path, n))
-        ]
-        if len(remaining) != len(man.get("folded", [])):
-            self._write_manifest({**man, "folded": remaining})
-
     def _cast_to_partial_schema(self, df: DataFrame) -> DataFrame:
         """Pin the fold output to the lineage's recorded partial schema
         (merge aggregates widen types — e.g. SUM(int) → bigint — and a
@@ -169,96 +112,36 @@ class _EpochPartialSink:
 
     def compact(self) -> tuple[int, int]:
         """Fold every COMMITTED partial (and the previous base) into one
-        ``ep=base<gen>`` partition. Returns (n_folded, n_live_after).
+        ``ep=base<gen>`` partition through the sink's merge law, by the
+        crash-safe store.compact_epochs. Returns (n_folded,
+        n_live_after)."""
 
-        Crash-safe at every step: the new base only becomes visible via
-        the manifest's atomic replace (store.write_json; before it,
-        readers ignore the unreferenced base dir; after it, they ignore
-        the folded source dirs until GC removes them), so a SIGKILL
-        anywhere leaves reads correct and the next compact/GC finishes
-        the cleanup — the same write-aside-then-swap discipline as
-        topics.compact.
+        def rewrite(stored: DataFrame, out: str) -> None:
+            merged = self._cast_to_partial_schema(self._fold(stored))
+            merged.coalesce(1).write.mode("overwrite").parquet(out)
 
-        Only epochs at or below the ledger's recorded high-water mark
-        fold (store.EpochLedger.recorded): a partition written by a
-        crash BETWEEN the partial write and the epoch record still
-        belongs to its replay (which will overwrite it); folding it
-        would double-count the replay."""
-        with self._compact_lock():
-            self._gc_folded()
-            man = self._read_manifest()
-            parts = self._partition_dirs()
-            recorded = self._epochs.recorded(e.name for e in parts)
-            srcs = []
-            for e in parts:
-                if not os.path.exists(os.path.join(e.path, "_SUCCESS")):
-                    continue  # incomplete write — not committed state
-                if e.name in recorded:
-                    if recorded[e.name]:  # unrecorded: the replay owns it
-                        srcs.append(e)
-                elif _BASE_DIR_RE.match(e.name) and e.name == man.get("base"):
-                    srcs.append(e)
-            if len(srcs) <= 1:
-                return (0, len(self._live_partition_dirs()))
-            stored = self.spark.read.parquet(*[e.path for e in srcs])
-            folded = self._cast_to_partial_schema(self._fold(stored))
-            gen = int(man.get("gen", 0)) + 1
-            base_name = f"ep=base{gen:08d}"
-            folded.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(self.store_path, base_name)
-            )
-            self._write_manifest({
-                "gen": gen,
-                "base": base_name,
-                "folded": sorted(e.name for e in srcs),
-            })
-            # DEFERRED GC (review r10): the just-superseded sources stay
-            # on disk until the NEXT compact's entry _gc_folded. Reads
-            # exclude them via the manifest the moment it commits, and a
-            # reader still holding a pre-commit listing keeps resolving
-            # its paths for a full compaction cycle — closing the
-            # action-time window where an immediate GC yanked files out
-            # from under an in-flight scan. Disk cost: one superseded
-            # generation, bounded by epochs-since-previous-compact.
-            return (len(srcs), len(self._live_partition_dirs()))
-
-    def _compact_lock(self):
-        return file_lock(
-            os.path.join(self.store_path, "_compact.lock"),
-            f"compact({self.store_path})", timeout=None,
+        folded, live = compact_epochs(
+            self.spark, self.store_path, self._epochs, rewrite
         )
+        return (len(folded), len(live))
 
     def _purge(self) -> None:
         """Drop every stored partial. Sketch partials ADD when merged, so
         partitions from an earlier lineage (pre-reset epochs, or a prior
         checkpoint) must not survive into a reprocessing run — they would
-        silently inflate every estimate.
+        silently inflate every estimate (store.purge_epochs: never
+        mid-fold).
 
         The saved partial schema SURVIVES the purge (empty-store
         estimates stay schema-stable within a lineage), but is marked
         stale: the first write of the NEW lineage overwrites it, so a
         retyped lineage never serves the old key/value types past its
         first batch (reconciles ADVICE r4's stale-type hole with the
-        schema-stability contract in tests/test_streaming.py).
-
-        Serialized against compact() by the same _compact.lock flock: a
-        purge landing MID-fold would otherwise let the compaction commit
-        a base holding the purged lineage's state, with a folded list
-        that swallows the new lineage's first partial (same sink-key
-        hash) — permanently losing its committed batch and resurrecting
-        dead state. Under the lock, a purge runs entirely before or
-        entirely after any compaction."""
-        with self._compact_lock():
-            for e in self._partition_dirs():
-                shutil.rmtree(e.path, ignore_errors=True)
-            # the compaction manifest indexes the purged lineage's dirs —
-            # a stale one would hide the NEW lineage's base after its
-            # first compact (gen collision) or resurrect nothing; reset
-            if os.path.exists(self._manifest_path()):
-                os.remove(self._manifest_path())
-            if os.path.exists(self._schema_path()):
-                with open(self._stale_marker_path(), "w"):
-                    pass
+        schema-stability contract in tests/test_streaming.py)."""
+        purge_epochs(self.store_path)
+        if os.path.exists(self._schema_path()):
+            with open(self._stale_marker_path(), "w"):
+                pass
 
     def apply_batch(self, batch_df: DataFrame, epoch: int, sink_id: str) -> bool:
         """Apply one micro-batch idempotently; False = already applied
@@ -321,18 +204,11 @@ class _EpochPartialSink:
         return None if schema is None else self.spark.createDataFrame([], schema)
 
     def _stored(self) -> DataFrame | None:
-        """All LIVE stored partials; None = cold store. Reads the
-        manifest-filtered partition list by explicit paths (never the
-        store root): during a compaction swap the superseded source
-        dirs coexist with the new base, and a root read would merge
-        both and double-count every additive estimate. A concurrent
-        compact() commits its manifest BEFORE it GCs the listed source
-        dirs, so a read that lost that race re-lists and serves the
-        new base (store.read_live)."""
-        return read_live(
-            self.spark, self.store_path,
-            live=lambda: [e.path for e in self._live_partition_dirs()],
-        )
+        """All LIVE stored partials; None = cold store. The live listing
+        (store.read_live) leaves out the partials a compaction already
+        folded into the base, which would double-count every additive
+        estimate."""
+        return read_live(self.spark, self.store_path)
 
 
 class StreamingCountMin(_EpochPartialSink):

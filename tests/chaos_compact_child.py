@@ -65,23 +65,23 @@ def main() -> None:
 
     if phase == "compact":
         when = sys.argv[3]
-        import polar_spark.streaming.sketches as sk
+        import polar_spark.store as store
 
-        orig = sk._EpochPartialSink._write_manifest
+        orig = store._write_manifest
 
-        def write_manifest(self, man):
+        def write_manifest(root, man):
             # only the COMMIT write (non-empty folded list) is the kill
             # point — the GC's folded-list clear must pass through
             if man.get("folded"):
                 if when == "before":
                     os.kill(os.getpid(), 9)
-                orig(self, man)
+                orig(root, man)
                 if when == "after":
                     os.kill(os.getpid(), 9)
                 return
-            orig(self, man)
+            orig(root, man)
 
-        sk._EpochPartialSink._write_manifest = write_manifest
+        store._write_manifest = write_manifest
         _sink(spark, root).compact()
         return
 

@@ -30,6 +30,7 @@ import shutil
 
 import pytest
 
+import polar_spark.store as store
 from polar_spark.sources.tables import load_table
 
 
@@ -42,7 +43,7 @@ def _rows(df):
 
 
 def _live_names(sink) -> list[str]:
-    return sorted(e.name for e in sink._live_partition_dirs())
+    return sorted(e.name for e in store.live_dirs(sink.store_path))
 
 
 def _all_names(sink) -> list[str]:
@@ -204,7 +205,7 @@ def test_compact_crash_before_manifest_is_invisible(spark, sf_dir, tmp_path):
     # simulate the crash: materialize the fold under an UNREFERENCED
     # base name (no manifest write — exactly the pre-commit state)
     stored = spark.read.parquet(
-        *[e.path for e in sink._live_partition_dirs()]
+        *[e.path for e in store.live_dirs(sink.store_path)]
     )
     sink._cast_to_partial_schema(sink._fold(stored)).coalesce(1).write.mode(
         "overwrite"
@@ -299,7 +300,9 @@ def test_compact_purged_on_lineage_reset(spark, sf_dir, tmp_path):
 
     # new lineage reprocesses only batch 0
     assert sink.apply_batch(batches[0], 0, cp) is True
-    assert not os.path.exists(sink._manifest_path())
+    assert not os.path.exists(
+        os.path.join(sink.store_path, store.COMPACT_MANIFEST)
+    )
     assert len(_all_names(sink)) == 1 and not _all_names(sink)[0].startswith(
         "ep=base"
     )
@@ -351,7 +354,7 @@ def test_soak_100_epochs_merge_cost_flat(spark, sf_dir, tmp_path):
             if fn.endswith(".parquet")
         )
 
-    live_dirs = [e.path for e in sink._live_partition_dirs()]
+    live_dirs = [e.path for e in store.live_dirs(sink.store_path)]
     assert len(live_dirs) == 1
     assert _n_files(live_dirs) == 1  # coalesce(1): one file regardless of age
     assert _rows(sink.psi()) == before
@@ -373,13 +376,13 @@ def test_read_racing_gc_retries_never_serves_empty(spark, sf_dir, tmp_path):
         sink.apply_batch(b, i, str(tmp_path / "cp"))
     before = _rows(est())
 
-    stale = [e.path for e in sink._live_partition_dirs()]
+    stale = [e.path for e in store.live_dirs(sink.store_path)]
     assert len(stale) == 3
     sink.compact()  # gen 1
     # deferred GC: the superseded sources are still on disk, so a
     # reader holding `stale` keeps reading them correctly
     assert all(os.path.isdir(p) for p in stale)
-    assert len(sink._live_partition_dirs()) == 1
+    assert len(store.live_dirs(sink.store_path)) == 1
 
     sink.apply_batch(batches[3], 3, str(tmp_path / "cp"))
     after4 = _rows(est())
@@ -389,7 +392,7 @@ def test_read_racing_gc_retries_never_serves_empty(spark, sf_dir, tmp_path):
 
     with _pytest.raises(Exception):
         spark.read.parquet(*stale).collect()  # a 2-cycle-stale read fails...
-    fresh = [e.path for e in sink._live_partition_dirs()]
+    fresh = [e.path for e in store.live_dirs(sink.store_path)]
     assert fresh != stale  # ...which is _stored()'s re-list condition
     assert _rows(est()) == after4  # and the served estimate is intact
 

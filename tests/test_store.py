@@ -17,6 +17,8 @@ from polar_spark.store import (
     EpochLedger,
     epoch_tag,
     file_lock,
+    is_base_dir,
+    live_dirs,
     read_json,
     read_live,
     write_json,
@@ -24,19 +26,28 @@ from polar_spark.store import (
 
 
 def test_store_is_the_only_lock_and_json_writer():
-    """No module under polar_spark/ other than store.py takes an flock
-    or writes JSON itself: a second copy of the protocol is how one
-    copy came to differ from the others."""
+    """No module under polar_spark/ other than store.py takes an flock,
+    writes JSON itself, names the compaction manifest or builds a
+    compaction base name; and no module but topics.py (whose
+    ``partition=`` layout keeps its own directory swap) swaps a store
+    root through ``.compact_tmp``/``.compact_old``: a second copy of
+    the protocol is how one copy came to differ from the others."""
     root = Path(polar_spark.__file__).parent
     offenders = []
     for p in sorted(root.rglob("*.py")):
+        src = p.read_text()
+        if p != root / "topics.py" and re.search(r"\.compact_(tmp|old)", src):
+            offenders.append(f"{p.relative_to(root)}: swaps a root by rename")
         if p == root / "store.py":
             continue
-        src = p.read_text()
         if re.search(r"^\s*(import fcntl|from fcntl import)", src, re.M):
             offenders.append(f"{p.relative_to(root)}: imports fcntl")
         if "json.dump(" in src:
             offenders.append(f"{p.relative_to(root)}: calls json.dump(")
+        if "_compact.json" in src:
+            offenders.append(f"{p.relative_to(root)}: names the manifest")
+        if re.search(r"ep=base(\\d|\{)", src):
+            offenders.append(f"{p.relative_to(root)}: builds a base name")
     assert offenders == []
 
 
@@ -163,5 +174,150 @@ def test_near_dup_index_compact_refuses_pending_replay(spark, tmp_path):
     EpochLedger(os.path.join(idx.path, STORE_LEDGER)).record("sink", 0)
     idx.compact()
     assert [e for e in os.listdir(idx.bands_path) if e.startswith("ep=")] == [
-        "ep=compacted"
+        "ep=base00000001"
     ]
+
+
+def test_near_dup_index_rejects_base_name_tags(spark, tmp_path):
+    """A batch tag shaped like a compaction base (``base`` + 8 digits)
+    is refused: its partition would read as an orphan base, hidden from
+    reads and deleted by the next compaction's GC."""
+    from polar_spark.functions.dedup import NearDupIndex
+
+    idx = NearDupIndex(spark, str(tmp_path / "idx"))
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    for bad in ("base00000002", "base12345678"):
+        with pytest.raises(ValueError, match="compaction bases"):
+            idx.query_and_update(docs, tag=bad)
+    for ok in ("base0000002", "base000000021", "baseline"):
+        assert NearDupIndex._check_tag(ok) == ok
+
+
+def _crash_at_manifest_commit(monkeypatch, when: str) -> None:
+    """Make the next compaction die at its manifest commit: ``before``
+    it (the base is written but unnamed) or ``after`` it (the base is
+    live, the folded sources not yet GC'd). Later commits pass."""
+    import polar_spark.store as store
+
+    write = store._write_manifest
+    armed = [True]
+
+    def crashing(root, man):
+        if armed[0] and man["folded"]:
+            armed[0] = False
+            if when == "after":
+                write(root, man)
+            raise RuntimeError("crash at the manifest commit")
+        write(root, man)
+
+    monkeypatch.setattr(store, "_write_manifest", crashing)
+
+
+def _assert_one_live_base(*roots: str) -> None:
+    for root in roots:
+        names = [e.name for e in live_dirs(root)]
+        assert len(names) == 1 and is_base_dir(names[0]), (root, names)
+
+
+def _near_dup_docs(spark, lo: int, hi: int):
+    """Docs ``lo..hi-1`` of a fixed corpus in which every fourth doc is
+    a one-word edit of doc ``k // 2`` (a near-dup across batches)."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    words = [f"w{i}" for i in range(400)]
+    texts = [list(rng.choice(words, 40)) for _ in range(hi)]
+    for k in range(3, hi, 4):
+        texts[k] = texts[k // 2][:-1] + ["edited"]
+    return spark.createDataFrame(
+        [(k, " ".join(texts[k])) for k in range(lo, hi)],
+        "doc_id long, text string",
+    )
+
+
+@pytest.mark.parametrize("when", ["before", "after"])
+def test_near_dup_index_compaction_crash_reads_like_uncompacted(
+    spark, tmp_path, monkeypatch, when
+):
+    """A NearDupIndex compaction that dies at its manifest commit leaves
+    the index reading exactly what an uncompacted twin reads: the next
+    batch finds the twin's pairs. The next compact() heals the stores
+    down to one live base each."""
+    from polar_spark.functions.dedup import NearDupIndex
+
+    def pairs(idx, lo, hi, tag):
+        got = idx.query_and_update(_near_dup_docs(spark, lo, hi), tag=tag)
+        return sorted((r[0], r[1], round(r[2], 9)) for r in got.collect())
+
+    idx = NearDupIndex(spark, str(tmp_path / "idx"))
+    twin = NearDupIndex(spark, str(tmp_path / "twin"))
+    for ix in (idx, twin):
+        ix.build(_near_dup_docs(spark, 0, 24))
+        pairs(ix, 24, 36, "b1")
+    _crash_at_manifest_commit(monkeypatch, when)
+    with pytest.raises(RuntimeError, match="manifest commit"):
+        idx.compact()
+    want = pairs(twin, 36, 48, "b2")
+    assert want, "the batch must near-dup the stored corpus"
+    assert pairs(idx, 36, 48, "b2") == want
+    idx.compact()
+    _assert_one_live_base(idx.bands_path, idx.shingles_path)
+    assert pairs(idx, 48, 60, "b3") == pairs(twin, 48, 60, "b3")
+
+
+def _lsh_rows(lo: int, hi: int) -> list[tuple[int, list[int]]]:
+    """Rows ``lo..hi-1`` of a fixed corpus in which every fifth vector
+    is a near copy of vector ``k // 2``."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    V = rng.integers(-3000, 3000, size=(hi, 64))
+    for k in range(3, hi, 5):
+        V[k] = V[k // 2] + rng.integers(-20, 20, size=64)
+    return [(i, V[i].tolist()) for i in range(lo, hi)]
+
+
+@pytest.mark.parametrize("when", ["before", "after"])
+def test_lsh_sink_compaction_crash_drops_like_uncompacted(
+    spark, tmp_path, monkeypatch, when
+):
+    """A StreamingSemDedupLSH compaction that dies at its manifest
+    commit leaves the sink deciding exactly as an uncompacted twin: the
+    next driver-plan trigger drops the twin's drops. The next compact()
+    heals every store — bands, kept vectors and drops — down to one
+    live base, and dropped() is unchanged by it."""
+    import polar_spark.streaming.dedup as D
+
+    monkeypatch.setattr(D, "DRIVER_BATCH_BYTES", 1 << 40)  # driver plan
+
+    def sink(name):
+        return D.StreamingSemDedupLSH(
+            spark, str(tmp_path / f"{name}_idx"), str(tmp_path / f"{name}_drops"),
+            dims=64, bands=8, planes_per_band=8, tau_sq_pct=9025,
+        )
+
+    def trigger(sd, epoch, lo, hi):
+        b = spark.createDataFrame(_lsh_rows(lo, hi), "vec_id long, v array<bigint>")
+        assert sd.apply_batch(b, epoch, "crash") is True
+
+    def state(sd):
+        return (
+            sorted(r["vec_id"] for r in sd.kept().collect()),
+            sorted(r["vec_id"] for r in sd.dropped().collect()),
+        )
+
+    sd, twin = sink("sd"), sink("twin")
+    for s in (sd, twin):
+        trigger(s, 0, 0, 60)
+        trigger(s, 1, 60, 80)
+    _crash_at_manifest_commit(monkeypatch, when)
+    with pytest.raises(RuntimeError, match="manifest commit"):
+        sd.compact()
+    for s in (sd, twin):
+        trigger(s, 2, 80, 100)
+    want = state(twin)
+    assert [i for i in want[1] if i >= 80], "the trigger must drop a stored twin"
+    assert state(sd) == want
+    sd.compact()
+    _assert_one_live_base(sd.bands_path, sd.vectors_path, sd.drops_path)
+    assert state(sd) == want

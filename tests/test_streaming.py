@@ -2226,7 +2226,7 @@ def test_streaming_semdedup_lsh_resident_index_reloads_after_compact(
     spark, tmp_path, monkeypatch
 ):
     """compact() between two driver-plan triggers replaces every
-    partition with ``ep=compacted``: the next trigger drops the vanished
+    partition with ``ep=base00000001``: the next trigger drops the vanished
     partitions from the index, loads the compacted ones, and still
     drops the cross-epoch twins by the banded-greedy law."""
     import os
@@ -2240,9 +2240,9 @@ def test_streaming_semdedup_lsh_resident_index_reloads_after_compact(
     b = spark.createDataFrame(_twin_rows(80, 100), "vec_id long, v array<bigint>")
     assert sd.apply_batch(b, 2, "cmp") is True
 
-    assert sorted(os.path.basename(p) for p in loads) == ["ep=compacted"] * 2
+    assert sorted(os.path.basename(p) for p in loads) == ["ep=base00000001"] * 2
     names = {name for _root, name in sd._resident._parts}
-    assert names == {"ep=compacted", f"ep={epoch_tag('cmp', 2)}"}
+    assert names == {"ep=base00000001", f"ep={epoch_tag('cmp', 2)}"}
     applied = _twin_rows(0, 60) + _twin_rows(60, 80) + _twin_rows(80, 100)
     dropped = _lsh_store_state(spark, sd)[1]
     assert dropped == _banded_greedy_drops(applied, 8, 8, 9025)
