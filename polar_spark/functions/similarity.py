@@ -1044,43 +1044,28 @@ PQ_KSUB = 16
 PQ_MAX_TRAIN = 256 * PQ_KSUB
 
 
-def train_pq_codebook(
-    candidates: DataFrame,
-    vec_col: str,
-    id_col: str,
-    nsub: int = PQ_NSUB,
-    ksub: int = PQ_KSUB,
-    iters: int = 4,
-) -> list[list[list[int]]]:
-    """Deterministic per-subspace Lloyd's k-means → a product-quantizer
-    codebook ``books[sub][code] = centroid subvector``.
+def pq_training_sample(
+    candidates: DataFrame, vec_col: str, id_col: str
+) -> tuple[np.ndarray, np.ndarray, bool]:
+    """The bounded PQ training sample, as ``(ids, V, complete)``.
 
-    PQ (Jégou et al. 2011, "Product Quantization for Nearest Neighbor
-    Search") is the storage half of the Faiss IVFADC design: a vector
-    becomes ``nsub`` byte codes (64 float dims → 8 bytes, 32×
-    compression), so a 100 TB embedding corpus's search structure fits
-    in ~3 TB and scans stay memory-bandwidth-bound.
-
-    Training reads a BOUNDED sample, as Faiss does (at most
-    ``max_points_per_centroid`` × ksub points): one Arrow collect of the
-    first :data:`PQ_MAX_TRAIN` rows in ``(xxhash64(id), id)`` order, then
-    every Lloyd round runs in numpy on the driver — one Spark job, no
-    Python worker, whatever the corpus size. The hash order draws the
-    sample from the whole id range, not from its low end. A corpus of
-    at most PQ_MAX_TRAIN vectors is its own sample, so its books are
-    those of full-corpus training.
-
-    Deterministic: init = subvectors of the sample's ``ksub`` lowest-id
-    vectors; codes come from :func:`_pq_codes_matrix` (the kernel the
-    encoder uses); exact int64 sums; the update is
-    ``floor(double(sum)/double(count))``; empty codes keep their
-    previous centroid."""
+    One Arrow collect of the first :data:`PQ_MAX_TRAIN` + 1 rows in
+    ``(xxhash64(id), id)`` order: one Spark job, no Python worker,
+    whatever the corpus size. The hash order draws the sample from the
+    whole id range, not from its low end. ``ids``/``V`` (an (n, dims)
+    int64 matrix) keep the first PQ_MAX_TRAIN rows; ``complete`` says
+    the corpus had no more rows than that, so the sample IS the corpus
+    (the extra row only detects that). Raises on an empty corpus and on
+    ragged vectors — a raise, not an assert (asserts vanish under
+    python -O)."""
     t = (
         candidates.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
         .orderBy(F.xxhash64("_id"), "_id")
-        .limit(PQ_MAX_TRAIN)
+        .limit(PQ_MAX_TRAIN + 1)
         .toArrow()
     )
+    complete = t.num_rows <= PQ_MAX_TRAIN
+    t = t.slice(0, PQ_MAX_TRAIN)
     n = t.num_rows
     if n == 0:
         raise ValueError("train_pq_codebook: empty training corpus")
@@ -1088,17 +1073,32 @@ def train_pq_codebook(
     vcol = t.column("_v").combine_chunks()
     lens = vcol.value_lengths().to_numpy(zero_copy_only=False)
     dims = int(lens[np.argmin(ids)])
-    # fail fast on ragged vectors: a raise, not an assert (asserts
-    # vanish under python -O)
     if (lens != dims).any():
         raise ValueError(
             f"ragged PQ codebook: the training vectors must all have {dims} "
             "components"
         )
+    V = vcol.flatten().to_numpy().astype(np.int64).reshape(n, dims)
+    return ids, V, complete
+
+
+def pq_lloyd(
+    ids: np.ndarray,
+    V: np.ndarray,
+    nsub: int = PQ_NSUB,
+    ksub: int = PQ_KSUB,
+    iters: int = 4,
+) -> list[list[list[int]]]:
+    """Deterministic per-subspace Lloyd's k-means over a sample in hand
+    → ``books[sub][code] = centroid subvector``: init = subvectors of
+    the sample's ``ksub`` lowest-id vectors; codes come from
+    :func:`_pq_codes_matrix` (the kernel the encoder uses); exact int64
+    sums; the update is ``floor(double(sum)/double(count))``; empty
+    codes keep their previous centroid."""
+    dims = V.shape[1]
     if dims % nsub:
         raise ValueError(f"dims {dims} not divisible by nsub {nsub}")
     dsub = dims // nsub
-    V = vcol.flatten().to_numpy().astype(np.int64).reshape(n, dims)
     init = V[np.argsort(ids, kind="stable")[:ksub]]
     B = [init[:, s * dsub : (s + 1) * dsub].copy() for s in range(nsub)]
     keff = len(init)  # < ksub when the corpus has fewer vectors
@@ -1115,12 +1115,38 @@ def train_pq_codebook(
     return [b.tolist() for b in B]
 
 
+def train_pq_codebook(
+    candidates: DataFrame,
+    vec_col: str,
+    id_col: str,
+    nsub: int = PQ_NSUB,
+    ksub: int = PQ_KSUB,
+    iters: int = 4,
+) -> list[list[list[int]]]:
+    """Product-quantizer codebook of a corpus: :func:`pq_lloyd` over
+    :func:`pq_training_sample`.
+
+    PQ (Jégou et al. 2011, "Product Quantization for Nearest Neighbor
+    Search") is the storage half of the Faiss IVFADC design: a vector
+    becomes ``nsub`` byte codes (64 float dims → 8 bytes, 32×
+    compression), so a 100 TB embedding corpus's search structure fits
+    in ~3 TB and scans stay memory-bandwidth-bound.
+
+    Training reads a BOUNDED sample, as Faiss does (at most
+    ``max_points_per_centroid`` × ksub points), and every Lloyd round
+    runs in numpy on the driver. A corpus of at most PQ_MAX_TRAIN
+    vectors is its own sample, so its books are those of full-corpus
+    training."""
+    ids, V, _ = pq_training_sample(candidates, vec_col, id_col)
+    return pq_lloyd(ids, V, nsub, ksub, iters)
+
+
 def _pq_codes_matrix(V: np.ndarray, B: list[np.ndarray]) -> np.ndarray:
     """PQ code assignment for a batch: (n, nsub) int32 codes, one small
     matmul per subspace; ties → lowest code (argmin takes the first
     minimum over code-ordered distances). Shared verbatim by
-    :func:`pq_encode` and the training kernel in
-    :func:`train_pq_codebook` so encode and training assign IDENTICALLY."""
+    :func:`pq_encode`, :func:`pq_adc_scan` and the training kernel in
+    :func:`pq_lloyd` so encode and training assign IDENTICALLY."""
     nsub = len(B)
     dsub = B[0].shape[1]
     codes = np.empty((len(V), nsub), dtype=np.int32)
@@ -1152,26 +1178,32 @@ def pq_encode(vec_col: str | Column, books: list[list[list[int]]]) -> Column:
     return enc(c)
 
 
-def collect_query_vectors(
-    queries: DataFrame, query_id: str, query_vec: str, op: str
-) -> tuple[list, np.ndarray]:
-    """Driver-side collect of a (capped) probe set: (qids, (m, dims)
-    int64 matrix). Shared contract of every closure-shipped-query
-    operator (brute force, ADC): |Q| is hard-capped so 'small side
-    rides along' stays true."""
-    qrows = (
-        queries.select(query_id, query_vec)
-        .limit(MAX_BRUTE_FORCE_QUERIES + 1)
-        .collect()
-    )
-    if not qrows:
+def check_query_count(n: int, op: str) -> None:
+    """The probe-set contract of every closure-shipped-query operator
+    (brute force, ADC): non-empty, and hard-capped at
+    :data:`MAX_BRUTE_FORCE_QUERIES` so 'small side rides along' stays
+    true."""
+    if not n:
         raise ValueError(f"{op}: empty query set")
-    if len(qrows) > MAX_BRUTE_FORCE_QUERIES:
+    if n > MAX_BRUTE_FORCE_QUERIES:
         raise ValueError(
             f"{op}: query set exceeds {MAX_BRUTE_FORCE_QUERIES} rows; "
             "batch the probe set or route through an IVF partition / "
             "lsh_bucket prefilter first"
         )
+
+
+def collect_query_vectors(
+    queries: DataFrame, query_id: str, query_vec: str, op: str
+) -> tuple[list, np.ndarray]:
+    """Driver-side collect of a (capped, :func:`check_query_count`)
+    probe set: (qids, (m, dims) int64 matrix)."""
+    qrows = (
+        queries.select(query_id, query_vec)
+        .limit(MAX_BRUTE_FORCE_QUERIES + 1)
+        .collect()
+    )
+    check_query_count(len(qrows), op)
     qids = [r[query_id] for r in qrows]
     Q = np.array([list(r[query_vec]) for r in qrows], dtype=np.int64)
     return qids, Q
@@ -1213,6 +1245,68 @@ def exact_rerank_topk(
     return exact.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
+def pq_adc_scan(
+    batches, B: list[np.ndarray], LUT: np.ndarray, Q: np.ndarray, qids: list,
+    shortlist: int,
+) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """The ADC scan kernel both :func:`pq_topk_adc` plans run: over
+    ``batches`` of ``(ids, V)`` it encodes each batch
+    (:func:`_pq_codes_matrix` against books ``B``), ADC-scores it
+    against every query (the sum of nsub lookups in ``LUT``), keeps a
+    running top-``shortlist`` per query by ``(adc_dot desc, id)`` with
+    the query itself excluded, and takes the exact int64 dot of each
+    survivor while its raw vector is still in hand. Returns, per query,
+    ``(ids, adc_dot, dot)`` in that order; over a whole corpus that is
+    exactly the global shortlist."""
+    m, nsub = LUT.shape[0], LUT.shape[1]
+    qarr = np.array(qids)
+    best = None
+    for ids, V in batches:
+        if best is None:
+            best = [(ids[:0], np.empty(0, np.int64), np.empty(0, np.int64))] * m
+        C = _pq_codes_matrix(V, B)
+        D = np.zeros((len(ids), m), dtype=np.int64)
+        for s in range(nsub):
+            D += LUT[:, s, C[:, s]].T  # (n, m)
+        for q in range(m):
+            bi, bv, bd = best[q]
+            rows = np.flatnonzero(ids != qarr[q])
+            v = np.concatenate([bv, D[rows, q]])
+            i = np.concatenate([bi, ids[rows]])
+            order = np.lexsort((i, -v))[:shortlist]
+            old = order < len(bd)
+            d = np.empty(len(order), dtype=np.int64)
+            d[old] = bd[order[old]]
+            d[~old] = V[rows[order[~old] - len(bd)]] @ Q[q]
+            best[q] = (i[order], v[order], d)
+    return best or []
+
+
+def pq_topk_adc_local(
+    ids: np.ndarray,
+    V: np.ndarray,
+    books: list[list[list[int]]],
+    qids: list,
+    Q: np.ndarray,
+    k: int = 5,
+    shortlist: int = 50,
+) -> list[tuple]:
+    """:func:`pq_topk_adc` over a corpus already in driver memory:
+    ``(qid, id, dot, rn)`` rows. One :func:`pq_adc_scan` call over the
+    whole corpus is the global shortlist cut (``(adc_dot desc, id)``);
+    the top-``k`` of it by ``(dot desc, id)`` is the second. The Spark
+    plan's per-partition shortlists are a superset of the global one,
+    so both plans return the same rows."""
+    check_query_count(len(qids), "pq_topk_adc")
+    B = [np.array(b, dtype=np.int64) for b in books]
+    best = pq_adc_scan([(ids, V)], B, pq_lut(books, Q), Q, qids, shortlist)
+    out = []
+    for qid, (i, _v, d) in zip(qids, best):
+        top = np.lexsort((i, -d))[:k]
+        out += [(qid, int(i[j]), int(d[j]), r + 1) for r, j in enumerate(top)]
+    return out
+
+
 def pq_topk_adc(
     queries: DataFrame,
     candidates: DataFrame,
@@ -1230,22 +1324,23 @@ def pq_topk_adc(
     ADC: each query precomputes an (nsub × ksub) dot-product lookup
     table against the codebook; a candidate's approximate dot is the sum
     of nsub table lookups — no decode, no per-candidate matmul. One
-    ``mapInPandas`` pass encodes each Arrow batch
-    (:func:`_pq_codes_matrix`), ADC-scores it, keeps a per-partition
-    running top-``shortlist`` per query (self excluded, ties → lowest
-    id) and takes the exact int64 dot of each survivor while its raw
-    vector is still in hand. Two windows finish: the global shortlist by
-    ``(adc_dot desc, id)``, then the top-``k`` of it by ``(dot desc,
-    id)``. The shuffle is O(partitions·shortlist·|Q|), independent of n,
-    and the re-rank needs no second scan, join or broadcast — the
-    standard recall fix for quantization error, paying exact dots only
-    for shortlist survivors instead of n·|Q|."""
+    ``mapInPandas`` pass runs :func:`pq_adc_scan` over each partition's
+    Arrow batches: encode, ADC, a per-partition running
+    top-``shortlist`` per query (self excluded, ties → lowest id) and
+    the exact int64 dot of each survivor. Two windows finish: the
+    global shortlist by ``(adc_dot desc, id)``, then the top-``k`` of it
+    by ``(dot desc, id)``. The shuffle is O(partitions·shortlist·|Q|),
+    independent of n, and the re-rank needs no second scan, join or
+    broadcast — the standard recall fix for quantization error, paying
+    exact dots only for shortlist survivors instead of n·|Q|.
+
+    This is the plan for a corpus that is not in driver memory; a
+    corpus that is (a complete training sample) runs the same kernel
+    once on the driver, :func:`pq_topk_adc_local`, with the same rows."""
     from pyspark.sql import types as T
 
-    qids_py, Q = collect_query_vectors(queries, query_id, query_vec, "pq_topk_adc")
-    m = len(qids_py)
+    qids, Q = collect_query_vectors(queries, query_id, query_vec, "pq_topk_adc")
     LUT = pq_lut(books, Q)  # (m, nsub, ksub)
-    nsub = LUT.shape[1]
     B = [np.array(b, dtype=np.int64) for b in books]
 
     out_schema = T.StructType(
@@ -1258,40 +1353,22 @@ def pq_topk_adc(
     )
 
     def part_topk(batches):
-        qids = np.array(qids_py)
-        best_v = [np.empty(0, np.int64) for _ in range(m)]
-        best_i = [np.empty(0, dtype=object) for _ in range(m)]
-        best_d = [np.empty(0, np.int64) for _ in range(m)]
-        seen = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            seen = True
-            V = _mat(pdf[cand_vec])
-            C = _pq_codes_matrix(V, B)
-            ids = pdf[cand_id].to_numpy()
-            D = np.zeros((len(ids), m), dtype=np.int64)
-            for s in range(nsub):
-                D += LUT[:, s, C[:, s]].T  # (n, m)
-            for q in range(m):
-                rows = np.flatnonzero(ids != qids[q])
-                v = np.concatenate([best_v[q], D[rows, q]])
-                i = np.concatenate([best_i[q], ids[rows]])
-                order = np.lexsort((i, -v))[:shortlist]
-                old = order < len(best_d[q])
-                d = np.empty(len(order), dtype=np.int64)
-                d[old] = best_d[q][order[old]]
-                d[~old] = V[rows[order[~old] - len(best_d[q])]] @ Q[q]
-                best_v[q], best_i[q], best_d[q] = v[order], i[order], d
-        if not seen:
+        best = pq_adc_scan(
+            (
+                (pdf[cand_id].to_numpy(), _mat(pdf[cand_vec]))
+                for pdf in batches
+                if len(pdf)
+            ),
+            B, LUT, Q, qids, shortlist,
+        )
+        if not best:
             return
-        counts = [len(best_v[q]) for q in range(m)]
         yield pd.DataFrame(
             {
-                query_id: [qids_py[q] for q in range(m) for _ in range(counts[q])],
-                cand_id: np.concatenate(best_i) if sum(counts) else [],
-                "adc_dot": np.concatenate(best_v) if sum(counts) else [],
-                "dot": np.concatenate(best_d) if sum(counts) else [],
+                query_id: [q for q, (i, _, _) in zip(qids, best) for _ in i],
+                cand_id: np.concatenate([i for i, _, _ in best]),
+                "adc_dot": np.concatenate([v for _, v, _ in best]),
+                "dot": np.concatenate([d for _, _, d in best]),
             },
             columns=[query_id, cand_id, "adc_dot", "dot"],
         )

@@ -17,49 +17,101 @@ Timestamp normalization: every testdata generation so far has needed one.
 from __future__ import annotations
 
 import os
-from functools import lru_cache
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DateType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
 
-@lru_cache(maxsize=256)
-def _ns_timestamp_cols(path: str) -> tuple[str, ...]:
-    if os.path.isdir(path):
-        # directory-shaped parquet (e.g. a Spark-written scaled corpus):
-        # inspect the first part file's footer
-        parts = sorted(
-            os.path.join(dp, fn)
-            for dp, _dn, fns in os.walk(path)
-            for fn in fns
-            if fn.endswith(".parquet")
-        )
-        if not parts:
-            return ()
-        path = parts[0]
-    schema = pq.read_schema(path)
-    out = []
-    for field in schema:
-        t = field.type
-        if str(t).startswith("timestamp[ns"):
-            out.append(field.name)
-    return tuple(out)
+def _footer_schema(path: str):
+    """The table's arrow schema from its parquet footer (metadata only,
+    no data read) and whether ``path`` is one file. A directory-shaped
+    table (e.g. a Spark-written scaled corpus) is inspected through its
+    first part file; None when it has none."""
+    if not os.path.isdir(path):
+        return pq.read_schema(path), True
+    parts = sorted(
+        os.path.join(dp, fn)
+        for dp, _dn, fns in os.walk(path)
+        for fn in fns
+        if fn.endswith(".parquet")
+    )
+    return (pq.read_schema(parts[0]) if parts else None), False
+
+
+_SPARK_TYPES = {
+    pa.int32(): IntegerType(),
+    pa.int64(): LongType(),
+    pa.float32(): FloatType(),
+    pa.float64(): DoubleType(),
+    pa.bool_(): BooleanType(),
+    pa.string(): StringType(),
+    pa.large_string(): StringType(),
+    pa.date32(): DateType(),
+}
+
+
+def _spark_type(t: pa.DataType):
+    """The type Spark's parquet schema inference gives an arrow footer
+    type under this session's settings (session.py), or None for a type
+    this map does not cover."""
+    if t in _SPARK_TYPES:
+        return _SPARK_TYPES[t]
+    if pa.types.is_timestamp(t):
+        if t.unit == "ns":
+            return LongType()  # spark.sql.legacy.parquet.nanosAsLong
+        return TimestampType() if t.tz else TimestampNTZType()
+    if pa.types.is_list(t):
+        e = _spark_type(t.value_type)
+        return None if e is None else ArrayType(e, t.value_field.nullable)
+    return None
+
+
+def _spark_schema(schema: pa.Schema) -> StructType | None:
+    """Spark's inferred schema of a one-file table, from its footer;
+    None when a column's type is outside :func:`_spark_type`'s map."""
+    types = [_spark_type(f.type) for f in schema]
+    if any(t is None for t in types):
+        return None
+    return StructType([StructField(f.name, t, True) for f, t in zip(schema, types)])
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table with timestamp columns normalized to
-    session-timezone TIMESTAMP (session tz is UTC, see session.py)."""
+    session-timezone TIMESTAMP (session tz is UTC, see session.py).
+
+    The driver reads the footer with pyarrow anyway (for the nanosecond
+    columns), so a one-file table is read with the schema Spark would
+    infer from that footer: Spark's own inference is one more Spark job
+    per load that reads the same footer again."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    for c in _ns_timestamp_cols(path):
-        # integer div — double division would lose precision on ~1e18 nanos
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    footer, one_file = _footer_schema(path)
+    schema = _spark_schema(footer) if one_file else None
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+    for field in footer or ():
+        if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
+            c = field.name
+            # integer div — double division would lose precision on ~1e18 nanos
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
     if ntz:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz})

@@ -316,6 +316,21 @@ class StreamingNearDup:
         epoch owns one ep= partition)."""
         return _read_store(self.spark, self.pairs_path)
 
+    def compact(self) -> dict[str, tuple[int, int]]:
+        """Fold the index stores (:meth:`NearDupIndex.compact`) and the
+        pairs store, by id_a, into one base each
+        (functions.dedup.compact_store). Serialize against apply_batch.
+        Raises while a failed micro-batch awaits replay."""
+        self._epochs.check_settled(
+            self.index.bands_path, self.index.shingles_path, self.pairs_path
+        )
+        return {
+            **self.index.compact(),
+            "pairs": compact_store(
+                self.spark, self.pairs_path, self._epochs, "id_a", "id_a"
+            ),
+        }
+
 
 class StreamingSemDedup:
     """At-ingest SEMANTIC dedup for an embedding stream — SemDeDup
@@ -496,6 +511,23 @@ class StreamingSemDedup:
             checkpoint_dir=checkpoint_dir,
             trigger_seconds=trigger_seconds,
         )
+
+    def compact(self) -> dict[str, tuple[int, int]]:
+        """Fold the kept-vectors store (still in its ``cell=``
+        directories, which the batch's cell pruning reads) and the drops
+        store into one base each (functions.dedup.compact_store).
+        Serialize against apply_batch. Raises while a failed micro-batch
+        awaits replay."""
+        self._epochs.check_settled(self.vectors_path, self.drops_path)
+        return {
+            "vectors": compact_store(
+                self.spark, self.vectors_path, self._epochs, "cell", "vec_id",
+                partition_by=("cell",),
+            ),
+            "drops": compact_store(
+                self.spark, self.drops_path, self._epochs, "vec_id", "vec_id"
+            ),
+        }
 
     def kept(self) -> DataFrame:
         """The deduplicated corpus (all kept vectors)."""

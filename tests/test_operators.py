@@ -973,11 +973,12 @@ def test_pq_adc_recall_and_rerank_exactness(spark, sf_dir):
 
 def test_ann_train_memo_repeat_invocation_identical(spark, sf_dir):
     """A repeat invocation of the ANN queries returns the exact same
-    row multiset as the first: ``knn_pq_adc`` retrains on every call,
-    and the session-scoped memos (queries/similarity._IVF_TRAIN_MEMO /
-    _IVFPQ_MEMO) reuse the trained codebook/index on the second call
-    (training is deterministic, so memo-hit and memo-miss paths are
-    interchangeable by construction; this pins it)."""
+    row multiset as the first: ``knn_pq_adc`` and ``knn_ivf_trained``
+    retrain on every call (training is deterministic, so the second
+    call's books equal the first's), and ``knn_ivfpq_stored``'s
+    session-scoped ``_IVFPQ_MEMO`` reuses the stored index on the
+    second call (memo-hit and memo-miss paths are interchangeable by
+    construction; this pins it)."""
     from polar_spark.queries import QUERIES
 
     for name in ("knn_pq_adc", "knn_ivfpq_stored", "knn_ivf_trained"):
@@ -1074,28 +1075,173 @@ def test_train_pq_codebook_trains_on_hash_ordered_sample(spark):
     assert train_pq_codebook(df, "v", "vec_id", iters=2) == want
 
 
-def test_knn_pq_adc_job_budget_and_single_python_stage(spark, sf_dir):
-    """One ``knn_pq_adc`` call (training included) runs at most 7 Spark
-    jobs, and its plan has exactly one MapInPandas (the fused encode +
-    ADC + exact-dot scan) and no Python UDF evaluation node."""
-    import re
-
+def _job_group_run(spark, group: str, build):
+    """(plan, rows, job ids) of ``build()``'s DataFrame, its plan taken
+    before the run (AQE adds a final plan) and its jobs counted over the
+    build and the collect."""
     from polar_spark.plans.explain import explain_str
-    from polar_spark.queries import QUERIES
 
     spark.catalog.clearCache()
     sc = spark.sparkContext
-    sc.setJobGroup("pq_adc_budget", "knn_pq_adc")
+    sc.setJobGroup(group, group)
     try:
-        df = QUERIES["knn_pq_adc"].fn(spark, sf_dir)
-        plan = explain_str(df)  # before the run: AQE adds a final plan
-        assert df.collect()
+        df = build()
+        plan = explain_str(df)
+        rows = df.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("pq_adc_budget")
+    return plan, rows, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_knn_pq_adc_local_plan_job_budget(spark, sf_dir):
+    """On a corpus of at most PQ_MAX_TRAIN vectors the training collect
+    holds the whole corpus, so one ``knn_pq_adc`` call (training
+    included) runs one Spark job, the training collect: the table loads
+    with its footer's schema, and the result is a local relation, whose
+    collect runs no job. Its plan has no MapInPandas and no Python
+    evaluation node."""
+    import re
+
+    from polar_spark.queries import QUERIES
+
+    plan, rows, jobs = _job_group_run(
+        spark, "pq_adc_local", lambda: QUERIES["knn_pq_adc"].fn(spark, sf_dir)
+    )
+    assert rows
+    assert len(jobs) == 1, sorted(jobs)
+    assert not re.search(r"MapInPandas|ArrowEvalPython|BatchEvalPython", plan), plan
+
+
+def test_knn_pq_adc_job_budget_and_single_python_stage(spark, tmp_path):
+    """Above PQ_MAX_TRAIN vectors ``knn_pq_adc`` runs the Spark plan with
+    the books of its bounded sample: one call (training included) over a
+    4-file parquet corpus runs at most 7 Spark jobs, its plan has
+    exactly one MapInPandas (the fused encode + ADC + exact-dot scan)
+    and no Python UDF evaluation node, and its rows are
+    ``pq_topk_adc``'s over ``train_pq_codebook``'s books."""
+    import re
+
+    import numpy as np
+
+    from polar_spark.functions.similarity import (
+        PQ_MAX_TRAIN,
+        pq_topk_adc,
+        train_pq_codebook,
+    )
+    from polar_spark.queries.similarity import pq_adc_top5
+
+    V = np.random.default_rng(7).integers(-50, 51, size=(5000, 16))
+    assert len(V) > PQ_MAX_TRAIN
+    spark.createDataFrame(
+        [(i, [int(x) for x in V[i]]) for i in range(len(V))],
+        "vec_id long, v array<bigint>",
+    ).repartition(4).write.parquet(str(tmp_path / "corpus"))
+    df = spark.read.parquet(str(tmp_path / "corpus"))
+    plan, rows, jobs = _job_group_run(spark, "pq_adc_spark", lambda: pq_adc_top5(df))
     assert 0 < len(jobs) <= 7, sorted(jobs)
     assert len(re.findall(r"\(\d+\) MapInPandas\b", plan)) == 1, plan
     assert not re.search(r"ArrowEvalPython|BatchEvalPython", plan), plan
+    want = pq_topk_adc(
+        df.filter(F.col("vec_id") < 10).select(
+            F.col("vec_id").alias("qid"), F.col("v").alias("qv")
+        ),
+        df.select("vec_id", F.col("v").alias("cv")),
+        train_pq_codebook(df, "v", "vec_id", iters=2),
+        k=5,
+        shortlist=400,  # max(400, 5000 // 50)
+    ).select("qid", "vec_id", "dot", "rn")
+    assert sorted(map(tuple, rows)) == sorted(map(tuple, want.collect()))
+    assert len(rows) == 50
+
+
+def test_pq_topk_adc_plans_return_identical_rows(spark):
+    """The driver plan (``pq_topk_adc_local``, one kernel call over the
+    whole corpus) and the Spark plan (``pq_topk_adc``, the kernel per
+    partition, then two windows) return identical rows for the same
+    books, over 4 partitions and a corpus of exact-duplicate vectors
+    with few distinct values, so ADC and exact dots tie often and the
+    id tie-break decides both cuts."""
+    import numpy as np
+
+    from polar_spark.functions.similarity import (
+        pq_topk_adc,
+        pq_topk_adc_local,
+        train_pq_codebook,
+    )
+
+    V = np.random.default_rng(3).integers(-3, 4, size=(600, 16))
+    V[200:400] = V[:200]  # every vector of the first third twice more
+    V[400:] = V[:200]
+    df = spark.createDataFrame(
+        [(i, [int(x) for x in V[i]]) for i in range(len(V))],
+        "vec_id long, v array<bigint>",
+    ).repartition(4)
+    books = train_pq_codebook(df, "v", "vec_id", iters=2)
+    qids = list(range(10))
+    got_spark = pq_topk_adc(
+        df.filter(F.col("vec_id") < 10).select(
+            F.col("vec_id").alias("qid"), F.col("v").alias("qv")
+        ),
+        df.select("vec_id", F.col("v").alias("cv")),
+        books,
+        k=5,
+        shortlist=30,
+    ).select("qid", "vec_id", "dot", "rn")
+    got_local = pq_topk_adc_local(
+        np.arange(len(V)), V, books, qids, V[qids], k=5, shortlist=30
+    )
+    rows = sorted(map(tuple, got_spark.collect()))
+    assert rows == sorted(got_local) and len(rows) == 50
+    # ties decide the cut: some query's top 5 repeats a dot
+    assert any(len({r[2] for r in rows if r[0] == q}) < 5 for q in qids)
+
+
+def test_knn_pq_adc_matches_plain_python_reference(spark, sf_dir):
+    """``knn_pq_adc``'s rows equal a plain-Python rendering of its
+    definition that shares no code with the kernel: the numpy Lloyd
+    reference books over the whole corpus (the sample is the corpus),
+    then loops for the PQ codes (nearest centroid, ties → lowest code),
+    the ADC dot of every non-self candidate, the shortlist by (adc
+    desc, id) of min(4096, max(400, n // 50)), and the top 5 of it by
+    (exact dot desc, id)."""
+    from polar_spark.functions.similarity import quantize
+    from polar_spark.queries import QUERIES
+
+    e = load_table(spark, sf_dir, "embeddings")
+    corpus = sorted(
+        (r["vec_id"], list(r["v"]))
+        for r in e.select("vec_id", quantize("embedding").alias("v")).collect()
+    )
+    books = _lloyd_pq_reference(corpus)
+    nsub = len(books)
+    dsub = len(books[0][0])
+
+    def sub(v, s):
+        return v[s * dsub : (s + 1) * dsub]
+
+    def dotp(a, b):
+        return sum(x * y for x, y in zip(a, b))
+
+    def code(v, s):
+        d2 = [sum((x - c) ** 2 for x, c in zip(sub(v, s), cent)) for cent in books[s]]
+        return d2.index(min(d2))
+
+    codes = {i: [code(v, s) for s in range(nsub)] for i, v in corpus}
+    shortlist = min(4096, max(400, len(corpus) // 50))
+    want = []
+    for qid, qv in corpus:
+        if qid >= 10:
+            continue
+        adc = [
+            (-sum(dotp(sub(qv, s), books[s][codes[i][s]]) for s in range(nsub)), i, v)
+            for i, v in corpus
+            if i != qid
+        ]
+        short = sorted(adc)[:shortlist]
+        top = sorted((-dotp(qv, v), i) for _, i, v in short)[:5]
+        want += [(qid, i, -nd, rn) for rn, (nd, i) in enumerate(top, 1)]
+    got = QUERIES["knn_pq_adc"].fn(spark, sf_dir).collect()
+    assert sorted(map(tuple, got)) == sorted(want) and len(want) == 50
 
 
 def test_train_pq_codebook_rejects_ragged_vectors(spark):

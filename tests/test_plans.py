@@ -542,3 +542,45 @@ def test_zorder_domain_checked_not_masked(spark, tmp_path):
     assert got.count() == 500
     # box entirely outside the domain: correctly empty, no error
     assert read_z_box(spark, path, "x", "y", 2000, 3000, 0, 10).count() == 0
+
+
+def test_load_table_reads_footer_schema_without_a_spark_job(spark, sf_dir, tmp_path):
+    """A one-file table loads with exactly the schema Spark infers from
+    its footer, over every testdata table at every scale factor (int,
+    double, string, microsecond timestamp and float-list columns) and a
+    nanosecond-timestamp file, and the load runs no Spark job; a type
+    outside the footer map falls back to Spark's inference."""
+    import datetime as dt
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from polar_spark.sources.tables import _footer_schema, _spark_schema
+
+    pq.write_table(
+        pa.table({
+            "ts": pa.array([dt.datetime(2024, 1, 1)], pa.timestamp("ns")),
+            "u": pa.array([1], pa.uint8()),
+        }),
+        str(tmp_path / "odd.parquet"),
+    )
+    paths = sorted(glob.glob(os.path.join(os.path.dirname(sf_dir), "*", "*.parquet")))
+    assert len(paths) >= 10
+    for p in paths:
+        assert _spark_schema(_footer_schema(p)[0]) == spark.read.parquet(p).schema, p
+    odd = _footer_schema(str(tmp_path / "odd.parquet"))[0]
+    assert _spark_schema(odd) is None
+    assert _spark_schema(odd.remove(1)) == spark.read.parquet(
+        str(tmp_path / "odd.parquet")
+    ).select("ts").schema
+    sc = spark.sparkContext
+    sc.setJobGroup("load_table_jobs", "load_table")
+    try:
+        schema = load_table(spark, sf_dir, "events").schema
+        load_table(spark, str(tmp_path), "odd")  # inferred: one job
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "TimestampType" in str(schema)
+    assert len(sc.statusTracker().getJobIdsForGroup("load_table_jobs")) == 1

@@ -321,3 +321,81 @@ def test_lsh_sink_compaction_crash_drops_like_uncompacted(
     sd.compact()
     _assert_one_live_base(sd.bands_path, sd.vectors_path, sd.drops_path)
     assert state(sd) == want
+
+
+def test_streaming_near_dup_compact_keeps_pairs_and_decisions(spark, tmp_path):
+    """StreamingNearDup.compact() folds the index stores and the pairs
+    store to one live base each: pairs() is unchanged, the next
+    micro-batch emits what an uncompacted twin emits, and compact()
+    refuses while an epoch awaits replay."""
+    from polar_spark.streaming.dedup import StreamingNearDup
+
+    def sink(name):
+        return StreamingNearDup(
+            spark, str(tmp_path / f"{name}_idx"), str(tmp_path / f"{name}_pairs")
+        )
+
+    def pairs(s):
+        return sorted((r[0], r[1], round(r[2], 9)) for r in s.pairs().collect())
+
+    snd, twin = sink("snd"), sink("twin")
+    for s in (snd, twin):
+        for epoch, lo in enumerate((0, 20, 40)):
+            assert s.apply_batch(_near_dup_docs(spark, lo, lo + 20), epoch, "nd")
+    before = pairs(snd)
+    assert [p for p in before if p[0] < 20 <= p[1]], "pairs must cross batches"
+    snd.compact()
+    _assert_one_live_base(
+        snd.index.bands_path, snd.index.shingles_path, snd.pairs_path
+    )
+    assert pairs(snd) == before
+    for s in (snd, twin):
+        assert s.apply_batch(_near_dup_docs(spark, 60, 80), 3, "nd")
+    assert pairs(snd) == pairs(twin) and len(pairs(twin)) > len(before)
+    tag = epoch_tag("nd", 4)
+    snd.index.query_and_update(_near_dup_docs(spark, 80, 84), tag=tag).collect()
+    with pytest.raises(RuntimeError, match=tag):
+        snd.compact()
+
+
+def test_streaming_semdedup_compact_keeps_kept_drops_and_decisions(spark, tmp_path):
+    """StreamingSemDedup.compact() folds the kept-vectors store (in its
+    cell= directories) and the drops store to one live base each:
+    kept() and dropped() are unchanged, and the next micro-batch decides
+    as an uncompacted twin does."""
+    from polar_spark.streaming.dedup import StreamingSemDedup
+
+    cents = _lsh_rows(0, 4)
+
+    def sink(name):
+        return StreamingSemDedup(
+            spark, str(tmp_path / f"{name}_idx"), str(tmp_path / f"{name}_drops"),
+            cents,
+        )
+
+    def trigger(s, epoch, lo, hi):
+        b = spark.createDataFrame(_lsh_rows(lo, hi), "vec_id long, v array<bigint>")
+        assert s.apply_batch(b, epoch, "sem")
+
+    def state(s):
+        return (
+            sorted(r["vec_id"] for r in s.kept().collect()),
+            sorted(r["vec_id"] for r in s.dropped().collect()),
+        )
+
+    sd, twin = sink("sd"), sink("twin")
+    for s in (sd, twin):
+        for epoch, lo in enumerate((0, 30, 60)):
+            trigger(s, epoch, lo, lo + 30)
+    before = state(sd)
+    assert [i for i in before[1] if i >= 30], "drops must cross batches"
+    sd.compact()
+    _assert_one_live_base(sd.vectors_path, sd.drops_path)
+    base = live_dirs(sd.vectors_path)[0].path
+    assert any(n.startswith("cell=") for n in os.listdir(base))
+    assert state(sd) == before
+    for s in (sd, twin):
+        trigger(s, 3, 90, 120)
+    want = state(twin)
+    assert [i for i in want[1] if i >= 90], "the trigger must drop a stored twin"
+    assert state(sd) == want
