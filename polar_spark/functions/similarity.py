@@ -29,6 +29,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -48,6 +49,9 @@ NPROBE = 4
 # brute_force_topk collects the query set driver-side; beyond this the
 # closure broadcast + per-batch matmul need the bucketed ANN paths
 MAX_BRUTE_FORCE_QUERIES = 10_000
+# Faiss's max_points_per_centroid: a k-means trainer reads at most this
+# many points per centroid, so its training input has a row bound
+MAX_POINTS_PER_CENTROID = 256
 
 
 def quantize(col: str | Column) -> Column:
@@ -56,6 +60,49 @@ def quantize(col: str | Column) -> Column:
     return F.transform(
         c, lambda x: F.floor(x.cast("double") * QUANT).cast("bigint")
     )
+
+
+def quantize_np(x: np.ndarray) -> np.ndarray | None:
+    """numpy twin of :func:`quantize`: ``floor(float64(x)·QUANT)`` as
+    int64, the same IEEE multiply and floor. None when a component is
+    NaN or ±inf or has ``|x·QUANT| ≥ 2^63``: there Spark's long cast
+    gives 0 or saturates and numpy's cast is undefined, so the caller
+    runs its Spark plan instead."""
+    p = x.astype(np.float64) * QUANT
+    if not (np.abs(p) < 2.0**63).all():  # False for NaN as well
+        return None
+    return np.floor(p).astype(np.int64)
+
+
+def quantized_corpus(
+    t: pa.Table, id_col: str, vec_col: str
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """``(ids, V)`` of a corpus read with pyarrow: the rows Spark's
+    ``select(id, quantize(vec))`` gives, with V an (n, dims) int64
+    matrix, for a driver-side plan. None, so the caller runs its Spark
+    plan with that plan's rows or errors, unless the corpus is
+    non-empty, its ids are unique non-null signed integers and its
+    vectors non-null, equal-length float32/float64 lists with no null
+    component that :func:`quantize_np` accepts. Only on such input do
+    both plans agree bit for bit: unique ids make row order irrelevant
+    to them."""
+    ids, vecs = t.column(id_col).combine_chunks(), t.column(vec_col).combine_chunks()
+    if (
+        not len(ids)
+        or ids.null_count
+        or vecs.null_count
+        or not pa.types.is_signed_integer(ids.type)
+        or not pa.types.is_list(vecs.type)
+        or vecs.type.value_type not in (pa.float32(), pa.float64())
+    ):
+        return None
+    flat = vecs.flatten()
+    lens = vecs.value_lengths().to_numpy()
+    ids = ids.to_numpy().astype(np.int64)
+    if flat.null_count or (lens != lens[0]).any() or len(np.unique(ids)) < len(ids):
+        return None
+    V = quantize_np(flat.to_numpy().reshape(len(ids), int(lens[0])))
+    return None if V is None else (ids, V)
 
 
 def _mat(s: pd.Series) -> np.ndarray:
@@ -476,6 +523,41 @@ def brute_force_topk(
     return partial.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
+def _ivf_cell_sums(batches, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """One IVF Lloyd round's statistics, the kernel both
+    :func:`train_ivf_codebook` plans run: each vector of ``batches``
+    (int64 matrices) goes to its nearest centroid row of ``C`` (the
+    ``_d2_matrix``/argmin kernel :func:`ivf_cell` evaluates, ties →
+    lowest row), and the exact int64 per-row sums ``S`` and counts ``N``
+    come back."""
+    S = np.zeros(C.shape, dtype=np.int64)
+    N = np.zeros(len(C), dtype=np.int64)
+    for V in batches:
+        a = np.argmin(_d2_matrix(V, C), axis=1)
+        np.add.at(S, a, V)
+        N += np.bincount(a, minlength=len(C))
+    return S, N
+
+
+def _ivf_lloyd(cents: list[tuple[int, list[int]]], iters: int, cell_sums):
+    """Lloyd rounds from ``cents``: ``cell_sums(C)`` gives the exact
+    ``(S, N)`` of the rows of :func:`_centroid_arrays`' ``C``; a hit
+    cell's centroid becomes ``floor(double(sum)/double(count))``, an
+    empty cell keeps its previous one."""
+    for _ in range(iters):
+        cids, C = _centroid_arrays(cents)
+        S, N = cell_sums(C)
+        hit = np.flatnonzero(N)
+        # floor of IEEE double division — bit-identical to the former
+        # F.floor(F.sum/F.count) Spark aggregate
+        means = np.floor(
+            S[hit].astype(np.float64) / N[hit, None].astype(np.float64)
+        ).astype(np.int64)
+        new = {int(cids[j]): m.tolist() for j, m in zip(hit, means)}
+        cents = [(cid, new.get(cid, old)) for cid, old in cents]
+    return cents
+
+
 def train_ivf_codebook(
     candidates: DataFrame,
     vec_col: str,
@@ -487,16 +569,18 @@ def train_ivf_codebook(
     coarse codebook of ``nlist`` cells, as the ``centroids`` input of
     :func:`ivf_topk` / :func:`ivf_cell`.
 
-    Scale shape: each iteration is ONE narrow Arrow pass that assigns
-    cells (the same ``_d2_matrix``/argmin kernel :func:`ivf_cell`
-    evaluates, via the same :func:`_centroid_arrays` ordering) and
-    accumulates exact per-cell integer sums/counts per partition — only
-    O(parts·nlist·dims) partial rows reach the driver, never O(corpus).
-    (The former shape posexploded the corpus into corpus×dims (dim, x)
-    rows per iteration — guide §2.3/§4.2, r13 optimization round; the
-    partials merge by exact integer addition and the mean is
+    Two plans, one codebook. This is the Spark plan, for a corpus that
+    is not in driver memory: the init is an ``orderBy.limit`` collect,
+    and each iteration is ONE narrow Arrow pass that runs
+    :func:`_ivf_cell_sums` per partition — only O(parts·nlist·dims)
+    partial rows reach the driver, never O(corpus). The partials merge
+    by exact integer addition and the mean is
     ``floor(double(sum)/double(count))``, the same IEEE op sequence the
-    old Spark aggregate evaluated, so codebooks are bit-identical.)
+    former corpus×dims posexplode aggregate evaluated (guide §2.3/§4.2),
+    so codebooks are bit-identical to it. A corpus the footer gate
+    reads on the driver (``knn_ivf_trained``: at most
+    MAX_POINTS_PER_CENTROID·nlist rows) trains with
+    :func:`train_ivf_codebook_local`, the same kernel over one batch.
     Deterministic: init = the ``nlist`` lowest-id vectors, integer sums
     are exact and order-independent, means re-quantize with floor.
     Empty cells keep their previous centroid. The oracle-checked query
@@ -506,61 +590,42 @@ def train_ivf_codebook(
     base = candidates.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     init = base.orderBy("_id").limit(nlist).collect()
     cents = [(i, [int(x) for x in r["_v"]]) for i, r in enumerate(init)]
-    for _ in range(iters):
-        cids, C = _centroid_arrays(cents)
-        neff = len(cids)
 
-        def _stats(it):
-            dims = C.shape[1]
-            S = np.zeros((neff, dims), dtype=np.int64)
-            N = np.zeros(neff, dtype=np.int64)
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                V = _mat(pdf["_v"])
-                a = np.argmin(_d2_matrix(V, C), axis=1)
-                np.add.at(S, a, V)
-                N += np.bincount(a, minlength=neff)
-            nz = np.nonzero(N)[0]
+    def cell_sums(C):
+        def part(it):
+            S, N = _ivf_cell_sums((_mat(pdf["_v"]) for pdf in it if len(pdf)), C)
+            nz = np.flatnonzero(N)
             if nz.size:
                 yield pd.DataFrame(
-                    {
-                        "i": nz.astype("int64"),
-                        "n": N[nz],
-                        "sums": [S[j].tolist() for j in nz],
-                    }
+                    {"i": nz.astype("int64"), "n": N[nz], "sums": list(S[nz])}
                 )
 
-        parts = base.select("_v").mapInPandas(
-            _stats, "i long, n long, sums array<long>"
-        ).collect()
-        totS: dict[int, list[int]] = {}
-        totN: dict[int, int] = {}
-        for r in parts:
-            cid = int(cids[int(r["i"])])
-            if cid in totS:
-                acc = totS[cid]
-                for d, x in enumerate(r["sums"]):
-                    acc[d] += int(x)
-                totN[cid] += int(r["n"])
-            else:
-                totS[cid] = [int(x) for x in r["sums"]]
-                totN[cid] = int(r["n"])
-        cents = [
-            (
-                cid,
-                [
-                    # floor of IEEE double division — bit-identical to the
-                    # former F.floor(F.sum/F.count) Spark aggregate
-                    int(math.floor(float(s) / float(totN[cid])))
-                    for s in totS[cid]
-                ]
-                if cid in totN
-                else old,
-            )
-            for cid, old in cents
-        ]
-    return cents
+        S = np.zeros(C.shape, dtype=np.int64)
+        N = np.zeros(len(C), dtype=np.int64)
+        for r in (
+            base.select("_v")
+            .mapInPandas(part, "i long, n long, sums array<long>")
+            .collect()
+        ):
+            S[r["i"]] += r["sums"]
+            N[r["i"]] += r["n"]
+        return S, N
+
+    return _ivf_lloyd(cents, iters, cell_sums)
+
+
+def train_ivf_codebook_local(
+    ids: np.ndarray, V: np.ndarray, nlist: int = 256, iters: int = 4
+) -> list[tuple[int, list[int]]]:
+    """:func:`train_ivf_codebook` over a corpus in driver memory (``ids``
+    and the (n, dims) int64 matrix ``V``, as :func:`quantized_corpus`
+    gives them): the same init, :func:`_ivf_cell_sums` over one batch and
+    the same update, so the same codebook with no Spark job. Row order
+    does not matter: the init takes the lowest ids and the sums are
+    exact integers."""
+    init = V[np.argsort(ids, kind="stable")[:nlist]]
+    cents = [(i, v.tolist()) for i, v in enumerate(init)]
+    return _ivf_lloyd(cents, iters, lambda C: _ivf_cell_sums([V], C))
 
 
 def hyperplane_weights(dims: int, planes: int = N_PLANES) -> list[list[int]]:
@@ -1039,9 +1104,9 @@ def bucketed_cosine_pairs(
 
 PQ_NSUB = 8
 PQ_KSUB = 16
-# Faiss's max_points_per_centroid bound: PQ training reads at most 256
-# points per code, so the sample the driver collects is bounded
-PQ_MAX_TRAIN = 256 * PQ_KSUB
+# PQ training reads at most MAX_POINTS_PER_CENTROID points per code, so
+# the sample the driver collects is bounded
+PQ_MAX_TRAIN = MAX_POINTS_PER_CENTROID * PQ_KSUB
 
 
 def pq_training_sample(
@@ -1055,9 +1120,15 @@ def pq_training_sample(
     whole id range, not from its low end. ``ids``/``V`` (an (n, dims)
     int64 matrix) keep the first PQ_MAX_TRAIN rows; ``complete`` says
     the corpus had no more rows than that, so the sample IS the corpus
-    (the extra row only detects that). Raises on an empty corpus and on
-    ragged vectors — a raise, not an assert (asserts vanish under
-    python -O)."""
+    (the extra row only detects that). Raises on an empty corpus, on
+    null vectors or components and on ragged vectors — a raise, not an
+    assert (asserts vanish under python -O).
+
+    This collect is the Spark plan's training read. ``knn_pq_adc`` skips
+    it when the footer gate (sources/tables.read_small_table) shows the
+    corpus has at most PQ_MAX_TRAIN rows: the driver then reads the
+    corpus with pyarrow and quantizes it in numpy
+    (:func:`quantized_corpus`), the same rows this sample would hold."""
     t = (
         candidates.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
         .orderBy(F.xxhash64("_id"), "_id")
@@ -1071,7 +1142,12 @@ def pq_training_sample(
         raise ValueError("train_pq_codebook: empty training corpus")
     ids = t.column("_id").to_numpy()
     vcol = t.column("_v").combine_chunks()
-    lens = vcol.value_lengths().to_numpy(zero_copy_only=False)
+    if vcol.null_count or vcol.flatten().null_count:
+        raise ValueError(
+            "null PQ training vectors: every training vector and every "
+            "component must be non-null"
+        )
+    lens = vcol.value_lengths().to_numpy()
     dims = int(lens[np.argmin(ids)])
     if (lens != dims).any():
         raise ValueError(

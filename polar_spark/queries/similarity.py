@@ -13,17 +13,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from polar_spark.functions.similarity import (
+    MAX_POINTS_PER_CENTROID,
     NLIST,
     NPROBE,
+    PQ_MAX_TRAIN,
     brute_force_topk,
     dot,
     ivf_topk,
     lsh_bucket,
     quantize,
+    quantized_corpus,
     sq_norm,
 )
 from polar_spark.queries.registry import query
-from polar_spark.sources.tables import load_table
+from polar_spark.sources.tables import load_table, read_small_table
 
 _QV = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
 
@@ -227,20 +230,43 @@ def knn_ivf_twolevel_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _small_quantized_corpus(sf_dir: str, max_rows: int):
+    """``(ids, V)`` of the quantized ``embeddings`` corpus, read and
+    quantized on the driver with no Spark job, when its footer shows one
+    file of at most ``max_rows`` rows (sources/tables.read_small_table)
+    and functions/similarity.quantized_corpus accepts its values; None
+    otherwise, and the caller runs its Spark plan."""
+    t = read_small_table(sf_dir, "embeddings", ["vec_id", "embedding"], max_rows)
+    return None if t is None else quantized_corpus(t, "vec_id", "embedding")
+
+
 @query("knn_ivf_trained")  # no oracle: iterative k-means is not SQL-expressible
 def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with a TRAINED coarse codebook (deterministic Lloyd's
     k-means, functions/similarity.train_ivf_codebook) instead of the
     trivial first-NLIST one — the realistic-scale path where the
-    codebook is produced by k-means/Faiss and passed in. Driver check is
-    rows-only (iterative training has no ANSI-SQL equivalent); recall vs
-    brute force is pytest-asserted in tests/test_operators.py."""
-    from polar_spark.functions.similarity import train_ivf_codebook
+    codebook is produced by k-means/Faiss and passed in. When the
+    footer gate admits the corpus (at most MAX_POINTS_PER_CENTROID·nlist
+    rows) the codebook trains on the driver
+    (train_ivf_codebook_local, no Spark job); otherwise in Spark, with
+    the same codebook. The search (ivf_topk) runs in Spark either way.
+    Driver check is rows-only (iterative training has no ANSI-SQL
+    equivalent); recall vs brute force is pytest-asserted in
+    tests/test_operators.py."""
+    from polar_spark.functions.similarity import (
+        train_ivf_codebook,
+        train_ivf_codebook_local,
+    )
 
+    nlist = 32
+    corpus = _small_quantized_corpus(sf_dir, MAX_POINTS_PER_CENTROID * nlist)
     e = load_table(spark, sf_dir, "embeddings")
     qv = e.select("vec_id", quantize("embedding").alias("v"))
     # every call trains: the timed query includes its declared work
-    cb = train_ivf_codebook(qv, "v", "vec_id", nlist=32, iters=2)
+    if corpus is None:
+        cb = train_ivf_codebook(qv, "v", "vec_id", nlist=nlist, iters=2)
+    else:
+        cb = train_ivf_codebook_local(*corpus, nlist=nlist, iters=2)
     queries = qv.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
@@ -254,16 +280,25 @@ def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-domain ANN: product quantization + asymmetric-distance
     scan + exact re-rank (Faiss IVFADC+R shape), top-5 for the
-    ``vec_id < 10`` probes; see :func:`pq_adc_top5`. Rows-only driver
-    check (iterative training); recall >= 0.8 and re-rank exactness are
+    ``vec_id < 10`` probes. Two plans, the same rows. When the parquet
+    footer shows one file of at most PQ_MAX_TRAIN rows, the corpus is
+    its own training sample: the driver reads it with pyarrow, quantizes
+    it in numpy and runs :func:`_pq_adc_local`, with no Spark job.
+    Directory-shaped and larger tables, and values the driver path
+    declines (functions/similarity.quantized_corpus), run
+    :func:`pq_adc_top5` over the loaded table. Rows-only driver check
+    (iterative training); recall >= 0.8 and re-rank exactness are
     value-checked by ``knn_pq_recall_law`` and pytest-asserted in
     tests/test_operators.py."""
+    corpus = _small_quantized_corpus(sf_dir, PQ_MAX_TRAIN)
+    if corpus is not None:
+        return _pq_adc_local(spark, *corpus)
     e = load_table(spark, sf_dir, "embeddings")
     return pq_adc_top5(e.select("vec_id", quantize("embedding").alias("v")))
 
 
 def pq_adc_top5(qv: DataFrame) -> DataFrame:
-    """``knn_pq_adc`` over a quantized ``(vec_id, v)`` corpus:
+    """``knn_pq_adc`` over a quantized ``(vec_id, v)`` corpus in Spark:
     ``(qid, vec_id, dot, rn)``. Vectors are encoded as 8 byte-codes
     (32x smaller than raw floats). Every call trains its codebook from
     one bounded Arrow collect (functions/similarity.pq_training_sample:
@@ -274,44 +309,61 @@ def pq_adc_top5(qv: DataFrame) -> DataFrame:
 
     The plan follows the collect. When the sample is complete (the
     corpus has at most PQ_MAX_TRAIN vectors) every vector is already on
-    the driver, so the scan runs there on the same kernel
-    (pq_topk_adc_local): the training collect is the call's one Spark
-    job, and the rows come back as a local DataFrame. Otherwise the
+    the driver, so the rest is :func:`_pq_adc_local`: the training
+    collect is the call's one Spark job. (``knn_pq_adc`` skips even that
+    job when the footer gate shows the corpus fits.) Otherwise the
     search is pq_topk_adc's fused Spark scan with the collected books:
     a shortlist count, a query collect, one mapInPandas pass and two
     windows (shuffle O(parts·shortlist·|Q|), independent of n). Both
     plans give the same rows; driver memory stays bounded by the
     training collect."""
-    import pandas as pd
-
     from polar_spark.functions.similarity import (
         pq_lloyd,
         pq_topk_adc,
-        pq_topk_adc_local,
         pq_training_sample,
     )
 
     ids, V, complete = pq_training_sample(qv, "v", "vec_id")
-    books = pq_lloyd(ids, V, iters=2)
-    if not complete:
-        queries = qv.filter(F.col("vec_id") < 10).select(
-            F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-        )
-        return pq_topk_adc(
-            queries,
-            qv.select("vec_id", F.col("v").alias("cv")),
-            books,
-            k=5,
-            shortlist=_pq_shortlist(qv.count()),
-        ).select("qid", "vec_id", "dot", "rn")
+    if complete:
+        return _pq_adc_local(qv.sparkSession, ids, V)
+    queries = qv.filter(F.col("vec_id") < 10).select(
+        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
+    )
+    return pq_topk_adc(
+        queries,
+        qv.select("vec_id", F.col("v").alias("cv")),
+        pq_lloyd(ids, V, iters=2),
+        k=5,
+        shortlist=_pq_shortlist(qv.count()),
+    ).select("qid", "vec_id", "dot", "rn")
+
+
+def _pq_adc_local(spark: SparkSession, ids, V) -> DataFrame:
+    """``knn_pq_adc``'s local plan over a whole corpus in driver memory
+    (``ids`` and the quantized (n, dims) int64 matrix ``V``): pq_lloyd's
+    books, the ``ids < 10`` probes, the :func:`_pq_shortlist` of ``n``
+    and functions/similarity.pq_topk_adc_local, returned as a local
+    relation ``qid long, vec_id long, dot long, rn int`` whose collect
+    runs no Spark job.
+
+    Row order does not matter for unique ids (the footer gate's
+    quantized_corpus requires them), so a corpus in file order and the
+    same corpus in ``(xxhash64(id), id)`` order (a complete training
+    sample) give the same rows: Lloyd initialises from the lowest ids,
+    the sums are exact integers, and both cuts (the shortlist and the
+    top 5) break ties by id."""
+    import pandas as pd
+
+    from polar_spark.functions.similarity import pq_lloyd, pq_topk_adc_local
+
     probe = ids < 10
     rows = pq_topk_adc_local(
-        ids, V, books, ids[probe].tolist(), V[probe], k=5,
+        ids, V, pq_lloyd(ids, V, iters=2), ids[probe].tolist(), V[probe], k=5,
         shortlist=_pq_shortlist(len(ids)),
     )
     # from pandas (Arrow) the rows become a LocalRelation: collecting
     # it runs no Spark job
-    return qv.sparkSession.createDataFrame(
+    return spark.createDataFrame(
         pd.DataFrame(rows, columns=["qid", "vec_id", "dot", "rn"]),
         "qid long, vec_id long, dot long, rn int",
     )

@@ -12,6 +12,14 @@ Timestamp normalization: every testdata generation so far has needed one.
   columns, ...) rejects. The loader casts NTZ → TIMESTAMP; with the
   session timezone pinned to UTC (session.py) the wall-clock values are
   unchanged and bit-identical to what DuckDB's oracle reads.
+
+Footer gate: a one-file table whose footer counts at most a caller's
+row bound can be read whole on the driver with pyarrow
+(:func:`read_small_table`), with no Spark job. ``knn_pq_adc`` and
+``knn_ivf_trained`` use it to answer a corpus that fits their training
+bound on the driver; a directory-shaped table (a Spark-written scaled
+corpus) or a larger one goes through :func:`load_table` and their Spark
+plans.
 """
 
 from __future__ import annotations
@@ -56,6 +64,26 @@ def _footer_schema(path: str):
         if fn.endswith(".parquet")
     )
     return (pq.read_schema(parts[0]) if parts else None), False
+
+
+def read_small_table(
+    sf_dir: str, name: str, columns: list[str], max_rows: int
+) -> pa.Table | None:
+    """The named columns of a one-file table whose footer counts at most
+    ``max_rows`` rows, read with pyarrow on the driver: no Spark job.
+    None for a directory-shaped table, a larger one, or one missing a
+    column, so the caller runs its Spark plan (with that plan's errors).
+    The columns keep their footer types: no timestamp normalization."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if os.path.isdir(path):
+        return None
+    # one open: the footer decides, then the same handle reads the data
+    with pq.ParquetFile(path) as pf:
+        if pf.metadata.num_rows > max_rows or not set(columns) <= set(
+            pf.schema_arrow.names
+        ):
+            return None
+        return pf.read(columns=columns)
 
 
 _SPARK_TYPES = {

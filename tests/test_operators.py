@@ -535,6 +535,47 @@ def test_trained_ivf_codebook_probe(spark, sf_dir):
     assert got == want
 
 
+def test_knn_ivf_trained_trains_on_the_driver(spark, sf_dir):
+    """The footer gate admits the ``sf_dir`` corpus (one file of at most
+    MAX_POINTS_PER_CENTROID·nlist rows), so ``knn_ivf_trained`` trains
+    with ``train_ivf_codebook_local``: its codebook equals the Spark
+    trainer's, whose init collect and 2 Lloyd rounds are 3 Spark jobs,
+    and a call counted as bench.py counts it runs 4 jobs instead of 7."""
+    from polar_spark.functions.similarity import (
+        MAX_POINTS_PER_CENTROID,
+        quantize,
+        train_ivf_codebook,
+        train_ivf_codebook_local,
+    )
+    from polar_spark.queries import QUERIES
+    from polar_spark.queries.similarity import _small_quantized_corpus
+
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            out = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    corpus = _small_quantized_corpus(sf_dir, MAX_POINTS_PER_CENTROID * 32)
+    assert corpus is not None
+    qv = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", quantize("embedding").alias("v")
+    )
+    cb, n_train = jobs(
+        "ivf_train_spark", lambda: train_ivf_codebook(qv, "v", "vec_id", nlist=32, iters=2)
+    )
+    assert n_train == 3
+    assert train_ivf_codebook_local(*corpus, nlist=32, iters=2) == cb
+    _, n_call = jobs(
+        "ivf_trained_call", lambda: QUERIES["knn_ivf_trained"].fn(spark, sf_dir).count()
+    )
+    assert n_call == 4
+
+
 def test_chunking_covers_every_word_with_overlap(spark, sf_dir):
     from pyspark.sql import functions as F
 
@@ -1094,12 +1135,12 @@ def _job_group_run(spark, group: str, build):
 
 
 def test_knn_pq_adc_local_plan_job_budget(spark, sf_dir):
-    """On a corpus of at most PQ_MAX_TRAIN vectors the training collect
-    holds the whole corpus, so one ``knn_pq_adc`` call (training
-    included) runs one Spark job, the training collect: the table loads
-    with its footer's schema, and the result is a local relation, whose
-    collect runs no job. Its plan has no MapInPandas and no Python
-    evaluation node."""
+    """The ``sf_dir`` corpus is one parquet file whose footer counts at
+    most PQ_MAX_TRAIN rows, so it is its own training sample: one
+    ``knn_pq_adc`` call (training included) reads it with pyarrow,
+    quantizes and searches it in numpy, and runs no Spark job. The
+    result is a local relation, whose collect runs no job either; its
+    plan has no MapInPandas and no Python evaluation node."""
     import re
 
     from polar_spark.queries import QUERIES
@@ -1108,8 +1149,154 @@ def test_knn_pq_adc_local_plan_job_budget(spark, sf_dir):
         spark, "pq_adc_local", lambda: QUERIES["knn_pq_adc"].fn(spark, sf_dir)
     )
     assert rows
-    assert len(jobs) == 1, sorted(jobs)
+    assert len(jobs) == 0, sorted(jobs)
     assert not re.search(r"MapInPandas|ArrowEvalPython|BatchEvalPython", plan), plan
+
+
+def _write_embeddings(d, ids, vecs) -> str:
+    """A one-file ``embeddings.parquet`` (``vec_id`` int64, ``embedding``
+    list<float32>, nulls as given) under the new directory ``d``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(list(ids), pa.int64()),
+                "embedding": pa.array(
+                    [None if v is None else list(v) for v in vecs],
+                    pa.list_(pa.float32()),
+                ),
+            }
+        ),
+        str(d / "embeddings.parquet"),
+    )
+    return str(d)
+
+
+def _pq_adc_spark_outcome(spark, d):
+    """``knn_pq_adc``'s Spark plan over the corpus in ``d``: the sorted
+    rows of ``pq_adc_top5`` over ``load_table``, or its ValueError."""
+    from polar_spark.queries.similarity import pq_adc_top5
+
+    e = load_table(spark, d, "embeddings")
+    return _rows_or_error(
+        lambda: pq_adc_top5(e.select("vec_id", quantize("embedding").alias("v")))
+    )
+
+
+def _rows_or_error(build):
+    try:
+        return sorted(map(tuple, build().collect()))
+    except ValueError as ex:
+        return ("ValueError", str(ex))
+
+
+def test_knn_pq_adc_footer_gate(spark, tmp_path):
+    """The parquet footer picks ``knn_pq_adc``'s plan. A one-file corpus
+    of PQ_MAX_TRAIN rows runs no Spark job; one more row, or a
+    directory-shaped table (a Spark-written corpus), takes the Spark
+    plan. Every one gives the rows of ``pq_adc_top5`` over
+    ``load_table``."""
+    import numpy as np
+
+    from polar_spark.functions.similarity import PQ_MAX_TRAIN
+    from polar_spark.queries import QUERIES
+    from polar_spark.sources.tables import read_small_table
+
+    n = PQ_MAX_TRAIN + 1
+    V = (np.random.default_rng(5).standard_normal((n, 64)) * 0.125).astype(np.float32)
+    small = _write_embeddings(tmp_path / "small", range(n - 1), V[:-1])
+    big = _write_embeddings(tmp_path / "big", range(n), V)
+    (tmp_path / "dir").mkdir()
+    spark.createDataFrame(
+        [(i, V[i].tolist()) for i in range(300)], "vec_id long, embedding array<float>"
+    ).write.parquet(str(tmp_path / "dir" / "embeddings.parquet"))
+    cols = ["vec_id", "embedding"]
+    assert read_small_table(small, "embeddings", cols, PQ_MAX_TRAIN).num_rows == n - 1
+    assert read_small_table(big, "embeddings", cols, PQ_MAX_TRAIN) is None
+    assert read_small_table(str(tmp_path / "dir"), "embeddings", cols, n) is None
+    for d, driver in ((small, True), (big, False), (str(tmp_path / "dir"), False)):
+        _, rows, jobs = _job_group_run(
+            spark, f"pq_gate_{driver}", lambda: QUERIES["knn_pq_adc"].fn(spark, d)
+        )
+        assert (len(jobs) == 0) == driver, (d, sorted(jobs))
+        assert len(rows) == 50
+        assert sorted(map(tuple, rows)) == _pq_adc_spark_outcome(spark, d), d
+
+
+def test_quantized_corpus_declines_what_the_plans_could_disagree_on():
+    """``quantized_corpus`` answers a clean corpus with the ids and
+    ``floor(float64(x)·1e4)`` vectors, and declines (None) a null id,
+    a null vector or component, a non-finite component, one with
+    ``|x·1e4| ≥ 2^63``, ragged vectors, a repeated id and an empty
+    corpus: on those ``knn_pq_adc`` runs its Spark plan."""
+    import numpy as np
+    import pyarrow as pa
+
+    from polar_spark.functions.similarity import quantized_corpus
+
+    def table(ids, vecs):
+        return pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            }
+        )
+
+    ok = [[0.5, -0.25], [1e-4, 0.3]]
+    ids, V = quantized_corpus(table([3, 1], ok), "vec_id", "embedding")
+    assert ids.tolist() == [3, 1]
+    want = np.floor(np.array(ok, np.float32).astype(np.float64) * 10000)
+    assert V.dtype == np.int64 and V.tolist() == want.astype(np.int64).tolist()
+    for bad in (
+        table([0, None], ok),
+        table([0, 1], [ok[0], None]),
+        table([0, 1], [ok[0], [0.1, None]]),
+        table([0, 1], [ok[0], [0.1, float("nan")]]),
+        table([0, 1], [ok[0], [0.1, 1e15]]),
+        table([0, 1], [ok[0], [0.1]]),
+        table([0, 0], ok),
+        table([], []),
+    ):
+        assert quantized_corpus(bad, "vec_id", "embedding") is None, bad
+
+
+@pytest.mark.parametrize(
+    "case", ["nan_component", "null_vector", "null_component", "ragged"]
+)
+def test_knn_pq_adc_declined_corpus_runs_the_spark_plan(spark, tmp_path, case):
+    """A one-file corpus under the bound whose values the driver path
+    declines gives exactly what ``pq_adc_top5`` over ``load_table``
+    gives: rows for a NaN component (Spark quantizes it to 0), the
+    null-vector ValueError for a null vector or component, the ragged
+    ValueError for a short vector."""
+    import numpy as np
+
+    from polar_spark.functions.similarity import quantized_corpus
+    from polar_spark.queries import QUERIES
+    from polar_spark.sources.tables import read_small_table
+
+    vecs = (np.random.default_rng(9).standard_normal((60, 16)) * 0.125).tolist()
+    if case == "nan_component":
+        vecs[3][5] = float("nan")
+    elif case == "null_vector":
+        vecs[7] = None
+    elif case == "null_component":
+        vecs[7][2] = None
+    else:
+        vecs[2] = vecs[2][:8]
+    d = _write_embeddings(tmp_path / case, range(60), vecs)
+    t = read_small_table(d, "embeddings", ["vec_id", "embedding"], 60)
+    assert quantized_corpus(t, "vec_id", "embedding") is None
+    got = _rows_or_error(lambda: QUERIES["knn_pq_adc"].fn(spark, d))
+    assert got == _pq_adc_spark_outcome(spark, d)
+    if case == "nan_component":
+        assert len(got) == 50
+    else:
+        match = "ragged PQ codebook" if case == "ragged" else "null PQ training vectors"
+        assert got[0] == "ValueError" and match in got[1], got
 
 
 def test_knn_pq_adc_job_budget_and_single_python_stage(spark, tmp_path):
@@ -1242,6 +1429,25 @@ def test_knn_pq_adc_matches_plain_python_reference(spark, sf_dir):
         want += [(qid, i, -nd, rn) for rn, (nd, i) in enumerate(top, 1)]
     got = QUERIES["knn_pq_adc"].fn(spark, sf_dir).collect()
     assert sorted(map(tuple, got)) == sorted(want) and len(want) == 50
+
+
+@pytest.mark.parametrize("case", ["null_lowest_id", "null_vector", "null_component"])
+def test_train_pq_codebook_rejects_null_vectors(spark, case):
+    """A null training vector, at the lowest id or elsewhere, or a null
+    component fails with one ValueError naming null training vectors,
+    before the ragged check could misread it."""
+    from polar_spark.functions.similarity import train_pq_codebook
+
+    rows = [(i, [i + 1] * 64) for i in range(20)]
+    if case == "null_lowest_id":
+        rows[0] = (0, None)
+    elif case == "null_vector":
+        rows[5] = (5, None)
+    else:
+        rows[5] = (5, [6] * 63 + [None])
+    qv = spark.createDataFrame(rows, "vec_id long, v array<bigint>")
+    with pytest.raises(ValueError, match="null PQ training vectors"):
+        train_pq_codebook(qv, "v", "vec_id", iters=1)
 
 
 def test_train_pq_codebook_rejects_ragged_vectors(spark):

@@ -1,6 +1,8 @@
 """Property-based tests (hypothesis) for the pure-Python wire codecs and
 formula helpers — no SparkSession needed, so these run in milliseconds
-and cover the input space the example-based tests can't."""
+and cover the input space the example-based tests can't. The one
+exception checks the numpy ``quantize`` twin against Spark's column
+over local relations, which Spark evaluates without a job."""
 
 from __future__ import annotations
 
@@ -177,3 +179,47 @@ def test_bloom_bitmap_never_false_negative(keys, probes, m_log2, k):
     # sanity: probing is deterministic (same answer twice)
     for x in probes[:10]:
         assert member(x) == member(x)
+
+
+# float32 components for the quantize twin: the drawn range, ±0.0,
+# subnormals, exact multiples of 1e-4, dyadic values whose float64
+# product with 1e4 lands on an integer, and ±1e10
+_f32 = st.one_of(
+    st.floats(min_value=-1e10, max_value=1e10, width=32),
+    st.sampled_from([0.0, -0.0, 1e10, -1e10, 1e-45, -1e-45, 1.1754942e-38]),
+    st.integers(min_value=-(10**8), max_value=10**8).map(lambda k: k / 10_000),
+    st.integers(min_value=-(2**24), max_value=2**24).map(lambda k: k / 64),
+)
+
+
+@settings(max_examples=60, deadline=None)
+@given(v=st.lists(_f32, min_size=1, max_size=16))
+def test_quantize_np_equals_spark_quantize(spark, v):
+    """``quantize_np`` (the driver-side twin) gives bit for bit the int64
+    vector Spark's ``quantize`` column gives for the same float32
+    values."""
+    import numpy as np
+    import pandas as pd
+
+    from polar_spark.functions.similarity import quantize, quantize_np
+
+    x = np.array(v, dtype=np.float32)
+    df = spark.createDataFrame(pd.DataFrame({"v": [x]}), "v array<float>")
+    want = df.select(quantize("v").alias("q")).collect()[0]["q"]
+    got = quantize_np(x)
+    assert got is not None and got.dtype == np.int64
+    assert got.tolist() == want
+
+
+def test_quantize_np_declines_non_finite_and_out_of_range():
+    """NaN and ±inf, and a product with ``|x·1e4| ≥ 2^63`` (where Spark's
+    long cast gives 0 or saturates), make the twin decline."""
+    import numpy as np
+
+    from polar_spark.functions.similarity import quantize_np
+
+    for bad in (np.nan, np.inf, -np.inf, 1e15, -1e15, 3e38):
+        assert quantize_np(np.array([0.5, bad], dtype=np.float32)) is None, bad
+    assert quantize_np(np.array([9e14], dtype=np.float32)).tolist() == [
+        int(np.floor(np.float64(np.float32(9e14)) * 10_000))
+    ]
