@@ -1111,16 +1111,14 @@ PQ_MAX_TRAIN = MAX_POINTS_PER_CENTROID * PQ_KSUB
 
 def pq_training_sample(
     candidates: DataFrame, vec_col: str, id_col: str
-) -> tuple[np.ndarray, np.ndarray, bool]:
-    """The bounded PQ training sample, as ``(ids, V, complete)``.
+) -> tuple[np.ndarray, np.ndarray]:
+    """The bounded PQ training sample, as ``(ids, V)`` with V an
+    (n, dims) int64 matrix.
 
-    One Arrow collect of the first :data:`PQ_MAX_TRAIN` + 1 rows in
+    One Arrow collect of the first :data:`PQ_MAX_TRAIN` rows in
     ``(xxhash64(id), id)`` order: one Spark job, no Python worker,
     whatever the corpus size. The hash order draws the sample from the
-    whole id range, not from its low end. ``ids``/``V`` (an (n, dims)
-    int64 matrix) keep the first PQ_MAX_TRAIN rows; ``complete`` says
-    the corpus had no more rows than that, so the sample IS the corpus
-    (the extra row only detects that). Raises on an empty corpus, on
+    whole id range, not from its low end. Raises on an empty corpus, on
     null vectors or components and on ragged vectors — a raise, not an
     assert (asserts vanish under python -O).
 
@@ -1132,11 +1130,9 @@ def pq_training_sample(
     t = (
         candidates.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
         .orderBy(F.xxhash64("_id"), "_id")
-        .limit(PQ_MAX_TRAIN + 1)
+        .limit(PQ_MAX_TRAIN)
         .toArrow()
     )
-    complete = t.num_rows <= PQ_MAX_TRAIN
-    t = t.slice(0, PQ_MAX_TRAIN)
     n = t.num_rows
     if n == 0:
         raise ValueError("train_pq_codebook: empty training corpus")
@@ -1155,7 +1151,7 @@ def pq_training_sample(
             "components"
         )
     V = vcol.flatten().to_numpy().astype(np.int64).reshape(n, dims)
-    return ids, V, complete
+    return ids, V
 
 
 def pq_lloyd(
@@ -1210,10 +1206,8 @@ def train_pq_codebook(
 
     Training reads a BOUNDED sample, as Faiss does (at most
     ``max_points_per_centroid`` × ksub points), and every Lloyd round
-    runs in numpy on the driver. A corpus of at most PQ_MAX_TRAIN
-    vectors is its own sample, so its books are those of full-corpus
-    training."""
-    ids, V, _ = pq_training_sample(candidates, vec_col, id_col)
+    runs in numpy on the driver."""
+    ids, V = pq_training_sample(candidates, vec_col, id_col)
     return pq_lloyd(ids, V, nsub, ksub, iters)
 
 
@@ -1411,8 +1405,8 @@ def pq_topk_adc(
     exact dots only for shortlist survivors instead of n·|Q|.
 
     This is the plan for a corpus that is not in driver memory; a
-    corpus that is (a complete training sample) runs the same kernel
-    once on the driver, :func:`pq_topk_adc_local`, with the same rows."""
+    corpus that is runs the same kernel once on the driver,
+    :func:`pq_topk_adc_local`, with the same rows."""
     from pyspark.sql import types as T
 
     qids, Q = collect_query_vectors(queries, query_id, query_vec, "pq_topk_adc")

@@ -109,18 +109,11 @@ def keyless_offset_plan(
 
 
 class Producer:
-    def __init__(
-        self,
-        catalog: TopicCatalog,
-        metrics=None,
-        small_batch_bytes: int = SMALL_BATCH_BYTES,
-    ):
+    def __init__(self, catalog: TopicCatalog, metrics=None):
         self.catalog = catalog
         # optional polar_spark.metrics.Metrics sink (counters mirror the
         # reference's polar_producer_* series, internal/metrics/metrics.go:13-27)
         self.metrics = metrics
-        # 0/None disables the driver-side small-batch fast path
-        self.small_batch_bytes = small_batch_bytes
 
     def produce(
         self,
@@ -175,7 +168,7 @@ class Producer:
             # reference rejects messages > 1 MiB with 400
             ev = ev.filter(F.octet_length("value") <= MAX_MESSAGE_BYTES)
 
-        if self.small_batch_bytes and _plan_size_bytes(ev) <= self.small_batch_bytes:
+        if _plan_size_bytes(ev) <= SMALL_BATCH_BYTES:
             # per-request latency path: one collect job, driver-side
             # offsets + staging write; same reservation/validate/publish
             # machinery as the distributed paths

@@ -355,15 +355,21 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of a full-corpus recompute. Result = every verified pair
     touching a new doc (any pair's larger id is ≥ the split point, so
     the oracle is the one-shot pair set filtered on id_b)."""
+    import shutil
     import tempfile
 
     from polar_spark.functions.dedup import NearDupIndex
 
     d = load_table(spark, sf_dir, "documents")
     split = d.agg(F.max("doc_id")).first()[0] // 2
-    idx = NearDupIndex(spark, tempfile.mkdtemp(prefix="polar_ndx_"), threshold=0.7)
-    idx.build(d.filter(F.col("doc_id") < split))
-    return idx.query_and_update(d.filter(F.col("doc_id") >= split))
+    root = tempfile.mkdtemp(prefix="polar_ndx_")
+    try:
+        idx = NearDupIndex(spark, root, threshold=0.7)
+        idx.build(d.filter(F.col("doc_id") < split))
+        # the pairs come back localCheckpointed: severed from the store
+        return idx.query_and_update(d.filter(F.col("doc_id") >= split))
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(

@@ -232,9 +232,9 @@ def knn_ivf_twolevel_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _small_quantized_corpus(sf_dir: str, max_rows: int):
     """``(ids, V)`` of the quantized ``embeddings`` corpus, read and
-    quantized on the driver with no Spark job, when its footer shows one
-    file of at most ``max_rows`` rows (sources/tables.read_small_table)
-    and functions/similarity.quantized_corpus accepts its values; None
+    quantized on the driver with no Spark job, when its footers count
+    at most ``max_rows`` rows (sources/tables.read_small_table) and
+    functions/similarity.quantized_corpus accepts its values; None
     otherwise, and the caller runs its Spark plan."""
     t = read_small_table(sf_dir, "embeddings", ["vec_id", "embedding"], max_rows)
     return None if t is None else quantized_corpus(t, "vec_id", "embedding")
@@ -280,13 +280,13 @@ def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-domain ANN: product quantization + asymmetric-distance
     scan + exact re-rank (Faiss IVFADC+R shape), top-5 for the
-    ``vec_id < 10`` probes. Two plans, the same rows. When the parquet
-    footer shows one file of at most PQ_MAX_TRAIN rows, the corpus is
-    its own training sample: the driver reads it with pyarrow, quantizes
-    it in numpy and runs :func:`_pq_adc_local`, with no Spark job.
-    Directory-shaped and larger tables, and values the driver path
-    declines (functions/similarity.quantized_corpus), run
-    :func:`pq_adc_top5` over the loaded table. Rows-only driver check
+    ``vec_id < 10`` probes. Two plans, the same rows. When the footer
+    gate (sources/tables.read_small_table) shows at most PQ_MAX_TRAIN
+    rows, the driver reads the corpus with pyarrow, quantizes it in
+    numpy and runs :func:`_pq_adc_local`, with no Spark job. Larger
+    tables, and values the driver path declines
+    (functions/similarity.quantized_corpus), run :func:`pq_adc_top5`
+    over the loaded table. Rows-only driver check
     (iterative training); recall >= 0.8 and re-rank exactness are
     value-checked by ``knn_pq_recall_law`` and pytest-asserted in
     tests/test_operators.py."""
@@ -305,27 +305,18 @@ def pq_adc_top5(qv: DataFrame) -> DataFrame:
     at most PQ_MAX_TRAIN vectors in id-hash order; pq_lloyd's rounds in
     numpy on the driver), then encodes every vector, ADC-scores it
     against every query, cuts a corpus-proportional shortlist
-    (:func:`_pq_shortlist`) and re-ranks it by exact dot.
-
-    The plan follows the collect. When the sample is complete (the
-    corpus has at most PQ_MAX_TRAIN vectors) every vector is already on
-    the driver, so the rest is :func:`_pq_adc_local`: the training
-    collect is the call's one Spark job. (``knn_pq_adc`` skips even that
-    job when the footer gate shows the corpus fits.) Otherwise the
-    search is pq_topk_adc's fused Spark scan with the collected books:
-    a shortlist count, a query collect, one mapInPandas pass and two
-    windows (shuffle O(parts·shortlist·|Q|), independent of n). Both
-    plans give the same rows; driver memory stays bounded by the
-    training collect."""
+    (:func:`_pq_shortlist`) and re-ranks it by exact dot: pq_topk_adc's
+    fused Spark scan with the collected books, a shortlist count, a
+    query collect, one mapInPandas pass and two windows (shuffle
+    O(parts·shortlist·|Q|), independent of n). Driver memory stays
+    bounded by the training collect."""
     from polar_spark.functions.similarity import (
         pq_lloyd,
         pq_topk_adc,
         pq_training_sample,
     )
 
-    ids, V, complete = pq_training_sample(qv, "v", "vec_id")
-    if complete:
-        return _pq_adc_local(qv.sparkSession, ids, V)
+    ids, V = pq_training_sample(qv, "v", "vec_id")
     queries = qv.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
@@ -347,11 +338,10 @@ def _pq_adc_local(spark: SparkSession, ids, V) -> DataFrame:
     runs no Spark job.
 
     Row order does not matter for unique ids (the footer gate's
-    quantized_corpus requires them), so a corpus in file order and the
-    same corpus in ``(xxhash64(id), id)`` order (a complete training
-    sample) give the same rows: Lloyd initialises from the lowest ids,
-    the sums are exact integers, and both cuts (the shortlist and the
-    top 5) break ties by id."""
+    quantized_corpus requires them): Lloyd initialises from the lowest
+    ids, the sums are exact integers, and both cuts (the shortlist and
+    the top 5) break ties by id. So the rows are those of
+    :func:`pq_adc_top5`, whose training sample is this whole corpus."""
     import pandas as pd
 
     from polar_spark.functions.similarity import pq_lloyd, pq_topk_adc_local
@@ -379,7 +369,7 @@ def _pq_shortlist(n: int, floor: int = 400, cap: int = 4096) -> int:
     same way. The floor is high because the synthetic embeddings are
     RANDOM — the hardest case for PQ, whose cells carry no structure to
     exploit; clustered real embeddings rank far better per slot. ``n``
-    is the complete training sample's size or, past PQ_MAX_TRAIN, one
+    is the driver plan's corpus size or the Spark plan's one
     ``count()`` job; the Spark plan's shuffle stays
     O(parts·shortlist·|Q|), independent of n past the cap — past which
     the honest recall lever is a better codebook (more

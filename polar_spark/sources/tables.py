@@ -13,13 +13,17 @@ Timestamp normalization: every testdata generation so far has needed one.
   session timezone pinned to UTC (session.py) the wall-clock values are
   unchanged and bit-identical to what DuckDB's oracle reads.
 
-Footer gate: a one-file table whose footer counts at most a caller's
-row bound can be read whole on the driver with pyarrow
-(:func:`read_small_table`), with no Spark job. ``knn_pq_adc`` and
-``knn_ivf_trained`` use it to answer a corpus that fits their training
-bound on the driver; a directory-shaped table (a Spark-written scaled
-corpus) or a larger one goes through :func:`load_table` and their Spark
-plans.
+Footer gate: :func:`read_small_table` is the one place a query decides
+between a driver plan and its Spark plan. A table stored as one file or
+as a directory of part files (a Spark-written scaled corpus) is opened
+as one pyarrow dataset; when the footers count at most the caller's row
+bound, every part has the same schema and the asked columns exist, the
+table is read whole on the driver with no Spark job. Otherwise the
+caller runs its Spark plan over :func:`load_table`. ``knn_pq_adc`` and
+``knn_ivf_trained`` answer a corpus that fits their training bound this
+way. A new driver plan lands only through this gate, with a test that
+runs the query through it and with it declined and compares the two
+(the ``twin_plans`` fixture in tests/conftest.py).
 """
 
 from __future__ import annotations
@@ -27,7 +31,7 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
-import pyarrow.parquet as pq
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -50,40 +54,25 @@ TABLES = (
 ).split()
 
 
-def _footer_schema(path: str):
-    """The table's arrow schema from its parquet footer (metadata only,
-    no data read) and whether ``path`` is one file. A directory-shaped
-    table (e.g. a Spark-written scaled corpus) is inspected through its
-    first part file; None when it has none."""
-    if not os.path.isdir(path):
-        return pq.read_schema(path), True
-    parts = sorted(
-        os.path.join(dp, fn)
-        for dp, _dn, fns in os.walk(path)
-        for fn in fns
-        if fn.endswith(".parquet")
-    )
-    return (pq.read_schema(parts[0]) if parts else None), False
-
-
 def read_small_table(
     sf_dir: str, name: str, columns: list[str], max_rows: int
 ) -> pa.Table | None:
-    """The named columns of a one-file table whose footer counts at most
-    ``max_rows`` rows, read with pyarrow on the driver: no Spark job.
-    None for a directory-shaped table, a larger one, or one missing a
-    column, so the caller runs its Spark plan (with that plan's errors).
-    The columns keep their footer types: no timestamp normalization."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
+    """The named columns of a table (one file or a directory of part
+    files) whose footers count at most ``max_rows`` rows, read with
+    pyarrow on the driver: no Spark job. None for a larger table, one
+    missing a column or one whose part files' footer schemas differ, so
+    the caller runs its Spark plan (with that plan's errors). The
+    columns keep their footer types: no timestamp normalization."""
+    ds = pads.dataset(os.path.join(sf_dir, f"{name}.parquet"), format="parquet")
+    # no thread pool: a table under the bound is small, and its start-up
+    # costs the driver more CPU than it saves
+    if (
+        any(not f.physical_schema.equals(ds.schema) for f in ds.get_fragments())
+        or not set(columns) <= set(ds.schema.names)
+        or ds.count_rows(use_threads=False) > max_rows  # footer metadata only
+    ):
         return None
-    # one open: the footer decides, then the same handle reads the data
-    with pq.ParquetFile(path) as pf:
-        if pf.metadata.num_rows > max_rows or not set(columns) <= set(
-            pf.schema_arrow.names
-        ):
-            return None
-        return pf.read(columns=columns)
+    return ds.to_table(columns=columns, use_threads=False)
 
 
 _SPARK_TYPES = {
@@ -132,10 +121,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     infer from that footer: Spark's own inference is one more Spark job
     per load that reads the same footer again."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    footer, one_file = _footer_schema(path)
-    schema = _spark_schema(footer) if one_file else None
+    # a directory's dataset schema is its first part's footer
+    footer = pads.dataset(path, format="parquet").schema
+    schema = None if os.path.isdir(path) else _spark_schema(footer)
     df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
-    for field in footer or ():
+    for field in footer:
         if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
             c = field.name
             # integer div — double division would lose precision on ~1e18 nanos

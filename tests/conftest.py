@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import sys
+import uuid
 
 import pytest
 
@@ -32,3 +34,54 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(run)`` → ``(run(), job ids)``: the ids of the Spark
+    jobs ``run`` started, counted in a job group of its own after the
+    cache is cleared."""
+    sc = spark.sparkContext
+
+    def count(run):
+        group = f"jobs_{uuid.uuid4().hex}"
+        spark.catalog.clearCache()
+        sc.setJobGroup(group, group)
+        try:
+            out = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, sc.statusTracker().getJobIdsForGroup(group)
+
+    return count
+
+
+@pytest.fixture
+def twin_plans(monkeypatch, spark_jobs):
+    """``twin_plans(build)`` runs a query twice and returns both sides,
+    each ``(outcome, job ids)``: first with the footer gate
+    (sources/tables.read_small_table) as it is, then with the gate
+    declining every table, so the query runs its Spark plan. The
+    outcome is the sorted rows of the DataFrame ``build()`` returns,
+    or ``("ValueError", message)`` if building or collecting it raised
+    one. A driver plan is right when its side equals the Spark side."""
+    from polar_spark.sources.tables import read_small_table
+
+    def outcome(build):
+        try:
+            return sorted(map(tuple, build().collect()))
+        except ValueError as ex:
+            return ("ValueError", str(ex))
+
+    def twin(build):
+        gate = spark_jobs(lambda: outcome(build))
+        with monkeypatch.context() as m:
+            # the gate's module and every module that imported it by name
+            for name, mod in list(sys.modules.items()):
+                if name.startswith("polar_spark") and (
+                    vars(mod).get("read_small_table") is read_small_table
+                ):
+                    m.setattr(mod, "read_small_table", lambda *a, **k: None)
+            return gate, spark_jobs(lambda: outcome(build))
+
+    return twin

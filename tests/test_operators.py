@@ -535,12 +535,13 @@ def test_trained_ivf_codebook_probe(spark, sf_dir):
     assert got == want
 
 
-def test_knn_ivf_trained_trains_on_the_driver(spark, sf_dir):
+def test_knn_ivf_trained_trains_on_the_driver(spark, sf_dir, spark_jobs, twin_plans):
     """The footer gate admits the ``sf_dir`` corpus (one file of at most
     MAX_POINTS_PER_CENTROID·nlist rows), so ``knn_ivf_trained`` trains
     with ``train_ivf_codebook_local``: its codebook equals the Spark
     trainer's, whose init collect and 2 Lloyd rounds are 3 Spark jobs,
-    and a call counted as bench.py counts it runs 4 jobs instead of 7."""
+    a call counted as bench.py counts it runs 4 jobs instead of 7, and
+    its rows are the Spark plan's."""
     from polar_spark.functions.similarity import (
         MAX_POINTS_PER_CENTROID,
         quantize,
@@ -550,30 +551,22 @@ def test_knn_ivf_trained_trains_on_the_driver(spark, sf_dir):
     from polar_spark.queries import QUERIES
     from polar_spark.queries.similarity import _small_quantized_corpus
 
-    sc = spark.sparkContext
-
-    def jobs(group, run):
-        sc.setJobGroup(group, group)
-        try:
-            out = run()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
     corpus = _small_quantized_corpus(sf_dir, MAX_POINTS_PER_CENTROID * 32)
     assert corpus is not None
     qv = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", quantize("embedding").alias("v")
     )
-    cb, n_train = jobs(
-        "ivf_train_spark", lambda: train_ivf_codebook(qv, "v", "vec_id", nlist=32, iters=2)
+    cb, train_jobs = spark_jobs(
+        lambda: train_ivf_codebook(qv, "v", "vec_id", nlist=32, iters=2)
     )
-    assert n_train == 3
+    assert len(train_jobs) == 3
     assert train_ivf_codebook_local(*corpus, nlist=32, iters=2) == cb
-    _, n_call = jobs(
-        "ivf_trained_call", lambda: QUERIES["knn_ivf_trained"].fn(spark, sf_dir).count()
+    _, call_jobs = spark_jobs(
+        lambda: QUERIES["knn_ivf_trained"].fn(spark, sf_dir).count()  # as bench.py counts
     )
-    assert n_call == 4
+    assert len(call_jobs) == 4
+    (rows, _), (want, _) = twin_plans(lambda: QUERIES["knn_ivf_trained"].fn(spark, sf_dir))
+    assert rows == want
 
 
 def test_chunking_covers_every_word_with_overlap(spark, sf_dir):
@@ -759,6 +752,31 @@ def test_near_dup_index_incremental_equals_one_shot(spark, sf_dir):
         .collect()
     )
     assert got == want and len(got) > 0
+
+
+def test_dedup_incremental_index_leaves_no_store(spark, sf_dir):
+    """``dedup_incremental_index`` removes its index store once its
+    pairs are materialized: the ``polar_ndx_*`` count under the temp
+    directory is the same before and after a call, and the rows still
+    equal the DuckDB oracle's."""
+    import glob
+    import os
+    import tempfile
+
+    import duckdb
+
+    from polar_spark.queries import QUERIES
+
+    def stores():
+        return len(glob.glob(os.path.join(tempfile.gettempdir(), "polar_ndx_*")))
+
+    spec = QUERIES["dedup_incremental_index"]
+    before = stores()
+    got = sorted(map(tuple, spec.fn(spark, sf_dir).collect()))
+    assert stores() == before
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
+    assert got == sorted(con.sql(spec.oracle).fetchall()) and got
 
 
 def test_bloom_semi_join_exact_and_prefilter_selective(spark, sf_dir):
@@ -1116,25 +1134,15 @@ def test_train_pq_codebook_trains_on_hash_ordered_sample(spark):
     assert train_pq_codebook(df, "v", "vec_id", iters=2) == want
 
 
-def _job_group_run(spark, group: str, build):
-    """(plan, rows, job ids) of ``build()``'s DataFrame, its plan taken
-    before the run (AQE adds a final plan) and its jobs counted over the
-    build and the collect."""
+def _plan_and_rows(df):
+    """``df``'s plan, taken before the run (AQE adds a final plan), and
+    its rows."""
     from polar_spark.plans.explain import explain_str
 
-    spark.catalog.clearCache()
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        df = build()
-        plan = explain_str(df)
-        rows = df.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return plan, rows, sc.statusTracker().getJobIdsForGroup(group)
+    return explain_str(df), df.collect()
 
 
-def test_knn_pq_adc_local_plan_job_budget(spark, sf_dir):
+def test_knn_pq_adc_local_plan_job_budget(spark, sf_dir, spark_jobs):
     """The ``sf_dir`` corpus is one parquet file whose footer counts at
     most PQ_MAX_TRAIN rows, so it is its own training sample: one
     ``knn_pq_adc`` call (training included) reads it with pyarrow,
@@ -1145,8 +1153,8 @@ def test_knn_pq_adc_local_plan_job_budget(spark, sf_dir):
 
     from polar_spark.queries import QUERIES
 
-    plan, rows, jobs = _job_group_run(
-        spark, "pq_adc_local", lambda: QUERIES["knn_pq_adc"].fn(spark, sf_dir)
+    (plan, rows), jobs = spark_jobs(
+        lambda: _plan_and_rows(QUERIES["knn_pq_adc"].fn(spark, sf_dir))
     )
     assert rows
     assert len(jobs) == 0, sorted(jobs)
@@ -1175,31 +1183,21 @@ def _write_embeddings(d, ids, vecs) -> str:
     return str(d)
 
 
-def _pq_adc_spark_outcome(spark, d):
-    """``knn_pq_adc``'s Spark plan over the corpus in ``d``: the sorted
-    rows of ``pq_adc_top5`` over ``load_table``, or its ValueError."""
-    from polar_spark.queries.similarity import pq_adc_top5
-
-    e = load_table(spark, d, "embeddings")
-    return _rows_or_error(
-        lambda: pq_adc_top5(e.select("vec_id", quantize("embedding").alias("v")))
-    )
-
-
-def _rows_or_error(build):
-    try:
-        return sorted(map(tuple, build().collect()))
-    except ValueError as ex:
-        return ("ValueError", str(ex))
-
-
-def test_knn_pq_adc_footer_gate(spark, tmp_path):
+def test_knn_pq_adc_footer_gate(spark, tmp_path, twin_plans):
     """The parquet footer picks ``knn_pq_adc``'s plan. A one-file corpus
-    of PQ_MAX_TRAIN rows runs no Spark job; one more row, or a
-    directory-shaped table (a Spark-written corpus), takes the Spark
-    plan. Every one gives the rows of ``pq_adc_top5`` over
-    ``load_table``."""
+    of PQ_MAX_TRAIN rows, or a Spark-written multi-part directory under
+    the bound, runs no Spark job; one more row, or a directory whose
+    part files disagree on the ``embedding`` type (float64, then float32,
+    which Spark widens to double), takes the Spark plan. Every one gives
+    the rows of the Spark plan (``pq_adc_top5`` over ``load_table``, the
+    gate declined), also a corpus of exact-duplicate vectors with few
+    distinct values, where dots tie often and the id tie-break decides
+    both plans' cuts."""
+    import os
+
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from polar_spark.functions.similarity import PQ_MAX_TRAIN
     from polar_spark.queries import QUERIES
@@ -1209,21 +1207,49 @@ def test_knn_pq_adc_footer_gate(spark, tmp_path):
     V = (np.random.default_rng(5).standard_normal((n, 64)) * 0.125).astype(np.float32)
     small = _write_embeddings(tmp_path / "small", range(n - 1), V[:-1])
     big = _write_embeddings(tmp_path / "big", range(n), V)
-    (tmp_path / "dir").mkdir()
+    parts = tmp_path / "dir" / "embeddings.parquet"
     spark.createDataFrame(
         [(i, V[i].tolist()) for i in range(300)], "vec_id long, embedding array<float>"
-    ).write.parquet(str(tmp_path / "dir" / "embeddings.parquet"))
+    ).repartition(3).write.parquet(str(parts))
+    assert sum(f.startswith("part-") for f in os.listdir(parts)) == 3
+    mixed = tmp_path / "mixed" / "embeddings.parquet"
+    mixed.mkdir(parents=True)
+    for k, t in enumerate((pa.float64(), pa.float32())):
+        ids = range(60 * k, 60 * k + 60)
+        pq.write_table(
+            pa.table({
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(V[ids.start : ids.stop, :16].tolist(), pa.list_(t)),
+            }),
+            str(mixed / f"part-{k}.parquet"),
+        )
+    D = np.random.default_rng(3).integers(-3, 4, size=(600, 16)) * 0.125
+    D[200:400] = D[:200]  # every vector of the first third twice more
+    D[400:] = D[:200]
+    ties = _write_embeddings(tmp_path / "ties", range(600), D)
     cols = ["vec_id", "embedding"]
     assert read_small_table(small, "embeddings", cols, PQ_MAX_TRAIN).num_rows == n - 1
     assert read_small_table(big, "embeddings", cols, PQ_MAX_TRAIN) is None
-    assert read_small_table(str(tmp_path / "dir"), "embeddings", cols, n) is None
-    for d, driver in ((small, True), (big, False), (str(tmp_path / "dir"), False)):
-        _, rows, jobs = _job_group_run(
-            spark, f"pq_gate_{driver}", lambda: QUERIES["knn_pq_adc"].fn(spark, d)
+    assert read_small_table(str(tmp_path / "dir"), "embeddings", cols, n).num_rows == 300
+    assert read_small_table(str(tmp_path / "mixed"), "embeddings", cols, n) is None
+    got = {}
+    for d, driver in (
+        (small, True),
+        (big, False),
+        (str(tmp_path / "dir"), True),
+        (str(tmp_path / "mixed"), False),
+        (ties, True),
+    ):
+        (rows, jobs), (want, spark_plan_jobs) = twin_plans(
+            lambda: QUERIES["knn_pq_adc"].fn(spark, d)
         )
         assert (len(jobs) == 0) == driver, (d, sorted(jobs))
+        assert spark_plan_jobs
         assert len(rows) == 50
-        assert sorted(map(tuple, rows)) == _pq_adc_spark_outcome(spark, d), d
+        assert rows == want, d
+        got[d] = rows
+    # ties decide the cut: some query's top 5 repeats a dot
+    assert any(len({r[2] for r in got[ties] if r[0] == q}) < 5 for q in range(10))
 
 
 def test_quantized_corpus_declines_what_the_plans_could_disagree_on():
@@ -1266,7 +1292,7 @@ def test_quantized_corpus_declines_what_the_plans_could_disagree_on():
 @pytest.mark.parametrize(
     "case", ["nan_component", "null_vector", "null_component", "ragged"]
 )
-def test_knn_pq_adc_declined_corpus_runs_the_spark_plan(spark, tmp_path, case):
+def test_knn_pq_adc_declined_corpus_runs_the_spark_plan(spark, tmp_path, twin_plans, case):
     """A one-file corpus under the bound whose values the driver path
     declines gives exactly what ``pq_adc_top5`` over ``load_table``
     gives: rows for a NaN component (Spark quantizes it to 0), the
@@ -1290,8 +1316,8 @@ def test_knn_pq_adc_declined_corpus_runs_the_spark_plan(spark, tmp_path, case):
     d = _write_embeddings(tmp_path / case, range(60), vecs)
     t = read_small_table(d, "embeddings", ["vec_id", "embedding"], 60)
     assert quantized_corpus(t, "vec_id", "embedding") is None
-    got = _rows_or_error(lambda: QUERIES["knn_pq_adc"].fn(spark, d))
-    assert got == _pq_adc_spark_outcome(spark, d)
+    (got, _), (want, _) = twin_plans(lambda: QUERIES["knn_pq_adc"].fn(spark, d))
+    assert got == want
     if case == "nan_component":
         assert len(got) == 50
     else:
@@ -1299,7 +1325,7 @@ def test_knn_pq_adc_declined_corpus_runs_the_spark_plan(spark, tmp_path, case):
         assert got[0] == "ValueError" and match in got[1], got
 
 
-def test_knn_pq_adc_job_budget_and_single_python_stage(spark, tmp_path):
+def test_knn_pq_adc_job_budget_and_single_python_stage(spark, tmp_path, spark_jobs):
     """Above PQ_MAX_TRAIN vectors ``knn_pq_adc`` runs the Spark plan with
     the books of its bounded sample: one call (training included) over a
     4-file parquet corpus runs at most 7 Spark jobs, its plan has
@@ -1324,7 +1350,7 @@ def test_knn_pq_adc_job_budget_and_single_python_stage(spark, tmp_path):
         "vec_id long, v array<bigint>",
     ).repartition(4).write.parquet(str(tmp_path / "corpus"))
     df = spark.read.parquet(str(tmp_path / "corpus"))
-    plan, rows, jobs = _job_group_run(spark, "pq_adc_spark", lambda: pq_adc_top5(df))
+    (plan, rows), jobs = spark_jobs(lambda: _plan_and_rows(pq_adc_top5(df)))
     assert 0 < len(jobs) <= 7, sorted(jobs)
     assert len(re.findall(r"\(\d+\) MapInPandas\b", plan)) == 1, plan
     assert not re.search(r"ArrowEvalPython|BatchEvalPython", plan), plan

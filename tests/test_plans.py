@@ -557,7 +557,7 @@ def test_load_table_reads_footer_schema_without_a_spark_job(spark, sf_dir, tmp_p
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from polar_spark.sources.tables import _footer_schema, _spark_schema
+    from polar_spark.sources.tables import _spark_schema
 
     pq.write_table(
         pa.table({
@@ -569,8 +569,8 @@ def test_load_table_reads_footer_schema_without_a_spark_job(spark, sf_dir, tmp_p
     paths = sorted(glob.glob(os.path.join(os.path.dirname(sf_dir), "*", "*.parquet")))
     assert len(paths) >= 10
     for p in paths:
-        assert _spark_schema(_footer_schema(p)[0]) == spark.read.parquet(p).schema, p
-    odd = _footer_schema(str(tmp_path / "odd.parquet"))[0]
+        assert _spark_schema(pq.read_schema(p)) == spark.read.parquet(p).schema, p
+    odd = pq.read_schema(str(tmp_path / "odd.parquet"))
     assert _spark_schema(odd) is None
     assert _spark_schema(odd.remove(1)) == spark.read.parquet(
         str(tmp_path / "odd.parquet")

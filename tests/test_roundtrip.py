@@ -860,7 +860,7 @@ def test_repartition_refuses_inflight_reservations(spark, tmp_path):
     assert set(repartition_topic(cat, "busy", 3)) == {0, 1, 2}
 
 
-def test_small_batch_fast_path_parity(spark, sf_dir, tmp_path):
+def test_small_batch_fast_path_parity(spark, sf_dir, tmp_path, monkeypatch):
     """The driver-side small-batch produce (produce.py _produce_small)
     must be indistinguishable on disk from the distributed path: same
     partition placement (same key hash), same offsets, same values AND
@@ -869,9 +869,16 @@ def test_small_batch_fast_path_parity(spark, sf_dir, tmp_path):
     paths must coexist in one topic."""
     import os
 
+    from polar_spark import produce as P
+
     cat, _ = _engine(spark, tmp_path)
     fast = Producer(cat)  # default threshold: small input → fast path
-    slow = Producer(cat, small_batch_bytes=0)  # distributed path pinned
+
+    def slow_produce(*args, **kw):
+        with monkeypatch.context() as m:
+            m.setattr(P, "SMALL_BATCH_BYTES", 0)  # distributed path pinned
+            return fast.produce(*args, **kw)
+
     src = os.path.join(str(tmp_path), "in.parquet")
     _events(spark, sf_dir).limit(600).write.mode("overwrite").parquet(src)
     small = spark.read.parquet(src)
@@ -879,7 +886,7 @@ def test_small_batch_fast_path_parity(spark, sf_dir, tmp_path):
     cat.ensure_topic("fp_a", num_partitions=8)
     cat.ensure_topic("fp_b", num_partitions=8)
     fast.produce(small, "fp_a", key_col="user_id", value_col="props", ts_col="ts")
-    slow.produce(small, "fp_b", key_col="user_id", value_col="props", ts_col="ts")
+    slow_produce(small, "fp_b", key_col="user_id", value_col="props", ts_col="ts")
     a = sorted(
         (r["partition"], r["offset"], r["key"], r["value"], str(r["timestamp"]))
         for r in cat.read("fp_a").collect()
@@ -892,7 +899,7 @@ def test_small_batch_fast_path_parity(spark, sf_dir, tmp_path):
 
     # mixed-writer topic: distributed append onto fast-path files, read
     # as one log with contiguous offsets
-    slow.produce(small, "fp_a", key_col="user_id", value_col="props", ts_col="ts")
+    slow_produce(small, "fp_a", key_col="user_id", value_col="props", ts_col="ts")
     mixed = cat.read("fp_a")
     assert mixed.count() == 1200
     for r in (

@@ -51,6 +51,26 @@ def test_store_is_the_only_lock_and_json_writer():
     assert offenders == []
 
 
+def test_footer_gate_is_the_only_pyarrow_parquet_reader_of_queries():
+    """No module under polar_spark/queries/ or polar_spark/functions/
+    reads parquet with pyarrow: a driver plan over a table reads it
+    through sources/tables.read_small_table, the one gate whose decline
+    the twin-plan tests (the ``twin_plans`` fixture) check against the
+    Spark plan."""
+    root = Path(polar_spark.__file__).parent
+    offenders = [
+        f"{p.relative_to(root)}: {m.group(0)}"
+        for sub in ("queries", "functions")
+        for p in sorted((root / sub).rglob("*.py"))
+        for m in re.finditer(
+            r"\bpq\.(ParquetFile|read_table|read_schema)\b|\bpads\.dataset\b"
+            r"|\bpyarrow\.(parquet|dataset)\b",
+            p.read_text(),
+        )
+    ]
+    assert offenders == []
+
+
 def test_write_json_replaces_atomically_and_leaves_no_tmp(tmp_path):
     p = str(tmp_path / "_ledger.json")
     assert read_json(p, {"cold": True}) == {"cold": True}
