@@ -64,8 +64,10 @@ def persist_slot(df: DataFrame, slot: str, eager: bool = False) -> DataFrame:
     Freshness contract: same-plan reuse carries STANDARD Spark persist
     semantics — a cached plan does not observe files appended under an
     unchanged path. Every slot in this repo derives from immutable
-    sf_dir parquet or from epoch stores that are append-once per
-    application (the _built_once discipline), so reuse is always of
+    sf_dir parquet or from epoch stores built once under a root keyed by
+    the inputs' file fingerprint (store.artifact_root /
+    store.built_once): a rewritten input gets a new root, hence a plan
+    that does not sameResult() the old one, so reuse is always of
     identical data; a caller whose input path genuinely accretes must
     unpersist explicitly or key the plan by a content tag."""
     key = (id(df.sparkSession), slot)

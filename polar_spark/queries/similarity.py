@@ -27,6 +27,7 @@ from polar_spark.functions.similarity import (
 )
 from polar_spark.queries.registry import query
 from polar_spark.sources.tables import load_table, read_small_table
+from polar_spark.store import artifact_root, built_once
 
 _QV = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
 
@@ -164,9 +165,6 @@ def knn_ivf_stored_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py). Same deterministic first-NLIST codebook as
     knn_ivf_probe, so the oracle is identical — proving stored cells ≡
     computed cells end-to-end through the ingest→read→probe path."""
-    import hashlib as _hashlib
-    import tempfile
-
     from polar_spark.sources.ivf_index import ivf_topk_stored, write_ivf_index
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -174,15 +172,14 @@ def knn_ivf_stored_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = [
         (r["vec_id"], r["v"]) for r in qv.filter(F.col("vec_id") < NLIST).collect()
     ]
-    # ingest step: rebuild per (sf_dir, session start) — cheap one-pass
+    # ingest step: built once per input fingerprint — cheap one-pass
     # write locally; in production this is done once by the ingest
     # pipeline (batch or stream_ivf_index) and queries only read
-    tag = _hashlib.md5(
-        f"{sf_dir}:{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"polar_ivf_index_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_ivf_index(qv, path, cents, vec_col="v", id_col="vec_id")
+    root = artifact_root(spark, sf_dir, "ivf_index", ["embeddings"])
+    path = os.path.join(root, "index")
+    built_once(
+        root, lambda: write_ivf_index(qv, path, cents, vec_col="v", id_col="vec_id")
+    )
     queries = qv.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
@@ -377,25 +374,12 @@ def _pq_shortlist(n: int, floor: int = 400, cap: int = 4096) -> int:
     return min(cap, max(floor, n // 50))
 
 
-# (sf_dir, applicationId) → (index path, shortlist). The index itself
-# was already built exactly once per (sf_dir, session) via the _SUCCESS
-# marker; this memo extends the same discipline to the two CONSTRUCTION
-# jobs every call still re-ran (the NLIST-centroid collect and the
-# shortlist count — r13 "Not yet optimized" #4). Keyed by applicationId,
-# so nothing survives the session: every bench/oracle invocation still
-# computes the SEARCH from the parquet-derived stored index; only the
-# train-once artifacts (path + one int) are reused — the
-# train-once-serve-many shape a production ANN deployment runs.
-_IVFPQ_MEMO: dict[str, tuple[str, int]] = {}
-
-
 def _ivfpq_index_and_queries(spark: SparkSession, sf_dir: str):
-    """Build (once per sf_dir + Spark application) the materialized
-    IVFADC index and the standard 10-query probe set; shared by the
-    search query and its recall-law twin so both hit the SAME index."""
-    import hashlib as _hashlib
-    import tempfile
-
+    """Build (once per input fingerprint) the materialized IVFADC index
+    and the standard 10-query probe set; shared by the search query and
+    its recall-law twin so both hit the SAME index. The shortlist is the
+    build's marker value, so a hit runs neither the centroid collect nor
+    the count; every call still runs the SEARCH."""
     from polar_spark.functions.similarity import train_pq_codebook
     from polar_spark.sources.ivf_index import write_ivfpq_index
 
@@ -404,27 +388,22 @@ def _ivfpq_index_and_queries(spark: SparkSession, sf_dir: str):
     queries = base.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
-    key = f"{sf_dir}:{spark.sparkContext.applicationId}"
-    hit = _IVFPQ_MEMO.get(key)
-    if hit is not None:
-        path, shortlist = hit
-        if os.path.exists(os.path.join(path, "_SUCCESS")):
-            return path, queries, shortlist
-        # the index directory vanished (e.g. a /tmp sweep): rebuild it
-        del _IVFPQ_MEMO[key]
-    qv = base.persist()
-    cents = [
-        (r["vec_id"], r["v"]) for r in qv.filter(F.col("vec_id") < NLIST).collect()
-    ]
-    tag = _hashlib.md5(key.encode()).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"polar_ivfpq_index_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    root = artifact_root(spark, sf_dir, "ivfpq_index", ["embeddings"])
+    path = os.path.join(root, "index")
+
+    def build() -> int:
+        qv = base.persist()
+        cents = [
+            (r["vec_id"], r["v"])
+            for r in qv.filter(F.col("vec_id") < NLIST).collect()
+        ]
         books = train_pq_codebook(qv, "v", "vec_id", iters=2)
         write_ivfpq_index(qv, path, cents, books)
-    shortlist = _pq_shortlist(qv.count())
-    qv.unpersist()
-    _IVFPQ_MEMO[key] = (path, shortlist)
-    return path, queries, shortlist
+        shortlist = _pq_shortlist(qv.count())
+        qv.unpersist()
+        return shortlist
+
+    return path, queries, built_once(root, build)
 
 
 @query("knn_ivfpq_stored")  # no oracle: trained PQ codebook (iterative)
@@ -578,6 +557,21 @@ WHERE NOT list_contains((SELECT kept_ids FROM greedy ORDER BY rn DESC LIMIT 1), 
 """
 
 
+def _apply_halves_once(sd, qv: DataFrame, root: str) -> None:
+    """Apply ``qv`` to the incremental dedup sink ``sd`` as two
+    id-ordered epochs (ids ≤ max/2, then the rest), once per artifact
+    root: a re-invocation must NOT re-apply epoch 0 against a store
+    already holding epoch 1's keeps (the reset path would dedup early
+    ids against later keeps — not the greedy-prefix law)."""
+
+    def build() -> None:
+        mid = qv.agg(F.max("vec_id")).first()[0] // 2
+        sd.apply_batch(qv.filter(F.col("vec_id") <= mid), 0, root)
+        sd.apply_batch(qv.filter(F.col("vec_id") > mid), 1, root)
+
+    built_once(root, build)
+
+
 @query("semdedup_incremental", oracle=_SEMDEDUP_INC_ORACLE)
 def semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL semantic dedup at ingest (streaming/dedup.
@@ -594,9 +588,6 @@ def semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact equivalence to a python greedy reference + replay idempotency
     remain pytest-proven in tests/test_streaming.py. Returns the
     dropped vec_ids."""
-    import hashlib as _hashlib
-    import tempfile
-
     from polar_spark.streaming.dedup import StreamingSemDedup
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -604,25 +595,12 @@ def semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = [
         (r["vec_id"], r["v"]) for r in qv.filter(F.col("vec_id") < NLIST).collect()
     ]
-    tag = _hashlib.md5(
-        f"{sf_dir}:{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"polar_semdedup_inc_{tag}")
+    root = artifact_root(spark, sf_dir, "semdedup_inc", ["embeddings"])
     sd = StreamingSemDedup(
         spark, os.path.join(root, "idx"), os.path.join(root, "drops"),
         cents, tau_sq_pct=1600,
     )
-    done = os.path.join(root, "_DONE")
-    if not os.path.exists(done):
-        # per-(sf, session) build exactly once: a re-invocation in the
-        # same application must NOT re-apply epoch 0 against a store
-        # already holding epoch 1's keeps (the reset path would dedup
-        # early ids against later keeps — not the greedy-prefix law)
-        mid = qv.agg(F.max("vec_id")).first()[0] // 2
-        sd.apply_batch(qv.filter(F.col("vec_id") <= mid), 0, root)
-        sd.apply_batch(qv.filter(F.col("vec_id") > mid), 1, root)
-        with open(done, "w"):
-            pass
+    _apply_halves_once(sd, qv, root)
     out = sd.dropped().orderBy("vec_id")
     qv.unpersist()
     return out
@@ -797,9 +775,6 @@ def semdedup_lsh_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest→bucketed-read→grouped-verify path. This is the physical
     plan that removes the 4M-vector verify-shuffle wall recorded in
     DECADES_r10_semdedup.json."""
-    import hashlib as _hashlib
-    import tempfile
-
     from polar_spark.sources.semlsh_index import (
         semdedup_lsh_drop_ids_stored,
         write_semlsh_index,
@@ -807,24 +782,24 @@ def semdedup_lsh_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "embeddings")
     qv = e.select("vec_id", quantize("embedding").alias("v"))
-    # ingest step: rebuild per (sf_dir, session start) — narrow one-pass
+    # ingest step: built once per input fingerprint — narrow one-pass
     # write locally; in production the ingest pipeline owns this and
-    # queries only read (same contract as knn_ivf_stored_cells)
-    tag = _hashlib.md5(
-        f"{sf_dir}:{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:12]
-    table = f"polar_semlsh_idx_{tag}"
-    if not spark.catalog.tableExists(table):
-        write_semlsh_index(
+    # queries only read (same contract as knn_ivf_stored_cells). The
+    # table is named after the root and its data lives under it, so a
+    # rebuilt root rebinds the table.
+    root = artifact_root(spark, sf_dir, "semlsh_idx", ["embeddings"])
+    table = os.path.basename(root)
+    built_once(
+        root,
+        lambda: write_semlsh_index(
             qv,
             table,
             dims=64,
             bands=_SEMLSH_BANDS,
             planes_per_band=_SEMLSH_R,
-            path=os.path.join(
-                tempfile.gettempdir(), f"polar_semlsh_idx_{tag}"
-            ),
-        )
+            path=os.path.join(root, "index"),
+        ),
+    )
     return semdedup_lsh_drop_ids_stored(spark, table, tau_sq_pct=1600)
 
 
@@ -984,32 +959,17 @@ def semdedup_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     a < v is itself kept). Stream ≡ batch-greedy equivalence (what
     makes one oracle serve both) is the pytest-pinned law in
     tests/test_streaming.py."""
-    import hashlib as _hashlib
-    import tempfile
-
     from polar_spark.streaming.dedup import StreamingSemDedupLSH
 
     e = load_table(spark, sf_dir, "embeddings")
     qv = e.select("vec_id", quantize("embedding").alias("v")).persist()
-    tag = _hashlib.md5(
-        f"{sf_dir}:{spark.sparkContext.applicationId}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"polar_semlsh_inc_{tag}")
+    root = artifact_root(spark, sf_dir, "semlsh_inc", ["embeddings"])
     sd = StreamingSemDedupLSH(
         spark, os.path.join(root, "idx"), os.path.join(root, "drops"),
         dims=64, bands=_SEMLSH_BANDS, planes_per_band=_SEMLSH_R,
         tau_sq_pct=1600,
     )
-    done = os.path.join(root, "_DONE")
-    if not os.path.exists(done):
-        # per-(sf, session) build exactly once (same discipline as
-        # semdedup_incremental: a same-session re-invocation must not
-        # re-apply epoch 0 against a store holding epoch 1's keeps)
-        mid = qv.agg(F.max("vec_id")).first()[0] // 2
-        sd.apply_batch(qv.filter(F.col("vec_id") <= mid), 0, root)
-        sd.apply_batch(qv.filter(F.col("vec_id") > mid), 1, root)
-        with open(done, "w"):
-            pass
+    _apply_halves_once(sd, qv, root)
     out = sd.dropped().orderBy("vec_id")
     qv.unpersist()
     return out

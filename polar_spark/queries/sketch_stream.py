@@ -14,23 +14,24 @@ running aggregates (reference internal/consuming, poll loop); these
 sinks are the Spark-native form — per-epoch partials beside the topic,
 merged at read time, no stateful streaming query to babysit.
 
-Build-side state follows the ``semdedup_incremental`` discipline: the
-store is built once per (sf_dir, Spark application) under a _DONE
-sentinel, so the driver's repeated invocations reuse it and epoch 0
-never re-applies against a populated store.
+Build-side state goes through the one build-once protocol
+(store.artifact_root / store.built_once): each store is built once per
+(sf_dir, Spark application, input-file fingerprint) and closed by its
+build marker, so the driver's repeated invocations reuse it,
+epoch 0 never re-applies against a populated store, and a rewritten
+input table gets a fresh store.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from polar_spark.queries.registry import query
 from polar_spark.sources.tables import load_table
+from polar_spark.store import artifact_root, built_once
 
 # three batches split on a stable content key — any split obeys the
 # merge law; thirds-by-id mimic time progress without ordering reqs.
@@ -39,21 +40,18 @@ from polar_spark.sources.tables import load_table
 # (and with it pytest collection / tools/gen_catalog.py) in processes that
 # import before creating a session.
 _SPLITS = ("event_id % 3 = 0", "event_id % 3 = 1", "event_id % 3 = 2")
+_DOC_SPLITS = ("doc_id % 3 = 0", "doc_id % 3 = 1", "doc_id % 3 = 2")
 
 
-def _store_root(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    tag = hashlib.md5(
-        f"{sf_dir}:{spark.sparkContext.applicationId}:{kind}".encode()
-    ).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"polar_sketch_{kind}_{tag}")
+def _apply_once(sink, df: DataFrame, splits, root: str) -> None:
+    """Apply ``df`` split by ``splits`` to ``sink`` as epochs 0, 1, …,
+    once per artifact root."""
 
+    def build() -> None:
+        for epoch, cond in enumerate(splits):
+            sink.apply_batch(df.filter(cond), epoch, root)
 
-def _built_once(root: str, build) -> None:
-    done = os.path.join(root, "_DONE")
-    if not os.path.exists(done):
-        build()
-        with open(done, "w"):
-            pass
+    built_once(root, build)
 
 
 @query(
@@ -96,14 +94,9 @@ def sketch_cm_stream_vs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polar_spark.streaming.sketches import StreamingCountMin
 
     ev = load_table(spark, sf_dir, "events")
-    root = _store_root(spark, sf_dir, "cm")
+    root = artifact_root(spark, sf_dir, "cm", ["events"])
     sink = StreamingCountMin(spark, os.path.join(root, "store"), "event_type")
-
-    def build() -> None:
-        for epoch, cond in enumerate(_SPLITS):
-            sink.apply_batch(ev.filter(cond), epoch, root)
-
-    _built_once(root, build)
+    _apply_once(sink, ev, _SPLITS, root)
     keys = ev.select("event_type").distinct()
     return sink.estimate(keys, "event_type")
 
@@ -144,16 +137,11 @@ def sketch_kmv_stream_vs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polar_spark.streaming.sketches import StreamingKMV
 
     ev = load_table(spark, sf_dir, "events")
-    root = _store_root(spark, sf_dir, "kmv")
+    root = artifact_root(spark, sf_dir, "kmv", ["events"])
     sink = StreamingKMV(
         spark, os.path.join(root, "store"), ["event_type"], "user_id", k=64
     )
-
-    def build() -> None:
-        for epoch, cond in enumerate(_SPLITS):
-            sink.apply_batch(ev.filter(cond), epoch, root)
-
-    _built_once(root, build)
+    _apply_once(sink, ev, _SPLITS, root)
     return sink.estimate()
 
 
@@ -180,16 +168,11 @@ def sketch_hll_stream_vs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polar_spark.streaming.sketches import StreamingHLL
 
     ev = load_table(spark, sf_dir, "events")
-    root = _store_root(spark, sf_dir, "hll")
+    root = artifact_root(spark, sf_dir, "hll", ["events"])
     sink = StreamingHLL(
         spark, os.path.join(root, "store"), ["event_type"], "user_id"
     )
-
-    def build() -> None:
-        for epoch, cond in enumerate(_SPLITS + (_SPLITS[0],)):
-            sink.apply_batch(ev.filter(cond), epoch, root)
-
-    _built_once(root, build)
+    _apply_once(sink, ev, _SPLITS + (_SPLITS[0],), root)
     return sink.estimate()
 
 
@@ -234,7 +217,7 @@ def sketch_kmv_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polar_spark.streaming.sketches import StreamingKMV
 
     ev = load_table(spark, sf_dir, "events")
-    root = _store_root(spark, sf_dir, "kmvc")
+    root = artifact_root(spark, sf_dir, "kmvc", ["events"])
     sink = StreamingKMV(
         spark, os.path.join(root, "store"), ["event_type"], "user_id", k=64
     )
@@ -246,7 +229,7 @@ def sketch_kmv_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert folded == 2 and live == 1, (folded, live)
         sink.apply_batch(ev.filter(_SPLITS[2]), 2, root)
 
-    _built_once(root, build)
+    built_once(root, build)
     return sink.estimate()
 
 
@@ -266,7 +249,7 @@ def sketch_hll_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polar_spark.streaming.sketches import StreamingHLL
 
     ev = load_table(spark, sf_dir, "events")
-    root = _store_root(spark, sf_dir, "hllc")
+    root = artifact_root(spark, sf_dir, "hllc", ["events"])
     sink = StreamingHLL(
         spark, os.path.join(root, "store"), ["event_type"], "user_id"
     )
@@ -279,7 +262,7 @@ def sketch_hll_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         # at-least-once replay AFTER the fold: overlaps are a no-op
         sink.apply_batch(ev.filter(_SPLITS[0]), 3, root)
 
-    _built_once(root, build)
+    built_once(root, build)
     return sink.estimate()
 
 
@@ -306,14 +289,9 @@ def lm_stream_vs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     train = d.filter("doc_id % 10 < 8")
-    root = _store_root(spark, sf_dir, "lm")
+    root = artifact_root(spark, sf_dir, "lm", ["documents"])
     sink = StreamingBigramLM(spark, os.path.join(root, "store"))
-
-    def build() -> None:
-        for epoch, cond in enumerate(("doc_id % 3 = 0", "doc_id % 3 = 1", "doc_id % 3 = 2")):
-            sink.apply_batch(train.filter(cond), epoch, root)
-
-    _built_once(root, build)
+    _apply_once(sink, train, _DOC_SPLITS, root)
     from polar_spark.sources.tables import parallelize_small_scan
 
     holdout = parallelize_small_scan(d.filter("doc_id % 10 >= 8"))
@@ -390,16 +368,11 @@ def sketch_qs_stream_vs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polar_spark.streaming.sketches import StreamingQuantile
 
     ev = load_table(spark, sf_dir, "events")
-    root = _store_root(spark, sf_dir, "qs")
+    root = artifact_root(spark, sf_dir, "qs", ["events"])
     sink = StreamingQuantile(
         spark, os.path.join(root, "store"), ["event_type"], "event_id", "value", k=256
     )
-
-    def build() -> None:
-        for epoch, cond in enumerate(_SPLITS):
-            sink.apply_batch(ev.filter(cond), epoch, root)
-
-    _built_once(root, build)
+    _apply_once(sink, ev, _SPLITS, root)
     return sink.estimate()
 
 
@@ -429,18 +402,11 @@ def dsir_stream_vs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polar_spark.streaming.dsir import StreamingDSIR
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    root = _store_root(spark, sf_dir, "dsir")
+    root = artifact_root(spark, sf_dir, "dsir", ["documents"])
     sink = StreamingDSIR(
         spark, os.path.join(root, "store"), target="lang = 'en'", m=4096
     )
-
-    def build() -> None:
-        for epoch, cond in enumerate(
-            ("doc_id % 3 = 0", "doc_id % 3 = 1", "doc_id % 3 = 2")
-        ):
-            sink.apply_batch(docs.filter(cond), epoch, root)
-
-    _built_once(root, build)
+    _apply_once(sink, docs, _DOC_SPLITS, root)
     return sink.score(docs).select("doc_id", "lang", "n_grams", "logw_nano")
 
 
@@ -469,16 +435,9 @@ def bm25_stream_vs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polar_spark.streaming.retrieval import StreamingCorpusStats
 
     d = load_table(spark, sf_dir, "documents")
-    root = _store_root(spark, sf_dir, "bm25")
+    root = artifact_root(spark, sf_dir, "bm25", ["documents"])
     sink = StreamingCorpusStats(spark, os.path.join(root, "store"))
-
-    def build() -> None:
-        for epoch, cond in enumerate(
-            ("doc_id % 3 = 0", "doc_id % 3 = 1", "doc_id % 3 = 2")
-        ):
-            sink.apply_batch(d.filter(cond), epoch, root)
-
-    _built_once(root, build)
+    _apply_once(sink, d, _DOC_SPLITS, root)
     stats = persist_slot(sink.stats(), "bm25_stream_vs_batch.stats", eager=True)
     return bm25_topk_from_stats(
         parallelize_small_scan(d), stats, BM25_TERMS, k=10
@@ -507,14 +466,7 @@ def drift_psi_stream_vs_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from polar_spark.streaming.drift import StreamingDrift
 
     d = load_table(spark, sf_dir, "documents")
-    root = _store_root(spark, sf_dir, "drift")
+    root = artifact_root(spark, sf_dir, "drift", ["documents"])
     sink = StreamingDrift(spark, os.path.join(root, "store"))
-
-    def build() -> None:
-        for epoch, cond in enumerate(
-            ("doc_id % 3 = 0", "doc_id % 3 = 1", "doc_id % 3 = 2")
-        ):
-            sink.apply_batch(d.filter(cond), epoch, root)
-
-    _built_once(root, build)
+    _apply_once(sink, d, _DOC_SPLITS, root)
     return sink.psi()

@@ -12,16 +12,21 @@ from __future__ import annotations
 import atexit
 import contextlib
 import os
+import shutil
 
 from pyspark.sql import SparkSession
 
 
 def _remove_own_file(path: str, pid: int) -> None:
-    """At-exit removal of a file this process made; a forked child that
-    exits through ``atexit`` leaves its parent's file alone."""
+    """At-exit removal of a file or directory this process made; a
+    forked child that exits through ``atexit`` leaves its parent's
+    alone."""
     if os.getpid() == pid:
-        with contextlib.suppress(OSError):
-            os.remove(path)
+        if os.path.isdir(path):
+            shutil.rmtree(path, ignore_errors=True)
+        else:
+            with contextlib.suppress(OSError):
+                os.remove(path)
 
 
 def get_spark(

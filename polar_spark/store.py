@@ -9,6 +9,9 @@ the same protocol, and this module is the only code that knows it:
   file, inode-revalidated, optional timeout);
 - :func:`write_json` — the one atomic JSON write (tmp file per writer,
   then ``os.replace``), and :func:`read_json`, its reader;
+- :func:`artifact_root` and :func:`built_once` — the one build-once
+  protocol for derived artifacts: a per-process root keyed by the
+  input files' stat fingerprint, closed by a ``_built.json`` marker;
 - :class:`EpochLedger` — the applied-epoch ledger and the replay gate
   (:meth:`EpochLedger.claim`);
 - :func:`epoch_tag` — the stable per-(sink, epoch) partition tag, and
@@ -22,6 +25,7 @@ the same protocol, and this module is the only code that knows it:
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import fcntl
 import hashlib
@@ -29,10 +33,13 @@ import json
 import os
 import re
 import shutil
+import tempfile
 import threading
 import time
 import uuid
 from typing import NamedTuple
+
+from polar_spark.session import _remove_own_file
 
 # the applied-epoch ledger of a sink store, beside its partitions
 STORE_LEDGER = "_epochs.json"
@@ -125,6 +132,59 @@ def read_json(path: str, missing=None):
             return json.load(f)
     except FileNotFoundError:
         return missing
+
+
+# -- build-once derived artifacts ----------------------------------------------
+# the marker of a finished build, beside the artifact it closes
+_BUILT = "_built.json"
+_UNBUILT = object()
+
+
+def artifact_root(spark, sf_dir: str, kind: str, tables) -> str:
+    """The directory of one derived artifact (a stored index, a sketch
+    store): ``<tempdir>/polar_artifacts_<pid>/<kind>_<tag>``.
+
+    The tag hashes ``sf_dir``, the Spark application and, for every file
+    under each ``sf_dir/<table>.parquet``, its relative name, size and
+    ``mtime_ns``: a rewritten input or a new application gets a new
+    root, so nothing built from other inputs is ever served. The
+    per-process directory is removed at interpreter exit."""
+    h = hashlib.md5(f"{sf_dir}:{spark.sparkContext.applicationId}".encode())
+    for t in tables:
+        path = os.path.join(sf_dir, f"{t}.parquet")
+        files = (
+            sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+            if os.path.isdir(path) else [path]
+        )
+        for p in files:
+            st = os.stat(p)
+            h.update(
+                f"{os.path.relpath(p, sf_dir)}:{st.st_size}:{st.st_mtime_ns};".encode()
+            )
+    pid = os.getpid()
+    proc = os.path.join(tempfile.gettempdir(), f"polar_artifacts_{pid}")
+    if not os.path.isdir(proc):
+        os.makedirs(proc, exist_ok=True)
+        atexit.register(_remove_own_file, proc, pid)
+    return os.path.join(proc, f"{kind}_{h.hexdigest()[:12]}")
+
+
+def built_once(root: str, build):
+    """``build()``'s JSON value, built into ``root`` at most once.
+
+    When ``root/_built.json`` is missing (never built, a build that
+    raised, or a directory removed under the process) ``build()`` runs
+    and its value is written there; every later call returns the stored
+    value without building. A build must be safe to re-run over what a
+    failed attempt left: the epoch stores' ledgers skip the epochs it
+    applied, and the index writes overwrite."""
+    marker = os.path.join(root, _BUILT)
+    value = read_json(marker, _UNBUILT)
+    if value is _UNBUILT:
+        os.makedirs(root, exist_ok=True)
+        value = build()
+        write_json(marker, value)
+    return value
 
 
 # -- epoch tags ----------------------------------------------------------------

@@ -579,21 +579,29 @@ def test_retention_reaps_orphaned_write_json_tmp_files(spark, tmp_path):
     assert cat.tails("t") == tails and tails
 
 
-def test_session_package_zip_removed_at_exit(tmp_path):
-    """The package zip a process ships to its executors
-    (``polar_spark_pkg_<pid>.zip`` in the temp dir) exists while the
-    session runs and is gone once that process exits."""
+def test_session_package_zip_removed_at_exit(tmp_path, sf_dir):
+    """What a process leaves in the temp dir is gone once it exits: the
+    package zip it ships to its executors
+    (``polar_spark_pkg_<pid>.zip``) and the root of a stored artifact
+    (``polar_artifacts_<pid>/...``, here ``sketch_cm_stream_vs_batch``'s
+    epoch store) both exist while the session runs, and no ``polar_*``
+    entry is left after the process exits."""
     import subprocess
     import sys
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     child = (
         "import os, tempfile\n"
+        "from polar_spark.queries import QUERIES\n"
         "from polar_spark.session import ensure_driver_session, get_spark\n"
+        "from polar_spark.store import artifact_root\n"
         "spark = ensure_driver_session(get_spark(shuffle_partitions=1))\n"
         "zpath = os.path.join(tempfile.gettempdir(),"
         " f'polar_spark_pkg_{os.getpid()}.zip')\n"
         "print(zpath, os.path.exists(zpath))\n"
+        f"QUERIES['sketch_cm_stream_vs_batch'].fn(spark, {sf_dir!r}).collect()\n"
+        f"root = artifact_root(spark, {sf_dir!r}, 'cm', ['events'])\n"
+        "print(root, os.path.isdir(root))\n"
     )
     env = dict(os.environ, TMPDIR=str(tmp_path), POLAR_SPARK_DRIVER_MEM="1g")
     out = subprocess.run(
@@ -601,8 +609,9 @@ def test_session_package_zip_removed_at_exit(tmp_path):
         cwd=repo, env=env, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    zpath, existed = out.stdout.split()[-2:]
+    zpath, zexisted, root, rexisted = out.stdout.split()[-4:]
     assert os.path.dirname(zpath) == str(tmp_path)
-    assert existed == "True"
-    assert not os.path.exists(zpath)
-    assert not [f for f in os.listdir(tmp_path) if f.startswith("polar_spark_pkg_")]
+    assert os.path.commonpath([root, str(tmp_path)]) == str(tmp_path)
+    assert zexisted == "True" and rexisted == "True"
+    assert not os.path.exists(zpath) and not os.path.exists(root)
+    assert not [f for f in os.listdir(tmp_path) if f.startswith("polar_")]

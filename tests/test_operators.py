@@ -779,6 +779,38 @@ def test_dedup_incremental_index_leaves_no_store(spark, sf_dir):
     assert got == sorted(con.sql(spec.oracle).fetchall()) and got
 
 
+def test_artifact_rebuilds_when_input_table_is_rewritten(spark, sf_dir, tmp_path):
+    """A stored artifact is keyed by its input files, not only by the
+    application: rewriting ``events.parquet`` with a strict subset of its
+    rows inside one session rebuilds ``sketch_cm_stream_vs_batch``'s
+    epoch store, and the rows equal the DuckDB oracle on the new file."""
+    import os
+    import shutil
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from polar_spark.queries import QUERIES
+
+    spec = QUERIES["sketch_cm_stream_vs_batch"]
+    events = str(tmp_path / "events.parquet")
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), events)
+
+    def rows_and_oracle():
+        got = sorted(map(tuple, spec.fn(spark, str(tmp_path)).collect()))
+        con = duckdb.connect()
+        con.sql(f"CREATE VIEW events AS SELECT * FROM '{events}'")
+        return got, sorted(con.sql(spec.oracle).fetchall())
+
+    got, want = rows_and_oracle()
+    assert got == want and got
+    t = pq.read_table(events)
+    pq.write_table(t.slice(0, t.num_rows // 2), events)
+    got2, want2 = rows_and_oracle()
+    assert want2 != want
+    assert got2 == want2 and got2
+
+
 def test_bloom_semi_join_exact_and_prefilter_selective(spark, sf_dir):
     """The bloom-prefiltered semi join must EQUAL the plain semi join
     (false positives scrubbed), and the bloom prefilter alone must pass
@@ -1034,10 +1066,10 @@ def test_ann_train_memo_repeat_invocation_identical(spark, sf_dir):
     """A repeat invocation of the ANN queries returns the exact same
     row multiset as the first: ``knn_pq_adc`` and ``knn_ivf_trained``
     retrain on every call (training is deterministic, so the second
-    call's books equal the first's), and ``knn_ivfpq_stored``'s
-    session-scoped ``_IVFPQ_MEMO`` reuses the stored index on the
-    second call (memo-hit and memo-miss paths are interchangeable by
-    construction; this pins it)."""
+    call's books equal the first's), and ``knn_ivfpq_stored`` reuses
+    its stored index and shortlist on the second call (the built and
+    the reused artifact are interchangeable by construction; this pins
+    it)."""
     from polar_spark.queries import QUERIES
 
     for name in ("knn_pq_adc", "knn_ivfpq_stored", "knn_ivf_trained"):
@@ -1047,21 +1079,39 @@ def test_ann_train_memo_repeat_invocation_identical(spark, sf_dir):
         assert first == second and len(first) > 0, name
 
 
-def test_ivfpq_memo_rebuilds_vanished_index(spark, sf_dir):
-    """An ``_IVFPQ_MEMO`` hit whose index directory was deleted (a /tmp
-    sweep) rebuilds the index instead of reading a missing path, and the
-    rows are unchanged."""
+@pytest.mark.parametrize(
+    "name, kind, table",
+    [
+        ("knn_ivfpq_stored", "ivfpq_index", "embeddings"),
+        ("knn_ivf_stored_cells", "ivf_index", "embeddings"),
+        ("semdedup_lsh_stored", "semlsh_idx", "embeddings"),
+        ("sketch_cm_stream_vs_batch", "cm", "events"),
+    ],
+)
+def test_artifact_root_rebuilds_when_vanished(spark, sf_dir, name, kind, table):
+    """A query whose artifact root was deleted between two calls (a /tmp
+    sweep) rebuilds it instead of reading a missing path, and the rows
+    are unchanged; ``semdedup_lsh_stored``'s rebuild rebinds its catalog
+    table to the rebuilt data under the root."""
+    import os
     import shutil
 
     from polar_spark.queries import QUERIES
-    from polar_spark.queries import similarity as qsim
+    from polar_spark.store import artifact_root
 
-    fn = QUERIES["knn_ivfpq_stored"].fn
+    fn = QUERIES[name].fn
     first = sorted(map(tuple, fn(spark, sf_dir).collect()))
-    key = f"{sf_dir}:{spark.sparkContext.applicationId}"
-    shutil.rmtree(qsim._IVFPQ_MEMO[key][0])
+    root = artifact_root(spark, sf_dir, kind, [table])
+    assert os.path.exists(os.path.join(root, "_built.json"))
+    shutil.rmtree(root)
     second = sorted(map(tuple, fn(spark, sf_dir).collect()))
     assert first == second and len(first) > 0
+    assert os.path.exists(os.path.join(root, "_built.json"))
+    if name == "semdedup_lsh_stored":
+        from polar_spark.sources.semlsh_index import _table_location
+
+        loc = _table_location(spark, os.path.basename(root))
+        assert loc == os.path.join(root, "index") and os.listdir(loc)
 
 
 def _lloyd_pq_reference(rows, nsub=8, ksub=16, iters=2):

@@ -213,7 +213,7 @@ def test_ivf_stored_cells_no_candidate_assignment_pass(spark, sf_dir):
     # with subquery/exchange reuse, so assert the absence, not a count)
     assert not any("cell(" in ln for ln in arrow_lines), arrow_lines
     # the candidate scan reads the stored index with runtime cell pruning
-    assert "polar_ivf_index_" in plan
+    assert "polar_artifacts_" in plan and "ivf_index_" in plan
     assert "dynamicpruning" in plan
 
 

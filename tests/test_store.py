@@ -71,6 +71,49 @@ def test_footer_gate_is_the_only_pyarrow_parquet_reader_of_queries():
     assert offenders == []
 
 
+def test_artifact_protocol_is_the_only_build_once_of_queries():
+    """No module under polar_spark/queries/ keys a derived artifact by
+    the application itself, picks a root under the temp dir or names a
+    build marker: a stored index or sketch store goes through
+    store.artifact_root + store.built_once, the one root whose tag
+    covers the input files and whose directory is removed at exit."""
+    root = Path(polar_spark.__file__).parent
+    offenders = [
+        f"{p.relative_to(root)}: {m.group(0)}"
+        for p in sorted((root / "queries").rglob("*.py"))
+        for m in re.finditer(
+            r"\bapplicationId\b|\bgettempdir\(|\b_DONE\b|_built\.json",
+            p.read_text(),
+        )
+    ]
+    assert offenders == []
+
+
+def test_built_once_builds_once_and_returns_the_stored_value(spark, tmp_path):
+    """``built_once`` calls ``build`` only while the marker is missing
+    and returns its JSON value on every call; ``artifact_root`` changes
+    when an input file is rewritten and stays put otherwise."""
+    from polar_spark.store import artifact_root, built_once
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return {"shortlist": 400}
+
+    root = str(tmp_path / "art")
+    assert built_once(root, build) == built_once(root, build) == {"shortlist": 400}
+    assert len(calls) == 1
+    (tmp_path / "sf").mkdir()
+    t = tmp_path / "sf" / "t.parquet"
+    t.write_bytes(b"a")
+    a = artifact_root(spark, str(tmp_path / "sf"), "k", ["t"])
+    assert artifact_root(spark, str(tmp_path / "sf"), "k", ["t"]) == a
+    assert os.path.basename(os.path.dirname(a)) == f"polar_artifacts_{os.getpid()}"
+    t.write_bytes(b"ab")
+    assert artifact_root(spark, str(tmp_path / "sf"), "k", ["t"]) != a
+
+
 def test_write_json_replaces_atomically_and_leaves_no_tmp(tmp_path):
     p = str(tmp_path / "_ledger.json")
     assert read_json(p, {"cold": True}) == {"cold": True}
