@@ -454,7 +454,7 @@ SCALE100_FACTOR = 100
 SCALE100_QUERIES = ["dedup_minhash_verified", "knn_ivf_stored_cells",
                     "q17_small_qty_revenue",
                     # r7: the round's open scale question — KMV is
-                    # scan-linear md5 work (tools/measure_kmv_scale.py);
+                    # scan-linear md5 work (SURVEY §14, KMV prefilter);
                     # the 100x point records the second decade
                     "sketch_kmv_distinct_users"]
 SCALE100_TABLES = ("documents", "embeddings", "lineitem", "events")

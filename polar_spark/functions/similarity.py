@@ -377,7 +377,7 @@ def ivf_topk(
     :func:`ivf_cell` and stored/partitioned by cell). Without it, every
     call pays one O(n) assignment pass over the candidates — fine for a
     one-shot query, the dominant cost across repeated query batches
-    (measured in tools/ann_scale_experiment.py / SURVEY §9.2)."""
+    (measured at 1×/10×/100× corpora, SURVEY §9.2)."""
     if cell_col is not None:
         asg = candidates.withColumnRenamed(cell_col, "cell")
     else:
@@ -945,14 +945,15 @@ def semdedup_lsh_drop_ids(
     t = vecs.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     k = t.select(
         "id",
-        "v",
+        # width 8 packs any int64 vector losslessly
+        pack_vec(F.col("v"), 8).alias("vq"),
         sq_norm(F.col("v")).alias("n2"),
         F.posexplode(
             lsh_band_buckets("v", dims, bands, planes_per_band)
         ).alias("band", "bucket"),
     )
     verified = k.groupBy("band", "bucket").applyInPandas(
-        _verify_group_fn(tau_sq_pct, None), schema="drop_id long"
+        _verify_group_fn(tau_sq_pct, 8), schema="drop_id long"
     )
     return verified.distinct()
 
@@ -1001,12 +1002,12 @@ def semdedup_drop_ids(
 
     t = vecs.select(
         F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
+        pack_vec(F.col(vec_col), 8).alias("vq"),  # lossless for any int64
         ivf_cell(vec_col, centroids).alias("bucket"),
         sq_norm(F.col(vec_col)).alias("n2"),
     )
     verified = t.groupBy("bucket").applyInPandas(
-        _verify_group_fn(tau_sq_pct, None), schema="drop_id long"
+        _verify_group_fn(tau_sq_pct, 8), schema="drop_id long"
     )
     return verified.distinct()
 

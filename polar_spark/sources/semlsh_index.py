@@ -70,10 +70,6 @@ exactly the shuffle wall this table exists to remove. Co-location is
 the only zero-Exchange layout for the full-corpus verify; the int16
 pack is the (lossless) version of the storage cut that preserves it.
 
-Pre-r13 tables (``v array<bigint>``, string buckets) stay readable:
-the verify branches on the store schema, and ``append_semlsh_index``
-emits whichever row shape the table already has.
-
 Maintenance lifecycle (append → compact → swap) is crash-safe since
 r13: append/compact serialize on an flock next to the warehouse (the
 same discipline as the streaming sink's epoch ledger), and the compact
@@ -106,7 +102,6 @@ from pyspark.sql import functions as F
 
 from polar_spark.functions.similarity import (
     lsh_band_bucket_ids,
-    lsh_band_buckets,
     pack_vec,
     sq_norm,
     unpack_mat,
@@ -132,51 +127,27 @@ def semlsh_store_df(
     id_col: str = "vec_id",
     vec_col: str = "v",
     vbytes: int = 2,
-    packed: bool = True,
 ) -> DataFrame:
-    """The exploded store rows — a narrow map over ``df`` (no shuffle).
-    ``df[vec_col]`` must already be quantized int64 (the
-    functions.similarity contract).
-
-    ``packed=True`` (the r13 layout): ``(band, bpre, bucket:long,
-    id, vq:binary, n2)`` with ``vq = pack_vec(v, vbytes)``.
-    ``packed=False`` reproduces the pre-r13 rows ``(band, bpre,
-    bucket:string, id, v:array<bigint>, n2)`` so appends into legacy
-    tables keep their schema."""
+    """The exploded store rows ``(band, bpre, bucket:long, id,
+    vq:binary, n2)`` with ``vq = pack_vec(v, vbytes)`` — a narrow map
+    over ``df`` (no shuffle). ``df[vec_col]`` must already be quantized
+    int64 (the functions.similarity contract)."""
     r = int(planes_per_band)
     k = min(int(prefix_bits), r)
-    if packed:
-        t = df.select(
-            F.col(id_col).alias("id"),
-            pack_vec(F.col(vec_col), vbytes).alias("vq"),
-            sq_norm(F.col(vec_col)).alias("n2"),
-            F.posexplode(
-                lsh_band_bucket_ids(vec_col, dims, bands, r)
-            ).alias("band", "bucket"),
-        )
-        return t.select(
-            "band",
-            F.shiftright("bucket", r - k).cast("int").alias("bpre"),
-            "bucket",
-            "id",
-            "vq",
-            "n2",
-        )
     t = df.select(
         F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
+        pack_vec(F.col(vec_col), vbytes).alias("vq"),
         sq_norm(F.col(vec_col)).alias("n2"),
         F.posexplode(
-            lsh_band_buckets(vec_col, dims, bands, r)
+            lsh_band_bucket_ids(vec_col, dims, bands, r)
         ).alias("band", "bucket"),
     )
-    # leading k bucket bits as an int: '1'/'0' strings → binary parse
     return t.select(
         "band",
-        F.conv(F.substring("bucket", 1, k), 2, 10).cast("int").alias("bpre"),
+        F.shiftright("bucket", r - k).cast("int").alias("bpre"),
         "bucket",
         "id",
-        "v",
+        "vq",
         "n2",
     )
 
@@ -296,8 +267,7 @@ def semlsh_index_params(spark: SparkSession, table: str) -> dict[str, int]:
     """The operating point pinned by :func:`write_semlsh_index`.
     Completes an interrupted compact swap first, so every read path
     self-heals (the canonical name is re-bound before any lookup can
-    fail). ``vbytes`` defaults to 2 for packed tables written before
-    the prop existed; legacy (array-vector) tables carry no pack."""
+    fail)."""
     recover_semlsh_swap(spark, table)
     rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
     props = {
@@ -305,14 +275,15 @@ def semlsh_index_params(spark: SparkSession, table: str) -> dict[str, int]:
         for r in rows
         if r["key"].startswith("polar.semlsh.")
     }
-    required = {"dims", "bands", "planes_per_band", "prefix_bits", "num_buckets"}
+    required = {
+        "dims", "bands", "planes_per_band", "prefix_bits", "num_buckets", "vbytes",
+    }
     missing = required - set(props)
     if missing:
         raise ValueError(
             f"table {table} is missing semlsh properties {sorted(missing)} "
             "— was it written by write_semlsh_index?"
         )
-    props.setdefault("vbytes", 2)
     return props
 
 
@@ -341,7 +312,6 @@ def append_semlsh_index(
     spark = df.sparkSession
     with _store_lock(spark, table):
         p = semlsh_index_params(spark, table)
-        legacy = "vq" not in spark.table(table).columns
         rows = semlsh_store_df(
             df,
             p["dims"],
@@ -351,7 +321,6 @@ def append_semlsh_index(
             id_col,
             vec_col,
             vbytes=p["vbytes"],
-            packed=not legacy,
         )
         (
             rows.write.mode("append")
@@ -433,13 +402,12 @@ def compact_semlsh_index(
         }
 
 
-def _verify_group_fn(tau_sq_pct: int, vbytes: int | None):
+def _verify_group_fn(tau_sq_pct: int, vbytes: int):
     """Per-(band,bpre)-group verifier: numpy pairwise dots per full
     bucket, exact integer threshold, emits drop ids (higher id of every
-    verified pair — the keep-lowest policy of semdedup_lsh_drop_ids).
-    ``vbytes`` set → packed store rows (decode ``vq``); None → legacy
-    ``array<bigint>`` rows. Both decode to the same int64 matrix, so
-    the drop arithmetic is shared and bit-identical across layouts."""
+    verified pair — the keep-lowest policy of semdedup_lsh_drop_ids)
+    over rows ``(bucket, id, vq, n2)``, ``vq`` packed at ``vbytes``
+    (functions/similarity.pack_vec)."""
     tau = int(tau_sq_pct)
 
     def verify(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -450,10 +418,7 @@ def _verify_group_fn(tau_sq_pct: int, vbytes: int | None):
                 continue
             g = g.sort_values("id")
             ids = g["id"].to_numpy()
-            if vbytes is not None:
-                V = unpack_mat(g["vq"], vbytes)
-            else:
-                V = np.stack(g["v"].to_numpy()).astype(np.int64, copy=False)
+            V = unpack_mat(g["vq"], vbytes)
             n2 = g["n2"].to_numpy().astype(np.float64)
             n2i = g["n2"].tolist()
             chunk = max(1, _CHUNK_CELLS // m)
@@ -494,15 +459,9 @@ def semdedup_lsh_drop_ids_stored(
     """Distinct ids to DROP, verified partition-locally over the stored
     index — bit-identical to ``semdedup_lsh_drop_ids`` on the same
     corpus/bands/planes (tests/test_semlsh_index.py law), with the only
-    query-time Exchange being the final ids-only ``distinct``. Reads
-    both the packed (r13) and the legacy array-vector layout."""
-    recover_semlsh_swap(spark, table)
-    store = spark.table(table)
-    if "vq" in store.columns:
-        vbytes = semlsh_index_params(spark, table)["vbytes"]
-    else:
-        vbytes = None  # pre-r13 layout: v array<bigint>
-    verified = store.groupBy("band", "bpre").applyInPandas(
+    query-time Exchange being the final ids-only ``distinct``."""
+    vbytes = semlsh_index_params(spark, table)["vbytes"]
+    verified = spark.table(table).groupBy("band", "bpre").applyInPandas(
         _verify_group_fn(tau_sq_pct, vbytes), schema="drop_id long"
     )
     return verified.distinct()

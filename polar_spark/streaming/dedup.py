@@ -22,7 +22,6 @@ micro-batch replay, provided the replayed batch has the same content
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,12 +31,9 @@ from polar_spark.functions.dedup import NearDupIndex, compact_store
 from polar_spark.store import (
     STORE_LEDGER,
     EpochLedger,
-    epoch_dirs,
     live_dirs,
     publish_epoch,
-    read_json,
     read_live,
-    write_json,
 )
 from polar_spark.streaming.ingest import start_epoch_sink
 
@@ -622,12 +618,11 @@ class _ResidentStore:
     identity (inode, ``mtime_ns``): ``publish_epoch`` renames a fresh
     directory in and a Spark overwrite makes a new one, so a same-named
     rewrite is never taken for the old one. A partition that left the
-    listing (folded by ``compact()``, replaced by a migration) or
-    changed is dropped; one not seen yet is loaded with pyarrow —
-    Spark-written bulk partitions, ``ep=migrated`` and compaction bases
-    included. The trigger's own tag is left out of the listing, as
-    ``read_live(…, exclude_tag)`` leaves it out, so a replay never
-    matches its own torn first attempt. The sink writes its own
+    listing (folded by ``compact()``) or changed is dropped; one not
+    seen yet is loaded with pyarrow — Spark-written bulk partitions and
+    compaction bases included. The trigger's own tag is left out of the
+    listing, as ``read_live(…, exclude_tag)`` leaves it out, so a
+    replay never matches its own torn first attempt. The sink writes its own
     partitions through (:meth:`insert`) once they are published."""
 
     def __init__(self, bands_path: str, vectors_path: str, dims: int, planes: int):
@@ -791,26 +786,17 @@ class StreamingSemDedupLSH:
     (functions/similarity.lsh_band_buckets): per-trigger pair work is
     O(batch · bands + true dups), independent of store size.
 
-    Store layout (v3, r13 — VERDICT r12 ask #1): band rows are
-    IDS-ONLY — ``(bucket:int64, vec_id)`` under (band, bucket-prefix)
-    directory partitions — and each kept VECTOR is stored exactly ONCE
-    in the kept-vectors table. The r11/r12 layout co-located a full
-    vector copy in every band row, a measured 23-35× byte amplification
-    of the corpus at real operating points (~30 GB at 8M vectors; it
-    capped the r12 trigger sweep at 8M on this host's disk) — and since
-    a realistic batch occupies nearly every (band, bpre) partition, the
-    per-trigger pruned read effectively re-scanned those bands× bytes
-    every trigger. Ids-only rows cut BOTH: store bytes fall to
-    ~bands·16 B/vector (≈ 1× the corpus bytes at dims 64) plus the 1×
-    vector payload, and the per-trigger read is the slim key store plus
-    ONE id-join against the kept-vectors table for just the MATCHED
-    candidates (deduped across bands before the fetch — a pair
-    colliding in k bands is verified once, not k times). The price is
-    that candidate verification pays an id-equi-join instead of
-    verifying fully in place — candidate volume is the LSH-bounded
+    Store layout: band rows are IDS-ONLY — ``(bucket:int64, vec_id)``
+    under (band, bucket-prefix) directory partitions — and each kept
+    VECTOR is stored exactly ONCE, in the kept-vectors table. Store
+    bytes are ~bands·16 B/vector plus the 1× vector payload, and the
+    per-trigger read is the slim key store plus ONE id-join against the
+    kept-vectors table for just the MATCHED candidates (deduped across
+    bands before the fetch — a pair colliding in k bands is verified
+    once, not k times). Candidate volume is the LSH-bounded
     O(batch·bands collisions + true dups), so the join's shuffle is
     id-pairs + one vector per candidate, never a corpus shuffle. LSH
-    recall < 1 at the chosen operating point stands as before
+    recall < 1 at the chosen operating point stands
     (functions/similarity.lsh_operating_point sizes it; SemDeDup's
     published τ = 0.95 sits in the cheap ρ ≈ 0.15 regime).
 
@@ -893,7 +879,6 @@ class StreamingSemDedupLSH:
         # and the `kept()` API's contract).
         self.vbytes = int(vbytes)
         self._epochs = EpochLedger(os.path.join(index_path, STORE_LEDGER))
-        self._format_marker = os.path.join(index_path, "_store_format.json")
         # the small-batch plan's stored-corpus lookup; its int64 band
         # keys (band << planes | bucket) must fit, else Spark looks up
         self._resident = (
@@ -903,79 +888,6 @@ class StreamingSemDedupLSH:
             if (bands - 1).bit_length() + planes_per_band <= 62
             else None
         )
-
-    # bands-store physical layout version. v3 (r13): (band, bpre)
-    # directory partitions of IDS-ONLY rows (bucket:int64, vec_id) —
-    # vectors live once in the kept-vectors table. v2 (r11): the same
-    # partitioning with v array<bigint> + n2 co-located and string
-    # buckets. v1 (r10, unmarked): flat per-epoch files of (vec_id,
-    # band, bucket). Mixed layouts under one store break Spark
-    # partition discovery and the join key types, so the version is
-    # pinned in a marker file alongside the epoch ledger (ADVICE r11),
-    # and any pre-v3 data triggers ONE full rebuild from the
-    # kept-vectors table — rebuilding everything (not just the
-    # detected-legacy epochs) is what makes a MIXED store (flat v1
-    # dirs next to partitioned v2 dirs) come out duplicate-free
-    # (ADVICE r12).
-    _FORMAT_VERSION = 3
-
-    def pin_current_format(self) -> None:
-        """Pin the marker for a store KNOWN to be in the current
-        layout — the normal tail of :meth:`_ensure_format`, and the
-        entry point for bulk-seeding tools that write packed band rows
-        directly (tools/measure_semlsh_trigger.py) so the first
-        apply_batch doesn't re-derive what the seeder just wrote."""
-        os.makedirs(self.index_path, exist_ok=True)
-        write_json(self._format_marker, {"bands_layout": self._FORMAT_VERSION})
-
-    def _ensure_format(self) -> None:
-        """Pin or reconcile the bands-store layout version. Any pre-v3
-        data — the r10 flat layout, the r11/r12 array-vector partitions,
-        or a mix — is rebuilt in place from the kept-vectors table (the
-        source of truth; bands rows are derived data). A store from a
-        NEWER format version, or one packed at a different width than
-        this sink, fails loudly instead of mis-reading. A truncated or
-        corrupted marker (e.g. a disk-full partial write) is treated as
-        unversioned so the reconcile path runs instead of crashing
-        every subsequent apply_batch (ADVICE r12)."""
-        try:
-            m = read_json(self._format_marker, {})
-            ver = int(m.get("bands_layout", 0))
-            if ver > self._FORMAT_VERSION:
-                raise RuntimeError(
-                    f"bands store at {self.bands_path} was written by "
-                    f"layout v{ver}; this build reads v"
-                    f"{self._FORMAT_VERSION} — upgrade the engine or "
-                    "rebuild the store"
-                )
-            if ver == self._FORMAT_VERSION:
-                return
-        except (json.JSONDecodeError, ValueError, KeyError, TypeError):
-            pass  # corrupt marker → reconcile as unversioned (below)
-        stale = False
-        eps = live_dirs(self.bands_path)
-        flat = []
-        for ep in eps:
-            entries = list(os.scandir(ep.path))
-            if any(e.name.startswith("band=") for e in entries):
-                continue  # partitioned; schema checked below
-            # "."/"_"-prefixed names are Hadoop metadata (_SUCCESS,
-            # ._SUCCESS.crc) — an all-dropped epoch writes only
-            # those; any real DATA outside band= dirs is v1-flat
-            if any(not e.name.startswith(("_", ".")) for e in entries):
-                flat.append(ep.path)
-        if flat:
-            stale = True
-        elif eps:
-            try:
-                cols = _read_store(self.spark, self.bands_path).columns
-                # v2 co-located vectors (or any interim packed form)
-                stale = bool({"v", "vq"} & set(cols))
-            except Exception:
-                stale = True  # unreadable/mixed → rebuild from truth
-        if stale:
-            self._rebuild_bands_store()
-        self.pin_current_format()
 
     def _band_key_rows(self, df: "DataFrame") -> "DataFrame":
         """Ids-only band-key rows ``(band, bpre, bucket, vec_id)`` for
@@ -1001,40 +913,6 @@ class StreamingSemDedupLSH:
             )
             .select("band", "bpre", "bucket", "vec_id")
         )
-
-    def _rebuild_bands_store(self) -> None:
-        """One-time rebuild of a pre-v3 bands store into the ids-only
-        (band, bpre)-partitioned layout, from the kept-vectors table
-        (which every version of this sink has maintained). ALL existing
-        epoch dirs are replaced by one ``ep=migrated`` partition —
-        rebuilding the whole derived store (rather than only the
-        detected-legacy epochs) is what keeps a mixed v1/v2 store from
-        ending up with duplicate band rows (ADVICE r12). Write the
-        rebuilt partition FIRST, delete the old dirs after — a crash in
-        between re-runs the (idempotent) rebuild on next start."""
-        import shutil
-
-        if not live_dirs(self.vectors_path):
-            raise RuntimeError(
-                f"bands store at {self.bands_path} uses a pre-v3 flat "
-                "layout and no kept-vectors table exists to rebuild from "
-                f"({self.vectors_path}); migrate by re-ingesting the "
-                "corpus into a fresh index_path"
-            )
-        old = [
-            ep.path for ep in epoch_dirs(self.bands_path)
-            if ep.name != "ep=migrated"
-        ]
-        vecs = _read_store(self.spark, self.vectors_path).select("vec_id", "v")
-        (
-            self._band_key_rows(vecs)
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .partitionBy("band", "bpre")
-            .parquet(os.path.join(self.bands_path, "ep=migrated"))
-        )
-        for d in old:
-            shutil.rmtree(d, ignore_errors=True)
 
     def apply_batch(
         self,
@@ -1151,7 +1029,6 @@ class StreamingSemDedupLSH:
         if batch_n == 0:
             batch.unpersist()
             return
-        self._ensure_format()
         keys = self._band_key_rows(batch).persist()
         over_tau = self._over_tau()
         try:
@@ -1300,7 +1177,6 @@ class StreamingSemDedupLSH:
             "bucket": B.ravel(),
             "vec_id": np.repeat(ids, self.bands),
         }
-        self._ensure_format()
 
         res = self._resident
         if res is not None and res.refresh(tag):
@@ -1407,7 +1283,6 @@ class StreamingSemDedupLSH:
         self._epochs.check_settled(
             self.bands_path, self.vectors_path, self.drops_path
         )
-        self._ensure_format()
         return {
             "bands": compact_store(
                 self.spark, self.bands_path, self._epochs, "band", "bucket",

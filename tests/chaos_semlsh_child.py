@@ -60,6 +60,9 @@ def _spark(root: str, app: str):
             "javax.jdo.option.ConnectionURL": (
                 f"jdbc:derby:;databaseName={root}/metastore_db;create=true"
             ),
+            # Hive's session state makes a <uuid>_resources dir here,
+            # not in the system temp dir
+            "hive.downloaded.resources.dir": os.path.join(root, "hive_resources"),
         },
     )
 

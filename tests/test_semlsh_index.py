@@ -239,11 +239,16 @@ def test_append_requires_pinned_params(spark, tmp_path, qv):
     qv.limit(5).write.mode("overwrite").option(
         "path", str(tmp_path / "plain_tbl")
     ).saveAsTable("semlsh_plain")
+    # an index table whose pack width is not pinned
+    t = _with_table(spark, tmp_path, "semlsh_novbytes", qv.limit(5), 4, 4)
+    spark.sql(f"ALTER TABLE {t} UNSET TBLPROPERTIES ('polar.semlsh.vbytes')")
     try:
-        with pytest.raises(ValueError, match="missing semlsh properties"):
-            append_semlsh_index(qv.limit(5), "semlsh_plain")
+        for name in ("semlsh_plain", t):
+            with pytest.raises(ValueError, match="missing semlsh properties"):
+                append_semlsh_index(qv.limit(5), name)
     finally:
         spark.sql("DROP TABLE IF EXISTS semlsh_plain")
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_store_rows_shape(spark, tmp_path, qv):
@@ -275,50 +280,6 @@ def test_store_rows_shape(spark, tmp_path, qv):
         assert len(one["vq"]) == 64 * 2
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_legacy_array_layout_still_reads(spark, tmp_path, qv):
-    """Backward compat: a pre-r13 table (string buckets, array<bigint>
-    vectors, no vbytes prop) verifies to the SAME drop set as the
-    packed layout, and append into it keeps the legacy row shape."""
-    from polar_spark.sources.semlsh_index import (
-        append_semlsh_index,
-        semlsh_store_df,
-    )
-
-    rows = semlsh_store_df(
-        qv.filter(F.col("vec_id") % 2 == 0), 64, 16, 4, prefix_bits=4,
-        packed=False,
-    )
-    (
-        rows.write.mode("overwrite")
-        .bucketBy(32, "band", "bpre")
-        .sortBy("band", "bpre")
-        .option("path", str(tmp_path / "legacy"))
-        .format("parquet")
-        .saveAsTable("semlsh_legacy")
-    )
-    spark.sql(
-        "ALTER TABLE semlsh_legacy SET TBLPROPERTIES ("
-        "'polar.semlsh.dims'='64','polar.semlsh.bands'='16',"
-        "'polar.semlsh.planes_per_band'='4','polar.semlsh.prefix_bits'='4',"
-        "'polar.semlsh.num_buckets'='32')"
-    )
-    try:
-        append_semlsh_index(qv.filter(F.col("vec_id") % 2 == 1), "semlsh_legacy")
-        tbl = spark.table("semlsh_legacy")
-        assert dict(tbl.dtypes)["v"] == "array<bigint>"  # shape preserved
-        legacy = _drops(
-            semdedup_lsh_drop_ids_stored(spark, "semlsh_legacy", 1600)
-        )
-        shuffled = _drops(
-            semdedup_lsh_drop_ids(
-                qv, 64, bands=16, planes_per_band=4, tau_sq_pct=1600
-            )
-        )
-        assert legacy == shuffled and len(legacy) > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS semlsh_legacy")
 
 
 def test_pack_overflow_raises(spark):

@@ -132,9 +132,6 @@ def main() -> None:
             ).partitionBy("band", "bpre").parquet(
                 os.path.join(lsh_sink.bands_path, "ep=seed")
             )
-            # the seeded store IS the current layout — pin the marker
-            # so the probe's apply_batch doesn't re-derive it
-            lsh_sink.pin_current_format()
 
             def _du(path: str) -> int:
                 return sum(
