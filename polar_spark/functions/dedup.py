@@ -42,10 +42,9 @@ from polar_spark.sources.tables import parallelize_small_scan as _spread  # noqa
 from polar_spark.store import (  # noqa: E402
     STORE_LEDGER,
     EpochLedger,
-    compact_epochs,
-    gc_folded,
+    compact_stores,
     is_base_dir,
-    live_dirs,
+    publish_epoch,
     read_live,
 )
 
@@ -787,16 +786,18 @@ class NearDupIndex:
         self.shingles_path = _os.path.join(path, "shingles")
 
     # Store layout: every write lands in its own ``ep=<tag>`` partition
-    # subdirectory. A RETRIED batch (same tag) overwrites exactly its own
-    # subdir and its store read excludes its own tag (partition-pruned),
-    # so a micro-batch replay after a crash between the store append and
-    # the caller's epoch record is IDEMPOTENT — without this, a retry
-    # would double-append the batch's shingles and every later Jaccard
-    # against those ids would sum doubled counts (judge review r4).
-    # A side missing after a crash reads as cold (store.read_live: the
-    # retry rewrites its own partition instead of crash-looping); a side
-    # with a committed partition that fails to read raises, since a cold
-    # read would silently miss every cross-batch near-dup.
+    # subdirectory, published by rename (store.publish_epoch), so a
+    # write that fails part-way leaves no partition a read lists. A
+    # RETRIED batch (same tag) replaces exactly its own subdir and its
+    # store read excludes its own tag (partition-pruned), so a
+    # micro-batch replay after a crash between the store append and the
+    # caller's epoch record is IDEMPOTENT — without this, a retry would
+    # double-append the batch's shingles and every later Jaccard against
+    # those ids would sum doubled counts (judge review r4). A side
+    # missing after a crash reads as cold (store.read_live: the retry
+    # rewrites its own partition instead of crash-looping); a side with
+    # a committed partition that fails to read raises, since a cold read
+    # would silently miss every cross-batch near-dup.
 
     _RESERVED_TAGS = ("base", "compacted")
 
@@ -833,10 +834,13 @@ class NearDupIndex:
             sigs = minhash_signatures_from_shingles(
                 shw.filter(F.col("n_words") >= SHINGLE_WORDS).select("id", "shingle")
             )
-            lsh_band_keys(sigs, "id").write.mode("overwrite").parquet(
-                f"{self.bands_path}/ep=base"
+            publish_epoch(
+                self.bands_path, "base",
+                lsh_band_keys(sigs, "id").write.mode("overwrite").parquet,
             )
-            shw.write.mode("overwrite").parquet(f"{self.shingles_path}/ep=base")
+            publish_epoch(
+                self.shingles_path, "base", shw.write.mode("overwrite").parquet
+            )
         finally:
             shw.unpersist()
 
@@ -855,14 +859,13 @@ class NearDupIndex:
         import os as _os
 
         ledger = EpochLedger(_os.path.join(self.path, STORE_LEDGER))
-        ledger.check_settled(self.bands_path, self.shingles_path)
+        return compact_stores(self.spark, ledger, self._stores())
+
+    def _stores(self) -> dict:
+        """The index stores, as store.compact_stores takes them."""
         return {
-            "bands": compact_store(
-                self.spark, self.bands_path, ledger, "band", "band_key"
-            ),
-            "shingles": compact_store(
-                self.spark, self.shingles_path, ledger, "id", "shingle"
-            ),
+            "bands": (self.bands_path, "band", "band_key"),
+            "shingles": (self.shingles_path, "id", "shingle"),
         }
 
     def query_and_update(self, new_docs: DataFrame, id_col: str = "doc_id",
@@ -874,7 +877,7 @@ class NearDupIndex:
         store append, so it is safe to collect lazily afterwards.
 
         ``tag``: stable per-batch id (e.g. derived from a streaming
-        epoch). A re-invocation with the SAME tag overwrites its own
+        epoch). A re-invocation with the SAME tag replaces its own
         ``ep=<tag>`` store partition and reads the store excluding it —
         replay-idempotent. Default: a fresh uuid (one-shot caller)."""
         import uuid as _uuid
@@ -922,11 +925,11 @@ class NearDupIndex:
                 ),
                 "incremental_index.batch_pairs",
             ).localCheckpoint()
-            new_keys.write.mode("overwrite").parquet(
-                f"{self.bands_path}/ep={tag}"
+            publish_epoch(
+                self.bands_path, tag, new_keys.write.mode("overwrite").parquet
             )
-            new_shw.write.mode("overwrite").parquet(
-                f"{self.shingles_path}/ep={tag}"
+            publish_epoch(
+                self.shingles_path, tag, new_shw.write.mode("overwrite").parquet
             )
             return pairs
         finally:
@@ -1073,40 +1076,3 @@ def _free_local_checkpoint(df: DataFrame) -> None:
 
 
 _FREE_CKPT_WARNED = False
-
-
-def compact_store(
-    spark: SparkSession, root: str, ledger: EpochLedger, partition_col: str,
-    sort_col: str, partition_by: tuple[str, ...] = (),
-) -> tuple[int, int]:
-    """Compact a dedup store (store.compact_epochs) into few
-    ``partition_col``-bucketed files sorted by ``sort_col``; returns its
-    live parquet files (before, after). ``partition_by`` keeps a
-    directory-partitioned layout (the LSH bands store prunes on
-    band/bpre dirs). The store's one writer is serialized against the
-    compaction, so no reader holds a listing from before the commit:
-    the folded partitions are deleted at once."""
-    import os as _os
-
-    def rewrite(df: DataFrame, out: str) -> None:
-        (
-            df.repartition(F.col(partition_col))
-            .sortWithinPartitions(sort_col)
-            .write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(out)
-        )
-
-    def files(paths) -> int:
-        return sum(
-            fn.endswith(".parquet")
-            for p in paths
-            for _dp, _dn, fns in _os.walk(p)
-            for fn in fns
-        )
-
-    before = files(e.path for e in live_dirs(root))
-    folded, after = compact_epochs(spark, root, ledger, rewrite)
-    if folded:
-        gc_folded(root)
-    return before, files(after)

@@ -20,7 +20,18 @@ the same protocol, and this module is the only code that knows it:
 - :func:`compact_epochs` — the one compaction of an ``ep=`` store: fold
   the committed partitions into ``ep=base<gen>`` and commit it by a
   manifest swap; :func:`live_dirs` is the listing every read goes
-  through, :func:`gc_folded` deletes what a commit superseded.
+  through, :func:`gc_folded` deletes what a commit superseded;
+- :class:`EpochSink` — the generic half of every store-backed streaming
+  sink: the ledger at ``<root>/_epochs.json``, the claim → apply →
+  commit step (:meth:`EpochLedger.apply_once`), the ``foreachBatch``
+  wiring (:func:`start_epoch_sink`), the live read that raises while a
+  store is cold and the spec-driven compaction of its stores
+  (:func:`compact_stores`).
+
+Every ``ep=`` partition, Spark-written or pyarrow-written, goes live
+through :func:`publish_epoch`: written aside, closed by ``_SUCCESS``,
+then renamed in, so a write that fails part-way leaves nothing a read
+lists.
 """
 
 from __future__ import annotations
@@ -196,7 +207,7 @@ def _key_hash(key: str) -> str:
 
 
 def epoch_tag(key: str, epoch: int) -> str:
-    """Stable per-(sink, epoch) store-partition tag: a replay overwrites
+    """Stable per-(sink, epoch) store-partition tag: a replay replaces
     exactly its own ``ep=<tag>`` partition."""
     return f"t{_key_hash(key)}x{epoch}"
 
@@ -292,6 +303,19 @@ class EpochLedger:
 
     def commit(self, claim: Claim) -> None:
         self.record(claim.key, claim.epoch, force=claim.reset)
+
+    def apply_once(self, sink_id: str, epoch: int, apply) -> bool:
+        """The claim → apply → commit step of every epoch sink: False
+        when ``sink_id`` already applied ``epoch`` (the store is left
+        untouched), else ``apply(claim)`` and then the epoch's record.
+        A raise in ``apply`` leaves the epoch unrecorded, so its replay
+        applies it again."""
+        c = self.claim(sink_id, epoch)
+        if c is None:
+            return False
+        apply(c)
+        self.commit(c)
+        return True
 
     def record(self, key: str, epoch: int, force: bool = False) -> None:
         """Record ``epoch`` as applied by ``key`` (max-merge; ``force``
@@ -517,3 +541,145 @@ def compact_epochs(
         folded = sorted(os.path.basename(p) for p in srcs)
         _write_manifest(root, {"gen": gen, "base": base, "folded": folded})
         return folded, [e.path for e in live_dirs(root)]
+
+
+def compact_store(
+    spark, root: str, ledger: EpochLedger, partition_col: str,
+    sort_col: str, partition_by: tuple[str, ...] = (),
+) -> tuple[int, int]:
+    """Compact a dedup store (:func:`compact_epochs`) into few
+    ``partition_col``-bucketed files sorted by ``sort_col``; returns its
+    live parquet files (before, after). ``partition_by`` keeps a
+    directory-partitioned layout (the LSH bands store prunes on
+    band/bpre dirs). The store's one writer is serialized against the
+    compaction, so no reader holds a listing from before the commit:
+    the folded partitions are deleted at once."""
+
+    def rewrite(df, out: str) -> None:
+        (
+            df.repartition(partition_col)
+            .sortWithinPartitions(sort_col)
+            .write.mode("overwrite")
+            .partitionBy(*partition_by)
+            .parquet(out)
+        )
+
+    def files(paths) -> int:
+        return sum(
+            fn.endswith(".parquet")
+            for p in paths
+            for _dp, _dn, fns in os.walk(p)
+            for fn in fns
+        )
+
+    before = files(e.path for e in live_dirs(root))
+    folded, after = compact_epochs(spark, root, ledger, rewrite)
+    if folded:
+        gc_folded(root)
+    return before, files(after)
+
+
+def compact_stores(spark, ledger: EpochLedger, stores: dict) -> dict:
+    """Compact every store of one sink: ``stores`` maps a name to
+    ``(root, partition_col, sort_col[, partition_by])``, the arguments
+    of :func:`compact_store`. Raises, compacting nothing, while any of
+    them holds a partition a replay still owns
+    (:meth:`EpochLedger.check_settled`). Returns {name: (files_before,
+    live_files_after)}."""
+    ledger.check_settled(*(spec[0] for spec in stores.values()))
+    return {
+        name: compact_store(spark, spec[0], ledger, *spec[1:])
+        for name, spec in stores.items()
+    }
+
+
+# -- epoch sinks ---------------------------------------------------------------
+def start_epoch_sink(
+    stream_df,
+    apply,
+    default_checkpoint: str,
+    checkpoint_dir: str | None = None,
+    trigger_seconds: float | None = None,
+):
+    """The one ``foreachBatch`` wiring of the epoch-idempotent sinks
+    (:class:`EpochSink`, StreamingProducer): resolve the checkpoint
+    (whose path doubles as the sink instance key), wire
+    ``apply(batch_df, epoch, checkpoint)``, and trigger availableNow
+    unless a processingTime cadence is given."""
+    cp = checkpoint_dir or default_checkpoint
+
+    def _sink(batch_df, epoch: int) -> None:
+        apply(batch_df, epoch, cp)
+
+    writer = stream_df.writeStream.foreachBatch(_sink).option(
+        "checkpointLocation", cp
+    )
+    if trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    else:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+class EpochSink:
+    """A streaming sink over ``ep=<tag>`` stores, applied once per epoch.
+
+    The ledger lives at ``<root>/_epochs.json``. :meth:`apply_batch`
+    runs the ledger's claim → apply → commit step around the
+    subclass's ``_apply(batch_df, claim, **cols)``, which publishes each
+    of its partitions with :func:`publish_epoch` under ``claim.tag``.
+    :meth:`start` wires the sink into ``foreachBatch`` with a default
+    checkpoint of ``<root>/_checkpoint``; it looks ``apply_batch`` up
+    on each micro-batch, so an instance attribute set before the query
+    starts is the one that runs. :meth:`compact` folds the stores that
+    ``_stores()`` names, by :func:`compact_stores`."""
+
+    def __init__(self, spark, root: str) -> None:
+        self.spark = spark
+        self._root = root
+        self._epochs = EpochLedger(os.path.join(root, STORE_LEDGER))
+
+    def _apply(self, batch_df, claim: Claim, **cols) -> None:  # pragma: no cover
+        raise NotImplementedError
+
+    def _stores(self) -> dict:  # pragma: no cover
+        """name → (root, partition_col, sort_col[, partition_by]) of
+        each store :meth:`compact` folds."""
+        raise NotImplementedError
+
+    def apply_batch(self, batch_df, epoch: int, sink_id: str, **cols) -> bool:
+        """Apply one micro-batch idempotently; False = already applied
+        (the foreachBatch retry path — store untouched)."""
+        return self._epochs.apply_once(
+            sink_id, epoch, lambda c: self._apply(batch_df, c, **cols)
+        )
+
+    def start(
+        self,
+        stream_df,
+        checkpoint_dir: str | None = None,
+        trigger_seconds: float | None = None,
+        **cols,
+    ):
+        """Run the sink over ``stream_df``; ``cols`` (the column names,
+        e.g. ``id_col``) pass through to every :meth:`apply_batch`."""
+        return start_epoch_sink(
+            stream_df,
+            lambda batch_df, epoch, cp: self.apply_batch(batch_df, epoch, cp, **cols),
+            os.path.join(self._root, "_checkpoint"),
+            checkpoint_dir=checkpoint_dir,
+            trigger_seconds=trigger_seconds,
+        )
+
+    def compact(self) -> dict[str, tuple[int, int]]:
+        """Fold each store's committed partitions into one base
+        (:func:`compact_stores`). Serialize against apply_batch. Raises
+        while a failed micro-batch awaits replay."""
+        return compact_stores(self.spark, self._epochs, self._stores())
+
+    def _read_store(self, root: str):
+        """Every live row of a store; raises while it has none."""
+        df = read_live(self.spark, root)
+        if df is None:
+            raise FileNotFoundError(f"store {root!r} holds no partition")
+        return df

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from polar_spark.produce import Producer
+from polar_spark.store import start_epoch_sink
 from polar_spark.topics import TopicCatalog
 
 
@@ -88,17 +89,15 @@ class StreamingProducer:
         """Apply one micro-batch idempotently; returns False if ``epoch``
         was already applied by ``sink_id`` (the foreachBatch retry path
         — see :meth:`store.EpochLedger.claim`)."""
-        ledger = self.catalog.epoch_ledger(topic)
-        c = ledger.claim(sink_id, epoch)
-        if c is None:
-            return False
-        if not batch_df.isEmpty():
-            self._producer.produce(
-                batch_df, topic, key_col=key_col, value_col=value_col,
-                ts_col=ts_col, arrival_cols=arrival_cols,
-            )
-        ledger.commit(c)
-        return True
+
+        def produce(_claim) -> None:
+            if not batch_df.isEmpty():
+                self._producer.produce(
+                    batch_df, topic, key_col=key_col, value_col=value_col,
+                    ts_col=ts_col, arrival_cols=arrival_cols,
+                )
+
+        return self.catalog.epoch_ledger(topic).apply_once(sink_id, epoch, produce)
 
 
 def stream_topic(spark: SparkSession, catalog: TopicCatalog, topic: str) -> DataFrame:
@@ -107,31 +106,3 @@ def stream_topic(spark: SparkSession, catalog: TopicCatalog, topic: str) -> Data
     same tailing the reference's segment reader does,
     internal/data/segment_reader.go:106-195)."""
     return catalog.read_stream(topic)
-
-
-def start_epoch_sink(
-    stream_df,
-    apply,
-    default_checkpoint: str,
-    checkpoint_dir: str | None = None,
-    trigger_seconds: float | None = None,
-):
-    """Shared foreachBatch wiring for the epoch-idempotent sinks
-    (StreamingProducer / the dedup sinks / streaming sketches): resolve
-    the checkpoint (whose path doubles as the sink instance key), wire
-    ``apply(batch_df, epoch, checkpoint)``, and trigger availableNow
-    unless a processingTime cadence is given — held ONCE so trigger or
-    checkpoint-default fixes reach every sink."""
-    cp = checkpoint_dir or default_checkpoint
-
-    def _sink(batch_df, epoch: int) -> None:
-        apply(batch_df, epoch, cp)
-
-    writer = stream_df.writeStream.foreachBatch(_sink).option(
-        "checkpointLocation", cp
-    )
-    if trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

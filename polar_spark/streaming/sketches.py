@@ -5,8 +5,8 @@ Both sketches are linear/mergeable (count-min: counter addition, Cormode
 & Muthukrishnan 2005; KMV: k-smallest-of-union, Bar-Yossef et al. 2002),
 so a stream can maintain them incrementally: each micro-batch computes
 its own O(sketch)-sized partial and writes it under a stable
-``ep=<tag>`` partition of the store — a foreachBatch RETRY overwrites
-exactly its own partition (the exactly-once protocol of
+``ep=<tag>`` partition of the store — a foreachBatch RETRY replaces
+exactly its own partition by rename (the exactly-once protocol of
 polar_spark/store.py), and the live sketch is just the merge of all
 stored partials. Merging happens at READ time over O(epochs · sketch)
 rows — never the raw stream.
@@ -32,7 +32,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
 
 from polar_spark.functions.sketches import (
     CM_ROWS,
@@ -54,20 +53,22 @@ from polar_spark.functions.sketches import (
     qs_select,
 )
 from polar_spark.store import (
-    STORE_LEDGER,
-    EpochLedger,
+    Claim,
+    EpochSink,
     compact_epochs,
     epoch_dirs,
+    publish_epoch,
     purge_epochs,
     read_json,
     read_live,
     write_json,
 )
-from polar_spark.streaming.ingest import start_epoch_sink
 
 
-class _EpochPartialSink:
-    """Shared machinery: write one partial per epoch, idempotently.
+class _EpochPartialSink(EpochSink):
+    """One partial per epoch over the store.EpochSink protocol, plus
+    what only additive partials need: the lineage purge, the pinned
+    partial schema and the fold-law compaction.
 
     Store longevity (r10): without maintenance the store accumulates one
     ``ep=`` partition per trigger forever, so every read merges
@@ -81,10 +82,8 @@ class _EpochPartialSink:
     O(1 + epochs-since-compact) partitions."""
 
     def __init__(self, spark: SparkSession, store_path: str):
-        self.spark = spark
+        super().__init__(spark, store_path)
         self.store_path = store_path
-        os.makedirs(store_path, exist_ok=True)
-        self._epochs = EpochLedger(os.path.join(store_path, STORE_LEDGER))
 
     def _partial(self, batch_df: DataFrame) -> DataFrame:  # pragma: no cover
         raise NotImplementedError
@@ -143,39 +142,18 @@ class _EpochPartialSink:
             with open(self._stale_marker_path(), "w"):
                 pass
 
-    def apply_batch(self, batch_df: DataFrame, epoch: int, sink_id: str) -> bool:
-        """Apply one micro-batch idempotently; False = already applied
-        (foreachBatch retry — store untouched)."""
-        c = self._epochs.claim(sink_id, epoch)
-        if c is None:
-            return False
+    def _apply(self, batch_df: DataFrame, c: Claim) -> None:
         # a FRESH checkpoint (key never recorded) over a non-empty store
         # is also a new lineage: the old lineage's partials must go
-        new_lineage = epoch == 0 and c.last < 0 and bool(self._partition_dirs())
+        new_lineage = c.epoch == 0 and c.last < 0 and bool(self._partition_dirs())
         if c.reset or new_lineage:
             self._purge()
         if not batch_df.isEmpty():
             partial = self._partial(batch_df)
             self._save_schema(partial)
-            partial.write.mode("overwrite").parquet(
-                os.path.join(self.store_path, f"ep={c.tag}")
+            publish_epoch(
+                self.store_path, c.tag, partial.write.mode("overwrite").parquet
             )
-        self._epochs.commit(c)
-        return True
-
-    def start(
-        self,
-        stream_df: DataFrame,
-        checkpoint_dir: str | None = None,
-        trigger_seconds: float | None = None,
-    ) -> StreamingQuery:
-        return start_epoch_sink(
-            stream_df,
-            self.apply_batch,
-            os.path.join(self.store_path, "_checkpoint"),
-            checkpoint_dir=checkpoint_dir,
-            trigger_seconds=trigger_seconds,
-        )
 
     # -- reads -------------------------------------------------------------
     def _schema_path(self) -> str:

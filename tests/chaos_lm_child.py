@@ -86,10 +86,10 @@ def main() -> None:
     kill_epoch = int(sys.argv[4])
     when = sys.argv[5] if len(sys.argv) > 5 else "before"
 
-    import polar_spark.streaming.dedup as sd
+    import polar_spark.store as store
 
     if kill_epoch >= 0:
-        orig_record = sd.EpochLedger.record
+        orig_record = store.EpochLedger.record
 
         def record(self, key: str, epoch: int, force: bool = False) -> None:
             if epoch == kill_epoch and when == "before":
@@ -98,7 +98,7 @@ def main() -> None:
             if epoch == kill_epoch and when == "after":
                 os.kill(os.getpid(), 9)
 
-        sd.EpochLedger.record = record
+        store.EpochLedger.record = record
 
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)

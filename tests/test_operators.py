@@ -722,7 +722,7 @@ def test_connected_components_deep_chain_converges(spark):
     assert got == {i: 0 for i in range(60)}
 
 
-def test_near_dup_index_incremental_equals_one_shot(spark, sf_dir):
+def test_near_dup_index_incremental_equals_one_shot(spark, sf_dir, tmp_path):
     """Two incremental batches against the index must produce exactly
     the one-shot pipeline's pairs that touch those batches — including
     pairs found only because batch 1 was appended before batch 2."""
@@ -730,12 +730,11 @@ def test_near_dup_index_incremental_equals_one_shot(spark, sf_dir):
 
     from polar_spark.functions.dedup import NearDupIndex, verified_near_dups
     from polar_spark.sources.tables import load_table
-    import tempfile
 
     d = load_table(spark, sf_dir, "documents")
     hi = d.agg(F.max("doc_id")).first()[0]
     s1, s2 = hi // 3, 2 * hi // 3
-    idx = NearDupIndex(spark, tempfile.mkdtemp(), threshold=0.7)
+    idx = NearDupIndex(spark, str(tmp_path / "idx"), threshold=0.7)
     idx.build(d.filter(F.col("doc_id") < s1))
     q1 = idx.query_and_update(
         d.filter((F.col("doc_id") >= s1) & (F.col("doc_id") < s2))
@@ -1562,11 +1561,9 @@ def test_pq_encode_deterministic_and_bounded(spark, sf_dir):
                for c in a.values())
 
 
-def test_near_dup_index_compaction_preserves_results(spark, sf_dir):
+def test_near_dup_index_compaction_preserves_results(spark, sf_dir, tmp_path):
     """compact() shrinks the stores' file counts without changing what
     the next batch detects."""
-    import tempfile
-
     from polar_spark.functions.dedup import NearDupIndex
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1574,7 +1571,7 @@ def test_near_dup_index_compaction_preserves_results(spark, sf_dir):
     s1, s2 = hi // 3, 2 * hi // 3
 
     def run(compact: bool):
-        idx = NearDupIndex(spark, tempfile.mkdtemp(), threshold=0.7)
+        idx = NearDupIndex(spark, str(tmp_path / f"idx{compact}"), threshold=0.7)
         idx.build(d.filter(F.col("doc_id") < s1))
         # append in 4 sub-batches to fragment the store
         lows = [s1, (s1 + s2) // 2]
@@ -1643,18 +1640,16 @@ def test_ivfpq_stored_recall_and_rerank_exactness(spark, sf_dir, tmp_path):
     qv.unpersist()
 
 
-def test_near_dup_index_same_tag_replay_is_idempotent(spark, sf_dir):
+def test_near_dup_index_same_tag_replay_is_idempotent(spark, sf_dir, tmp_path):
     """The crash-between-append-and-record path: re-running a batch with
     the SAME tag must leave the store byte-identical (no doubled
     shingles) and return the same pairs."""
-    import tempfile
-
     from polar_spark.functions.dedup import NearDupIndex
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     hi = d.agg(F.max("doc_id")).first()[0]
     s1 = hi // 2
-    idx = NearDupIndex(spark, tempfile.mkdtemp(), threshold=0.7)
+    idx = NearDupIndex(spark, str(tmp_path / "idx"), threshold=0.7)
     idx.build(d.filter(F.col("doc_id") < s1))
     batch = d.filter(F.col("doc_id") >= s1)
 

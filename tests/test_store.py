@@ -51,6 +51,25 @@ def test_store_is_the_only_lock_and_json_writer():
     assert offenders == []
 
 
+def test_publish_epoch_is_the_only_ep_partition_writer():
+    """No module under polar_spark/ other than store.py hands an
+    ``ep=`` path to a parquet write (Spark's ``.parquet(``, pyarrow's
+    ``write_table``/``write_dataset``): every epoch partition goes live
+    through store.publish_epoch, by one rename after its ``_SUCCESS``,
+    so a write that fails part-way is never listed."""
+    root = Path(polar_spark.__file__).parent
+    call = re.compile(
+        r"(\.parquet|\bwrite_table|\bwrite_dataset)\([^()]*(\([^()]*)?ep=", re.S
+    )
+    offenders = [
+        f"{p.relative_to(root)}: {m.group(0)[:60]!r}"
+        for p in sorted(root.rglob("*.py"))
+        if p != root / "store.py"
+        for m in call.finditer(p.read_text())
+    ]
+    assert offenders == []
+
+
 def test_footer_gate_is_the_only_pyarrow_parquet_reader_of_queries():
     """No module under polar_spark/queries/ or polar_spark/functions/
     reads parquet with pyarrow: a driver plan over a table reads it
@@ -462,3 +481,102 @@ def test_streaming_semdedup_compact_keeps_kept_drops_and_decisions(spark, tmp_pa
     want = state(twin)
     assert [i for i in want[1] if i >= 90], "the trigger must drop a stored twin"
     assert state(sd) == want
+
+
+def _sink_family(spark, tmp_path, monkeypatch, family: str):
+    """(make(name), the batches of epochs 0 and 1, the sink's store
+    roots, its read state) of one epoch-sink family."""
+    import polar_spark.streaming.dedup as D
+    from polar_spark.streaming.sketches import StreamingCountMin
+
+    def vectors(lo, hi):
+        return spark.createDataFrame(_lsh_rows(lo, hi), "vec_id long, v array<bigint>")
+
+    def kept_dropped(s):
+        return (
+            sorted(r["vec_id"] for r in s.kept().collect()),
+            sorted(r["vec_id"] for r in s.dropped().collect()),
+        )
+
+    if family == "near_dup":
+        return (
+            lambda n: D.StreamingNearDup(
+                spark, str(tmp_path / f"{n}_idx"), str(tmp_path / f"{n}_pairs")
+            ),
+            [_near_dup_docs(spark, 0, 20), _near_dup_docs(spark, 20, 40)],
+            lambda s: [s.index.bands_path, s.index.shingles_path, s.pairs_path],
+            lambda s: sorted((r[0], r[1], round(r[2], 9)) for r in s.pairs().collect()),
+        )
+    if family == "semdedup":
+        return (
+            lambda n: D.StreamingSemDedup(
+                spark, str(tmp_path / f"{n}_idx"), str(tmp_path / f"{n}_drops"),
+                _lsh_rows(0, 4),
+            ),
+            [vectors(0, 30), vectors(30, 60)],
+            lambda s: [s.vectors_path, s.drops_path],
+            kept_dropped,
+        )
+    if family == "semdedup_lsh_bulk":
+        # the bulk plan, as test_streaming._pin_lsh_plan pins it
+        monkeypatch.setattr(D, "DRIVER_BATCH_BYTES", -1)
+        return (
+            lambda n: D.StreamingSemDedupLSH(
+                spark, str(tmp_path / f"{n}_idx"), str(tmp_path / f"{n}_drops"),
+                dims=64, bands=8, planes_per_band=8, tau_sq_pct=9025,
+            ),
+            [vectors(0, 60), vectors(60, 80)],
+            lambda s: [s.bands_path, s.vectors_path, s.drops_path],
+            kept_dropped,
+        )
+    events = spark.range(0, 400).selectExpr("cast(id % 37 as string) as v", "id")
+    return (
+        lambda n: StreamingCountMin(spark, str(tmp_path / f"{n}_cm"), "v"),
+        [events.filter("id < 200"), events.filter("id >= 200")],
+        lambda s: [s.store_path],
+        lambda s: sorted(tuple(r) for r in s.counters().collect()),
+    )
+
+
+@pytest.mark.parametrize(
+    "family", ["near_dup", "semdedup", "semdedup_lsh_bulk", "count_min"]
+)
+def test_torn_epoch_write_is_never_listed(spark, tmp_path, monkeypatch, family):
+    """An epoch whose first parquet write fails after its files land
+    leaves nothing a read lists: apply_batch raises, no store lists the
+    epoch's ``ep=<tag>``, and the sink reads as it did after epoch 0.
+    Its replay then leaves the sink equal to a clean twin's, with no
+    staging directory behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    make, batches, roots, state = _sink_family(spark, tmp_path, monkeypatch, family)
+    sink, twin = make("torn"), make("twin")
+    for s in (sink, twin):
+        assert s.apply_batch(batches[0], 0, "torn")
+    after_0 = state(sink)
+    assert after_0, "epoch 0 must leave state to compare"
+
+    write = DataFrameWriter.parquet
+    armed = [True]
+
+    def torn(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        if armed[0]:
+            armed[0] = False
+            raise RuntimeError("torn after its files landed")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", torn)
+    with pytest.raises(RuntimeError, match="torn after"):
+        sink.apply_batch(batches[1], 1, "torn")
+    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    assert not armed[0]
+    tag = f"ep={epoch_tag('torn', 1)}"
+    for root in roots(sink):
+        assert tag not in [e.name for e in live_dirs(root)], root
+    assert state(sink) == after_0
+
+    assert sink.apply_batch(batches[1], 1, "torn") is True  # the replay
+    assert twin.apply_batch(batches[1], 1, "torn") is True
+    assert state(sink) == state(twin) != after_0
+    for root in roots(sink):
+        assert not [n for n in os.listdir(root) if n.startswith(("_tmp-", "_old-"))]

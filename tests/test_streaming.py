@@ -1891,26 +1891,25 @@ def test_streaming_semdedup_lsh_driver_plan_replay_after_publish(
     import os
 
     import polar_spark.store as store
-    import polar_spark.streaming.dedup as D
 
     clean = _mk_lsh_sink(spark, tmp_path, "clean")
     _lsh_epochs(spark, clean, ["driver", "driver"], "clean", monkeypatch)
 
     sd = _mk_lsh_sink(spark, tmp_path, "torn")
     _lsh_epochs(spark, sd, ["driver"], "torn", monkeypatch)
-    record = D.EpochLedger.record
+    record = store.EpochLedger.record
 
     def failing_record(self, key, epoch, force=False):
         raise RuntimeError("crash before the epoch is recorded")
 
-    monkeypatch.setattr(D.EpochLedger, "record", failing_record)
+    monkeypatch.setattr(store.EpochLedger, "record", failing_record)
     b1 = spark.createDataFrame(_twin_rows(60, 80), "vec_id long, v array<bigint>")
     with pytest.raises(RuntimeError, match="before the epoch is recorded"):
         sd.apply_batch(b1, 1, "torn")
     tag = store.epoch_tag(store._sink_instance_key("torn"), 1)
     for path in (sd.drops_path, sd.vectors_path, sd.bands_path):
         assert os.path.exists(os.path.join(path, f"ep={tag}", "_SUCCESS"))
-    monkeypatch.setattr(D.EpochLedger, "record", record)
+    monkeypatch.setattr(store.EpochLedger, "record", record)
     assert sd._epochs.last(store._sink_instance_key("torn")) == 0
 
     assert sd.apply_batch(b1, 1, "torn") is True  # the replay
@@ -1929,20 +1928,19 @@ def test_streaming_semdedup_lsh_compact_refuses_pending_replay(
     its own vectors. After the replay it compacts, and the store holds
     the banded-greedy law."""
     import polar_spark.store as store
-    import polar_spark.streaming.dedup as D
 
     sd = _mk_lsh_sink(spark, tmp_path, "pending")
     _lsh_epochs(spark, sd, ["driver"], "pending", monkeypatch)
-    record = D.EpochLedger.record
+    record = store.EpochLedger.record
 
     def failing_record(self, key, epoch, force=False):
         raise RuntimeError("crash before the epoch is recorded")
 
-    monkeypatch.setattr(D.EpochLedger, "record", failing_record)
+    monkeypatch.setattr(store.EpochLedger, "record", failing_record)
     b1 = spark.createDataFrame(_twin_rows(60, 80), "vec_id long, v array<bigint>")
     with pytest.raises(RuntimeError, match="before the epoch is recorded"):
         sd.apply_batch(b1, 1, "pending")
-    monkeypatch.setattr(D.EpochLedger, "record", record)
+    monkeypatch.setattr(store.EpochLedger, "record", record)
     tag = store.epoch_tag("pending", 1)
     with pytest.raises(RuntimeError, match=tag):
         sd.compact()

@@ -35,3 +35,59 @@ def test_script_package_imports_resolve(script):
         for name in names:
             if not hasattr(mod, name):  # a submodule not imported yet
                 importlib.import_module(f"{module}.{name}")
+
+
+def _tracer_hooks() -> list[tuple[str, str, str]]:
+    """(module, class, attr) of every ``(module.Class, "attr", …)``
+    owner that ``perfbench/run.py`` hands to a tracer's ``wrap``: the
+    tuples a loop over ``wrap`` iterates, and direct ``wrap`` calls.
+    Owners known only at run time (the REST handler class) are left
+    out."""
+    with open(os.path.join(REPO, "perfbench", "run.py")) as f:
+        tree = ast.parse(f.read(), "perfbench/run.py")
+    mods = {
+        a.asname or a.name: f"{node.module}.{a.name}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom) and node.level == 0
+        and node.module.split(".")[0] == "polar_spark"
+        for a in node.names
+    }
+
+    def is_wrap(node) -> bool:
+        return (
+            isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "wrap"
+        )
+
+    args = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.For) and any(
+            is_wrap(n) for stmt in node.body for n in ast.walk(stmt)
+        ) and isinstance(node.iter, (ast.Tuple, ast.List)):
+            args += [e.elts for e in node.iter.elts if isinstance(e, ast.Tuple)]
+        elif is_wrap(node):
+            args.append(node.args)
+    return [
+        (mods[owner.value.id], owner.attr, attr.value)
+        for owner, attr, *_ in args
+        if isinstance(owner, ast.Attribute) and isinstance(owner.value, ast.Name)
+        and owner.value.id in mods
+        and isinstance(attr, ast.Constant) and isinstance(attr.value, str)
+    ]
+
+
+def test_benchmark_tracer_hooks_are_own_attributes():
+    """Every attribute the benchmark's tracer wraps is defined on its
+    owner class itself: ``spans.Tracer.wrap`` reads
+    ``owner.__dict__[attr]``, so a method moved into a base class would
+    make every traced run raise ``KeyError``."""
+    hooks = _tracer_hooks()
+    assert (
+        "polar_spark.streaming.dedup", "StreamingSemDedupLSH", "apply_batch"
+    ) in hooks
+    missing = [
+        f"{module}.{cls}.{attr}"
+        for module, cls, attr in hooks
+        if attr not in vars(getattr(importlib.import_module(module), cls))
+    ]
+    assert missing == []
